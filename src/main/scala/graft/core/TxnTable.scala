@@ -3,8 +3,12 @@ package graft.core
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path => JPath, Paths, FileAlreadyExistsException}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** One data file added by a commit. `stats` is the file's write-time
   * column statistics as compact JSON
@@ -908,9 +912,7 @@ object TxnTable {
       if (dvm.isEmpty) { if (keepFname) named else scan }
       else {
         val cols = scan.columns.toSeq
-        val dvAbs = dvm.values.toSeq.distinct
-          .map(f => localRoot(path).resolve(f).toString)
-        val dv = spark.read.parquet(dvAbs: _*)
+        val dv = readDvs(spark, path, dvm.values)
           .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
         val withMeta = named.withColumn("__pos", col("_metadata.row_index"))
         val out = withMeta.join(dv,
@@ -927,18 +929,67 @@ object TxnTable {
       .getOrElse(dvApplied)
   }
 
-  /** Delete the staged-but-never-committed data files of an aborted
-    * write. writeData moves fresh files into data/ BEFORE the commit
-    * loop, and vacuum only ever deletes files some commit referenced —
-    * so an abort (schema mismatch discovered on retry, a single-shot
-    * writer losing its race, an exhausted retry budget) must clean up
-    * its own staging or the files leak forever. Only called with adds
-    * this writer created itself; restore/vacuum re-reference existing
-    * files and never come through here. */
-  private def cleanupStaged(path: String, adds: Seq[TxnAdd]): Unit =
-    adds.foreach(a =>
-      try Files.deleteIfExists(localRoot(path).resolve(a.path))
-      catch { case _: Throwable => () })
+  /** The DV sidecar schema: one row per deleted (data file name, row
+    * position). Pinned at every DV read — an inferred read would run a
+    * Spark schema-inference job per scan. */
+  private val DvSchema = StructType(Seq(
+    StructField("file", StringType), StructField("pos", LongType)))
+
+  /** The rows of the given DV files (table-relative paths). */
+  private def readDvs(spark: SparkSession, path: String,
+      dvFiles: Iterable[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(dvFiles.toSeq.distinct
+      .map(f => localRoot(path).resolve(f).toString): _*)
+
+  /** Delete the staged-but-never-committed data files (and DV file) of
+    * an aborted or empty write. writeData moves fresh files into data/
+    * BEFORE the commit loop, and vacuum only ever deletes files some
+    * commit referenced — so an abort (schema mismatch discovered on
+    * retry, a single-shot writer losing its race, an exhausted retry
+    * budget) must clean up its own staging or the files leak forever.
+    * Only called with files this writer created itself; restore/vacuum
+    * re-reference existing files and never come through here. */
+  private def cleanupStaged(path: String, adds: Seq[TxnAdd],
+      dvFile: Option[String] = None): Unit =
+    (adds.map(_.path) ++ dvFile).foreach(f =>
+      try Files.deleteIfExists(localRoot(path).resolve(f))
+      catch { case NonFatal(_) => () })
+
+  /** Write-then-drop: the adds of a write that may have produced no
+    * rows, minus its zero-row files (deleted, never committed). Cheaper
+    * than an `isEmpty` job before the write, which would run the
+    * frame's plan once more. Row counts are footer-read, so 0 is exact. */
+  private def dropEmpty(path: String, adds: Seq[TxnAdd]): Seq[TxnAdd] = {
+    val (empty, kept) = adds.partition(_.rows == 0)
+    cleanupStaged(path, empty)
+    kept
+  }
+
+  /** The distinct strings of a one-column frame of file names, collected
+    * to the driver ONCE. Metadata-sized: bounded by the snapshot's file
+    * count, like the commit's `removes` list built from it. Each
+    * partition dedups locally before the collect, so it is one job with
+    * no shuffle stage. */
+  private def fileNames(names: DataFrame): Set[String] =
+    names.rdd.mapPartitions(_.map(_.getString(0)).toSet.iterator)
+      .collect().toSet
+
+  /** Live rows (logical names, DVs applied) of `rels`, table-relative
+    * files of the snapshot `base`: all of them for a DML probe, or the
+    * subset a rewrite reads (a statement's hit files, a compaction's
+    * candidates). */
+  private def scanFiles(spark: SparkSession, path: String, base: Long,
+      rels: Seq[String], keepFname: Boolean): DataFrame =
+    applyDv(spark, path, base, snapshotScan(spark, path, base,
+      rels.map(f => localRoot(path).resolve(f).toString)), keepFname)
+
+  /** The snapshot files whose bare name is in `hitNames` (UUID file
+    * names are a complete key; the last-segment comparison works for
+    * own-root relative paths AND a shallow clone's absolute source
+    * references alike). */
+  private def hitFiles(files: Seq[String], hitNames: Set[String])
+      : Seq[String] =
+    files.filter(f => hitNames.contains(f.split('/').last))
 
   /** How a rewrite commit may REBASE past commits that landed between
     * its snapshot read and its tryCommit (the Delta-style logical
@@ -1794,14 +1845,6 @@ object TxnTable {
     -1L // unreachable
   }
 
-  /** Delete matching rows by rewriting ONLY the files that contain them
-    * (one input_file_name() pass finds those files; untouched files are
-    * carried by reference). The snapshot it read is re-validated at
-    * commit: commutable interleaved commits (appends, rewrites of
-    * disjoint files) are rebased past without redoing the job; a
-    * concurrent commit that touched one of the hit files aborts the
-    * delete (no lost updates) — see [[commitRewrite]].
-    */
   /** The snapshot's PHYSICAL-name scan, safe on ZERO-FILE snapshots
     * (truncate / delete-all): an empty frame with the recorded
     * physical schema substitutes for the parquet read — DML and
@@ -1817,38 +1860,29 @@ object TxnTable {
         throw new IllegalArgumentException(
           s"empty snapshot of $path at $base with no recorded schema"))))
 
+  /** Delete matching rows by rewriting ONLY the files that contain them;
+    * untouched files are carried by reference. One probe pass over the
+    * snapshot collects the hit files' names to the driver once
+    * (metadata-sized — they are the commit's `removes`); the rewrite
+    * then scans only those files. DV-deleted rows are logically gone:
+    * they neither trigger a hit nor survive the rewrite (the removes
+    * clear the hit files' DV mappings). A hit file whose every row is
+    * deleted leaves no add (write-then-drop). The snapshot it read is
+    * re-validated at commit: commutable interleaved commits (appends,
+    * rewrites of disjoint files) are rebased past without redoing the
+    * job; a concurrent commit that touched one of the hit files aborts
+    * the delete (no lost updates) — see [[commitRewrite]].
+    */
   def deleteWhere(spark: SparkSession, path: String, predicate: Column): Long = {
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
-    // Normalize input_file_name() to the bare file name ONCE — data
-    // files live flat under data/ with UUID names, so the name is a
-    // complete key. The hit-file set stays a DATAFRAME end-to-end
-    // (localCheckpoint materializes the one input_file_name() pass so
-    // the survivors join reuses it instead of recomputing); the only
-    // driver materialization is the collect at the bottom, which the
-    // commit's `removes` metadata needs regardless — bounded by the
-    // snapshot file count, the same order as the file list itself.
-    // applyDv: DV-deleted rows are logically gone — they must neither
-    // trigger a hit nor survive the rewrite (the rewrite's removes
-    // clear the hit files' DV mappings).
-    val withName = applyDv(spark, path, base,
-      snapshotScan(spark, path, base, abs), keepFname = true)
-    val hitDf = withName.filter(predicate)
-      .select(col("__fname")).distinct().localCheckpoint()
-    if (hitDf.isEmpty) return base
-    val survivors = withName
-      .join(broadcast(hitDf), "__fname")
+    val hitNames = fileNames(scanFiles(spark, path, base, files,
+      keepFname = true).filter(predicate).select(col("__fname")))
+    if (hitNames.isEmpty) return base
+    val removes = hitFiles(files, hitNames)
+    val survivors = scanFiles(spark, path, base, removes, keepFname = false)
       .filter(!coalesce(predicate, lit(false)))
-      .drop("__fname")
-    val adds =
-      if (survivors.isEmpty) Nil
-      else writeData(spark, path, survivors, 1)
-    val hitNames = hitDf.collect().map(_.getString(0)).toSet
-    // last-segment comparison (UUID file names are a complete key):
-    // works for own-root relative paths AND a shallow clone's absolute
-    // source references alike
-    val removes = files.filter(f => hitNames.contains(f.split('/').last))
+    val adds = dropEmpty(path, writeData(spark, path, survivors, 1))
     try commitRewrite(path, base, "delete", adds, removes,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -1877,15 +1911,8 @@ object TxnTable {
     val hits = live.filter(predicate)
       .select(col("__fname").as("file"), col("__pos").as("pos"))
       .localCheckpoint()
-    if (hits.isEmpty) return base
-    val (dvs, dvFile) = buildDvs(spark, path, files, hits, oldDv)
-    try commitDvs(path, base, "dvdelete", dvs)
-    catch {
-      case e: Throwable =>
-        try Files.deleteIfExists(localRoot(path).resolve(dvFile))
-        catch { case _: Throwable => () }
-        throw e
-    }
+    commitMorChanges(spark, path, base, "dvdelete", files,
+      fileNames(hits.select(col("file"))), hits, oldDv, Nil)
   }
 
   /** MERGE-ON-READ update: the [[updateWhere]] semantics at
@@ -1916,7 +1943,8 @@ object TxnTable {
     // content the updated images are computed from (the DV and the
     // appended rows must describe the same snapshot rows)
     val hitRows = live.filter(predicate).localCheckpoint()
-    if (hitRows.isEmpty) return base
+    val hitNames = fileNames(hitRows.select(col("__fname")))
+    if (hitNames.isEmpty) return base
     val hits = hitRows
       .select(col("__fname").as("file"), col("__pos").as("pos"))
     val updated = hitRows.select(tableCols.map { c =>
@@ -1926,17 +1954,8 @@ object TxnTable {
     }: _*)
     val adds = writeData(spark, path, withChecks(spark, path, updated),
       partitions)
-    val (dvs, dvFile) =
-      try buildDvs(spark, path, files, hits, oldDv)
-      catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-    try commitDvs(path, base, "dvupdate", dvs, adds)
-    catch {
-      case e: Throwable =>
-        cleanupStaged(path, adds)
-        try Files.deleteIfExists(localRoot(path).resolve(dvFile))
-        catch { case _: Throwable => () }
-        throw e
-    }
+    commitMorChanges(spark, path, base, "dvupdate", files, hitNames, hits,
+      oldDv, adds)
   }
 
   /** Live rows of the snapshot `base` (existing DVs applied — an
@@ -1961,15 +1980,12 @@ object TxnTable {
         .withColumn("__pos", col("_metadata.row_index"))
     val oldDv =
       if (dvm.isEmpty)
-        spark.emptyDataFrame
-          .withColumn("file", lit("")).withColumn("pos", lit(0L))
-          .limit(0).select(col("file"), col("pos"))
-      else spark.read.parquet(dvm.values.toSeq.distinct
-        .map(f => localRoot(path).resolve(f).toString): _*)
-        .select(col("file"), col("pos"))
-    val live = scan.join(oldDv,
-      scan("__fname") === oldDv("file") && scan("__pos") === oldDv("pos"),
-      "left_anti")
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), DvSchema)
+      else readDvs(spark, path, dvm.values)
+    val live =
+      if (dvm.isEmpty) scan
+      else scan.join(oldDv, scan("__fname") === oldDv("file") &&
+        scan("__pos") === oldDv("pos"), "left_anti")
     // column mapping: physical scan → logical names (same seam as
     // applyDv's tail; the __fname/__pos bookkeeping columns pass through)
     val logical = recordedSchemaAt(path, base)
@@ -1979,13 +1995,13 @@ object TxnTable {
 
   /** Write the replacement DV for `hits` (new positions ∪ the hit
     * files' previous positions — DVs are cumulative per file) and
-    * return the per-file reassignments plus the DV file for cleanup. */
+    * return the per-file reassignments plus the DV file for cleanup.
+    * `hitNames` are the bare names in `hits`' file column, collected
+    * once by the caller's probe. */
   private def buildDvs(spark: SparkSession, path: String,
-      files: Seq[String], hits: DataFrame, oldDv: DataFrame)
-      : (Seq[(String, String)], String) = {
-    val hitNames = hits.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val hitPaths = files.filter(f => hitNames.contains(f.split('/').last))
+      files: Seq[String], hitNames: Set[String], hits: DataFrame,
+      oldDv: DataFrame): (Seq[(String, String)], String) = {
+    val hitPaths = hitFiles(files, hitNames)
     // basename→path must be injective among the hit files: a DV keyed
     // on a shared leaf would kill same-position rows in BOTH files.
     // Unreachable for born-graft tables (UUID leaves) and guarded at
@@ -2074,12 +2090,10 @@ object TxnTable {
       set: Map[String, Column]): Long = {
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
-    val current = snapshotScan(spark, path, base, abs)
     // LOGICAL column surface: applyDv aliases the physical scan back to
     // the snapshot's logical names (column mapping) — user SET keys and
     // predicates speak logical
-    val withName = applyDv(spark, path, base, current, keepFname = true)
+    val withName = scanFiles(spark, path, base, files, keepFname = true)
     val tableCols = withName.columns.toSeq.filterNot(_ == "__fname")
     val colType = withName.schema.fields.map(f => f.name -> f.dataType).toMap
     val bad = set.keySet -- tableCols
@@ -2090,11 +2104,12 @@ object TxnTable {
     require(!set.values.exists(hasJoinSubquery),
       "updateWhere: IN/EXISTS subqueries are not supported in SET " +
         "values (scalar subqueries are; or precompute via MERGE INTO)")
-    val hitDf = withName.filter(predicate)
-      .select(col("__fname")).distinct().localCheckpoint()
-    if (hitDf.isEmpty) return base
+    // one probe pass → hit file names; the rewrite reads only those
+    val hitNames = fileNames(withName.filter(predicate).select(col("__fname")))
+    if (hitNames.isEmpty) return base
+    val removes = hitFiles(files, hitNames)
     val p = coalesce(predicate, lit(false))
-    val inHit = withName.join(broadcast(hitDf), "__fname")
+    val inHit = scanFiles(spark, path, base, removes, keepFname = false)
     // IN/EXISTS subqueries are only legal in FILTERS (Spark's subquery
     // placement rule), never inside the per-column when(p, …)
     // projection — a subquery predicate takes the two-filter shape
@@ -2117,8 +2132,6 @@ object TxnTable {
           }: _*))
     val adds = writeData(spark, path,
       withChecks(spark, path, rewritten), 1)
-    val hitNames = hitDf.collect().map(_.getString(0)).toSet
-    val removes = files.filter(f => hitNames.contains(f.split('/').last))
     try commitRewrite(path, base, "update", adds, removes,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -2175,14 +2188,16 @@ object TxnTable {
     * Delta/SQL); NULL-keyed source rows match nothing and fall through
     * to the insert clause (SQL equality).
     *
-    * Scale shape: ONE inner-join pass over the table finds (a) the
-    * files containing a row some clause actually fires on — only those
-    * are rewritten, carried files stay by reference — and (b) the
-    * matched key set, so the insert side is an anti-join of the SOURCE
-    * against metadata-scale keys, never a second table scan. The
-    * source is broadcast when small (Spark decides); the rewrite reads
-    * only hit files. Cost: O(table scan) + O(hit files rewrite),
-    * exactly the Delta merge shape.
+    * Scale shape: ONE probe pass (the table joined to the source; the
+    * source is broadcast when small, Spark decides) finds (a) the files
+    * containing a row some clause actually fires on, whose names are
+    * collected to the driver once — only those are rewritten, carried
+    * files stay by reference — and (b) the matched key set, so the
+    * insert side is an anti-join of the SOURCE against O(matched) keys,
+    * never a second table scan. The rewrite then scans only the hit
+    * files; survivors and inserts are written into separate files (a
+    * zero-row file is dropped, not pre-checked). Cost: O(table scan)
+    * + O(hit files rewrite), exactly the Delta merge shape.
     */
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
       keyCols: Seq[String], matched: Seq[MergeMatched],
@@ -2191,11 +2206,9 @@ object TxnTable {
       bySource: Seq[MergeBySource] = Nil): Long = {
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
-    val current = snapshotScan(spark, path, base, abs)
     // LOGICAL surface: applyDv aliases the physical scan to logical
     // names (column mapping); clause SETs and inserts speak logical
-    val withName = applyDv(spark, path, base, current, keepFname = true)
+    val withName = scanFiles(spark, path, base, files, keepFname = true)
     val tableCols = withName.columns.toSeq.filterNot(_ == "__fname")
     val colType = withName.schema.fields.map(f => f.name -> f.dataType).toMap
     val srcS = source.select(
@@ -2209,90 +2222,87 @@ object TxnTable {
         dup.limit(3).collect().mkString(", "))
     // first-fire-wins claim tracking: build per-clause disjoint fire
     // predicates (claimed rows are excluded from later clauses)
-    val firePredicates = () => mergeFirePredicates(matched)
-    val bySourcePredicates = () => bySourceFirePredicates(bySource)
-    // pass 1: ONE table pass → fired file set + matched key set. A LEFT
+    val (delP, upds) = mergeFirePredicates(matched)
+    val (bsDelP, bsUpds) = bySourceFirePredicates(bySource)
+    // probe: ONE table pass → fired file names + matched key set. A LEFT
     // join (not inner) so NOT MATCHED BY SOURCE clauses see unmatched
     // target rows; only matched rows and by-source-fired rows
     // materialize through the checkpoint (O(matched + fired), batch
-    // scale — never the whole table). With no by-source clauses the
-    // filter reduces to "matched", which Catalyst's EliminateOuterJoin
-    // turns back into the inner join this always was.
+    // scale — never the whole table), and only when the insert side
+    // needs the matched keys. With no by-source clauses the filter
+    // reduces to "matched", which Catalyst's EliminateOuterJoin turns
+    // back into the inner join this always was.
     val m = col(SrcStruct).isNotNull
-    val joinedAll = withName.join(srcS, keyCols, "left")
-    val (delAll, updAll) = firePredicates()
-    val anyMatchedFire = updAll.map(_._1).foldLeft(delAll)(_ || _)
-    val (bsDelAll, bsUpdAll) = bySourcePredicates()
-    val anyBsFire = bsUpdAll.map(_._1).foldLeft(bsDelAll)(_ || _)
-    val probe = joinedAll
+    val anyMatchedFire = upds.map(_._1).foldLeft(delP)(_ || _)
+    val anyBsFire = bsUpds.map(_._1).foldLeft(bsDelP)(_ || _)
+    val probe0 = withName.join(srcS, keyCols, "left")
       .select(col("__fname") +: keyCols.map(col) :+ m.as("__m") :+
         when(m, anyMatchedFire).otherwise(anyBsFire).as("__fire"): _*)
       .filter(col("__m") || col("__fire"))
-      .localCheckpoint()
-    val hitDf = probe.filter(col("__fire"))
-      .select(col("__fname")).distinct().localCheckpoint()
-    val matchedKeys = probe.filter(col("__m"))
-      .select(keyCols.map(col): _*).distinct()
-    val nHitFiles = hitDf.count()
-    // pass 2: rewrite ONLY hit files — delete claimed-deleted rows
-    // (matched AND by-source), apply the winning update's SET per
-    // side, carry everything else
-    val survivorAdds =
-      if (nHitFiles == 0) Nil
+    val probe = if (notMatched.isEmpty) probe0 else probe0.localCheckpoint()
+    val hitNames = fileNames(
+      probe.filter(col("__fire")).select(col("__fname")))
+    if (hitNames.isEmpty && notMatched.isEmpty) return base // nothing fired
+    val removes = hitFiles(files, hitNames)
+    // rewrite ONLY hit files — delete claimed-deleted rows (matched AND
+    // by-source), apply the winning update's SET per side, carry
+    // everything else
+    val survivors =
+      if (removes.isEmpty) None
       else {
-        val joined = withName.join(broadcast(hitDf), "__fname")
+        val joined = scanFiles(spark, path, base, removes, keepFname = false)
           .join(srcS, keyCols, "left")
-        val mm = col(SrcStruct).isNotNull
-        val (delP, upds) = firePredicates()
-        val (bsDelP, bsUpds) = bySourcePredicates()
-        val out = joined.filter(!when(mm, delP).otherwise(bsDelP))
+        Some(joined.filter(!when(m, delP).otherwise(bsDelP))
           .select(tableCols.map { c =>
             val afterMatched =
               upds.foldRight(col(c)) { case ((fire, set), acc) =>
                 if (set.contains(c))
-                  when(mm && fire,
-                    set(c).cast(colType(c))).otherwise(acc)
+                  when(m && fire, set(c).cast(colType(c))).otherwise(acc)
                 else acc
               }
             bsUpds.foldRight(afterMatched) { case ((fire, set), acc) =>
               if (set.contains(c))
-                when(!mm && fire,
-                  set(c).cast(colType(c))).otherwise(acc)
+                when(!m && fire, set(c).cast(colType(c))).otherwise(acc)
               else acc
             }.as(c)
-          }: _*)
-        val outC = withChecks(spark, path, out)
-        if (out.isEmpty) Nil
-        else if (clusterBy.nonEmpty)
-          writeDataPrepared(spark, path,
-            outC.repartitionByRange(math.max(1, nHitFiles.toInt),
-              clusterBy: _*).sortWithinPartitions(clusterBy: _*))
-        else writeData(spark, path, outC, 1)
+          }: _*))
       }
     // insert side: anti-join the SOURCE against the matched keys
     // (metadata-scale), never a second scan of the table; multiple
     // clauses fold first-fire-wins into ONE select
-    val insertAdds =
-      if (notMatched.isEmpty) Nil
-      else {
-        val cand = srcS.join(matchedKeys, keyCols, "left_anti")
-        val rows = notMatchedRows(cand, notMatched, tableCols,
-          c => colType(c))
-        val rowsC = withChecks(spark, path, rows)
-        if (rows.isEmpty) Nil
-        else if (clusterBy.nonEmpty)
-          writeDataPrepared(spark, path,
-            rowsC.repartitionByRange(1, clusterBy: _*)
-              .sortWithinPartitions(clusterBy: _*))
-        else writeData(spark, path, rowsC, 1)
-      }
-    val adds = survivorAdds ++ insertAdds
-    if (adds.isEmpty && nHitFiles == 0) return base // nothing fired
-    val hitNames = hitDf.collect().map(_.getString(0)).toSet
-    val removes = files.filter(f => hitNames.contains(f.split('/').last))
+    val inserts =
+      if (notMatched.isEmpty) None
+      else Some(notMatchedRows(
+        srcS.join(probe.filter(col("__m")).select(keyCols.map(col): _*)
+          .distinct(), keyCols, "left_anti"),
+        notMatched, tableCols, c => colType(c)))
+    val adds = dropEmpty(path, writeSides(spark, path,
+      survivors.map(withChecks(spark, path, _)),
+      inserts.map(withChecks(spark, path, _)), 1, removes.size, clusterBy))
+    if (adds.isEmpty && removes.isEmpty) return base // nothing fired
     try commitRewrite(path, base, "merge", adds, removes,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
+  }
+
+  /** Write a keyed rewrite's survivors (when any file was hit) and its
+    * inserts, each side into its OWN files: one file per hit file when
+    * clustered (range-partitioned and sorted on `clusterBy`, so a merge
+    * does not erode the layout's pruning tightness), else one; inserts
+    * into `insertFiles`. One write of the union would put both sides in
+    * the same file — Spark zips equally-partitioned union children —
+    * and that file's min/max stats would span the rewritten keys AND
+    * the inserted ones, pruning neither. May return zero-row adds. */
+  private def writeSides(spark: SparkSession, path: String,
+      survivors: Option[DataFrame], inserts: Option[DataFrame],
+      insertFiles: Int, nHit: Int, clusterBy: Seq[Column])
+      : Seq[TxnAdd] = {
+    def write(df: DataFrame, n: Int) = writeDataPrepared(spark, path,
+      if (clusterBy.isEmpty) df.repartition(n)
+      else df.repartitionByRange(n, clusterBy: _*)
+        .sortWithinPartitions(clusterBy: _*))
+    survivors.toSeq.flatMap(write(_, if (clusterBy.isEmpty) 1 else nHit)) ++
+      inserts.toSeq.flatMap(write(_, insertFiles))
   }
 
   /** First-fire-wins fire predicates for WHEN MATCHED clauses:
@@ -2407,6 +2417,8 @@ object TxnTable {
       .localCheckpoint()
     val hits = matchedRows.filter(col("__fire"))
       .select(col("__fname").as("file"), col("__pos").as("pos"))
+    val hitNames = fileNames(hits.select(col("file")))
+    if (hitNames.isEmpty && notMatched.isEmpty) return base // nothing fired
     val updatedMatched = matchedRows
       .filter(col("__m") && col("__fire") && !col("__del"))
       .select(tableCols.map { c =>
@@ -2437,28 +2449,29 @@ object TxnTable {
       }
     val newRows = updatedMatched.unionByName(updatedBySource)
       .unionByName(inserts)
-    val adds =
-      if (newRows.isEmpty) Nil
-      else writeData(spark, path, withChecks(spark, path, newRows),
-        partitions)
-    if (hits.isEmpty && adds.isEmpty) return base // nothing fired
+    val adds = dropEmpty(path, writeData(spark, path,
+      withChecks(spark, path, newRows), partitions))
+    commitMorChanges(spark, path, base, "dvmerge", files, hitNames, hits,
+      oldDv, adds)
+  }
+
+  /** The tail every MERGE-ON-READ change shares: write the hit files'
+    * replacement DV (when any row was hit) and publish it with `adds` in
+    * ONE commit. Nothing hit and nothing added returns `base`. Staged
+    * files are cleaned on abort. */
+  private def commitMorChanges(spark: SparkSession, path: String,
+      base: Long, op: String, files: Seq[String], hitNames: Set[String],
+      hits: DataFrame, oldDv: DataFrame, adds: Seq[TxnAdd]): Long = {
+    if (hitNames.isEmpty && adds.isEmpty) return base
     val (dvs, dvFile) =
-      if (hits.isEmpty) (Nil, None)
+      if (hitNames.isEmpty) (Nil, None)
       else
         try {
-          val (d, f) = buildDvs(spark, path, files, hits, oldDv)
+          val (d, f) = buildDvs(spark, path, files, hitNames, hits, oldDv)
           (d, Some(f))
         } catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-    try commitDvs(path, base, "dvmerge", dvs, adds)
-    catch {
-      case e: Throwable =>
-        cleanupStaged(path, adds)
-        dvFile.foreach { f =>
-          try Files.deleteIfExists(localRoot(path).resolve(f))
-          catch { case _: Throwable => () }
-        }
-        throw e
-    }
+    try commitDvs(path, base, op, dvs, adds)
+    catch { case e: Throwable => cleanupStaged(path, adds, dvFile); throw e }
   }
 
   /** Keyed anti-delete: atomically delete every current row whose
@@ -2501,36 +2514,19 @@ object TxnTable {
       op: String = "dvmerge"): Long = {
     val base = currentVersion(path)
     val (live, oldDv, files) = liveWithPos(spark, path, base)
-    val keysS = keys.select(keyCols.map(col): _*).distinct()
-    val hits = live.join(keysS, keyCols, "left_semi")
+    // semi-join: duplicate keys cannot multiply hits, no distinct needed
+    val hits = live.join(keys.select(keyCols.map(col): _*), keyCols,
+        "left_semi")
       .select(col("__fname").as("file"), col("__pos").as("pos"))
       .localCheckpoint()
+    val hitNames = fileNames(hits.select(col("file")))
     checkSchema(path, upserts, evolveSchema = false)
     val tableCols = live.columns.toSeq
       .filterNot(c => c == "__fname" || c == "__pos")
-    val ups = withChecks(spark, path,
-      upserts.select(tableCols.map(col): _*))
-    val adds =
-      if (upserts.isEmpty) Nil
-      else writeData(spark, path, ups, partitions)
-    if (hits.isEmpty && adds.isEmpty) return base
-    val (dvs, dvFile) =
-      if (hits.isEmpty) (Nil, None)
-      else
-        try {
-          val (d, f) = buildDvs(spark, path, files, hits, oldDv)
-          (d, Some(f))
-        } catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-    try commitDvs(path, base, op, dvs, adds)
-    catch {
-      case e: Throwable =>
-        cleanupStaged(path, adds)
-        dvFile.foreach { f =>
-          try Files.deleteIfExists(localRoot(path).resolve(f))
-          catch { case _: Throwable => () }
-        }
-        throw e
-    }
+    val adds = dropEmpty(path, writeData(spark, path, withChecks(spark, path,
+      upserts.select(tableCols.map(col): _*)), partitions))
+    commitMorChanges(spark, path, base, op, files, hitNames, hits, oldDv,
+      adds)
   }
 
   /** [[merge]] (keyed upsert) at MERGE-ON-READ cost — replace every
@@ -2934,63 +2930,35 @@ object TxnTable {
     if (expectedBase >= 0 && base != expectedBase)
       throw new TxnConflictException(base)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
-    val keyset = keys.distinct()
     // Null-keyed rows match nothing under SQL equality; drop them from
     // the match set so an all-null bookkeeping row doesn't plan a join
-    // that can never hit.
-    val matchable = keyset.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
+    // that can never hit. Semi/anti joins ignore duplicate keys, so the
+    // key set needs no distinct.
+    val matchable = keys.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
     insert.foreach(d => checkSchema(path, d, evolveSchema = false))
     // Schema-pinned read (snapshotReader): on a schema-evolved table the
     // survivor rewrite must see the evolved shape — parquet inference
     // from an old-generation footer would silently drop evolved columns
     // from the rewritten files (permanent data loss in the new commit).
-    val current = snapshotScan(spark, path, base, abs)
     // LOGICAL surface (column mapping): tableCols from the aliased frame
-    val withName = applyDv(spark, path, base, current, keepFname = true)
+    val withName = scanFiles(spark, path, base, files, keepFname = true)
     val tableCols = withName.columns.toSeq.filterNot(_ == "__fname")
-    // File names under data/ are UUIDs, so the bare name is a complete
-    // key. The hit-file set is a DATAFRAME end-to-end (localCheckpoint
-    // materializes the one input_file_name() pass; the survivors join
-    // broadcasts it); the single driver materialization is the collect
-    // at the bottom, which the commit's `removes` metadata needs
-    // regardless — metadata-scale, bounded by the snapshot file count.
-    val hitDf = withName.join(matchable, keyCols, "left_semi")
-      .select(col("__fname")).distinct().localCheckpoint()
-    val nHitFiles = hitDf.count()
-    val survivorAdds =
-      if (nHitFiles == 0) Nil
-      else {
-        // USING joins hoist the key columns to the front — restore the
-        // table's column order so rewritten files match the schema.
-        val survivors = withName
-          .join(broadcast(hitDf), "__fname")
-          .join(matchable, keyCols, "left_anti")
-          .select(tableCols.map(col): _*)
-        if (survivors.isEmpty) Nil
-        else if (clusterBy.nonEmpty)
-          // keep the rewritten files clustered too, one per hit file,
-          // so a merge does not erode the layout's pruning tightness
-          writeDataPrepared(spark, path,
-            survivors.repartitionByRange(nHitFiles.toInt, clusterBy: _*)
-              .sortWithinPartitions(clusterBy: _*))
-        else writeData(spark, path, survivors, 1)
-      }
-    val insertAdds = insert match {
-      case Some(d) if !d.isEmpty && clusterBy.nonEmpty =>
-        writeDataPrepared(spark, path,
-          withChecks(spark, path, d)
-            .repartitionByRange(partitions, clusterBy: _*)
-            .sortWithinPartitions(clusterBy: _*))
-      case Some(d) if !d.isEmpty =>
-        writeData(spark, path, withChecks(spark, path, d), partitions)
-      case _ => Nil
-    }
-    val adds = survivorAdds ++ insertAdds
-    if (adds.isEmpty && nHitFiles == 0) return base // no-op merge
-    val hitNames = hitDf.collect().map(_.getString(0)).toSet
-    // last-segment comparison — see deleteWhere (clone-safe)
-    val removes = files.filter(f => hitNames.contains(f.split('/').last))
+    // One probe pass collects the hit files' names to the driver once —
+    // metadata-scale, the commit's `removes`; the rewrite scans only them
+    val removes = hitFiles(files, fileNames(
+      withName.join(matchable, keyCols, "left_semi").select(col("__fname"))))
+    // USING joins hoist the key columns to the front — restore the
+    // table's column order so rewritten files match the schema.
+    val survivors =
+      if (removes.isEmpty) None
+      else Some(scanFiles(spark, path, base, removes, keepFname = false)
+        .join(matchable, keyCols, "left_anti")
+        .select(tableCols.map(col): _*))
+    val inserts = insert.map(withChecks(spark, path, _))
+    if (survivors.isEmpty && inserts.isEmpty) return base // no-op delete
+    val adds = dropEmpty(path, writeSides(spark, path, survivors, inserts,
+      partitions, removes.size, clusterBy))
+    if (adds.isEmpty && removes.isEmpty) return base // no-op merge
     // CAS callers derived their INPUT from the base snapshot — never
     // rebase those; a plain merge commutes with non-overlapping commits
     val policy = if (expectedBase >= 0) NoRebase else CommuteNonOverlapping
@@ -3027,8 +2995,7 @@ object TxnTable {
         val mapping = dvm.toSeq
           .map { case (f, dv) => (f.split('/').last, dv.split('/').last) }
           .toDF("file", "__dv")
-        val dvRows = spark.read.parquet(dvm.values.toSeq.distinct
-            .map(f => localRoot(path).resolve(f).toString): _*)
+        val dvRows = readDvs(spark, path, dvm.values)
           .withColumn("__dv",
             element_at(split(input_file_name(), "/"), -1))
           .join(mapping, Seq("file", "__dv"), "left_semi")
@@ -3045,13 +3012,10 @@ object TxnTable {
   def compact(spark: SparkSession, path: String, targetFiles: Int = 1): Long = {
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
     // schema-pinned like every rewrite: compacting a schema-evolved
     // table must not lose evolved columns to single-footer inference
     val adds = writeData(spark, path,
-      applyDv(spark, path, base,
-        snapshotScan(spark, path, base, abs),
-        keepFname = false), targetFiles)
+      scanFiles(spark, path, base, files, keepFname = false), targetFiles)
     try commitRewrite(path, base, "compact", adds, files,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3124,14 +3088,11 @@ object TxnTable {
       dvm.contains(f) || ai.get(f).exists(_.bytes < targetBytes))
     if (candidates.size < 2 && !candidates.exists(dvm.contains))
       return base // nothing to fold: head unchanged IS the signal
-    val abs = candidates.map(f => localRoot(path).resolve(f).toString)
     val totalBytes = candidates.flatMap(ai.get).map(_.bytes).sum
     val bins = math.max(1,
       math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val adds = writeData(spark, path,
-      applyDv(spark, path, base,
-        snapshotScan(spark, path, base, abs),
-        keepFname = false), bins)
+      scanFiles(spark, path, base, candidates, keepFname = false), bins)
     try commitRewrite(path, base, "compact", adds, candidates,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3165,10 +3126,7 @@ object TxnTable {
       a: Column, targetFiles: Int = 16): Long = {
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
-    val clustered = applyDv(spark, path, base,
-      snapshotScan(spark, path, base, abs),
-      keepFname = false)
+    val clustered = scanFiles(spark, path, base, files, keepFname = false)
       .repartitionByRange(targetFiles, a)
       .sortWithinPartitions(a)
     val adds = writeDataPrepared(spark, path, clustered)
@@ -3181,11 +3139,9 @@ object TxnTable {
       a: Column, b: Column, targetFiles: Int = 16): Long = {
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
     val clustered = graft.operators.Layout.zorderPartitions(
-      applyDv(spark, path, base,
-        snapshotScan(spark, path, base, abs),
-        keepFname = false), a, b, targetFiles)
+      scanFiles(spark, path, base, files, keepFname = false), a, b,
+      targetFiles)
     val adds = writeDataPrepared(spark, path, clustered)
     try commitRewrite(path, base, "compact:cluster", adds, files,
       CommuteNonOverlapping)
@@ -3201,11 +3157,8 @@ object TxnTable {
       a: Column, b: Column, c: Column, targetFiles: Int = 27): Long = {
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
     val clustered = graft.operators.Layout.zorderPartitions3(
-      applyDv(spark, path, base,
-        snapshotScan(spark, path, base, abs),
-        keepFname = false), a, b, c,
+      scanFiles(spark, path, base, files, keepFname = false), a, b, c,
       targetFiles)
     val adds = writeDataPrepared(spark, path, clustered)
     try commitRewrite(path, base, "compact:cluster", adds, files,
@@ -3271,11 +3224,9 @@ object TxnTable {
         s"$path has no cluster commit — run a full re-cluster " +
           "(compactClustered) or CTAS CLUSTER BY first"))
     if (ct.tailFiles.isEmpty) return base // already fully clustered
-    val abs = ct.tailFiles.map(f => localRoot(path).resolve(f).toString)
     val bins = math.max(1, math.round(targetFiles.toDouble *
       ct.tailBytes / math.max(1L, ct.totalBytes)).toInt)
-    val scan = applyDv(spark, path, base,
-      snapshotScan(spark, path, base, abs), keepFname = false)
+    val scan = scanFiles(spark, path, base, ct.tailFiles, keepFname = false)
     val clustered = cols match {
       case Seq(a) =>
         scan.repartitionByRange(bins, a).sortWithinPartitions(a)
@@ -3336,9 +3287,7 @@ object TxnTable {
     val totBytes = files.flatMap(ai.get).map(_.bytes).sum
     val bins = math.max(1, math.round(targetFiles.toDouble *
       selBytes / math.max(1L, totBytes)).toInt)
-    val abs = inRange.map(f => localRoot(path).resolve(f).toString)
-    val scan = applyDv(spark, path, base,
-      snapshotScan(spark, path, base, abs), keepFname = false)
+    val scan = scanFiles(spark, path, base, inRange, keepFname = false)
     val clustered = cols match {
       case Seq(a) =>
         scan.repartitionByRange(bins, a).sortWithinPartitions(a)

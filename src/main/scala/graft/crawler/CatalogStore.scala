@@ -1,6 +1,8 @@
 package graft.crawler
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 
 /** One column of one dataset as recorded in the catalog (C2 output). */
 case class ColumnMeta(
@@ -56,16 +58,24 @@ object CatalogStore {
     infos
   }
 
+  /** One catalog table of a snapshot, read with the schema of the case
+    * class it was written from — an inferred read would run a Spark
+    * schema-inference job per table. */
+  private def readTable[T <: Product: TypeTag](spark: SparkSession,
+      dir: String): DataFrame =
+    spark.read.schema(Encoders.product[T].schema).parquet(dir)
+
   def readDatasets(spark: SparkSession, snapshotDir: String): Seq[DatasetInfo] = {
     import spark.implicits._
-    spark.read.parquet(s"$snapshotDir/datasets").as[DatasetInfo].collect().toSeq
+    readTable[DatasetInfo](spark, s"$snapshotDir/datasets")
+      .as[DatasetInfo].collect().toSeq
   }
 
   def readColumns(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/columns")
+    readTable[ColumnMeta](spark, s"$snapshotDir/columns")
 
   def readProfiles(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/profiles")
+    readTable[ColumnProfile](spark, s"$snapshotDir/profiles")
 
   /** C5: diff a fresh discovery against a previous snapshot, keyed on
     * (size, mtime, numFiles) — unchanged datasets are skipped by an
