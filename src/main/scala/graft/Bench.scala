@@ -1,8 +1,11 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.queries.ContractQueries
+import graft.tools.Measure
 
 /** Benchmark main: times the 16 headline contract queries on
   * SPARK_GRAFT_SF_DIR (default sf0.1), warm. Prints exactly one JSON line.
@@ -98,43 +101,42 @@ object Bench {
     // in the OS page cache and the vectorized reader is already the
     // fastest path. See BASELINE.md "negative results".
 
-    // Warm-up: run everything once, untimed.
-    suite.foreach { case (_, fn) =>
+    // A query that throws is named in "failed" and fails the run (exit
+    // 1); its draws still record the time to the failure.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def attempt(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       try fn(spark, benchDir).collect()
-      catch { case _: Throwable => () }
-    }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+      }
+
+    // Warm-up: run everything once, untimed.
+    suite.foreach { case (name, fn) => attempt(name, fn) }
 
     // Min of 5 timed runs per query; every run is a full fresh
     // plan-build + execution + collect (no plan or shuffle reuse).
     // 5, not 3: the per-round driver run lands on an uncontrolled host,
     // and the r3→r4 adjudication showed ±30% single-run noise — more
     // draws make the min a sturdier estimator of the quiet-host time.
-    def loadavg(): String =
-      try {
-        val src = scala.io.Source.fromFile("/proc/loadavg")
-        try src.mkString.trim.split("\\s+").take(3).mkString(",")
-        finally src.close()
-      } catch { case _: Throwable => "" }
-
     val names = suite.map(_._1)
     val drawTimes = scala.collection.mutable.LinkedHashMap(
       names.map(_ -> Vector.empty[Double]): _*)
     def draw(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       val t0 = System.nanoTime()
-      try { fn(spark, benchDir).collect() }
-      catch { case _: Throwable => () }
+      attempt(name, fn)
       drawTimes(name) = drawTimes(name) :+ (System.nanoTime() - t0) / 1e9
     }
-    val loadBefore = loadavg()
+    val loadBefore = Measure.loadavg()
     val loadPoints = suite.map { case (name, fn) =>
       (1 to 5).foreach(_ => draw(name, fn))
-      loadavg()
+      Measure.loadavg()
     }
     // Final sweep: one more draw of every query, long after its
     // consecutive block — the cross-check that rescues a query whose
     // block landed inside a localized contention window.
     suite.foreach { case (name, fn) => draw(name, fn) }
-    val loadAfterSweep = loadavg()
+    val loadAfterSweep = Measure.loadavg()
     val results = names.map(n => n -> drawTimes(n).min)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -144,7 +146,7 @@ object Bench {
     val loads = ((loadBefore +: loadPoints) :+ loadAfterSweep)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"suite_total_warm","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","draws":$draws,"loadavg":$loads}"""
+    val line = s"""{"metric":"suite_total_warm","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","draws":$draws,"loadavg":$loads,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     // Stop Spark BEFORE emitting the summary so no executor/shutdown
     // logging can land after (or interleave with) the JSON line the
     // driver parses; also persist it as a file artifact so a mangled
@@ -153,8 +155,9 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_SUMMARY.json"),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(line)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

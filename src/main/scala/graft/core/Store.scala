@@ -3,6 +3,8 @@ package graft.core
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOption}
 
+import scala.util.control.NonFatal
+
 /** THE storage seam: every cross-process atomicity primitive the
   * engine relies on, in one place, each with its object-store port
   * contract spelled out. The local/HDFS implementations live here and
@@ -89,7 +91,7 @@ object Store {
         val it = Files.walk(tmpDir)
         try it.sorted(java.util.Comparator.reverseOrder())
           .iterator().forEachRemaining(p => { Files.deleteIfExists(p); () })
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         finally it.close()
         if (!Files.exists(dstDir)) throw e
         false

@@ -520,7 +520,7 @@ object TxnTable {
         // derived state: overwrite-OK atomic publish via the seam
         Store.putAtomic(checkpointFile(path, commit.version),
           json.getBytes(StandardCharsets.UTF_8))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
   }
 
@@ -597,7 +597,7 @@ object TxnTable {
       }
       Some(Ckpt(best, files, horizon, schemaGens, schema, streams, allAdds,
         dvs, cons, prps, csrc))
-    } catch { case _: Throwable => None } // corrupt checkpoint → full replay
+    } catch { case NonFatal(_) => None } // corrupt checkpoint → full replay
   }
 
   /** One commit by version — O(1), for callers walking the log
@@ -772,7 +772,7 @@ object TxnTable {
         case _ => Map.empty[String, Long]
       }
       Some(AddStats(cols, l, s, n))
-    } catch { case _: Throwable => None } // malformed → footer fallback
+    } catch { case NonFatal(_) => None } // malformed → footer fallback
 
   class SchemaMismatchException(msg: String) extends RuntimeException(msg)
 
@@ -2146,7 +2146,7 @@ object TxnTable {
       case _: org.apache.spark.sql.catalyst.expressions.InSubquery => true
       case _: org.apache.spark.sql.catalyst.expressions.Exists => true
       case _ => false
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 
   /** Keyed MERGE (the Delta MERGE whenMatched-delete + insert role):
     * atomically replace every current row whose `keyCols` tuple appears
@@ -2222,8 +2222,8 @@ object TxnTable {
         dup.limit(3).collect().mkString(", "))
     // first-fire-wins claim tracking: build per-clause disjoint fire
     // predicates (claimed rows are excluded from later clauses)
-    val (delP, upds) = mergeFirePredicates(matched)
-    val (bsDelP, bsUpds) = bySourceFirePredicates(bySource)
+    val (delP, upds) = deleteAndUpdates(matchedClauses(matched))
+    val (bsDelP, bsUpds) = deleteAndUpdates(bySourceClauses(bySource))
     // probe: ONE table pass → fired file names + matched key set. A LEFT
     // join (not inner) so NOT MATCHED BY SOURCE clauses see unmatched
     // target rows; only matched rows and by-source-fired rows
@@ -2305,45 +2305,37 @@ object TxnTable {
       inserts.toSeq.flatMap(write(_, insertFiles))
   }
 
-  /** First-fire-wins fire predicates for WHEN MATCHED clauses:
-    * (delete-fire, per-update (fire, SET)) with claimed rows excluded
-    * from later clauses. */
-  private def mergeFirePredicates(matched: Seq[MergeMatched])
-      : (Column, Seq[(Column, Map[String, Column])]) = {
+  /** First-fire-wins over ordered MERGE clauses: a clause fires where
+    * its condition holds (NULL reads as false) and no earlier clause
+    * fired, so the returned per-clause fire predicates are disjoint. */
+  private def firePredicates(conds: Seq[Option[Column]]): Seq[Column] = {
     var claimed: Column = lit(false)
-    var deleteP: Column = lit(false)
-    val updates = Seq.newBuilder[(Column, Map[String, Column])]
-    matched.foreach {
-      case MatchedDelete(c) =>
-        val fire = !claimed && coalesce(c.getOrElse(lit(true)), lit(false))
-        deleteP = deleteP || fire
-        claimed = claimed || fire
-      case MatchedUpdate(set, c) =>
-        val fire = !claimed && coalesce(c.getOrElse(lit(true)), lit(false))
-        updates += ((fire, set))
-        claimed = claimed || fire
+    conds.map { c =>
+      val fire = !claimed && coalesce(c.getOrElse(lit(true)), lit(false))
+      claimed = claimed || fire
+      fire
     }
-    (deleteP, updates.result())
   }
 
-  /** [[mergeFirePredicates]] for WHEN NOT MATCHED BY SOURCE clauses —
-    * same ordering/claim semantics, target-only expressions. */
-  private def bySourceFirePredicates(bySource: Seq[MergeBySource])
+  /** WHEN MATCHED or NOT MATCHED BY SOURCE clauses as (SET, condition),
+    * `None` for DELETE, folded into (delete-fire, per-update
+    * (fire, SET)). */
+  private def deleteAndUpdates(
+      clauses: Seq[(Option[Map[String, Column]], Option[Column])])
       : (Column, Seq[(Column, Map[String, Column])]) = {
-    var claimed: Column = lit(false)
-    var deleteP: Column = lit(false)
-    val updates = Seq.newBuilder[(Column, Map[String, Column])]
-    bySource.foreach {
-      case BySourceDelete(c) =>
-        val fire = !claimed && coalesce(c.getOrElse(lit(true)), lit(false))
-        deleteP = deleteP || fire
-        claimed = claimed || fire
-      case BySourceUpdate(set, c) =>
-        val fire = !claimed && coalesce(c.getOrElse(lit(true)), lit(false))
-        updates += ((fire, set))
-        claimed = claimed || fire
-    }
-    (deleteP, updates.result())
+    val fired = clauses.map(_._1).zip(firePredicates(clauses.map(_._2)))
+    (fired.collect { case (None, f) => f }.foldLeft(lit(false))(_ || _),
+      fired.collect { case (Some(set), f) => (f, set) })
+  }
+
+  private def matchedClauses(matched: Seq[MergeMatched]) = matched.map {
+    case MatchedUpdate(set, c) => (Some(set), c)
+    case MatchedDelete(c) => (None, c)
+  }
+
+  private def bySourceClauses(bySource: Seq[MergeBySource]) = bySource.map {
+    case BySourceUpdate(set, c) => (Some(set), c)
+    case BySourceDelete(c) => (None, c)
   }
 
   /** Fold ordered WHEN NOT MATCHED insert clauses over the unmatched
@@ -2352,12 +2344,8 @@ object TxnTable {
   private def notMatchedRows(cand: DataFrame,
       notMatched: Seq[NotMatchedInsert], tableCols: Seq[String],
       colType: String => org.apache.spark.sql.types.DataType): DataFrame = {
-    var claimed: Column = lit(false)
-    val clauses = notMatched.map { case NotMatchedInsert(values, cond) =>
-      val fire = !claimed && coalesce(cond.getOrElse(lit(true)), lit(false))
-      claimed = claimed || fire
-      (fire, values)
-    }
+    val clauses =
+      firePredicates(notMatched.map(_.cond)).zip(notMatched.map(_.values))
     val anyIns = clauses.map(_._1).foldLeft(lit(false))(_ || _)
     cand.filter(anyIns).select(tableCols.map { c =>
       clauses.foldRight(lit(null).cast(colType(c)): Column) {
@@ -2404,9 +2392,9 @@ object TxnTable {
     // pass — only matched + by-source-fired rows materialize. A fired
     // row dies by DV position; update images (matched AND by-source)
     // re-append alongside the NOT MATCHED inserts, ONE commit.
-    val (delP, upds) = mergeFirePredicates(matched)
+    val (delP, upds) = deleteAndUpdates(matchedClauses(matched))
     val anyMatchedFire = upds.map(_._1).foldLeft(delP)(_ || _)
-    val (bsDelP, bsUpds) = bySourceFirePredicates(bySource)
+    val (bsDelP, bsUpds) = deleteAndUpdates(bySourceClauses(bySource))
     val anyBsFire = bsUpds.map(_._1).foldLeft(bsDelP)(_ || _)
     val m = col(SrcStruct).isNotNull
     val matchedRows = live.join(srcS, keyCols, "left")
@@ -3464,7 +3452,7 @@ object TxnTable {
       val json = s"""{"dst":"${esc(localRoot(dst).toString)}","version":$upTo}"""
       Files.write(cd.resolve(cloneRegName(dst)),
         json.getBytes(StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     0L
   }
 
@@ -3501,7 +3489,7 @@ object TxnTable {
         ((j \ "dst").extractOpt[String].contains(localRoot(dst).toString)
           && Files.deleteIfExists(p))
       }
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 
   /** Pinned source versions of registered live clones (for vacuum). */
   private def registeredClonePins(path: String): Seq[Long] = {
@@ -3518,7 +3506,7 @@ object TxnTable {
           val j = JsonMethods.parse(new String(Files.readAllBytes(p),
             StandardCharsets.UTF_8))
           Some((j \ "version").extract[Long])
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
       }.toSeq
     finally it.close()
   }

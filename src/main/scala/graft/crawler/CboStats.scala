@@ -1,5 +1,7 @@
 package graft.crawler
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
@@ -60,7 +62,7 @@ object CboStats {
         // registration over: drop min/max and keep ndv/nulls instead.
         try Option(Cast(Literal(str), dt, Some("UTC")).eval(null))
           .map(v => CatalogColumnStat.toExternalString(v, p.column, dt))
-        catch { case _: Throwable => None }
+        catch { case NonFatal(_) => None }
       }
     }
     CatalogColumnStat(

@@ -1,6 +1,7 @@
 package graft.crawler
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -137,7 +138,7 @@ object LakeCrawler {
             .map(_.asInstanceOf[org.apache.parquet.schema.Type].getName).toSet
           Set("n", "sum_dl", "n_buckets").subsetOf(names)
         }
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 
   /** C1: walk the lake root; each data file or uniform directory of data
     * files becomes a dataset. Hidden/underscore entries (_SUCCESS, …) are

@@ -186,6 +186,15 @@ object Dedup {
     * all-pairs), components from iterative min-label propagation —
     * O(cluster diameter) keyed joins, and near-dup clusters are
     * shallow in practice; nothing driver-sided anywhere.
+    *
+    * No similarity threshold is verified: sharing ONE band bucket makes
+    * two documents duplicates. A pair at shingle Jaccard s collides with
+    * probability 1−(1−s^r)^b for b = `bands` of r = numHashes/bands
+    * rows; under the defaults (12 hashes, 4 bands) 1−(1−s³)⁴, which is
+    * 0.94 at s = 0.8 but still ~2·10⁻⁶ for two documents sharing one
+    * shingle in 129 (s ≈ 0.008). Over ~10⁵ such weakly overlapping
+    * pairs an occasional unrelated document is dropped. Verify the
+    * candidates with [[ngramJaccard]] where a threshold must hold.
     */
   def minHashDedup(
       docs: DataFrame,

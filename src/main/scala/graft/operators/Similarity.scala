@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.dotProduct
 
 /** Similarity search over an embedding column (SURVEY.md §2.7 L3).
@@ -17,16 +16,11 @@ import graft.functions.VectorFunctions.dotProduct
 object Similarity {
 
   /** Cosine scorer: the native codegen Expression (graft.plans.
-    * CosineSimilarity — single fused loop, no per-row array allocation)
-    * by default; bitwise-identical to the higher-order-function
-    * formulation (same ascending fold), which remains available for
-    * comparison via `useNativeCosine = false`.
-    */
-  @volatile var useNativeCosine: Boolean = true
-
+    * CosineSimilarity — single fused loop, no per-row array allocation),
+    * bitwise-identical to the higher-order-function reference
+    * `VectorFunctions.cosineSimilarity` (same ascending fold). */
   def cosineSimilarity(a: Column, b: Column): Column =
-    if (useNativeCosine) graft.plans.GraftFunctions.cosine_sim(a, b)
-    else VectorFunctions.cosineSimilarity(a, b)
+    graft.plans.GraftFunctions.cosine_sim(a, b)
 
   /** Exact cosine top-k for one query vector (literal → evaluated
     * map-side; no join, no shuffle; TakeOrderedAndProject finishes it).

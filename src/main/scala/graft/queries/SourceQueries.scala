@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1070,7 +1072,7 @@ object SourceQueries {
       TxnTable.append(spark, t,
         orders.limit(5).withColumn("price_c", lit(-1L)))
       false
-    } catch { case _: Throwable => true }
+    } catch { case NonFatal(_) => true }
     require(bad && TxnTable.currentVersion(t) == vBefore,
       "a violating append must throw and commit nothing")
     // a satisfying derived slice lands

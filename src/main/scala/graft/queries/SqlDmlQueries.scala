@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -2185,7 +2187,7 @@ object SqlDmlQueries {
         try { GraftSql.execute(spark,
           s"UPDATE $n SET price_c = -1 WHERE o_custkey <= ${ck / 8}")
           false }
-        catch { case _: Throwable => true }
+        catch { case NonFatal(_) => true }
       require(violated, "the CHECK must reject the violating UPDATE")
       GraftSql.execute(spark,
         s"""UPDATE $n SET price_c = price_c * 2
