@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.core.Lake
 import graft.crawler.{CatalogStore, DatasetInfo}
-import graft.plans.CosineSimilarity
 
 /** Session extensions: registers the engine's native functions so any
   * session created with `spark.sql.extensions=graft.GraftExtensions`
@@ -14,34 +13,10 @@ import graft.plans.CosineSimilarity
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("rolling_fingerprint"),
-      new ExpressionInfo(classOf[graft.plans.RollingFingerprint].getName,
-        "rolling_fingerprint"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.RollingFingerprint(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("zorder"),
-      new ExpressionInfo(classOf[graft.plans.ZOrderInterleave].getName, "zorder"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.ZOrderInterleave(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("zorder3"),
-      new ExpressionInfo(classOf[graft.plans.ZOrderInterleave3].getName,
-        "zorder3"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.ZOrderInterleave3(exprs.head, exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[graft.plans.BloomMightContain].getName,
-        "bloom_might_contain"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.BloomMightContain(exprs.head, exprs(1))))
+    graft.plans.GraftFunctions.native.foreach { case (name, cls, build) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
     // RewriteTopKWindow is deliberately NOT injected: Spark 4's built-in
     // InferWindowGroupLimit already bounds the rank-filter shuffle, and
     // TopKBench measured the builtin at-or-better in both group regimes

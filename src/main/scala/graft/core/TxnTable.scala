@@ -229,14 +229,15 @@ object TxnTable {
   /** Write a checkpoint every this-many versions (v10, v20, …). */
   val CheckpointInterval = 10
 
-  /** Test seam: counts physical version-file reads, so specs can assert
-    * the checkpoint-amortized paths replay O(CheckpointInterval) commits
-    * per call instead of O(versions). Monotone; specs diff around a call. */
-  private[graft] val versionFileReads = new java.util.concurrent.atomic.AtomicLong
+  /** Physical version-file reads, so a caller can assert the
+    * checkpoint-amortized paths replay O(CheckpointInterval) commits
+    * per call instead of O(versions). */
+  val VersionFileReads: OpMetrics.Key[Long] =
+    OpMetrics.Key.counter("version_file_reads")
 
   /** The single physical read path for version files. */
   private def readCommit(path: String, v: Long): TxnCommit = {
-    versionFileReads.incrementAndGet()
+    OpMetrics.add(VersionFileReads)
     parse(new String(Files.readAllBytes(versionFile(path, v)),
       StandardCharsets.UTF_8))
   }
@@ -674,10 +675,11 @@ object TxnTable {
   /** Like writeData but trusts the frame's existing partitioning/sort —
     * the seam clustered layouts (compactClustered) come through, where a
     * blind repartition would destroy the ordering being written. */
-  /** Test seam: counts physical data-write jobs (every staged tranche
-    * comes through writeDataPrepared), so specs can assert a REBASED
-    * rewrite committed without re-running its rewrite job. */
-  private[graft] val dataWriteJobs = new java.util.concurrent.atomic.AtomicLong
+  /** Physical data-write jobs (every staged tranche comes through
+    * writeDataPrepared), so a caller can assert a REBASED rewrite
+    * committed without re-running its rewrite job. */
+  val DataWriteJobs: OpMetrics.Key[Long] =
+    OpMetrics.Key.counter("data_write_jobs")
 
   /** Test seam: suppresses write-time stats-in-log (simulating adds
     * written before the feature) so specs can pin the mixed-generation
@@ -688,7 +690,7 @@ object TxnTable {
       spark: SparkSession,
       path: String,
       df: DataFrame): Seq[TxnAdd] = {
-    dataWriteJobs.incrementAndGet()
+    OpMetrics.add(DataWriteJobs)
     val staging = Files.createTempDirectory("graft_txn_stage").toString
     // column mapping: files always store PHYSICAL names — the single
     // write-side seam (no-op on unrenamed tables / first writes)
@@ -697,24 +699,25 @@ object TxnTable {
     physical.write.mode("overwrite").parquet(staging)
     Files.createDirectories(dataDir(path))
     val conf = spark.sparkContext.hadoopConfiguration
-    Files.list(Paths.get(staging)).iterator().asScala.toSeq
+    val staged = Files.list(Paths.get(staging)).iterator().asScala.toSeq
       .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { src =>
-        // ONE footer read per fresh file, at write time: row count for
-        // the add (no second data scan) + the column min/max cache
-        // that lets pruned reads plan from the log alone (stats-in-log)
-        val st = graft.crawler.SkippingIndex.fileStats(conf, src.toString)
-        val name = s"part-${java.util.UUID.randomUUID()}.parquet"
-        val dst = dataDir(path).resolve(name)
-        Files.move(src, dst)
-        val statsJ =
-          if (collectWriteStats)
-            st.map { case (_, cols, ls, ss, ns) =>
-              statsJson(cols, ls, ss, ns) }
-          else None
-        TxnAdd(s"data/$name", st.map(_._1).getOrElse(0L),
-          Files.size(dst), statsJ)
-      }
+    OpMetrics.add(graft.crawler.SkippingIndex.FooterReads, staged.size)
+    staged.map { src =>
+      // ONE footer read per fresh file, at write time: row count for
+      // the add (no second data scan) + the column min/max cache
+      // that lets pruned reads plan from the log alone (stats-in-log)
+      val st = graft.crawler.SkippingIndex.fileStats(conf, src.toString)
+      val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+      val dst = dataDir(path).resolve(name)
+      Files.move(src, dst)
+      val statsJ =
+        if (collectWriteStats)
+          st.map { case (_, cols, ls, ss, ns) =>
+            statsJson(cols, ls, ss, ns) }
+        else None
+      TxnAdd(s"data/$name", st.map(_._1).getOrElse(0L),
+        Files.size(dst), statsJ)
+    }
   }
 
   private def statsJson(cols: Seq[String],
@@ -1285,6 +1288,7 @@ object TxnTable {
     convertHarvestHook()
     import spark.implicits._
     val rootStr = root.toString
+    OpMetrics.add(graft.crawler.SkippingIndex.FooterReads, files.size)
     val harvested = spark.createDataset(files)
       .repartition(math.max(1, math.min(files.size, 256)))
       .map { f =>
@@ -1387,6 +1391,7 @@ object TxnTable {
     if (constraints(path).nonEmpty)
       withChecks(spark, path, spark.read.parquet(fresh: _*)).count()
     import spark.implicits._
+    OpMetrics.add(graft.crawler.SkippingIndex.FooterReads, fresh.size)
     val harvested = spark.createDataset(fresh)
       .repartition(math.max(1, math.min(fresh.size, 256)))
       .map { f =>
@@ -2672,11 +2677,11 @@ object TxnTable {
     * an explicit user-invoked scan (exactly like ANALYZE), recorded
     * as-of the analyzed version; data committed later simply ages it,
     * correctness never depends on freshness. */
-  /** Evidence hook: how many table scans the LAST [[computeHistogram]]
-    * ran — the ANALYZE pass is batched (one quantile aggregate for ALL
-    * columns, one combined per-bin-ndv pass, one MCV pass for all
-    * string columns), so a 10-column ANALYZE costs 2 scans, not 20. */
-  @volatile private[graft] var lastAnalyzeScans: Int = -1
+  /** How many table scans a [[computeHistogram]] ran — the ANALYZE
+    * pass is batched (one quantile aggregate for ALL columns, one
+    * combined per-bin-ndv pass, one MCV pass for all string columns),
+    * so a 10-column ANALYZE costs 2 scans, not 20. */
+  val AnalyzeScans: OpMetrics.Key[Int] = OpMetrics.Key.latest("analyze_scans")
 
   def computeHistogram(spark: SparkSession, path: String,
       columns: Seq[String], bins: Int = 64): Long = {
@@ -2790,7 +2795,7 @@ object TxnTable {
         s"graft.mcv.$nm" -> JsonMethods.compact(JsonMethods.render(j))
       }
     }
-    lastAnalyzeScans = scans
+    OpMetrics.record(AnalyzeScans, scans)
     setProperties(path, (histProps ++ mcvProps).toMap)
   }
 
@@ -4751,9 +4756,10 @@ object TxnTable {
 
   private[graft] def bloomPath(path: String): String = path + "__bloom"
 
-  /** Evidence hook: the files the last [[computeBloom]] actually
-    * scanned — specs pin the incremental top-up contract with it. */
-  @volatile private[graft] var lastBloomBuiltFiles: Seq[String] = Nil
+  /** The files a [[computeBloom]] actually scanned — pins the
+    * incremental top-up contract. */
+  val BloomBuiltFiles: OpMetrics.Key[Seq[String]] =
+    OpMetrics.Key.latest("bloom_built_files")
 
   private def bloomBytes(b: org.apache.spark.util.sketch.BloomFilter)
       : Array[Byte] = {
@@ -4795,7 +4801,7 @@ object TxnTable {
     val work: Set[(String, String)] = (for {
       f <- live; c <- names if !have((f, c)) } yield (f, c)).toSet
     val files = work.map(_._1).toSeq.sorted
-    lastBloomBuiltFiles = files
+    OpMetrics.record(BloomBuiltFiles, files)
     if (files.isEmpty)
       return math.max(-1L, currentVersion(bp))
     val ai = addsIndex(path, top)
@@ -4897,12 +4903,12 @@ object TxnTable {
       (b, vs) => vs.exists(v =>
         b.mightContainString(v.asInstanceOf[String])))
 
-  /** Evidence hook: how many file names the last bloom probe job
-    * returned to the driver — the probe runs inside tasks and only
-    * names of files the index can EXCLUDE come back (≤ live files;
-    * rows for dead files and other columns are dropped executor-side,
-    * never collected). */
-  @volatile private[graft] var lastBloomProbeCollected: Int = -1
+  /** How many file names a bloom probe job returned to the driver —
+    * the probe runs inside tasks and only names of files the index
+    * can EXCLUDE come back (≤ live files; rows for dead files and
+    * other columns are dropped executor-side, never collected). */
+  val BloomProbeCollected: OpMetrics.Key[Int] =
+    OpMetrics.Key.latest("bloom_probe_collected")
 
   private def readPrunedBloomImpl(spark: SparkSession, path: String,
       column: String, asOf: Long, vs: Seq[Any], pred: Column,
@@ -4934,7 +4940,7 @@ object TxnTable {
               .readFrom(new java.io.ByteArrayInputStream(bytes)), vs)
         }.map(_._1)
       }.collect().toSet
-    lastBloomProbeCollected = excluded.size
+    OpMetrics.record(BloomProbeCollected, excluded.size)
     val kept = live.filterNot(excluded)
     if (kept.isEmpty)
       spark.createDataFrame(

@@ -23,11 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object SkippingIndex {
 
-  /** Test seam: counts parquet footer opens (driver-side paths — the
-    * distributed build increments once per file on executors of the
-    * same JVM under local mode), so specs can assert a log-stats read
-    * planned with ZERO footer reads. */
-  private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong
+  /** Parquet footer opens, counted on the driver where the file list
+    * is dispatched (driver loop or distributed build alike), so a
+    * caller can assert a log-stats read planned with ZERO footers. */
+  val FooterReads: graft.core.OpMetrics.Key[Long] =
+    graft.core.OpMetrics.Key.counter("footer_reads")
+
+  /** `body`'s value; fails with `what` if it opened any footer. */
+  def footerFree[A](what: String)(body: => A): A = {
+    val (a, rec) = graft.core.OpMetrics.scope(body)
+    val reads = rec.count(FooterReads)
+    require(reads == 0, s"$what ($reads footer reads)")
+    a
+  }
 
   /** Java-serializable Hadoop Configuration carrier for the distributed
     * footer-read path: Configuration itself is not Serializable, but it
@@ -100,7 +108,6 @@ object SkippingIndex {
   private def footerBounds(conf: org.apache.hadoop.conf.Configuration,
       path: String, columns: Seq[String])
       : Option[(String, Long, Seq[Option[Long]], Seq[Option[Long]])] = {
-    footerReads.incrementAndGet()
     val p = new Path(path)
     val footerOpt =
       try Some(ParquetFileReader.readFooter(conf, p,
@@ -148,23 +155,32 @@ object SkippingIndex {
   def buildForFiles(spark: SparkSession, paths: Seq[String],
       columns: Seq[String]): DataFrame = {
     import spark.implicits._
-    if (paths.size <= DistributeThreshold) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.flatMap(footerBounds(conf, _, columns))
-        .toDF("file", "row_count", "mins", "maxs")
-    } else {
-      val cols = columns
+    readFooters(spark, paths, footerBounds(_, _, columns))
+      .toDF("file", "row_count", "mins", "maxs")
+  }
+
+  /** `read` over every path: a driver loop up to [[DistributeThreshold]]
+    * files, a Spark job past it. Counts [[FooterReads]] here, on the
+    * driver, for both. */
+  private def readFooters[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](
+      spark: SparkSession, paths: Seq[String],
+      read: (org.apache.hadoop.conf.Configuration, String) => Option[T])
+      : org.apache.spark.sql.Dataset[T] = {
+    graft.core.OpMetrics.add(FooterReads, paths.size)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    if (paths.size <= DistributeThreshold)
+      spark.createDataset(paths.flatMap(read(hconf, _)))
+    else {
       val slices = math.min(64, math.max(1, paths.size / 256))
       // ship the SESSION's Hadoop conf (custom filesystems, object-store
       // credentials) — a default per-partition Configuration would make
       // distributed builds fail exactly where the driver path succeeds
-      val bconf = spark.sparkContext.broadcast(
-        new SerConf(spark.sparkContext.hadoopConfiguration))
+      val bconf = spark.sparkContext.broadcast(new SerConf(hconf))
       spark.createDataset(
         spark.sparkContext.parallelize(paths, slices).mapPartitions { it =>
           val conf = bconf.value.value
-          it.flatMap(footerBounds(conf, _, cols))
-        }).toDF("file", "row_count", "mins", "maxs")
+          it.flatMap(read(conf, _))
+        })
     }
   }
 
@@ -181,7 +197,6 @@ object SkippingIndex {
       conf: org.apache.hadoop.conf.Configuration,
       path: String, column: String)
       : Option[(String, Long, Option[String], Option[String])] = {
-    footerReads.incrementAndGet()
     val p = new Path(path)
     val footerOpt =
       try Some(ParquetFileReader.readFooter(conf, p,
@@ -238,21 +253,8 @@ object SkippingIndex {
   def buildStringIndex(spark: SparkSession, paths: Seq[String],
       column: String): DataFrame = {
     import spark.implicits._
-    if (paths.size <= DistributeThreshold) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.flatMap(footerStringBounds(conf, _, column))
-        .toDF("file", "row_count", "mn", "mx")
-    } else {
-      val c = column
-      val slices = math.min(64, math.max(1, paths.size / 256))
-      val bconf = spark.sparkContext.broadcast(
-        new SerConf(spark.sparkContext.hadoopConfiguration))
-      spark.createDataset(
-        spark.sparkContext.parallelize(paths, slices).mapPartitions { it =>
-          val conf = bconf.value.value
-          it.flatMap(footerStringBounds(conf, _, c))
-        }).toDF("file", "row_count", "mn", "mx")
-    }
+    readFooters(spark, paths, footerStringBounds(_, _, column))
+      .toDF("file", "row_count", "mn", "mx")
   }
 
   /** Longest stored string bound for stats-in-log (UTF-8 bytes): a
@@ -275,11 +277,11 @@ object SkippingIndex {
     * then conservatively kept), extracted ONCE when the file is
     * written instead of on every pruned read. At 100 TB the
     * difference is a metadata-only plan vs millions of object-store
-    * footer GETs per query. */
+    * footer GETs per query. Runs on executors too, so callers count
+    * [[FooterReads]] on the driver where they dispatch the list. */
   def fileStats(conf: org.apache.hadoop.conf.Configuration, path: String)
       : Option[(Long, Seq[String], Map[String, (Long, Long)],
                 Map[String, (String, String)], Map[String, Long])] = {
-    footerReads.incrementAndGet()
     val p = new Path(path)
     val footerOpt =
       try Some(ParquetFileReader.readFooter(conf, p,

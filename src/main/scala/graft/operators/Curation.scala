@@ -87,10 +87,11 @@ object Curation {
     * boundary window fills the exact remainder; later buckets exceed
     * the budget by construction). Sources without a budget entry are
     * dropped — the budgets ARE the mixture. */
-  /** Evidence hook for specs: the last [[tokenBudgetMix]] driver
-    * collect's row count — bounded by budgeted sources × 65536, never
-    * by the source column's cardinality. */
-  @volatile private[operators] var lastMixMetadataRows: Int = -1
+  /** A [[tokenBudgetMix]] driver collect's row count — bounded by
+    * budgeted sources × 65536, never by the source column's
+    * cardinality. */
+  val MixMetadataRows: graft.core.OpMetrics.Key[Int] =
+    graft.core.OpMetrics.Key.latest("mix_metadata_rows")
 
   def tokenBudgetMix(df: DataFrame, idCol: Column, sourceCol: String,
       tokens: Column, budgets: Map[String, Long]): DataFrame = {
@@ -108,7 +109,7 @@ object Curation {
     val sums = d.groupBy(col(sourceCol), col("__b"))
       .agg(sum(col("__tok")).as("t")).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    lastMixMetadataRows = sums.length
+    graft.core.OpMetrics.record(MixMetadataRows, sums.length)
     val thr = budgets.toSeq.map { case (src, budget) =>
       val bs = sums.filter(_._1 == src).sortBy(_._2)
       var cum = 0L

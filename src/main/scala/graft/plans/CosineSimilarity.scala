@@ -101,22 +101,26 @@ object GraftFunctions {
         org.apache.spark.sql.graftbridge.Bridge.expression(a),
         org.apache.spark.sql.graftbridge.Bridge.expression(b)))
 
-  /** Register the engine's native functions for SQL texts in this
-    * session — must list every function GraftExtensions injects, since
-    * this is the path that covers sessions created WITHOUT the
-    * extensions (getOrCreate reuse).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_fingerprint", exprs => RollingFingerprint(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder", exprs => ZOrderInterleave(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dist2_int", exprs => SquaredDistanceInt(exprs(0), exprs(1)), "scala_udf")
+  /** The engine's native SQL functions: name → (expression class,
+    * builder). The one table both registration paths read:
+    * [[graft.GraftExtensions]] (sessions built with the extensions) and
+    * [[register]] (a reused session built without them). */
+  val native: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity],
+      e => CosineSimilarity(e(0), e(1))),
+    ("rolling_fingerprint", classOf[RollingFingerprint],
+      e => RollingFingerprint(e(0))),
+    ("zorder", classOf[ZOrderInterleave], e => ZOrderInterleave(e(0), e(1))),
+    ("zorder3", classOf[ZOrderInterleave3],
+      e => ZOrderInterleave3(e(0), e(1), e(2))),
+    ("bloom_might_contain", classOf[BloomMightContain],
+      e => BloomMightContain(e(0), e(1))),
+    ("dist2_int", classOf[SquaredDistanceInt],
+      e => SquaredDistanceInt(e(0), e(1))))
+
+  /** Register every [[native]] function for SQL texts in this session. */
+  def register(spark: SparkSession): Unit = native.foreach {
+    case (name, _, build) => spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(name, build, "scala_udf")
   }
 }

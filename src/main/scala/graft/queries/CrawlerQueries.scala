@@ -249,11 +249,13 @@ object CrawlerQueries {
     * → BroadcastHashJoin, by statistics, not by hint. Both the chosen
     * join operators AND the query's data results are oracle-checked;
     * even the filter cap is derived from the crawled max(c_custkey),
-    * so the whole gate is crawl-output-driven. Session conf and
-    * catalog mutations are scoped: confs restored in a finally,
-    * tables re-registered idempotently.
+    * so the whole gate is crawl-output-driven. The conf changes live
+    * on a private session; tables re-register idempotently.
     */
-  def c13CboBhj(spark: SparkSession, dir: String): DataFrame = {
+  def c13CboBhj(shared: SparkSession, dir: String): DataFrame = {
+    // the CBO flags below are set on a private session: concurrent
+    // users of `shared` keep their plans
+    val spark = shared.newSession()
     import spark.implicits._
     import graft.crawler.CboStats
     val cust = LakeCrawler.discover(spark, dir).find(_.name == "customer").get
@@ -268,24 +270,18 @@ object CrawlerQueries {
       .join(orders, col("o_custkey") === col("c_custkey"))
       .agg(count(lit(1)).as("n_rows"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("revenue_c"))
-    val conf = spark.conf
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> conf.getOption(k))
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    // /16, not /2: even without stats, logical Project scaling
+    // credits the 2-of-5 column pruning (~fileSize/4 estimate);
+    // only crawled ndv+min/max can get below fileSize/16 (~2%
+    // selectivity → ~fileSize/70). Both margins are ~4× and scale
+    // with the table, so the flip holds at every scale factor.
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+      (cust.sizeBytes / 16).toString)
     val (noStatsNode, statsNode, result) =
-      try {
-        conf.set("spark.sql.cbo.enabled", "true")
-        // /16, not /2: even without stats, logical Project scaling
-        // credits the 2-of-5 column pruning (~fileSize/4 estimate);
-        // only crawled ndv+min/max can get below fileSize/16 (~2%
-        // selectivity → ~fileSize/70). Both margins are ~4× and scale
-        // with the table, so the flip holds at every scale factor.
-        conf.set("spark.sql.autoBroadcastJoinThreshold", (cust.sizeBytes / 16).toString)
-        (CboStats.staticJoinNode(q("customer_nostats")),
-          CboStats.staticJoinNode(q("customer_stats")),
-          q("customer_stats").collect().head)
-      } finally saved.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _))
-      }
+      (CboStats.staticJoinNode(q("customer_nostats")),
+        CboStats.staticJoinNode(q("customer_stats")),
+        q("customer_stats").collect().head)
     val n = result.getLong(result.fieldIndex("n_rows"))
     val cents = result.getLong(result.fieldIndex("revenue_c"))
     Seq(("no_stats", noStatsNode, n, cents),

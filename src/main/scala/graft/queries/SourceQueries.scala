@@ -755,15 +755,15 @@ object SourceQueries {
       .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
     TxnTable.createClustered(spark, t, docs,
       Seq(col("source"), col("n_chars")), targetFiles = 16)
-    val before = SkippingIndex.footerReads.get()
-    val boxed = TxnTable.readPrunedBoxMixed(spark, t,
-      "source", "src2", "src5", Seq(("n_chars", 100L, 320L)))
-    val rows = boxed
-      .agg(count(lit(1)).as("c"), sum(col("n_chars")).as("nc_sum"),
-        sum(col("doc_id")).as("id_sum"))
-      .collect()
-    require(SkippingIndex.footerReads.get() == before,
-      "the mixed box must plan from the log alone")
+    val (boxed, rows) =
+      SkippingIndex.footerFree("the mixed box must plan from the log alone") {
+        val boxed = TxnTable.readPrunedBoxMixed(spark, t,
+          "source", "src2", "src5", Seq(("n_chars", 100L, 320L)))
+        (boxed, boxed
+          .agg(count(lit(1)).as("c"), sum(col("n_chars")).as("nc_sum"),
+            sum(col("doc_id")).as("id_sum"))
+          .collect())
+      }
     val live = TxnTable.snapshotFiles(t).size
     val read = boxed.inputFiles.length
     val strOnly = TxnTable.readPrunedString(spark, t, "source",
@@ -792,15 +792,15 @@ object SourceQueries {
       .select(col("doc_id"), col("source"), col("n_chars"))
     TxnTable.createClustered(spark, t, docs, Seq(col("source")),
       targetFiles = 16)
-    val before = SkippingIndex.footerReads.get()
-    val probed = TxnTable.readPrunedInString(spark, t, "source",
-      Seq("src3", "src7", "src12"))
-    val rows = probed
-      .agg(count(lit(1)).as("c"), sum(col("n_chars")).as("nc_sum"),
-        sum(col("doc_id")).as("id_sum"))
-      .collect()
-    require(SkippingIndex.footerReads.get() == before,
-      "the IN-set prune must plan from the log alone")
+    val (probed, rows) =
+      SkippingIndex.footerFree("the IN-set prune must plan from the log alone") {
+        val probed = TxnTable.readPrunedInString(spark, t, "source",
+          Seq("src3", "src7", "src12"))
+        (probed, probed
+          .agg(count(lit(1)).as("c"), sum(col("n_chars")).as("nc_sum"),
+            sum(col("doc_id")).as("id_sum"))
+          .collect())
+      }
     require(probed.inputFiles.nonEmpty &&
       probed.inputFiles.length < TxnTable.snapshotFiles(t).size,
       "the IN-set prune must skip files")
@@ -964,16 +964,17 @@ object SourceQueries {
     val ck = orders.agg(max(col("o_custkey"))).head().getLong(0)
     TxnTable.createClustered(spark, t, orders, Seq(col("o_custkey")),
       targetFiles = 10)
-    val f0 = graft.crawler.SkippingIndex.footerReads.get()
-    val (cnt1, scanned1, total1) =
-      TxnTable.countRange(spark, t, "o_custkey", ck / 4, 3 * ck / 4)
-    require(scanned1 < total1 && scanned1 <= 4,
-      s"range COUNT must scan only boundary files, got $scanned1/$total1")
-    val (mn, mx, scanned2, _) = TxnTable.minMaxOf(spark, t, "o_custkey")
-    require(scanned2 == 0,
-      s"min/max on a clean table must be metadata-only, scanned $scanned2")
-    require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-      "metadata aggregates must open ZERO parquet footers")
+    val (cnt1, mn, mx) = graft.crawler.SkippingIndex.footerFree(
+        "metadata aggregates must open ZERO parquet footers") {
+      val (cnt1, scanned1, total1) =
+        TxnTable.countRange(spark, t, "o_custkey", ck / 4, 3 * ck / 4)
+      require(scanned1 < total1 && scanned1 <= 4,
+        s"range COUNT must scan only boundary files, got $scanned1/$total1")
+      val (mn, mx, scanned2, _) = TxnTable.minMaxOf(spark, t, "o_custkey")
+      require(scanned2 == 0,
+        s"min/max on a clean table must be metadata-only, scanned $scanned2")
+      (cnt1, mn, mx)
+    }
     // MOR delete pushes ONLY the DV-carrying files back into the scan
     // set; the count stays exact against the live rows
     TxnTable.deleteWhereMor(spark, t, col("o_custkey") < ck / 8)
@@ -999,15 +1000,16 @@ object SourceQueries {
       targetFiles = 10)
     require(TxnTable.commits(t).last.adds.forall(_.stats.isDefined),
       "every add must carry write-time stats")
-    val before = SkippingIndex.footerReads.get()
-    val pruned = TxnTable.readPruned(spark, t, "o_custkey",
-      ck / 4, ck / 4 + ck / 8)
-    val agg = pruned.groupBy(col("o_orderstatus").as("st"))
-      .agg(count(lit(1)).as("cnt"), sum(col("price_c")).as("price_sum"),
-        sum(col("o_custkey")).as("ck_sum"))
-      .orderBy(col("st"))
-    val rows = agg.collect()
-    val reads = SkippingIndex.footerReads.get() - before
+    val ((pruned, rows), window) = graft.core.OpMetrics.scope {
+      val pruned = TxnTable.readPruned(spark, t, "o_custkey",
+        ck / 4, ck / 4 + ck / 8)
+      val agg = pruned.groupBy(col("o_orderstatus").as("st"))
+        .agg(count(lit(1)).as("cnt"), sum(col("price_c")).as("price_sum"),
+          sum(col("o_custkey")).as("ck_sum"))
+        .orderBy(col("st"))
+      (pruned, agg.collect())
+    }
+    val reads = window.count(SkippingIndex.FooterReads)
     require(reads == 0,
       s"log-stats prune must plan with zero footer opens, read $reads")
     require(pruned.inputFiles.nonEmpty &&

@@ -5,7 +5,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lake, TxnTable}
+import graft.core.{Lake, OpMetrics, TxnTable}
+import graft.crawler.SkippingIndex.{FooterReads, footerFree}
 import graft.sql.GraftSql
 
 /** SQL DML surface gates (round 13): UPDATE / DELETE FROM / MERGE INTO
@@ -20,6 +21,15 @@ object SqlDmlQueries {
 
   private def freshName(p: String): String =
     p + java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** REFRESH MATERIALIZED VIEW `m`: the MV version and what the
+    * refresh did. */
+  private def refreshMv(spark: SparkSession, m: String)
+      : (Long, Option[GraftSql.MvRefreshStats]) = {
+    val (v, rec) = OpMetrics.scope(
+      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m"))
+    (v, rec.get(GraftSql.MvRefresh))
+  }
 
   /** s54's CSV landing dir: DETERMINISTIC within a JVM (pid-keyed, no
     * mutable holder), distinct across concurrent suite runs (separate
@@ -666,14 +676,15 @@ object SqlDmlQueries {
         s"the head must bind the evolved shape, got $sN")
       // pruned read on the UNRELATED top-level o_custkey: zero
       // footers, strict file subset, across all three generations
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val pruned = TxnTable.readPruned(spark, t, "o_custkey",
-        1L, ck / 2)
-      val prunedCnt = pruned.count()
-      require(pruned.inputFiles.length < TxnTable.snapshotFiles(t).size,
-        "the low band must prune a strict file subset")
-      require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-        "pruning must stay zero-footer across nested-ALTER generations")
+      val prunedCnt = footerFree(
+          "pruning must stay zero-footer across nested-ALTER generations") {
+        val pruned = TxnTable.readPruned(spark, t, "o_custkey",
+          1L, ck / 2)
+        val prunedCnt = pruned.count()
+        require(pruned.inputFiles.length < TxnTable.snapshotFiles(t).size,
+          "the low band must prune a strict file subset")
+        prunedCnt
+      }
       require(prunedCnt > 0)
       GraftSql.query(spark,
         s"""SELECT cust.seg AS seg, count(*) AS cnt,
@@ -693,7 +704,10 @@ object SqlDmlQueries {
     * with `spark.graft.cbo.logStats`, planning reads ZERO parquet
     * footers, and both plans serve identical values (oracle-pinned,
     * join node names pinned in the oracle's VALUES). */
-  def s65LogCbo(spark: SparkSession, dir: String): DataFrame = {
+  def s65LogCbo(shared: SparkSession, dir: String): DataFrame = {
+    // the CBO flags below are set on a private session: concurrent
+    // gates on `shared` keep their plans
+    val spark = shared.newSession()
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_s65").toString
     val nc = freshName("cust_cbo_")
@@ -714,55 +728,47 @@ object SqlDmlQueries {
            |FROM $no o JOIN $nc c ON o.o_custkey = c.c_custkey
            |WHERE c.c_custkey <= $cap""".stripMargin
       val conf = spark.conf
-      val keys = Seq("spark.sql.cbo.enabled",
-        "spark.sql.autoBroadcastJoinThreshold", "spark.graft.cbo.logStats")
-      val saved = keys.map(k => k -> conf.getOption(k))
-      try {
-        conf.set("spark.sql.cbo.enabled", "true")
-        // threshold BETWEEN the two estimates, scaled to the dim's
-        // logged bytes so the flip holds at every scale factor: the
-        // stats-less plan keeps ~the (column-pruned) file size; only
-        // log row count + custkey bounds shrink the 2% band under it
-        conf.set("spark.sql.autoBroadcastJoinThreshold",
-          (dimBytes / 16).toString)
-        val f0 = graft.crawler.SkippingIndex.footerReads.get()
-        conf.set("spark.graft.cbo.logStats", "false")
-        val off = graft.crawler.CboStats
-          .staticJoinNode(GraftSql.query(spark, sql))
-        conf.set("spark.graft.cbo.logStats", "true")
-        val dfOn = GraftSql.query(spark, sql)
-        val on = graft.crawler.CboStats.staticJoinNode(dfOn)
-        require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-          "log-stats planning must read zero parquet footers")
-        require(off == "SortMergeJoin",
-          s"without injection the size-only estimate must SMJ, got $off")
-        require(on == "BroadcastHashJoin",
-          s"with log stats the dim must broadcast, got $on")
-        // the flip is USER-OBSERVABLE through the statement surface:
-        // EXPLAIN returns the substituted, stats-injected plan as
-        // rows, still zero-footer
-        val fx = graft.crawler.SkippingIndex.footerReads.get()
+      conf.set("spark.sql.cbo.enabled", "true")
+      // threshold BETWEEN the two estimates, scaled to the dim's
+      // logged bytes so the flip holds at every scale factor: the
+      // stats-less plan keeps ~the (column-pruned) file size; only
+      // log row count + custkey bounds shrink the 2% band under it
+      conf.set("spark.sql.autoBroadcastJoinThreshold",
+        (dimBytes / 16).toString)
+      val (off, dfOn, on) =
+        footerFree("log-stats planning must read zero parquet footers") {
+          conf.set("spark.graft.cbo.logStats", "false")
+          val off = graft.crawler.CboStats
+            .staticJoinNode(GraftSql.query(spark, sql))
+          conf.set("spark.graft.cbo.logStats", "true")
+          val dfOn = GraftSql.query(spark, sql)
+          (off, dfOn, graft.crawler.CboStats.staticJoinNode(dfOn))
+        }
+      require(off == "SortMergeJoin",
+        s"without injection the size-only estimate must SMJ, got $off")
+      require(on == "BroadcastHashJoin",
+        s"with log stats the dim must broadcast, got $on")
+      // the flip is USER-OBSERVABLE through the statement surface:
+      // EXPLAIN returns the substituted, stats-injected plan as
+      // rows, still zero-footer
+      footerFree("EXPLAIN must plan zero-footer") {
         val explained = GraftSql.query(spark, s"EXPLAIN $sql")
           .collect().map(_.getString(0)).mkString("\n")
         require(explained.contains("BroadcastHashJoin"),
           "EXPLAIN must show the stats-injected plan")
-        require(graft.crawler.SkippingIndex.footerReads.get() == fx,
-          "EXPLAIN must plan zero-footer")
-        val r = dfOn.collect().head
-        val rOff = {
-          conf.set("spark.graft.cbo.logStats", "false")
-          GraftSql.query(spark, sql).collect().head
-        }
-        require(r.getLong(0) == rOff.getLong(0) &&
-          r.getLong(1) == rOff.getLong(1),
-          "both plans must serve identical values")
-        Seq(("log_stats", on, r.getLong(0), r.getLong(1)),
-            ("no_stats", off, r.getLong(0), r.getLong(1)))
-          .toDF("variant", "join_node", "n_rows", "revenue_c")
-          .orderBy(col("variant"))
-      } finally saved.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _))
       }
+      val r = dfOn.collect().head
+      val rOff = {
+        conf.set("spark.graft.cbo.logStats", "false")
+        GraftSql.query(spark, sql).collect().head
+      }
+      require(r.getLong(0) == rOff.getLong(0) &&
+        r.getLong(1) == rOff.getLong(1),
+        "both plans must serve identical values")
+      Seq(("log_stats", on, r.getLong(0), r.getLong(1)),
+          ("no_stats", off, r.getLong(0), r.getLong(1)))
+        .toDF("variant", "join_node", "n_rows", "revenue_c")
+        .orderBy(col("variant"))
     } finally { GraftSql.unregister(nc); GraftSql.unregister(no) }
   }
 
@@ -779,7 +785,9 @@ object SqlDmlQueries {
     * footers both times (the histogram rides the log); both plans
     * serve identical values, join node names pinned in the output
     * rows. Oracle replays the skewed join. */
-  def s68CboHistogram(spark: SparkSession, dir: String): DataFrame = {
+  def s68CboHistogram(shared: SparkSession, dir: String): DataFrame = {
+    // private session for the CBO flags (see s65)
+    val spark = shared.newSession()
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_s68").toString
     val ns = freshName("skew_hist_")
@@ -805,58 +813,53 @@ object SqlDmlQueries {
            |FROM $nf f JOIN $ns s ON f.o_orderkey = s.id
            |WHERE s.k >= ${kx / 2}""".stripMargin
       val conf = spark.conf
-      val keys = Seq("spark.sql.cbo.enabled",
-        "spark.sql.autoBroadcastJoinThreshold", "spark.graft.cbo.logStats")
-      val saved = keys.map(k => k -> conf.getOption(k))
-      try {
-        conf.set("spark.sql.cbo.enabled", "true")
-        conf.set("spark.graft.cbo.logStats", "true")
-        // threshold BETWEEN the uniform (~50%) and histogram (~1-bin)
-        // estimates of the filtered skew side, scaled to its logged
-        // bytes so the flip holds at every scale factor
-        conf.set("spark.sql.autoBroadcastJoinThreshold",
-          (skewBytes / 8).toString)
-        val f0 = graft.crawler.SkippingIndex.footerReads.get()
-        val before = graft.crawler.CboStats
-          .staticJoinNode(GraftSql.query(spark, sql))
-        require(before == "SortMergeJoin",
-          s"without a histogram the uniform estimate must SMJ, got $before")
-        require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-          "log-stats planning must read zero parquet footers")
-        // ONE explicit statistics scan, committed as table metadata
-        val v = GraftSql.execute(spark,
-          s"ANALYZE TABLE $ns COMPUTE HISTOGRAM (k)")
-        require(v == 1L &&
-          graft.core.TxnTable.commits(d + "/skew").last.op
-            .startsWith("tblprops:set:"),
-          "ANALYZE must land as one tblprops commit")
-        require(graft.core.TxnTable.properties(d + "/skew")
-          .contains("graft.hist.k"), "the histogram must ride the log")
-        val f1 = graft.crawler.SkippingIndex.footerReads.get()
-        val dfOn = GraftSql.query(spark, sql)
-        val after = graft.crawler.CboStats.staticJoinNode(dfOn)
-        require(after == "BroadcastHashJoin",
-          s"the histogram must price the band under the threshold " +
-            s"and broadcast, got $after")
-        require(graft.crawler.SkippingIndex.footerReads.get() == f1,
-          "histogram planning must stay zero-footer")
-        val r = dfOn.collect().head
-        val rBefore = {
-          // the pre-ANALYZE plan replayed: time-travel the skew side
-          // to the version before the stats commit
-          GraftSql.query(spark, sql.replace(s"$ns s",
-            s"$ns VERSION AS OF 0 s")).collect().head
+      conf.set("spark.sql.cbo.enabled", "true")
+      conf.set("spark.graft.cbo.logStats", "true")
+      // threshold BETWEEN the uniform (~50%) and histogram (~1-bin)
+      // estimates of the filtered skew side, scaled to its logged
+      // bytes so the flip holds at every scale factor
+      conf.set("spark.sql.autoBroadcastJoinThreshold",
+        (skewBytes / 8).toString)
+      val before =
+        footerFree("log-stats planning must read zero parquet footers") {
+          val before = graft.crawler.CboStats
+            .staticJoinNode(GraftSql.query(spark, sql))
+          require(before == "SortMergeJoin",
+            s"without a histogram the uniform estimate must SMJ, got $before")
+          before
         }
-        require(r.getLong(0) == rBefore.getLong(0) &&
-          r.getLong(1) == rBefore.getLong(1),
-          "both plans must serve identical values")
-        Seq(("with_histogram", after, r.getLong(0), r.getLong(1)),
-            ("without", before, r.getLong(0), r.getLong(1)))
-          .toDF("variant", "join_node", "n_rows", "revenue_c")
-          .orderBy(col("variant"))
-      } finally saved.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _))
+      // ONE explicit statistics scan, committed as table metadata
+      val v = GraftSql.execute(spark,
+        s"ANALYZE TABLE $ns COMPUTE HISTOGRAM (k)")
+      require(v == 1L &&
+        graft.core.TxnTable.commits(d + "/skew").last.op
+          .startsWith("tblprops:set:"),
+        "ANALYZE must land as one tblprops commit")
+      require(graft.core.TxnTable.properties(d + "/skew")
+        .contains("graft.hist.k"), "the histogram must ride the log")
+      val (dfOn, after) =
+        footerFree("histogram planning must stay zero-footer") {
+          val dfOn = GraftSql.query(spark, sql)
+          val after = graft.crawler.CboStats.staticJoinNode(dfOn)
+          require(after == "BroadcastHashJoin",
+            s"the histogram must price the band under the threshold " +
+              s"and broadcast, got $after")
+          (dfOn, after)
+        }
+      val r = dfOn.collect().head
+      val rBefore = {
+        // the pre-ANALYZE plan replayed: time-travel the skew side
+        // to the version before the stats commit
+        GraftSql.query(spark, sql.replace(s"$ns s",
+          s"$ns VERSION AS OF 0 s")).collect().head
       }
+      require(r.getLong(0) == rBefore.getLong(0) &&
+        r.getLong(1) == rBefore.getLong(1),
+        "both plans must serve identical values")
+      Seq(("with_histogram", after, r.getLong(0), r.getLong(1)),
+          ("without", before, r.getLong(0), r.getLong(1)))
+        .toDF("variant", "join_node", "n_rows", "revenue_c")
+        .orderBy(col("variant"))
     } finally { GraftSql.unregister(ns); GraftSql.unregister(nf) }
   }
 
@@ -872,10 +875,12 @@ object SqlDmlQueries {
     * SortMergeJoin after the ANALYZE — plain 1/ndv would price the
     * hot value as rare and broadcast a near-full table (the OOM plan
     * at scale). Planning reads zero parquet footers throughout; the
-    * ANALYZE itself is 2 batched scans (evidence hook); both plans
+    * ANALYZE itself is ONE batched scan (its scope record); both plans
     * serve oracle-pinned values, join node names pinned in the
     * output rows. */
-  def s70StringSkew(spark: SparkSession, dir: String): DataFrame = {
+  def s70StringSkew(shared: SparkSession, dir: String): DataFrame = {
+    // private session for the CBO flags (see s65)
+    val spark = shared.newSession()
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_s70").toString
     val ns = freshName("skew_mcv_")
@@ -903,61 +908,56 @@ object SqlDmlQueries {
            |FROM $nf f JOIN $ns s ON f.o_orderkey = s.id
            |WHERE s.k = '$value'""".stripMargin
       val conf = spark.conf
-      val keys = Seq("spark.sql.cbo.enabled",
-        "spark.sql.autoBroadcastJoinThreshold", "spark.graft.cbo.logStats")
-      val saved = keys.map(k => k -> conf.getOption(k))
-      try {
-        conf.set("spark.sql.cbo.enabled", "true")
-        conf.set("spark.graft.cbo.logStats", "true")
-        conf.set("spark.sql.autoBroadcastJoinThreshold",
-          (skewBytes / 8).toString)
-        val f0 = graft.crawler.SkippingIndex.footerReads.get()
-        val before = graft.crawler.CboStats
-          .staticJoinNode(GraftSql.query(spark, sqlOf(rare)))
-        require(before == "SortMergeJoin",
-          s"without string stats the full-size estimate must SMJ, " +
-            s"got $before")
-        require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-          "log-stats planning must read zero parquet footers")
-        GraftSql.execute(spark,
-          s"ANALYZE TABLE $ns COMPUTE HISTOGRAM (k)")
-        require(graft.core.TxnTable.properties(d + "/skew")
-          .contains("graft.mcv.k"), "the MCV stats must ride the log")
-        require(graft.core.TxnTable.lastAnalyzeScans == 1,
-          s"a string-only ANALYZE is ONE scan (ndv + nonnull ride " +
-            s"the MCV aggregate), got " +
-            s"${graft.core.TxnTable.lastAnalyzeScans}")
-        val f1 = graft.crawler.SkippingIndex.footerReads.get()
-        val dfRare = GraftSql.query(spark, sqlOf(rare))
-        val after = graft.crawler.CboStats.staticJoinNode(dfRare)
-        require(after == "BroadcastHashJoin",
-          s"the string ndv must price the rare value under the " +
-            s"threshold and broadcast, got $after")
-        val dfCommon = GraftSql.query(spark, sqlOf("common"))
-        val commonNode = graft.crawler.CboStats.staticJoinNode(dfCommon)
-        require(commonNode == "SortMergeJoin",
-          s"the MCV must price the 99% value HONESTLY and keep the " +
-            s"sort-merge (uniform 1/ndv would broadcast it), got " +
-            s"$commonNode")
-        require(graft.crawler.SkippingIndex.footerReads.get() == f1,
-          "MCV planning must stay zero-footer")
-        val rRare = dfRare.collect().head
-        val rBefore = GraftSql.query(spark, sqlOf(rare)
-          .replace(s"$ns s", s"$ns VERSION AS OF 0 s")).collect().head
-        require(rRare.getLong(0) == rBefore.getLong(0) &&
-          rRare.getLong(1) == rBefore.getLong(1),
-          "both rare plans must serve identical values")
-        val rCommon = dfCommon.collect().head
-        Seq(
-          ("common_with_mcv", commonNode,
-            rCommon.getLong(0), rCommon.getLong(1)),
-          ("rare_with_mcv", after, rRare.getLong(0), rRare.getLong(1)),
-          ("rare_without", before, rRare.getLong(0), rRare.getLong(1)))
-          .toDF("variant", "join_node", "n_rows", "revenue_c")
-          .orderBy(col("variant"))
-      } finally saved.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _))
-      }
+      conf.set("spark.sql.cbo.enabled", "true")
+      conf.set("spark.graft.cbo.logStats", "true")
+      conf.set("spark.sql.autoBroadcastJoinThreshold",
+        (skewBytes / 8).toString)
+      val before =
+        footerFree("log-stats planning must read zero parquet footers") {
+          val before = graft.crawler.CboStats
+            .staticJoinNode(GraftSql.query(spark, sqlOf(rare)))
+          require(before == "SortMergeJoin",
+            s"without string stats the full-size estimate must SMJ, " +
+              s"got $before")
+          before
+        }
+      val (_, analyze) = OpMetrics.scope(GraftSql.execute(spark,
+        s"ANALYZE TABLE $ns COMPUTE HISTOGRAM (k)"))
+      require(graft.core.TxnTable.properties(d + "/skew")
+        .contains("graft.mcv.k"), "the MCV stats must ride the log")
+      val scans = analyze.get(TxnTable.AnalyzeScans)
+      require(scans.contains(1),
+        s"a string-only ANALYZE is ONE scan (ndv + nonnull ride " +
+          s"the MCV aggregate), got $scans")
+      val (dfRare, after, dfCommon, commonNode) =
+        footerFree("MCV planning must stay zero-footer") {
+          val dfRare = GraftSql.query(spark, sqlOf(rare))
+          val after = graft.crawler.CboStats.staticJoinNode(dfRare)
+          require(after == "BroadcastHashJoin",
+            s"the string ndv must price the rare value under the " +
+              s"threshold and broadcast, got $after")
+          val dfCommon = GraftSql.query(spark, sqlOf("common"))
+          val commonNode = graft.crawler.CboStats.staticJoinNode(dfCommon)
+          require(commonNode == "SortMergeJoin",
+            s"the MCV must price the 99% value HONESTLY and keep the " +
+              s"sort-merge (uniform 1/ndv would broadcast it), got " +
+              s"$commonNode")
+          (dfRare, after, dfCommon, commonNode)
+        }
+      val rRare = dfRare.collect().head
+      val rBefore = GraftSql.query(spark, sqlOf(rare)
+        .replace(s"$ns s", s"$ns VERSION AS OF 0 s")).collect().head
+      require(rRare.getLong(0) == rBefore.getLong(0) &&
+        rRare.getLong(1) == rBefore.getLong(1),
+        "both rare plans must serve identical values")
+      val rCommon = dfCommon.collect().head
+      Seq(
+        ("common_with_mcv", commonNode,
+          rCommon.getLong(0), rCommon.getLong(1)),
+        ("rare_with_mcv", after, rRare.getLong(0), rRare.getLong(1)),
+        ("rare_without", before, rRare.getLong(0), rRare.getLong(1)))
+        .toDF("variant", "join_node", "n_rows", "revenue_c")
+        .orderBy(col("variant"))
     } finally { GraftSql.unregister(ns); GraftSql.unregister(nf) }
   }
 
@@ -1024,22 +1024,21 @@ object SqlDmlQueries {
       TxnTable.cloneShallow(spark, t, d + "/twin")
       TxnTable.compactClustered(spark, d + "/twin",
         col("o_custkey"), col("o_orderkey"), 8 + c.adds.size)
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      def band(path: String) = TxnTable.readPrunedBox(spark, path,
-        "o_custkey", 1L, ck / 8, "o_orderkey", 1L, 2 * kx)
-      val pt = band(t)
-      val pf = band(d + "/twin")
-      val (ct2, cf) = (pt.count(), pf.count())
-      require(ct2 == cf && ct2 > 0,
-        s"band reads must agree at equal content: $ct2 vs $cf")
-      require(pt.inputFiles.length <= pf.inputFiles.length + c.adds.size,
-        s"scoped prune (${pt.inputFiles.length} files) must be within " +
-          s"one bin of the full twin's (${pf.inputFiles.length} + " +
-          s"${c.adds.size})")
-      require(pt.inputFiles.length < TxnTable.snapshotFiles(t).size,
-        "the band must prune a strict subset")
-      require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-        "box pruning must stay zero-footer")
+      footerFree("box pruning must stay zero-footer") {
+        def band(path: String) = TxnTable.readPrunedBox(spark, path,
+          "o_custkey", 1L, ck / 8, "o_orderkey", 1L, 2 * kx)
+        val pt = band(t)
+        val pf = band(d + "/twin")
+        val (ct2, cf) = (pt.count(), pf.count())
+        require(ct2 == cf && ct2 > 0,
+          s"band reads must agree at equal content: $ct2 vs $cf")
+        require(pt.inputFiles.length <= pf.inputFiles.length + c.adds.size,
+          s"scoped prune (${pt.inputFiles.length} files) must be within " +
+            s"one bin of the full twin's (${pf.inputFiles.length} + " +
+            s"${c.adds.size})")
+        require(pt.inputFiles.length < TxnTable.snapshotFiles(t).size,
+          "the band must prune a strict subset")
+      }
       // an empty box no-ops at the unchanged head
       require(GraftSql.execute(spark,
         s"OPTIMIZE $n ZORDER BY (o_custkey, o_orderkey) " +
@@ -1118,22 +1117,22 @@ object SqlDmlQueries {
       TxnTable.cloneShallow(spark, t, d + "/twin")
       TxnTable.compactClustered(spark, d + "/twin",
         col("o_custkey"), col("o_orderkey"), 8 + c.adds.size)
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      def band(path: String) = TxnTable.readPrunedBox(spark, path,
-        "o_custkey", 1L, ck / 4, "o_orderkey", 1L, 4 * kx)
-      val pt = band(t)
-      val pf = band(d + "/twin")
-      val (ct2, cf) = (pt.count(), pf.count())
-      require(ct2 == cf && ct2 > 0,
-        s"band reads must agree at equal content: $ct2 vs $cf")
-      require(pt.inputFiles.length <= pf.inputFiles.length + c.adds.size,
-        s"tail-folded prune (${pt.inputFiles.length} files) must be " +
-          s"within one tail-bin of the full twin's " +
-          s"(${pf.inputFiles.length} + ${c.adds.size})")
-      require(pt.inputFiles.length < TxnTable.snapshotFiles(t).size,
-        "the band must prune a strict subset")
-      require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-        "box pruning must stay zero-footer")
+      val pt = footerFree("box pruning must stay zero-footer") {
+        def band(path: String) = TxnTable.readPrunedBox(spark, path,
+          "o_custkey", 1L, ck / 4, "o_orderkey", 1L, 4 * kx)
+        val pt = band(t)
+        val pf = band(d + "/twin")
+        val (ct2, cf) = (pt.count(), pf.count())
+        require(ct2 == cf && ct2 > 0,
+          s"band reads must agree at equal content: $ct2 vs $cf")
+        require(pt.inputFiles.length <= pf.inputFiles.length + c.adds.size,
+          s"tail-folded prune (${pt.inputFiles.length} files) must be " +
+            s"within one tail-bin of the full twin's " +
+            s"(${pf.inputFiles.length} + ${c.adds.size})")
+        require(pt.inputFiles.length < TxnTable.snapshotFiles(t).size,
+          "the band must prune a strict subset")
+        pt
+      }
       // an empty tail no-ops at the unchanged head
       require(GraftSql.execute(spark, s"OPTIMIZE $n ZORDER") == v &&
         TxnTable.currentVersion(t) == v,
@@ -1191,8 +1190,8 @@ object SqlDmlQueries {
       GraftSql.execute(spark,
         s"UPDATE $n SET price_c = price_c + 7 " +
           s"WHERE o_custkey <= ${ck / 64}") // src v4
-      val v = GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      val st = GraftSql.lastMvRefreshStats.getOrElse(
+      val (v, stOpt) = refreshMv(spark, m)
+      val st = stOpt.getOrElse(
         throw new AssertionError("refresh must record stats"))
       require(st.mode == "incremental",
         s"a fold-able MV must refresh incrementally, got ${st.mode}")
@@ -1219,8 +1218,7 @@ object SqlDmlQueries {
         .filter(col("name") === m).head().getBoolean(2),
         "the incremental refresh must clear staleness")
       val mvV = TxnTable.currentVersion(d + "/mv")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      require(GraftSql.lastMvRefreshStats.exists(_.mode == "noop") &&
+      require(refreshMv(spark, m)._2.exists(_.mode == "noop") &&
         TxnTable.currentVersion(d + "/mv") == mvV,
         "an up-to-date incremental refresh must commit nothing")
       require(v == mvV, s"the refresh committed $v, head is $mvV")
@@ -1275,8 +1273,7 @@ object SqlDmlQueries {
            |FROM $n GROUP BY ck""".stripMargin)
       def refreshIncr(stmt: String): Unit = {
         GraftSql.execute(spark, stmt)
-        GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-        val st = GraftSql.lastMvRefreshStats.get
+        val st = refreshMv(spark, m)._2.get
         require(st.mode == "incremental",
           s"count(DISTINCT) must fold incrementally after [$stmt], " +
             s"got ${st.mode}")
@@ -1316,8 +1313,7 @@ object SqlDmlQueries {
       refreshIncr(s"DELETE FROM $n WHERE ck <= ${kq / 64} AND d = $vict")
       // up-to-date refresh no-ops
       val mvV = TxnTable.currentVersion(d + "/mv")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      require(GraftSql.lastMvRefreshStats.exists(_.mode == "noop") &&
+      require(refreshMv(spark, m)._2.exists(_.mode == "noop") &&
         TxnTable.currentVersion(d + "/mv") == mvV,
         "an up-to-date refresh must commit nothing")
       // crash-window repair: losing the aux forces ONE full refresh
@@ -1329,8 +1325,7 @@ object SqlDmlQueries {
       rm(aux)
       GraftSql.execute(spark, s"UPDATE $n SET d = d + 3000 " +
         s"WHERE ck <= ${kq / 64}")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      require(GraftSql.lastMvRefreshStats.exists(_.mode == "full"),
+      require(refreshMv(spark, m)._2.exists(_.mode == "full"),
         "a missing aux must degrade to the full path")
       refreshIncr(s"UPDATE $n SET d = d - 3000 WHERE ck <= ${kq / 64}")
       GraftSql.query(spark, s"SELECT ck, cnt, cd, ps FROM $m ORDER BY ck")
@@ -1403,8 +1398,7 @@ object SqlDmlQueries {
       GraftSql.execute(spark,
         s"UPDATE $fn SET price_c = price_c + 7 " +
           s"WHERE o_custkey <= ${ck / 64}") // fact v4
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      val st = GraftSql.lastMvRefreshStats.getOrElse(
+      val st = refreshMv(spark, m)._2.getOrElse(
         throw new AssertionError("refresh must record stats"))
       require(st.mode == "incremental",
         s"a star-join MV must refresh incrementally, got ${st.mode}")
@@ -1417,16 +1411,14 @@ object SqlDmlQueries {
       parity()
       // an up-to-date refresh commits nothing
       val mvV = TxnTable.currentVersion(d + "/mv")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      require(GraftSql.lastMvRefreshStats.exists(_.mode == "noop") &&
+      require(refreshMv(spark, m)._2.exists(_.mode == "noop") &&
         TxnTable.currentVersion(d + "/mv") == mvV,
         "an up-to-date join MV refresh must commit nothing")
       // 2) DIM update → the dim delta folds against the pinned fact
       GraftSql.execute(spark,
         s"UPDATE $dn SET c_nationkey = c_nationkey + 100 " +
           s"WHERE c_custkey <= ${ck / 64}")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      require(GraftSql.lastMvRefreshStats.exists(_.mode == "incremental"),
+      require(refreshMv(spark, m)._2.exists(_.mode == "incremental"),
         "a dim-side delta must fold too (substitution is symmetric)")
       parity()
       // 3) BOTH sides changed → the telescoping expansion folds each
@@ -1439,8 +1431,7 @@ object SqlDmlQueries {
       GraftSql.execute(spark,
         s"UPDATE $dn SET c_nationkey = c_nationkey + 1000 " +
           s"WHERE c_custkey = $ck")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m")
-      val st3 = GraftSql.lastMvRefreshStats.get
+      val st3 = refreshMv(spark, m)._2.get
       require(st3.mode == "incremental",
         s"two changed relations must fold telescopically, got ${st3.mode}")
       require(st3.recomputeFiles.isEmpty,
@@ -1549,11 +1540,11 @@ object SqlDmlQueries {
           col("o_custkey"), col("o_orderstatus"), col("price_c"))) // v1
     GraftSql.register(n, t)
     try {
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val panel = GraftSql.query(spark, s"SHOW COLUMN STATS $n")
-      val rows = panel.collect()
-      require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-        "SHOW COLUMN STATS must never open a footer")
+      val (panel, rows) =
+        footerFree("SHOW COLUMN STATS must never open a footer") {
+          val panel = GraftSql.query(spark, s"SHOW COLUMN STATS $n")
+          (panel, panel.collect())
+        }
       require(rows.length == 4 &&
         rows.forall(_.getDouble(2) == 1.0),
         "every column of a stats-harvested table must be fully covered")
@@ -1574,7 +1565,7 @@ object SqlDmlQueries {
     * the persisted names (a dropped table stays dropped), and the
     * reloaded VIEW serves over the reloaded TABLE; the catalog
     * table's own properties carry the entries (commit-level audit).
-    * Oracle replays the view's aggregate from orders. */
+    * Oracle replays the view's aggregate from orders. [[sequential]]. */
   def s55CatalogPersist(spark: SparkSession, dir: String): DataFrame = {
     val d = java.nio.file.Files.createTempDirectory("graft_s55").toString
     val pre = freshName("pcat_")
@@ -1690,22 +1681,21 @@ object SqlDmlQueries {
       // the mixed-generation snapshot plans pruning and COUNT from the
       // LOG: old int32 bounds translate into the widened space with
       // zero footer reads
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val pruned = TxnTable.readPruned(spark, t, "ck", 0L, ckMax / 2)
-      val expectPruned = TxnTable.read(spark, t)
-        .filter(col("ck").between(0L, ckMax / 2)).count()
-      require(pruned.count() == expectPruned,
-        "pruned read must be exact over mixed generations")
-      require(pruned.inputFiles.length < 9,
-        "pruning must keep a strict file subset across generations")
-      val (cnt, scanned, total) =
-        TxnTable.countRange(spark, t, "ck", 0L, 10000000000L)
-      require(scanned == 0 && total == 9,
-        s"widened-space COUNT must plan zero-scan, got ($scanned,$total)")
-      require(cnt == TxnTable.read(spark, t).count(),
-        "metadata COUNT must be exact")
-      require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-        "no footer may be opened: bounds come from the commit log")
+      footerFree("no footer may be opened: bounds come from the commit log") {
+        val pruned = TxnTable.readPruned(spark, t, "ck", 0L, ckMax / 2)
+        val expectPruned = TxnTable.read(spark, t)
+          .filter(col("ck").between(0L, ckMax / 2)).count()
+        require(pruned.count() == expectPruned,
+          "pruned read must be exact over mixed generations")
+        require(pruned.inputFiles.length < 9,
+          "pruning must keep a strict file subset across generations")
+        val (cnt, scanned, total) =
+          TxnTable.countRange(spark, t, "ck", 0L, 10000000000L)
+        require(scanned == 0 && total == 9,
+          s"widened-space COUNT must plan zero-scan, got ($scanned,$total)")
+        require(cnt == TxnTable.read(spark, t).count(),
+          "metadata COUNT must be exact")
+      }
       // result: both generations bucketed — the int32 ceiling splits them
       TxnTable.read(spark, t)
         .groupBy(when(col("ck") > 2147483647L, "wide").otherwise("base")
@@ -1889,24 +1879,25 @@ object SqlDmlQueries {
         Seq(col("o_custkey")), targetFiles = 4)
       GraftSql.register(n3, d + "/c")
       // DESCRIBE DETAIL answers from the log alone: zero footer reads
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val det = GraftSql.query(spark, s"DESCRIBE DETAIL $n1")
-        .select(col("version"), col("earliest_version"),
-          col("num_files"), col("total_rows"), col("num_dv_files"),
-          col("num_constraints")).head()
-      // layout spec + stats coverage — the operator's "is pruning
-      // zero-footer here?" panel, still entirely log metadata
-      val detC = GraftSql.query(spark, s"DESCRIBE DETAIL $n3")
-        .select(col("cluster_by"), col("target_files"),
-          col("stats_coverage")).head()
-      GraftSql.unregister(n3)
-      // the UNclustered table reports no layout (null columns)
-      val detP = GraftSql.query(spark, s"DESCRIBE DETAIL $n1")
-        .select(col("cluster_by"), col("target_files")).head()
-      require(detP.isNullAt(0) && detP.isNullAt(1),
-        "a plain create must report no layout spec")
-      require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-        "DESCRIBE DETAIL must never open a footer")
+      val (det, detC) =
+        footerFree("DESCRIBE DETAIL must never open a footer") {
+          val det = GraftSql.query(spark, s"DESCRIBE DETAIL $n1")
+            .select(col("version"), col("earliest_version"),
+              col("num_files"), col("total_rows"), col("num_dv_files"),
+              col("num_constraints")).head()
+          // layout spec + stats coverage — the operator's "is pruning
+          // zero-footer here?" panel, still entirely log metadata
+          val detC = GraftSql.query(spark, s"DESCRIBE DETAIL $n3")
+            .select(col("cluster_by"), col("target_files"),
+              col("stats_coverage")).head()
+          GraftSql.unregister(n3)
+          // the UNclustered table reports no layout (null columns)
+          val detP = GraftSql.query(spark, s"DESCRIBE DETAIL $n1")
+            .select(col("cluster_by"), col("target_files")).head()
+          require(detP.isNullAt(0) && detP.isNullAt(1),
+            "a plain create must report no layout spec")
+          (det, detC)
+        }
       import spark.implicits._
       Seq((shownT, shownV, det.getLong(0), det.getLong(1),
         det.getLong(2), det.getLong(3), det.getLong(4), det.getLong(5),
@@ -1953,21 +1944,21 @@ object SqlDmlQueries {
     GraftSql.register(n, d + "/t")
     try {
       val before = TxnTable.snapshotFiles(d + "/t")
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val vS = GraftSql.execute(spark,
-        s"OPTIMIZE $n WHERE o_custkey BETWEEN 0 AND ${ck / 8}")
-      val vA = TxnTable.binPackWhere(spark, d + "/twin", "o_custkey",
-        0L, ck / 8)
-      require(vS == 7L && vA == 7L,
-        s"scoped OPTIMIZE must equal binPackWhere (v$vS vs v$vA)")
-      val after = TxnTable.snapshotFiles(d + "/t")
-      val c = TxnTable.commits(d + "/t").last
+      val ((after, c, fresh), window) = OpMetrics.scope {
+        val vS = GraftSql.execute(spark,
+          s"OPTIMIZE $n WHERE o_custkey BETWEEN 0 AND ${ck / 8}")
+        val vA = TxnTable.binPackWhere(spark, d + "/twin", "o_custkey",
+          0L, ck / 8)
+        require(vS == 7L && vA == 7L,
+          s"scoped OPTIMIZE must equal binPackWhere (v$vS vs v$vA)")
+        val after = TxnTable.snapshotFiles(d + "/t")
+        val c = TxnTable.commits(d + "/t").last
+        (after, c, c.adds.size + TxnTable.commits(d + "/twin").last.adds.size)
+      }
       // the SCOPE is decided from log stats alone: the only footer
       // reads in the window are the write-time harvest of the FRESH
       // bin files (one per add, both twins) — zero existing-file reads
-      val fresh = c.adds.size +
-        TxnTable.commits(d + "/twin").last.adds.size
-      val reads = graft.crawler.SkippingIndex.footerReads.get() - f0
+      val reads = window.count(FooterReads)
       require(reads <= fresh,
         s"scoping must read zero existing footers: $reads vs $fresh fresh")
       require(c.op == "compact" && c.removes.size >= 6 &&
@@ -2103,13 +2094,14 @@ object SqlDmlQueries {
            |FROM $n1 VERSION AS OF 0
            |WHERE o_custkey <= ${ck / 2}""".stripMargin)
       // the clustered layout prunes from the log alone, first read
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val pruned = TxnTable.readPruned(spark, d + "/t3", "o_custkey",
-        0L, ck / 8)
-      val prunedFiles = pruned.inputFiles.length
-      require(prunedFiles > 0 &&
-        prunedFiles < TxnTable.snapshotFiles(d + "/t3").size &&
-        graft.crawler.SkippingIndex.footerReads.get() == f0,
+      val (strict, first) = OpMetrics.scope {
+        val pruned = TxnTable.readPruned(spark, d + "/t3", "o_custkey",
+          0L, ck / 8)
+        val prunedFiles = pruned.inputFiles.length
+        prunedFiles > 0 &&
+          prunedFiles < TxnTable.snapshotFiles(d + "/t3").size
+      }
+      require(strict && first.count(FooterReads) == 0,
         "CTAS CLUSTER BY layout must prune zero-footer from first read")
       // CREATE OR REPLACE: content AND schema swap atomically
       GraftSql.execute(spark,
@@ -2173,11 +2165,11 @@ object SqlDmlQueries {
         c0.adds.forall(a => a.rows > 0 && a.stats.nonEmpty),
         "convert must reference every file with footer-harvested stats")
       // the harvested stats plan the FIRST pruned read zero-footer
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val pruned = TxnTable.readPruned(spark, d, "o_custkey", 0L, ck / 4)
-      val kept = pruned.inputFiles.length
+      val (kept, first) = OpMetrics.scope(
+        TxnTable.readPruned(spark, d, "o_custkey", 0L, ck / 4)
+          .inputFiles.length)
       require(kept > 0 && kept < beforeFiles.size &&
-        graft.crawler.SkippingIndex.footerReads.get() == f0,
+        first.count(FooterReads) == 0,
         s"first post-convert pruned read must be zero-footer strict " +
           s"subset, kept $kept of ${beforeFiles.size}")
       // constraint DDL enforces on the very next statement
@@ -2513,24 +2505,28 @@ object SqlDmlQueries {
       s"count(price_c) AS cntp, sum(price_c) AS sp, " +
       s"min(price_c) AS mn, max(price_c) AS mx FROM $n GROUP BY st, band"
     def served(sql: String, mode: String): DataFrame = {
-      val df = GraftSql.query(spark, sql)
-      require(GraftSql.lastMvRewrite.contains((mvn, mode)),
-        s"expected $mode rewrite via $mvn, got " +
-          s"${GraftSql.lastMvRewrite} for: $sql")
+      val (df, rec) = OpMetrics.scope(GraftSql.query(spark, sql))
+      val rewrite = rec.get(GraftSql.MvRewrite)
+      require(rewrite.contains((mvn, mode)),
+        s"expected $mode rewrite via $mvn, got $rewrite for: $sql")
       val files = df.inputFiles
       require(files.nonEmpty && files.forall(_.contains("/mv/")),
         s"a rewritten query must read ONLY the MV's files, got " +
           files.filterNot(_.contains("/mv/")).take(3).mkString(", "))
       df
     }
+    // the switch is session-scoped: OFF on a private session leaves
+    // `spark` (and every concurrent user of it) rewriting
+    lazy val rewriteOff = {
+      val off = spark.newSession()
+      GraftSql.execute(off, "SET MATVIEW REWRITE OFF")
+      off
+    }
     def direct(sql: String): DataFrame = {
-      GraftSql.execute(spark, "SET MATVIEW REWRITE OFF")
-      try {
-        val df = GraftSql.query(spark, sql)
-        require(GraftSql.lastMvRewrite.isEmpty,
-          "SET MATVIEW REWRITE OFF must disable the rewrite")
-        df
-      } finally { GraftSql.execute(spark, "SET MATVIEW REWRITE ON") }
+      val (df, rec) = OpMetrics.scope(GraftSql.query(rewriteOff, sql))
+      require(rec.get(GraftSql.MvRewrite).isEmpty,
+        "SET MATVIEW REWRITE OFF must disable the rewrite")
+      df
     }
     def same(a: DataFrame, b: DataFrame, ordered: Boolean): Unit = {
       val (x, y) = (a.collect().toSeq, b.collect().toSeq)
@@ -2557,8 +2553,8 @@ object SqlDmlQueries {
       // the next query reads the fact table and sees the new values
       GraftSql.execute(spark,
         s"UPDATE $n SET price_c = price_c + 1 WHERE o_orderkey <= 10")
-      val live = GraftSql.query(spark, rollup)
-      require(GraftSql.lastMvRewrite.isEmpty,
+      val (live, liveRec) = OpMetrics.scope(GraftSql.query(spark, rollup))
+      require(liveRec.get(GraftSql.MvRewrite).isEmpty,
         "a stale MV must never serve a rewrite")
       require(live.inputFiles.exists(_.contains("/fact/")),
         "the stale-MV fallback must read the fact table")
@@ -2588,7 +2584,7 @@ object SqlDmlQueries {
     * banded UPDATE rewrites a file: the replacement lacks a bloom and
     * is conservatively KEPT (correct rows immediately, no staleness —
     * files are immutable so blooms never lie), and the next ANALYZE
-    * tops up ONLY the uncovered files (evidence hook). Output: the
+    * tops up ONLY the uncovered files (its scope record). Output: the
     * post-churn lookup of the min and max order keys, oracle-replayed. */
   def s76BloomPointLookup(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.TxnTable
@@ -2630,55 +2626,51 @@ object SqlDmlQueries {
         .inputFiles.length == live0,
         "min/max pruning must keep every file on this layout — " +
           "otherwise the gate tests nothing")
-      GraftSql.execute(spark,
-        s"ANALYZE TABLE $n COMPUTE BLOOM (o_orderkey) FPP 0.001")
-      require(TxnTable.lastBloomBuiltFiles.size == 4,
-        s"the first build must cover all 4 files, got " +
-          s"${TxnTable.lastBloomBuiltFiles.size}")
+      // the files each ANALYZE … COMPUTE BLOOM actually scanned
+      def bloomBuild(): Option[Int] = OpMetrics.scope(GraftSql.execute(
+        spark, s"ANALYZE TABLE $n COMPUTE BLOOM (o_orderkey) FPP 0.001"))
+        ._2.get(TxnTable.BloomBuiltFiles).map(_.size)
+      val firstBuild = bloomBuild()
+      require(firstBuild.contains(4),
+        s"the first build must cover all 4 files, got $firstBuild")
       // every LOOKUP below plans and probes footer-free (the aux
       // write's own stats harvest is the write-path invariant all
       // commits share, and is outside this bracket)
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val hit = TxnTable.readPrunedBloom(spark, t, "o_orderkey", probes)
-      require(hit.inputFiles.length < live0,
-        s"the bloom lookup must scan a strict file subset, got " +
-          s"${hit.inputFiles.length} of $live0")
-      require(hit.count() == 2L, "both probed keys must come back")
-      // statement ≡ API
-      val tvf = GraftSql.query(spark,
-        s"SELECT * FROM point_lookup('$n', 'o_orderkey', " +
-          s"'${probes.mkString(",")}') ORDER BY o_orderkey")
-      require(tvf.collect().map(_.toSeq).toSeq ==
-        hit.orderBy(col("o_orderkey")).collect().map(_.toSeq).toSeq,
-        "the TVF must serve the identical rows")
-      // an absent key prunes (nearly) everything
-      val absent = TxnTable.readPrunedBloom(spark, t, "o_orderkey",
-        Seq(probes.last + 999983L))
-      require(absent.count() == 0L &&
-        absent.inputFiles.length <= 1,
-        s"an absent key must touch at most a false-positive file, " +
-          s"got ${absent.inputFiles.length}")
-      require(graft.crawler.SkippingIndex.footerReads.get() == f0,
-        "bloom lookups must plan and probe zero-footer")
+      footerFree("bloom lookups must plan and probe zero-footer") {
+        val hit = TxnTable.readPrunedBloom(spark, t, "o_orderkey", probes)
+        require(hit.inputFiles.length < live0,
+          s"the bloom lookup must scan a strict file subset, got " +
+            s"${hit.inputFiles.length} of $live0")
+        require(hit.count() == 2L, "both probed keys must come back")
+        // statement ≡ API
+        val tvf = GraftSql.query(spark,
+          s"SELECT * FROM point_lookup('$n', 'o_orderkey', " +
+            s"'${probes.mkString(",")}') ORDER BY o_orderkey")
+        require(tvf.collect().map(_.toSeq).toSeq ==
+          hit.orderBy(col("o_orderkey")).collect().map(_.toSeq).toSeq,
+          "the TVF must serve the identical rows")
+        // an absent key prunes (nearly) everything
+        val absent = TxnTable.readPrunedBloom(spark, t, "o_orderkey",
+          Seq(probes.last + 999983L))
+        require(absent.count() == 0L &&
+          absent.inputFiles.length <= 1,
+          s"an absent key must touch at most a false-positive file, " +
+            s"got ${absent.inputFiles.length}")
+      }
       // churn: the rewritten file lacks a bloom → conservatively kept,
       // rows stay correct IMMEDIATELY (blooms never go stale)
       GraftSql.execute(spark,
         s"UPDATE $n SET price_c = price_c + 7 WHERE ck <= ${kq / 4}")
-      val f1 = graft.crawler.SkippingIndex.footerReads.get()
-      val post = TxnTable.readPrunedBloom(spark, t, "o_orderkey", probes)
-      require(post.count() == 2L,
-        "the lookup must stay correct across un-bloomed replacements")
-      require(graft.crawler.SkippingIndex.footerReads.get() == f1,
-        "the conservative-keep lookup must stay zero-footer too")
+      footerFree("the conservative-keep lookup must stay zero-footer too") {
+        val post = TxnTable.readPrunedBloom(spark, t, "o_orderkey", probes)
+        require(post.count() == 2L,
+          "the lookup must stay correct across un-bloomed replacements")
+      }
       // top-up builds ONLY the uncovered replacement files
-      GraftSql.execute(spark,
-        s"ANALYZE TABLE $n COMPUTE BLOOM (o_orderkey) FPP 0.001")
-      val topUp = TxnTable.lastBloomBuiltFiles.size
-      require(topUp >= 1 && topUp < 4,
+      val topUp = bloomBuild()
+      require(topUp.exists(n => n >= 1 && n < 4),
         s"the top-up must scan only the replacement files, got $topUp")
-      GraftSql.execute(spark,
-        s"ANALYZE TABLE $n COMPUTE BLOOM (o_orderkey) FPP 0.001")
-      require(TxnTable.lastBloomBuiltFiles.isEmpty,
+      require(bloomBuild().contains(0),
         "a fully-covered table must build nothing")
       val fin = TxnTable.readPrunedBloom(spark, t, "o_orderkey", probes)
       require(fin.inputFiles.length < TxnTable.snapshotFiles(t).size,
@@ -2687,6 +2679,11 @@ object SqlDmlQueries {
         .orderBy(col("o_orderkey"))
     } finally GraftSql.unregister(n)
   }
+
+  /** Gates that touch process-wide state and so run alone, after
+    * every other gate (graft.Verify): s55 moves the warehouse root and
+    * clears the name registry every concurrent gate resolves through. */
+  val sequential: Set[String] = Set("s55_catalog_persist")
 
   val all: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "s74_txn_group" -> (s74TxnGroup _),

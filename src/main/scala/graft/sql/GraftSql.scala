@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.core.{BySourceDelete, BySourceUpdate, MatchedDelete, MatchedUpdate, MergeBySource, MergeMatched, NotMatchedInsert, TxnGroup, TxnTable}
+import graft.core.{BySourceDelete, BySourceUpdate, MatchedDelete, MatchedUpdate, MergeBySource, MergeMatched, NotMatchedInsert, OpMetrics, TxnGroup, TxnTable}
 
 /** SQL DML over transactional tables: `UPDATE`, `DELETE FROM`, and
   * `MERGE INTO` statements — parsed by SPARK'S OWN PARSER (full
@@ -347,9 +347,10 @@ object GraftSql {
     // session-scoped optimizer switch, no table and no commit: returns
     // -1 (MV-based query rewrite is on by default; OFF is the
     // operational escape hatch when a rewrite must be ruled out, the
-    // REFRESH … FULL precedent)
+    // REFRESH … FULL precedent). Lives in THIS session's conf, so
+    // sibling sessions keep rewriting.
     case MvRewriteSetRe(onOff) =>
-      mvRewriteEnabled = onOff.equalsIgnoreCase("on"); -1L
+      spark.conf.set(MvRewriteConf, onOff.equalsIgnoreCase("on")); -1L
 
     case OptimizeRe(name, zkw, zorder, wCol, wLo, wHi) =>
       val (reg, _) = lookupMutable(parseIdent(name), "OPTIMIZE")
@@ -522,10 +523,11 @@ object GraftSql {
       val mv = matviews.get(nm)
       require(mv != null, s"$nm is not a materialized view")
       val (path, text) = mv
-      val inc = if (full != null) None
+      val inc = if (full != null) Left(None)
         else refreshIncremental(spark, path, text)
       inc.getOrElse {
-        lastMvRefresh.set(MvRefreshStats("full", Set.empty, Nil, -1))
+        OpMetrics.record(MvRefresh, MvRefreshStats("full", Set.empty, Nil,
+          -1, inc.swap.toOption.flatten))
         // marker BEFORE the content snapshot pins (see CREATE):
         // mid-refresh source commits must leave the MV stale
         val markerOp = mvMarker(mvSources(spark, text))
@@ -1582,27 +1584,26 @@ object GraftSql {
   // fall back to the full recompute,
   // which is always correct and re-records every source version.
 
-  /** Evidence for gates/specs: what the LAST `REFRESH MATERIALIZED
-    * VIEW` did. `changedFiles` = the delta scan's absolute file paths;
-    * `recomputeFiles` = the extreme/touched-group recompute's scan
-    * (empty for pure folds); `liveFiles` = changed-source live file
-    * count at the target version (-1 on the full path). */
+  /** What a `REFRESH MATERIALIZED VIEW` did. `changedFiles` = the
+    * delta scan's absolute file paths; `recomputeFiles` = the
+    * extreme/touched-group recompute's scan (empty for pure folds);
+    * `liveFiles` = changed-source live file count at the target
+    * version (-1 on the full path); `fallback` = the class and message
+    * of the error that degraded an incremental attempt to full. */
   case class MvRefreshStats(mode: String, changedFiles: Set[String],
-      recomputeFiles: Seq[String], liveFiles: Int)
-  private val lastMvRefresh =
-    new java.util.concurrent.atomic.AtomicReference[MvRefreshStats](null)
-  def lastMvRefreshStats: Option[MvRefreshStats] =
-    Option(lastMvRefresh.get)
+      recomputeFiles: Seq[String], liveFiles: Int,
+      fallback: Option[String] = None)
+  val MvRefresh: OpMetrics.Key[MvRefreshStats] =
+    OpMetrics.Key.latest("mv_refresh")
 
-  /** Evidence hooks for the carry+recompute regime's DRIVER-STATE
-    * audit (the lastMixMetadataRows pattern): `lastMvCarryProbe` = the
-    * distributed limit(cap+1).count() of the touched-group set (-1
-    * when the regime never ran); `lastMvCarryKeys` = how many group
-    * tuples were actually collected (-1 when the bound tripped and
-    * the refresh fell back WITHOUT materializing them). Specs pin
-    * that a wide-churn high-cardinality delta never collects. */
-  val lastMvCarryProbe = new java.util.concurrent.atomic.AtomicLong(-1L)
-  val lastMvCarryKeys = new java.util.concurrent.atomic.AtomicLong(-1L)
+  /** The carry+recompute regime's DRIVER-STATE audit: `MvCarryProbe`
+    * = the distributed limit(cap+1).count() of the touched-group set
+    * (absent when the regime never ran); `MvCarryKeys` = how many
+    * group tuples were actually collected (absent when the bound
+    * tripped and the refresh fell back WITHOUT materializing them).
+    * Pins that a wide-churn high-cardinality delta never collects. */
+  val MvCarryProbe: OpMetrics.Key[Long] = OpMetrics.Key.latest("mv_carry_probe")
+  val MvCarryKeys: OpMetrics.Key[Long] = OpMetrics.Key.latest("mv_carry_keys")
 
   /** Recognized incrementally-maintainable shape. `items` is the
     * SELECT list in order: group attributes (each GROUP BY expression
@@ -1792,13 +1793,14 @@ object GraftSql {
   // commit landing between the check and the read is the ordinary
   // planning/execution race every snapshot read has.
 
-  /** The last query()'s rewrite decision: (mv name, "exact"|"rollup")
-    * when the statement was served from a materialized view; None when
-    * it ran against its base tables. Evidence hook for gates/specs. */
-  @volatile private[graft] var lastMvRewrite: Option[(String, String)] = None
+  /** A query()'s rewrite decision: (mv name, "exact"|"rollup") when
+    * the statement was served from a materialized view; absent when it
+    * ran against its base tables. */
+  val MvRewrite: OpMetrics.Key[(String, String)] =
+    OpMetrics.Key.latest("mv_rewrite")
 
-  /** Session kill switch: `SET MATVIEW REWRITE ON|OFF`. */
-  @volatile private[graft] var mvRewriteEnabled: Boolean = true
+  /** Session conf behind `SET MATVIEW REWRITE ON|OFF` (default on). */
+  val MvRewriteConf = "spark.graft.mv.rewrite"
 
   /** MV materialization must read the DEFINITION, never another MV:
     * CREATE/REFRESH FULL route their SELECT through query() for the
@@ -1828,9 +1830,8 @@ object GraftSql {
     * (e.g. avg as sum/count) must not drift a column type. */
   private def rewriteViaMv(spark: SparkSession, plan: LogicalPlan,
       original: => DataFrame): Option[DataFrame] = {
-    lastMvRewrite = None
-    if (!mvRewriteEnabled || mvRewriteSuppressed.value ||
-      matviews.isEmpty) return None
+    if (matviews.isEmpty || mvRewriteSuppressed.value ||
+      !spark.conf.get(MvRewriteConf, "true").toBoolean) return None
     // peel ORDER BY / LIMIT (applied last, so they sit above the agg)
     var sorts: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder] =
       Nil
@@ -1886,7 +1887,7 @@ object GraftSql {
       return None
     val sorted = if (sortCols.isEmpty) df else df.orderBy(sortCols: _*)
     val limited = limit.map(sorted.limit).getOrElse(sorted)
-    lastMvRewrite = Some((nm, mode))
+    OpMetrics.record(MvRewrite, (nm, mode))
     Some(limited)
   }
 
@@ -1998,51 +1999,46 @@ object GraftSql {
       s"${jstr(s)}:${if (changed.contains(s)) cur(s) else recorded(s)}"
     }.mkString("{", ",", "}")
 
-  /** Attempt the O(changed-files) refresh; None → caller recomputes.
+  /** Attempt the O(changed-files) refresh; Left → caller recomputes
+    * (carrying the error when the incremental attempt itself failed).
     * ANY subset of relations may have changed since the marker: the
     * telescoping expansion folds one changed relation's delta at a
     * time (earlier relations at NEW versions, later at OLD), exact
     * for signed row multisets under inner joins. */
   private def refreshIncremental(spark: SparkSession, path: String,
-      text: String): Option[Long] = {
-    lastMvCarryProbe.set(-1L)
-    lastMvCarryKeys.set(-1L)
-    val shape = recognizeFoldShape(spark, text).getOrElse(return None)
+      text: String): Either[Option[String], Long] = {
+    val shape = recognizeFoldShape(spark, text).getOrElse(return Left(None))
     val recorded = mvRecorded(path)
-    if (recorded.keySet != shape.rels.toSet) return None
+    if (recorded.keySet != shape.rels.toSet) return Left(None)
     // a DAMAGED materialization (out-of-band file loss) cannot seed
     // the fold — and must not no-op either: the full recompute reads
     // only the SOURCES and heals it. O(MV files) metadata probe.
     if (TxnTable.repair(spark, path, dryRun = true).limit(1).count() > 0)
-      return None
+      return Left(None)
     val paths = shape.rels.map(n => n -> tables.get(n).path).toMap
     val cur = shape.rels.map(n =>
       n -> TxnTable.currentVersion(paths(n))).toMap
     // a RESTOREd source has no replayable delta
-    if (shape.rels.exists(n => cur(n) < recorded(n))) return None
+    if (shape.rels.exists(n => cur(n) < recorded(n))) return Left(None)
     val changed = shape.rels.filter(n => cur(n) > recorded(n))
     if (changed.isEmpty) {
-      lastMvRefresh.set(MvRefreshStats("noop", Set.empty, Nil,
+      OpMetrics.record(MvRefresh, MvRefreshStats("noop", Set.empty, Nil,
         TxnTable.snapshotFiles(paths(shape.rels.head),
           cur(shape.rels.head)).size))
-      return Some(TxnTable.currentVersion(path))
+      return Right(TxnTable.currentVersion(path))
     }
     if (changed.exists(n =>
         recorded(n) < TxnTable.earliestVersion(paths(n))))
-      return None
+      return Left(None)
     // any failure inside the incremental machinery (ambiguous names,
     // unfoldable types discovered late) degrades to the full path —
-    // always correct, and observable: gates assert mode==incremental
+    // always correct, and observable: the full path's MvRefreshStats
+    // carries the error as its `fallback`
     try refreshIncrementalOn(spark, path, shape, changed, recorded,
-      cur, paths)
+      cur, paths).toRight(None)
     catch {
       case scala.util.control.NonFatal(e) =>
-        // diagnosable degradation: the full path is always correct,
-        // but an operator hunting a missing "incremental" can surface
-        // the reason without a debugger
-        if (sys.env.contains("GRAFT_MV_DEBUG") ||
-            sys.props.contains("graft.mv.debug")) e.printStackTrace()
-        None
+        Left(Some(s"${e.getClass.getName}: ${e.getMessage}"))
     }
   }
 
@@ -2115,7 +2111,7 @@ object GraftSql {
         }: _*)
         val ver = TxnTable.overwrite(spark, path, projected,
           op = mvMarkerPinned(shape.rels, changed, cur, recorded))
-        lastMvRefresh.set(MvRefreshStats("incremental", changedFiles,
+        OpMetrics.record(MvRefresh, MvRefreshStats("incremental", changedFiles,
           st.prunedFiles, st.liveFiles))
         return Some(ver)
       }
@@ -2324,7 +2320,7 @@ object GraftSql {
           op = marker)
       }
       val ver = TxnTable.overwrite(spark, path, projected, op = marker)
-      lastMvRefresh.set(MvRefreshStats("incremental", changedFiles,
+      OpMetrics.record(MvRefresh, MvRefreshStats("incremental", changedFiles,
         Nil, live))
       return Some(ver)
     }
@@ -2428,10 +2424,10 @@ object GraftSql {
     val (_, mvRows, _) = TxnTable.logTableStats(spark, path)
     val cap = math.min(65536L, math.max(64L, mvRows / 10L))
     val probed = touchedDf.limit((cap + 1L).toInt).count()
-    lastMvCarryProbe.set(probed)
-    if (probed > cap) { lastMvCarryKeys.set(-1L); return None }
+    OpMetrics.record(MvCarryProbe, probed)
+    if (probed > cap) return None
     val touchedRows = touchedDf.collect()
-    lastMvCarryKeys.set(touchedRows.length.toLong)
+    OpMetrics.record(MvCarryKeys, touchedRows.length.toLong)
     val outCols = shape.items.map(it => col(it.out))
     val result =
       if (touchedRows.isEmpty) mvDf.select(outCols: _*)
@@ -2496,12 +2492,12 @@ object GraftSql {
           }: _*)
         val recomputedH =
           havingOut.map(recomputed.filter).getOrElse(recomputed)
-        lastMvRefresh.set(MvRefreshStats("incremental", changedFiles,
+        OpMetrics.record(MvRefresh, MvRefreshStats("incremental", changedFiles,
           recompFiles, live))
         carried.unionAll(recomputedH)
       }
     if (touchedRows.isEmpty)
-      lastMvRefresh.set(MvRefreshStats("incremental", changedFiles,
+      OpMetrics.record(MvRefresh, MvRefreshStats("incremental", changedFiles,
         Nil, live))
     val ver = TxnTable.overwrite(spark, path, result, op = marker)
     Some(ver)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
 import graft.GraftEngine
-import graft.core.{Lake, TxnTable}
+import graft.core.{Lake, OpMetrics, TxnTable}
 import graft.operators.{Dedup, IncrementalView}
 import graft.sql.GraftSql
 
@@ -165,24 +165,28 @@ object Probe {
         TxnTable.readPrunedBloom(spark, t, "k", keys).collect().length)
       require(found == scanned, s"bloom_index: $found rows, scan $scanned")
       val live = TxnTable.snapshotFiles(t).size
-      m.fact(s"kept files=$files",
+      val (kept, probe) = OpMetrics.scope(
         TxnTable.readPrunedBloom(spark, t, "k", keys).inputFiles.length)
-      m.fact(s"probe_returned files=$files", TxnTable.lastBloomProbeCollected)
+      val returned = probe.get(TxnTable.BloomProbeCollected).getOrElse(-1)
+      m.fact(s"kept files=$files", kept)
+      m.fact(s"probe_returned files=$files", returned)
       m.fact(s"live files=$files", live)
       m.fact(s"bloom_bytes files=$files", TxnTable.read(spark,
         TxnTable.bloomPath(t)).agg(sum(length(col("bloom")))).head().getLong(0))
-      require(TxnTable.lastBloomProbeCollected <= live,
+      require(returned <= live,
         "bloom_index: the probe returned more than the live files")
     }
     val t = s"${m.scratch}/bloom_16"
     TxnTable.compact(spark, t, targetFiles = 4)
-    TxnTable.readPrunedBloom(spark, t, "k", Seq(1L, 2L)).collect()
+    val (_, probe) = OpMetrics.scope(
+      TxnTable.readPrunedBloom(spark, t, "k", Seq(1L, 2L)).collect())
+    val returned = probe.get(TxnTable.BloomProbeCollected).getOrElse(-1)
     val live = TxnTable.snapshotFiles(t).size
     m.fact("churn live", live)
     m.fact("churn aux_rows",
       TxnTable.read(spark, TxnTable.bloomPath(t)).count())
-    m.fact("churn probe_returned", TxnTable.lastBloomProbeCollected)
-    require(TxnTable.lastBloomProbeCollected <= live,
+    m.fact("churn probe_returned", returned)
+    require(returned <= live,
       "bloom_index: dead-file aux rows reached the driver")
   }
 
@@ -198,10 +202,10 @@ object Probe {
         (col("id") / 100).cast("string"))).otherwise(lit("common")).as("k"),
       md5(col("id").cast("string")).as("pad")), partitions = 16)
     GraftSql.register("probe_mcv", t)
-    try m.time("analyze")(GraftSql.execute(spark,
-      "ANALYZE TABLE probe_mcv COMPUTE HISTOGRAM (k)"))
+    val (_, rec) = try OpMetrics.scope(m.time("analyze")(GraftSql.execute(
+      spark, "ANALYZE TABLE probe_mcv COMPUTE HISTOGRAM (k)")))
     finally GraftSql.unregister("probe_mcv")
-    val scans = TxnTable.lastAnalyzeScans
+    val scans = rec.get(TxnTable.AnalyzeScans).getOrElse(-1)
     m.fact("scans", scans)
     val df = TxnTable.read(spark, t)
     m.time("retired_extra_pass", reps = 3)(
@@ -286,9 +290,9 @@ object Probe {
         val q = s"SELECT g, count(*) AS c, sum(v) AS sv FROM $n GROUP BY g"
         GraftSql.execute(spark, s"CREATE MATERIALIZED VIEW probe_mv$rows " +
           s"LOCATION '${m.scratch}/mv$rows' AS $q")
-        val on = m.time(s"on rows=$rows", reps = 3)(
-          GraftSql.query(spark, q).collect().toSet)
-        require(GraftSql.lastMvRewrite.exists(_._2 == "exact"),
+        val (on, rec) = OpMetrics.scope(m.time(s"on rows=$rows", reps = 3)(
+          GraftSql.query(spark, q).collect().toSet))
+        require(rec.get(GraftSql.MvRewrite).exists(_._2 == "exact"),
           "mv_rewrite: the statement was not served from the MV")
         val off = try {
           GraftSql.execute(spark, "SET MATVIEW REWRITE OFF")

@@ -103,4 +103,38 @@ class GraftEngineSpec extends AnyFunSuite {
     } finally saved.fold(spark.conf.unset("spark.sql.cbo.enabled"))(
       spark.conf.set("spark.sql.cbo.enabled", _))
   }
+
+  test("every native function is callable from SQL through both " +
+    "registration paths (extensions and register)") {
+    val bloom = "X'" + "00" * 64 + "'"
+    // one SQL call per entry of the native table
+    val calls = Map(
+      "cosine_sim" -> ("cosine_sim(CAST(array(1, 2) AS ARRAY<FLOAT>), " +
+        "CAST(array(1, 2) AS ARRAY<FLOAT>))"),
+      "rolling_fingerprint" -> "rolling_fingerprint('abc')",
+      "zorder" -> "zorder(3L, 5L)",
+      "zorder3" -> "zorder3(1L, 2L, 3L)",
+      "bloom_might_contain" -> s"bloom_might_contain($bloom, 1L)",
+      "dist2_int" -> ("dist2_int(CAST(array(1, 2) AS ARRAY<BIGINT>), " +
+        "CAST(array(3, 5) AS ARRAY<BIGINT>))"))
+    assert(calls.keySet ==
+      graft.plans.GraftFunctions.native.map(_._1).toSet,
+      "every native function needs a call here")
+    spark // the suite's session owns the SparkContext both paths reuse
+    val viaExtensions =
+      SparkSession.builder().withExtensions(new GraftExtensions).create()
+    val viaRegister = SparkSession.builder().create()
+    try {
+      graft.plans.GraftFunctions.register(viaRegister)
+      for ((path, s) <- Seq("extensions" -> viaExtensions,
+          "register" -> viaRegister); (name, call) <- calls) {
+        val r = scala.util.Try(s.sql(s"SELECT $call AS v").head())
+        assert(r.isSuccess && !r.get.isNullAt(0),
+          s"$name via $path: ${r.failed.map(_.getMessage).getOrElse("null")}")
+      }
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
 }

@@ -168,18 +168,19 @@ class AlterColumnsSpec extends SparkSpecBase {
         yield (g * 1000 + i, g, (g * 1000 + i) * 3)).toDF("id", "g", "x"),
       Seq(col("g")), targetFiles = 8)
     TxnTable.renameColumn(spark, t, "g", "grp")
-    val f0 = graft.crawler.SkippingIndex.footerReads.get()
-    // pruned read on the RENAMED column: log-stats plan, zero footers,
-    // strict subset, exact rows
-    val pruned = TxnTable.readPruned(spark, t, "grp", 2L, 3L)
-    assert(pruned.count() == 100L)
-    assert(pruned.columns.contains("grp"))
-    val (cnt, scanned, total) = TxnTable.countRange(spark, t, "grp", 2L, 5L)
-    assert(cnt == 200L && scanned == 0 && total == 8,
-      s"metadata count must survive the rename, got ($cnt,$scanned,$total)")
-    val (mn, mx, s2, _) = TxnTable.minMaxOf(spark, t, "grp")
-    assert(mn.contains(0L) && mx.contains(7L) && s2 == 0)
-    assert(graft.crawler.SkippingIndex.footerReads.get() == f0,
+    val (_, window) = OpMetrics.scope {
+      // pruned read on the RENAMED column: log-stats plan, zero footers,
+      // strict subset, exact rows
+      val pruned = TxnTable.readPruned(spark, t, "grp", 2L, 3L)
+      assert(pruned.count() == 100L)
+      assert(pruned.columns.contains("grp"))
+      val (cnt, scanned, total) = TxnTable.countRange(spark, t, "grp", 2L, 5L)
+      assert(cnt == 200L && scanned == 0 && total == 8,
+        s"metadata count must survive the rename, got ($cnt,$scanned,$total)")
+      val (mn, mx, s2, _) = TxnTable.minMaxOf(spark, t, "grp")
+      assert(mn.contains(0L) && mx.contains(7L) && s2 == 0)
+    }
+    assert(window.count(graft.crawler.SkippingIndex.FooterReads) == 0,
       "renamed-column pruning must stay zero-footer")
     // constraint guard: a CHECK referencing the name blocks the rename
     TxnTable.addConstraint(spark, t, "grp_pos", "grp >= 0")
@@ -352,17 +353,18 @@ class AlterColumnsSpec extends SparkSpecBase {
         col("id").as("pay"))) // v2
     // pruned read: old adds' logged bounds translate unchanged into
     // the widened space — zero footer reads, strict file subset
-    val f0 = graft.crawler.SkippingIndex.footerReads.get()
-    val pruned = TxnTable.readPruned(spark, t, "k", 100L, 299L)
-    assert(pruned.count() == 200L)
-    assert(pruned.inputFiles.length < 9,
-      "pruning must keep a strict subset across generations")
-    // metadata COUNT: exact, and fully planned from the log
-    val (cnt, scanned, total) =
-      TxnTable.countRange(spark, t, "k", 0L, 10000000000L)
-    assert(cnt == 1100L && scanned == 0 && total == 9,
-      s"widened-space COUNT must be zero-scan, got ($cnt,$scanned,$total)")
-    assert(graft.crawler.SkippingIndex.footerReads.get() == f0,
+    val (_, window) = OpMetrics.scope {
+      val pruned = TxnTable.readPruned(spark, t, "k", 100L, 299L)
+      assert(pruned.count() == 200L)
+      assert(pruned.inputFiles.length < 9,
+        "pruning must keep a strict subset across generations")
+      // metadata COUNT: exact, and fully planned from the log
+      val (cnt, scanned, total) =
+        TxnTable.countRange(spark, t, "k", 0L, 10000000000L)
+      assert(cnt == 1100L && scanned == 0 && total == 9,
+        s"widened-space COUNT must be zero-scan, got ($cnt,$scanned,$total)")
+    }
+    assert(window.count(graft.crawler.SkippingIndex.FooterReads) == 0,
       "no footer may be opened: bounds come from the commit log")
     // widen composes with column mapping: RENAME keeps the stable
     // physical name; a lossy widen on the renamed column still refuses

@@ -31,30 +31,36 @@ class BloomSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       TxnTable.computeBloom(spark, t, Seq("id"), fpp = 0.9)
     }
-    TxnTable.computeBloom(spark, t, Seq("id", "s"))
-    assert(TxnTable.lastBloomBuiltFiles.size == 2)
+    val (_, build) =
+      OpMetrics.scope(TxnTable.computeBloom(spark, t, Seq("id", "s")))
+    assert(build.get(TxnTable.BloomBuiltFiles).map(_.size).contains(2))
     // string probe path prunes to the owning file
     val hs = TxnTable.readPrunedBloomString(spark, t, "s", Seq("d"))
     assert(hs.collect().map(_.getString(1)).toSeq == Seq("d"))
     assert(hs.inputFiles.length == 1)
     // long probe path too
-    val h = TxnTable.readPrunedBloom(spark, t, "id", Seq(1L))
+    val (h, hit) =
+      OpMetrics.scope(TxnTable.readPrunedBloom(spark, t, "id", Seq(1L)))
     assert(h.inputFiles.length == 1 && h.count() == 1L)
     // the probe job returns only names the index can EXCLUDE (here:
     // the one non-matching file), never a verdict per candidate
-    assert(TxnTable.lastBloomProbeCollected == 1)
+    assert(hit.get(TxnTable.BloomProbeCollected).contains(1))
     // empty probe list → empty frame; absent value → zero rows
     assert(TxnTable.readPrunedBloom(spark, t, "id", Nil).count() == 0L)
-    assert(TxnTable.readPrunedBloom(spark, t, "id", Seq(99L)).count() == 0L)
+    val (miss, absent) =
+      OpMetrics.scope(TxnTable.readPrunedBloom(spark, t, "id", Seq(99L)))
+    assert(miss.count() == 0L)
     // an absent value excludes every live file (modulo bloom false
     // positives — two tiny files make those practically impossible)
-    assert(TxnTable.lastBloomProbeCollected == 2)
+    assert(absent.get(TxnTable.BloomProbeCollected).contains(2))
     // snapshot read: v0 keeps only the first file's rows
     assert(TxnTable.readPrunedBloom(spark, t, "id", Seq(1L, 3L), asOf = 0L)
       .collect().map(_.getLong(0)).toSet == Set(1L))
     // a fully-covered table builds nothing
-    assert(TxnTable.computeBloom(spark, t, Seq("id", "s")) >= 0L)
-    assert(TxnTable.lastBloomBuiltFiles.isEmpty)
+    val (v, topUp) =
+      OpMetrics.scope(TxnTable.computeBloom(spark, t, Seq("id", "s")))
+    assert(v >= 0L)
+    assert(topUp.get(TxnTable.BloomBuiltFiles).exists(_.isEmpty))
     // merge-on-read delete: the bloom still (rightly) keeps the file,
     // the DV drops the row — never a resurrected value
     TxnTable.deleteWhereMor(spark, t, col("id") === 3L)

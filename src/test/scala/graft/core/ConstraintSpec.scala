@@ -108,9 +108,9 @@ class ConstraintSpec extends SparkSpecBase {
       TxnTable.append(spark, t,
         Seq((100L + i, 1L + i, "k")).toDF("id", "v", "s"))
     }
-    val before = TxnTable.versionFileReads.get()
-    assert(TxnTable.constraints(t) == Map("v_pos" -> "v > 0"))
-    val reads = TxnTable.versionFileReads.get() - before
+    val (cs, window) = OpMetrics.scope(TxnTable.constraints(t))
+    assert(cs == Map("v_pos" -> "v > 0"))
+    val reads = window.count(TxnTable.VersionFileReads)
     assert(reads <= 2L * (TxnTable.CheckpointInterval + 2),
       s"constraint resolution must be checkpoint-amortized, read $reads")
     violates(TxnTable.appendStreamBatch(spark, t,

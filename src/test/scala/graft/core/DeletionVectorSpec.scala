@@ -398,9 +398,8 @@ class DeletionVectorSpec extends SparkSpecBase {
       TxnTable.append(spark, t, Seq((200L + i, 9L, 1L)).toDF("id", "g", "v"))
     }
     assert(TxnTable.currentVersion(t) == 11L)
-    val before = TxnTable.versionFileReads.get()
-    val dvm = TxnTable.snapshotDvs(t)
-    val reads = TxnTable.versionFileReads.get() - before
+    val (dvm, window) = OpMetrics.scope(TxnTable.snapshotDvs(t))
+    val reads = window.count(TxnTable.VersionFileReads)
     assert(dvm.size == 1)
     assert(reads <= TxnTable.CheckpointInterval + 2,
       s"snapshotDvs must resolve from the checkpoint, read $reads commits")

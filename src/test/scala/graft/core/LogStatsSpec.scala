@@ -9,15 +9,14 @@ import graft.crawler.SkippingIndex
 
 /** Stats-in-log: every write records per-file column min/max in the
   * commit's adds, so pruned reads plan from the LOG alone — zero
-  * parquet footer opens (pinned via the footerReads counter). Footer
+  * parquet footer opens (pinned via SkippingIndex.FooterReads). Footer
   * reads survive only as the fallback for pre-stats adds. */
 class LogStatsSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def footers[A](f: => A): (A, Long) = {
-    val before = SkippingIndex.footerReads.get()
-    val out = f
-    (out, SkippingIndex.footerReads.get() - before)
+    val (out, rec) = OpMetrics.scope(f)
+    (out, rec.count(SkippingIndex.FooterReads))
   }
 
   private def mk(t: String): Unit =
@@ -112,9 +111,9 @@ class LogStatsSpec extends SparkSpecBase {
         Seq((9000L + i, 9L, s"x$i", 1L)).toDF("id", "g", "name", "v"))
     }
     assert(TxnTable.currentVersion(t) >= TxnTable.CheckpointInterval)
-    val before = TxnTable.versionFileReads.get()
-    val (df, reads) = footers(TxnTable.readPruned(spark, t, "g", 9L, 9L))
-    val vreads = TxnTable.versionFileReads.get() - before
+    val ((df, reads), window) =
+      OpMetrics.scope(footers(TxnTable.readPruned(spark, t, "g", 9L, 9L)))
+    val vreads = window.count(TxnTable.VersionFileReads)
     assert(reads == 0,
       s"checkpointed adds must still carry stats, footer-read $reads")
     assert(vreads <= 3 * (TxnTable.CheckpointInterval + 2),

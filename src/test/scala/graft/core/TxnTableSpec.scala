@@ -321,13 +321,9 @@ class TxnTableSpec extends SparkSpecBase {
     assert(none.count() == 0 && none.columns.toSeq == Seq("id", "a", "b"))
   }
 
-  /** Version-file reads consumed by `body` (suites run sequentially in
-    * the forked test JVM, so the global counter is race-free here). */
-  private def logReads(body: => Unit): Long = {
-    val before = TxnTable.versionFileReads.get()
-    body
-    TxnTable.versionFileReads.get() - before
-  }
+  /** Version-file reads consumed by `body`. */
+  private def logReads(body: => Unit): Long =
+    OpMetrics.scope(body)._2.count(TxnTable.VersionFileReads)
 
   test("hot paths replay O(CheckpointInterval), not O(versions)") {
     val t = freshTable()
@@ -682,15 +678,15 @@ class TxnTableSpec extends SparkSpecBase {
     // an append touches none of the delete's removes — it COMMUTES: the
     // delete must re-commit the same adds/removes at the new head
     // instead of aborting (or worse, redoing its rewrite job)
-    val w0 = TxnTable.dataWriteJobs.get()
-    val v = try deleteWhere(spark, t, col("id") < 10)
+    val (v, writes) =
+      try OpMetrics.scope(deleteWhere(spark, t, col("id") < 10))
       finally TxnTable.preCommitHook = () => ()
     assert(fired)
     // the append took v1; the rebased delete landed at v2
     assert(v == 2L && currentVersion(t) == 2L)
     // exactly TWO data writes happened: the delete's survivor rewrite
     // and the interleaved append — the rebase re-ran NO write job
-    assert(TxnTable.dataWriteJobs.get() - w0 == 2,
+    assert(writes.count(TxnTable.DataWriteJobs) == 2,
       "rebase must re-commit metadata, not re-run the rewrite")
     // both writers' effects are live: 50 - 10 deleted + 10 appended
     assert(read(spark, t).count() == 50)
@@ -774,12 +770,12 @@ class TxnTableSpec extends SparkSpecBase {
     // mid-compaction. The append commutes (it touches none of the
     // compact's removes), so the compaction must land at the next
     // version WITHOUT re-running its rewrite job.
-    val w0 = TxnTable.dataWriteJobs.get()
-    val v = try compactClustered(spark, t, col("id"), col("a"), targetFiles = 8)
+    val (v, writes) = try OpMetrics.scope(
+        compactClustered(spark, t, col("id"), col("a"), targetFiles = 8))
       finally TxnTable.preCommitHook = () => ()
     assert(fired)
     assert(v == 2L && currentVersion(t) == 2L)
-    assert(TxnTable.dataWriteJobs.get() - w0 == 2,
+    assert(writes.count(TxnTable.DataWriteJobs) == 2,
       "one clustered rewrite + one interleaved append — rebase redid nothing")
     // the appended file survived the rebased compact: it is live and
     // NOT among the compact's removes
@@ -1866,8 +1862,11 @@ class TxnTableSpec extends SparkSpecBase {
         s"s${i % 5}")).toDF("a", "b", "c", "k", "s2"))
     // 3 numeric + 2 string columns in ONE statement: 3 scans total
     // (the old per-column loop would have run 2×3 + … serial jobs)
-    computeHistogram(spark, t, Seq("a", "b", "c", "k", "s2"), bins = 8)
-    assert(lastAnalyzeScans == 3, s"got $lastAnalyzeScans scans")
+    def scans(body: => Long): Option[Int] =
+      OpMetrics.scope(body)._2.get(AnalyzeScans)
+    val all = scans(
+      computeHistogram(spark, t, Seq("a", "b", "c", "k", "s2"), bins = 8))
+    assert(all.contains(3), s"got $all scans")
     val props = properties(t)
     Seq("a", "b", "c").foreach(c =>
       assert(props.contains(s"graft.hist.$c"), s"missing hist for $c"))
@@ -1882,10 +1881,8 @@ class TxnTableSpec extends SparkSpecBase {
     // inherently sequential: the bins need the endpoints); a
     // string-only ANALYZE is ONE scan (ndv + nonnull ride the MCV
     // aggregate)
-    computeHistogram(spark, t, Seq("a"), bins = 8)
-    assert(lastAnalyzeScans == 2)
-    computeHistogram(spark, t, Seq("k"))
-    assert(lastAnalyzeScans == 1)
+    assert(scans(computeHistogram(spark, t, Seq("a"), bins = 8)).contains(2))
+    assert(scans(computeHistogram(spark, t, Seq("k"))).contains(1))
     // non-scalar columns refuse loudly
     val e = intercept[IllegalArgumentException] {
       computeHistogram(spark, t, Seq("nope"))

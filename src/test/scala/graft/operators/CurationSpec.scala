@@ -283,16 +283,15 @@ class CurationSpec extends SparkSpecBase {
       val src = if (i <= 1000L) "web" else s"domain_${i}"
       (i, src, 10L)
     }.toDF("doc_id", "source", "tok")
-    val kept = Curation.tokenBudgetMix(docs, col("doc_id"), "source",
-      col("tok"), Map("web" -> 500L))
+    val (kept, mix) = graft.core.OpMetrics.scope(Curation.tokenBudgetMix(
+      docs, col("doc_id"), "source", col("tok"), Map("web" -> 500L)))
     val ids = kept.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids.size == 50 && ids.forall(_ <= 1000L))
     // the collected metadata is bounded by the BUDGETED source's
     // buckets (≤ 1000 docs → ≤ 1000 rows), not the 5000 domains
-    assert(Curation.lastMixMetadataRows >= 1 &&
-      Curation.lastMixMetadataRows <= 1000,
-      s"metadata collect leaked unbudgeted sources: " +
-        s"${Curation.lastMixMetadataRows} rows")
+    val metaRows = mix.get(Curation.MixMetadataRows)
+    assert(metaRows.exists(r => r >= 1 && r <= 1000),
+      s"metadata collect leaked unbudgeted sources: $metaRows rows")
     // and the kept set still equals the greedy prefix of the budgeted
     // source alone
     val ordered = docs.filter(col("source") === "web")

@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
-import graft.core.TxnTable
+import graft.core.{OpMetrics, TxnTable}
+import graft.crawler.SkippingIndex.FooterReads
 
 /** SQL DML facade: Spark-parsed UPDATE / DELETE FROM / MERGE INTO
   * dispatched to TxnTable operations — statement text a user would
@@ -21,6 +22,26 @@ class GraftSqlSpec extends SparkSpecBase {
         .toDF("id", "v", "s"))
     GraftSql.register(name, t, mor)
     (t, name)
+  }
+
+  /** REFRESH MATERIALIZED VIEW `mv` [FULL]: the evidence it recorded. */
+  private def refreshRecord(mv: String, full: Boolean = false)
+      : OpMetrics.Record =
+    OpMetrics.scope(GraftSql.execute(spark,
+      s"REFRESH MATERIALIZED VIEW $mv" + (if (full) " FULL" else "")))._2
+
+  /** What a REFRESH of `mv` did. */
+  private def refresh(mv: String, full: Boolean = false)
+      : GraftSql.MvRefreshStats =
+    refreshRecord(mv, full).get(GraftSql.MvRefresh)
+      .getOrElse(fail(s"REFRESH $mv recorded no MvRefreshStats"))
+
+  /** `sql` as a frame, with the MV it was rewritten onto: (mv name,
+    * mode), or None when it reads its base tables. */
+  private def queryRw(sql: String)
+      : (org.apache.spark.sql.DataFrame, Option[(String, String)]) = {
+    val (df, rec) = OpMetrics.scope(GraftSql.query(spark, sql))
+    (df, rec.get(GraftSql.MvRewrite))
   }
 
   private def rows(t: String): Set[(Long, Long, String)] =
@@ -741,10 +762,9 @@ class GraftSqlSpec extends SparkSpecBase {
       .head().getLong(0) == 100L)
     // the harvested stats serve metadata aggregates with zero
     // further footer reads
-    val f0 = graft.crawler.SkippingIndex.footerReads.get()
-    val (cnt, _, tot) = TxnTable.countRange(spark, d, "v", 0L, 100L)
-    assert(cnt == 4L && tot == 2 &&
-      graft.crawler.SkippingIndex.footerReads.get() == f0)
+    val ((cnt, _, tot), window) =
+      OpMetrics.scope(TxnTable.countRange(spark, d, "v", 0L, 100L))
+    assert(cnt == 4L && tot == 2 && window.count(FooterReads) == 0)
     // constraint DDL: ADD enforces, violating DML fails, DROP lifts
     GraftSql.execute(spark,
       s"ALTER TABLE $n ADD CONSTRAINT v_pos CHECK (v > 0)") // v1
@@ -953,11 +973,12 @@ class GraftSqlSpec extends SparkSpecBase {
         "an empty tail must no-op")
       // pruning works again over the re-clustered layout: strict
       // subset, zero footers, exact rows
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
-      val pruned = TxnTable.readPruned(spark, d, "g", 2L, 3L)
-      assert(pruned.count() == 102L) // 100 base + the g=2 and g=3 tail rows
-      assert(pruned.inputFiles.length < 8)
-      assert(graft.crawler.SkippingIndex.footerReads.get() == f0)
+      val (_, window) = OpMetrics.scope {
+        val pruned = TxnTable.readPruned(spark, d, "g", 2L, 3L)
+        assert(pruned.count() == 102L) // 100 base + the g=2 and g=3 tail rows
+        assert(pruned.inputFiles.length < 8)
+      }
+      assert(window.count(FooterReads) == 0)
       // explicit single-column ZORDER BY keeps its teaching error
       val e = intercept[IllegalArgumentException] {
         GraftSql.execute(spark, s"OPTIMIZE $n ZORDER BY (g)")
@@ -1483,7 +1504,6 @@ class GraftSqlSpec extends SparkSpecBase {
     val d = Files.createTempDirectory("graft_mvinc").toString
     def mvContent(path: String): Set[Seq[Any]] =
       TxnTable.read(spark, path).collect().map(_.toSeq).toSet
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val (_, n) = mk() // (1,10,a) (2,20,b) (3,30,c) (4,40,d)
     val m1 = "pm" + java.util.UUID.randomUUID().toString.replace("-", "")
     val m2 = "pm" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -1507,26 +1527,23 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.execute(spark, s"INSERT INTO $n VALUES (5, 50, 'a')")
       GraftSql.execute(spark, s"UPDATE $n SET v = 12 WHERE id = 4")
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 2")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m1")
-      assert(mode() == "incremental")
-      assert(GraftSql.lastMvRefreshStats.get.recomputeFiles.isEmpty,
+      val r1 = refresh(m1)
+      assert(r1.mode == "incremental")
+      assert(r1.recomputeFiles.isEmpty,
         "a pure fold must read nothing beyond the delta")
       assert(mvContent(s"$d/m1") ==
         Set(Seq("a", 2L), Seq("c", 1L), Seq("d", 1L)))
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m2")
-      assert(mode() == "incremental")
+      assert(refresh(m2).mode == "incremental")
       // v>15 now: (3,30,c), (5,50,a) — row 4 dropped OUT via update
       assert(mvContent(s"$d/m2") ==
         Set(Seq("a", 1L, 50L), Seq("c", 1L, 30L)))
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m3")
-      assert(mode() == "incremental")
+      assert(refresh(m3).mode == "incremental")
       assert(mvContent(s"$d/m3") ==
         Set(Seq(1L, 1L, 10L, 10L, 10L), Seq(3L, 1L, 30L, 30L, 30L),
           Seq(4L, 1L, 12L, 12L, 12L), Seq(5L, 1L, 50L, 50L, 50L)))
       // fresh → a second refresh commits NOTHING
       val v1 = TxnTable.currentVersion(s"$d/m1")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m1")
-      assert(mode() == "noop" && TxnTable.currentVersion(s"$d/m1") == v1)
+      assert(refresh(m1).mode == "noop" && TxnTable.currentVersion(s"$d/m1") == v1)
       // the full min-max tier also maintains STRING groups (pruned
       // recompute via the string-bounds read)
       val m4 = "pm" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -1534,8 +1551,7 @@ class GraftSqlSpec extends SparkSpecBase {
         s"LOCATION '$d/m4' AS SELECT s, count(*) AS c, sum(v) AS sv, " +
         s"min(v) AS mn, max(v) AS mx FROM $n GROUP BY s")
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 5") // 'a' extreme
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $m4")
-      assert(mode() == "incremental")
+      assert(refresh(m4).mode == "incremental")
       assert(mvContent(s"$d/m4") == GraftSql.query(spark,
         s"SELECT s, count(*) AS c, sum(v) AS sv, min(v) AS mn, " +
           s"max(v) AS mx FROM $n GROUP BY s")
@@ -1562,8 +1578,7 @@ class GraftSqlSpec extends SparkSpecBase {
           s"CREATE MATERIALIZED VIEW $mv LOCATION '$d/i$i' AS $q")
         GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 5")
         GraftSql.execute(spark, s"INSERT INTO $n VALUES (5, 50, 'a')")
-        GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-        assert(mode() == "incremental", s"shape must fold: $q")
+        assert(refresh(mv).mode == "incremental", s"shape must fold: $q")
         assert(mvContent(s"$d/i$i") ==
           directSet(q),
           s"incremental refresh must equal the definition re-run: $q")
@@ -1578,8 +1593,7 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.execute(spark,
         s"CREATE MATERIALIZED VIEW $mvD LOCATION '$d/pd' AS $qD")
       GraftSql.execute(spark, s"UPDATE $n SET v = v + 1 WHERE id = 5")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mvD")
-      assert(mode() == "incremental", "distinct counts now fold")
+      assert(refresh(mvD).mode == "incremental", "distinct counts now fold")
       assert(mvContent(s"$d/pd") ==
         GraftSql.query(spark, qD).collect().map(_.toSeq).toSet)
       GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $mvD")
@@ -1598,8 +1612,7 @@ class GraftSqlSpec extends SparkSpecBase {
           s"CREATE MATERIALIZED VIEW $mv LOCATION '$d/f$i' AS $q")
         GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 5")
         GraftSql.execute(spark, s"INSERT INTO $n VALUES (5, 50, 'a')")
-        GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-        assert(mode() == "full", s"shape must fall back: $q")
+        assert(refresh(mv).mode == "full", s"shape must fall back: $q")
         // the fallback result still equals the definition re-run
         assert(mvContent(s"$d/f$i") ==
           directSet(q))
@@ -1686,7 +1699,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("generalized incremental refresh: avg, multi-column GROUP BY, " +
     "and a five-kind aggregate mix all track a direct recompute") {
     val d = Files.createTempDirectory("graft_mvgen").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     TxnTable.create(spark, t,
@@ -1723,8 +1735,7 @@ class GraftSqlSpec extends SparkSpecBase {
       churn.foreach { stmt =>
         GraftSql.execute(spark, stmt)
         mvs.foreach { case (mv, q, p) =>
-          GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-          assert(mode() == "incremental",
+          assert(refresh(mv).mode == "incremental",
             s"must stay incremental for: $q after $stmt")
           assert(TxnTable.read(spark, p).collect().map(_.toSeq).toSet ==
             directSet(q),
@@ -1742,7 +1753,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("HAVING-clause MVs refresh incrementally through " +
     "carry+recompute; unresolvable HAVINGs fall back") {
     val d = Files.createTempDirectory("graft_mvhav").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     TxnTable.create(spark, t,
@@ -1777,8 +1787,7 @@ class GraftSqlSpec extends SparkSpecBase {
       churn.foreach { stmt =>
         GraftSql.execute(spark, stmt)
         mvs.foreach { case (mv, q, p) =>
-          GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-          assert(mode() == "incremental",
+          assert(refresh(mv).mode == "incremental",
             s"HAVING shape must stay incremental: $q after $stmt")
           assert(TxnTable.read(spark, p).collect().map(_.toSeq).toSet ==
             directSet(q),
@@ -1794,8 +1803,7 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.execute(spark,
         s"CREATE MATERIALIZED VIEW $mvF LOCATION '$d/hf' AS $qf")
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 3")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mvF")
-      assert(mode() == "full", "an unresolvable HAVING must fall back")
+      assert(refresh(mvF).mode == "full", "an unresolvable HAVING must fall back")
       assert(TxnTable.read(spark, s"$d/hf").collect().map(_.toSeq).toSet
         == GraftSql.query(spark, qf).collect().map(_.toSeq).toSet)
       GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $mvF")
@@ -1810,7 +1818,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("star-join MV: the changed side's delta folds through the " +
     "pinned other side; two changed sides fold telescopically") {
     val d = Files.createTempDirectory("graft_mvjoin").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val ft = d + "/fact"
     val dt = d + "/dim"
     val fn = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -1833,30 +1840,27 @@ class GraftSqlSpec extends SparkSpecBase {
           directSet(q))
       // FACT delta folds through the broadcast dim, zero recompute
       GraftSql.execute(spark, s"UPDATE $fn SET v = v + 7 WHERE id <= 10")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental", "fact delta must fold")
-      assert(GraftSql.lastMvRefreshStats.get.recomputeFiles.isEmpty,
+      val r1 = refresh(mv)
+      assert(r1.mode == "incremental", "fact delta must fold")
+      assert(r1.recomputeFiles.isEmpty,
         "a count/sum star fold must read nothing beyond the delta")
       checkParity()
       // DIM delta folds the other way (substitution is symmetric):
       // a re-labelled dim row moves its fact rows between groups
       GraftSql.execute(spark,
         s"UPDATE $dn SET rg = 'region_x' WHERE k = 4")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental", "dim delta must fold too")
+      assert(refresh(mv).mode == "incremental", "dim delta must fold too")
       checkParity()
       // an unmatched fact key never surfaces (inner join semantics)
       GraftSql.execute(spark, s"INSERT INTO $fn VALUES (200, 99, 1)")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental")
+      assert(refresh(mv).mode == "incremental")
       checkParity()
       // BOTH sides changed since the marker: the telescoping
       // expansion folds the fact Δ against the OLD dim, then the dim
       // Δ against the NEW fact — incremental and exact
       GraftSql.execute(spark, s"DELETE FROM $fn WHERE id = 3")
       GraftSql.execute(spark, s"DELETE FROM $dn WHERE k = 5")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental",
+      assert(refresh(mv).mode == "incremental",
         "two changed relations must fold telescopically")
       checkParity()
       // a THREE-way churn in one window folds too (insert + update +
@@ -1865,8 +1869,7 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.execute(spark, s"UPDATE $fn SET v = v - 5 WHERE id = 7")
       GraftSql.execute(spark,
         s"UPDATE $dn SET rg = 'region_y' WHERE k = 1")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental")
+      assert(refresh(mv).mode == "incremental")
       checkParity()
     } finally {
       try GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $mv")
@@ -1878,7 +1881,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("REFRESH MATERIALIZED VIEW ... FULL skips the recognizer — the " +
     "operational escape hatch recomputes from the definition") {
     val d = Files.createTempDirectory("graft_mvfull").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val (t, n) = mk()
     val mv = "pf" + java.util.UUID.randomUUID().toString.replace("-", "")
     try {
@@ -1887,8 +1889,8 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 1")
       // the foldable shape would refresh incrementally — FULL forces
       // the recompute and still clears staleness
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv FULL")
-      assert(mode() == "full", "FULL must skip the incremental path")
+      assert(refresh(mv, full = true).mode == "full",
+        "FULL must skip the incremental path")
       assert(TxnTable.read(spark, s"$d/mv").collect().map(_.toSeq).toSet
         == GraftSql.query(spark,
           s"SELECT s, count(*) AS c FROM $n GROUP BY s")
@@ -1898,8 +1900,7 @@ class GraftSqlSpec extends SparkSpecBase {
         "a FULL refresh must clear staleness")
       // the plain form still folds afterwards
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 2")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental")
+      assert(refresh(mv).mode == "incremental")
       GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $mv")
     } finally GraftSql.unregister(n)
   }
@@ -1907,7 +1908,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("expression group keys: time-bucket / modulo-band MVs refresh " +
     "incrementally through both regimes") {
     val d = Files.createTempDirectory("graft_mvexpr").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     TxnTable.create(spark, t, (1L to 200L)
@@ -1941,8 +1941,7 @@ class GraftSqlSpec extends SparkSpecBase {
       churn.foreach { stmt =>
         GraftSql.execute(spark, stmt)
         mvs.foreach { case (mv, q, p) =>
-          GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-          assert(mode() == "incremental",
+          assert(refresh(mv).mode == "incremental",
             s"expression groups must fold: $q after $stmt")
           assert(TxnTable.read(spark, p).collect().map(_.toSeq).toSet ==
             directSet(q),
@@ -1960,7 +1959,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("count(col) MVs fold the NON-NULL count exactly, nullable " +
     "values included") {
     val d = Files.createTempDirectory("graft_mvcntc").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     TxnTable.create(spark, t, Seq(
@@ -1989,8 +1987,7 @@ class GraftSqlSpec extends SparkSpecBase {
       churn.foreach { stmt =>
         GraftSql.execute(spark, stmt)
         mvs.foreach { case (mv, q, p) =>
-          GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-          assert(mode() == "incremental", s"must fold: $q after $stmt")
+          assert(refresh(mv).mode == "incremental", s"must fold: $q after $stmt")
           assert(TxnTable.read(spark, p).collect().map(_.toSeq).toSet ==
             directSet(q),
             s"diverged: $q after $stmt")
@@ -2006,8 +2003,7 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.execute(spark,
         s"CREATE MATERIALIZED VIEW $mvN LOCATION '$d/cn' AS $qn")
       GraftSql.execute(spark, s"UPDATE $n SET v = NULL WHERE id = 5")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mvN")
-      assert(mode() == "full",
+      assert(refresh(mvN).mode == "full",
         "an all-null-transition under a naked sum must fall back")
       val g2 = TxnTable.read(spark, s"$d/cn")
         .filter(col("g") === 2L).head()
@@ -2019,8 +2015,7 @@ class GraftSqlSpec extends SparkSpecBase {
         s"INSERT INTO $n VALUES (8, 3, 5), (9, 3, -5)")
       GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mvN")
       GraftSql.execute(spark, s"INSERT INTO $n VALUES (10, 0, 1)")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mvN")
-      assert(mode() == "incremental",
+      assert(refresh(mvN).mode == "incremental",
         "an untouched stored zero-sum group must not force the full path")
       assert(TxnTable.read(spark, s"$d/cn").collect().map(_.toSeq).toSet
         == GraftSql.query(spark, qn).collect().map(_.toSeq).toSet)
@@ -2036,7 +2031,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("the narrow count/sum/min/max tier keeps SQL null semantics: " +
     "an all-null transition recomputes through the extremes path") {
     val d = Files.createTempDirectory("graft_mvnulln").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     TxnTable.create(spark, t, Seq(
@@ -2053,8 +2047,7 @@ class GraftSqlSpec extends SparkSpecBase {
       // the ambiguous fold state): the removed values sit at the
       // extremes, so the pruned recompute fires and serves NULLs
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id IN (1, 2)")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental",
+      assert(refresh(mv).mode == "incremental",
         "the extremes tier handles the transition incrementally")
       val g0 = TxnTable.read(spark, s"$d/mv")
         .filter(col("g") === 0L).head()
@@ -2073,7 +2066,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("three-relation MV: all three relations changed in one window " +
     "fold telescopically and track a direct recompute") {
     val d = Files.createTempDirectory("graft_mv3rel").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val ft = d + "/fact"; val at = d + "/dima"; val bt = d + "/dimb"
     val fn = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     val an = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -2095,8 +2087,7 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.execute(spark,
         s"CREATE MATERIALIZED VIEW $mv LOCATION '$d/mv' AS $q")
       def check(): Unit = {
-        GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-        assert(mode() == "incremental",
+        assert(refresh(mv).mode == "incremental",
           "an all-three-changed window must fold telescopically")
         assert(TxnTable.read(spark, s"$d/mv").collect()
           .map(_.toSeq).toSet ==
@@ -2130,7 +2121,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("generalized incremental refresh keeps NULL group keys: " +
     "carried when untouched, exact when hit") {
     val d = Files.createTempDirectory("graft_mvnullg").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     TxnTable.create(spark, t, Seq(
@@ -2150,16 +2140,13 @@ class GraftSqlSpec extends SparkSpecBase {
           directSet(q))
       // untouched null group carried through a non-null delta
       GraftSql.execute(spark, s"UPDATE $n SET v = 150 WHERE id = 3")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental"); parity()
+      assert(refresh(mv).mode == "incremental"); parity()
       // the null group hit directly (its min removed)
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 1")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental"); parity()
+      assert(refresh(mv).mode == "incremental"); parity()
       // a new null-group row arrives
       GraftSql.execute(spark, s"INSERT INTO $n VALUES (5, NULL, 7)")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental"); parity()
+      assert(refresh(mv).mode == "incremental"); parity()
     } finally {
       try GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $mv")
       catch { case _: Exception => () }
@@ -2228,15 +2215,13 @@ class GraftSqlSpec extends SparkSpecBase {
       java.nio.file.Files.delete(
         java.nio.file.Paths.get(s"$d/mv").resolve(lost))
       // even with the SOURCE unchanged, REFRESH must heal (full path)
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $pm")
-      assert(GraftSql.lastMvRefreshStats.exists(_.mode == "full"),
+      assert(refresh(pm).mode == "full",
         "a damaged MV must take the healing full recompute")
       assert(GraftSql.query(spark, s"SELECT sum(c) AS n FROM $pm")
         .head().getLong(0) == 4L, "the refresh must heal the content")
       // healed: the next refresh folds incrementally again
       GraftSql.execute(spark, s"DELETE FROM $n WHERE id = 1")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $pm")
-      assert(GraftSql.lastMvRefreshStats.exists(_.mode == "incremental"))
+      assert(refresh(pm).mode == "incremental")
       assert(GraftSql.query(spark, s"SELECT sum(c) AS n FROM $pm")
         .head().getLong(0) == 3L)
       GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $pm")
@@ -2347,7 +2332,6 @@ class GraftSqlSpec extends SparkSpecBase {
   test("MV fold fence: a scalar subquery NESTED in a join condition " +
     "(below the WHERE filter) forces the always-correct full path") {
     val d = Files.createTempDirectory("graft_mvsubq").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val ft = d + "/fact"
     val dt = d + "/dim"
     val fn = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -2374,8 +2358,7 @@ class GraftSqlSpec extends SparkSpecBase {
       // carried fold would apply the delta under the OLD max(k)
       GraftSql.execute(spark, s"INSERT INTO $dn VALUES (9, 'g1')")
       GraftSql.execute(spark, s"INSERT INTO $fn VALUES (100, 4, 7)")
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "full",
+      assert(refresh(mv).mode == "full",
         "a subquery in a nested join condition must fall back")
       assert(TxnTable.read(spark, s"$d/mv").collect().map(_.toSeq).toSet
         == directSet(q))
@@ -2390,7 +2373,6 @@ class GraftSqlSpec extends SparkSpecBase {
     "few keys; wide high-cardinality churn falls back WITHOUT a " +
     "driver materialization") {
     val d = Files.createTempDirectory("graft_mvcap").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
     // 1000 distinct groups → MV rows 1000 → cap = max(64, 100) = 100
@@ -2409,27 +2391,25 @@ class GraftSqlSpec extends SparkSpecBase {
       // collect ships exactly those 5 tuples, refresh stays incremental
       GraftSql.execute(spark, s"INSERT INTO $n VALUES " +
         (1L to 5L).map(g => s"(${1000 + g}, $g, 7)").mkString(", "))
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental")
-      assert(GraftSql.lastMvCarryProbe.get() == 5L &&
-        GraftSql.lastMvCarryKeys.get() == 5L,
-        s"narrow churn must collect exactly the touched keys, got " +
-          s"probe=${GraftSql.lastMvCarryProbe.get()} " +
-          s"keys=${GraftSql.lastMvCarryKeys.get()}")
+      val narrow = refreshRecord(mv)
+      assert(narrow.get(GraftSql.MvRefresh).map(_.mode).contains("incremental"))
+      assert(narrow.get(GraftSql.MvCarryProbe).contains(5L) &&
+        narrow.get(GraftSql.MvCarryKeys).contains(5L),
+        s"narrow churn must collect exactly the touched keys, got $narrow")
       checkContent()
       // WIDE churn: 200 touched groups > cap=100 — the DISTRIBUTED
       // probe stops at cap+1 and the refresh falls back to the full
       // recompute with ZERO group tuples ever collected
       GraftSql.execute(spark, s"INSERT INTO $n VALUES " +
         (101L to 300L).map(g => s"(${2000 + g}, $g, 3)").mkString(", "))
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "full",
+      val wide = refreshRecord(mv)
+      assert(wide.get(GraftSql.MvRefresh).map(_.mode).contains("full"),
         "wide churn past the absolute cap must fall back")
-      assert(GraftSql.lastMvCarryProbe.get() == 101L &&
-        GraftSql.lastMvCarryKeys.get() == -1L,
+      // no MvCarryKeys: the fallback collected no group tuple at all
+      assert(wide.get(GraftSql.MvCarryProbe).contains(101L) &&
+        wide.get(GraftSql.MvCarryKeys).isEmpty,
         s"the fallback must decide from the distributed probe alone, " +
-          s"got probe=${GraftSql.lastMvCarryProbe.get()} " +
-          s"keys=${GraftSql.lastMvCarryKeys.get()}")
+          s"got $wide")
       checkContent()
     } finally {
       try GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $mv")
@@ -2524,7 +2504,6 @@ class GraftSqlSpec extends SparkSpecBase {
     "carry+recompute; a star-join shape folds through the aux table; " +
     "both track a direct recompute") {
     val d = Files.createTempDirectory("graft_mvcntd").toString
-    def mode(): String = GraftSql.lastMvRefreshStats.get.mode
     val t = d + "/src"
     val dt = d + "/dim"
     val n = "tbl" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -2556,8 +2535,8 @@ class GraftSqlSpec extends SparkSpecBase {
       "a fold-shaped definition must build its aux table")
     def check(mv: String, q: String, p: String, stmt: String): Unit = {
       GraftSql.execute(spark, stmt)
-      GraftSql.execute(spark, s"REFRESH MATERIALIZED VIEW $mv")
-      assert(mode() == "incremental", s"$q after $stmt: ${mode()}")
+      val mode = refresh(mv).mode
+      assert(mode == "incremental", s"$q after $stmt: $mode")
       assert(TxnTable.read(spark, p).collect().map(_.toSeq).toSet ==
         directSet(q),
         s"diverged from recompute: $q after $stmt")
@@ -2601,22 +2580,23 @@ class GraftSqlSpec extends SparkSpecBase {
     val savedCbo = conf.getOption("spark.sql.cbo.enabled")
     try {
       // the append's own write-time stats harvest reads a footer —
-      // baseline AFTER it so the counter isolates EXPLAIN's planning
+      // the scope opens AFTER it so it isolates EXPLAIN's planning
       TxnTable.append(spark, t,
         Seq((200L, 1L)).toDF("id", "v"))
-      val f0 = graft.crawler.SkippingIndex.footerReads.get()
       def planText(stmt: String): String = GraftSql.query(spark, stmt)
         .collect().map(_.getString(0)).mkString("\n")
-      val simple = planText(
-        s"EXPLAIN SELECT count(*) AS c FROM $n WHERE id <= 10")
-      assert(simple.contains("Physical Plan") &&
-        simple.toLowerCase.contains("parquet"), simple.take(400))
-      // snapshot substitution: a time-traveled reference explains to
-      // a plan over the PINNED snapshot (same relation, no error)
-      val tt = planText(
-        s"EXPLAIN SELECT sum(v) AS sv FROM $n VERSION AS OF 0")
-      assert(tt.contains("Physical Plan"), tt.take(400))
-      assert(graft.crawler.SkippingIndex.footerReads.get() == f0,
+      val (_, window) = OpMetrics.scope {
+        val simple = planText(
+          s"EXPLAIN SELECT count(*) AS c FROM $n WHERE id <= 10")
+        assert(simple.contains("Physical Plan") &&
+          simple.toLowerCase.contains("parquet"), simple.take(400))
+        // snapshot substitution: a time-traveled reference explains to
+        // a plan over the PINNED snapshot (same relation, no error)
+        val tt = planText(
+          s"EXPLAIN SELECT sum(v) AS sv FROM $n VERSION AS OF 0")
+        assert(tt.contains("Physical Plan"), tt.take(400))
+      }
+      assert(window.count(FooterReads) == 0,
         "EXPLAIN must never read parquet footers")
       // COST mode surfaces the log-injected statistics (row count
       // from the commit log, no ANALYZE, no scan)
@@ -2744,36 +2724,36 @@ class GraftSqlSpec extends SparkSpecBase {
         s"sum(v) AS sv FROM $n WHERE id < 4 GROUP BY s")
     try {
       // exact twin serves from the MV, count(DISTINCT) included
-      val ex = GraftSql.query(spark,
+      val (ex, rw1) = queryRw(
         s"SELECT s, count(*) AS cnt, count(DISTINCT v) AS dv, " +
           s"sum(v) AS sv FROM $n WHERE id < 4 GROUP BY s")
-      assert(GraftSql.lastMvRewrite.contains((m, "exact")))
+      assert(rw1.contains((m, "exact")))
       assert(ex.collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet == Set(("a", 1L, 1L, 10L), ("b", 1L, 1L, 20L),
           ("c", 1L, 1L, 30L)))
       // a query WITHOUT the MV's WHERE sees rows the MV lacks
-      val all4 = GraftSql.query(spark,
+      val (all4, rw2) = queryRw(
         s"SELECT s, count(*) AS cnt FROM $n GROUP BY s")
-      assert(GraftSql.lastMvRewrite.isEmpty)
+      assert(rw2.isEmpty)
       assert(all4.collect().map(_.getLong(1)).sum == 4L)
       // residual predicate on a NON-group column cannot map
-      val nr = GraftSql.query(spark,
+      val (nr, rw3) = queryRw(
         s"SELECT s, sum(v) AS sv FROM $n WHERE id < 4 AND v > 15 " +
           s"GROUP BY s")
-      assert(GraftSql.lastMvRewrite.isEmpty)
+      assert(rw3.isEmpty)
       assert(nr.collect().map(r => (r.getString(0), r.getLong(1)))
         .toSet == Set(("b", 20L), ("c", 30L)))
       // count(DISTINCT) does not roll up to coarser groups
-      val g = GraftSql.query(spark,
+      val (g, rw4) = queryRw(
         s"SELECT count(DISTINCT v) AS dv FROM $n WHERE id < 4")
-      assert(GraftSql.lastMvRewrite.isEmpty)
+      assert(rw4.isEmpty)
       assert(g.head().getLong(0) == 3L)
       // ORDER BY must reference the query's own output columns
-      GraftSql.query(spark,
+      val (_, rw5) = queryRw(
         s"SELECT s, sum(v) AS sv FROM $n WHERE id < 4 GROUP BY s " +
           s"ORDER BY max(v)")
-      assert(GraftSql.lastMvRewrite.isEmpty)
+      assert(rw5.isEmpty)
     } finally {
       GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $m")
       GraftSql.unregister(n)
@@ -2802,28 +2782,78 @@ class GraftSqlSpec extends SparkSpecBase {
     try {
       // WHERE on the expression key rewrites as a unit — only the
       // FINE MV exposes (id % 2); the coarse one cannot subsume it
-      val even = GraftSql.query(spark,
+      val (even, rw6) = queryRw(
         s"SELECT s, sum(v) AS sv FROM $n WHERE id % 2 = 0 GROUP BY s")
-      assert(GraftSql.lastMvRewrite.contains((fine, "rollup")))
+      assert(rw6.contains((fine, "rollup")))
       assert(even.collect().map(r => (r.getString(0), r.getLong(1)))
         .toSet == Set(("a", 60L), ("b", 20L), ("d", 40L)))
       // a BARE id reference is not a group key anywhere → base tables
-      val gt = GraftSql.query(spark,
+      val (gt, rw7) = queryRw(
         s"SELECT s, sum(v) AS sv FROM $n WHERE id > 1 GROUP BY s")
-      assert(GraftSql.lastMvRewrite.isEmpty)
+      assert(rw7.isEmpty)
       assert(gt.collect().map(r => (r.getString(0), r.getLong(1)))
         .toSet == Set(("a", 110L), ("b", 20L), ("c", 30L), ("d", 40L)))
       // both MVs subsume GROUP BY s: the 4-row coarse one beats the
       // 5-row fine one (log metadata, zero scans), and it serves in
       // exact mode (1:1 group rows)
-      val bys = GraftSql.query(spark,
+      val (bys, rw8) = queryRw(
         s"SELECT s, sum(v) AS sv FROM $n GROUP BY s")
-      assert(GraftSql.lastMvRewrite.contains((coarse, "exact")))
+      assert(rw8.contains((coarse, "exact")))
       assert(bys.collect().map(r => (r.getString(0), r.getLong(1)))
         .toSet == Set(("a", 120L), ("b", 20L), ("c", 30L), ("d", 40L)))
     } finally {
       GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $fine")
       GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $coarse")
+      GraftSql.unregister(n)
+    }
+  }
+
+  test("SET MATVIEW REWRITE OFF is session-scoped: a sibling session " +
+    "keeps rewriting") {
+    val (_, n) = mk()
+    val loc = Files.createTempDirectory("graft_mvrw_sess").toString
+    val m = "mvs" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = s"SELECT s, count(*) AS cnt FROM $n GROUP BY s"
+    GraftSql.execute(spark,
+      s"CREATE MATERIALIZED VIEW $m LOCATION '$loc/mv' AS $q")
+    val off = spark.newSession()
+    def rewriteIn(session: org.apache.spark.sql.SparkSession) =
+      OpMetrics.scope(GraftSql.query(session, q))._2.get(GraftSql.MvRewrite)
+    try {
+      assert(GraftSql.execute(off, "SET MATVIEW REWRITE OFF") == -1L)
+      assert(rewriteIn(off).isEmpty, "OFF must disable its own session")
+      assert(rewriteIn(spark).contains((m, "exact")),
+        "OFF in one session must leave another session rewriting")
+      GraftSql.execute(off, "SET MATVIEW REWRITE ON")
+      assert(rewriteIn(off).contains((m, "exact")))
+    } finally {
+      GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $m")
+      GraftSql.unregister(n)
+    }
+  }
+
+  test("an incremental refresh that fails degrades to full and records " +
+    "why") {
+    val (_, n) = mk()
+    val loc = Files.createTempDirectory("graft_mvfb").toString
+    val m = "mvfb" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = s"SELECT s, count(*) AS c, sum(v) AS sv FROM $n GROUP BY s"
+    try {
+      GraftSql.execute(spark,
+        s"CREATE MATERIALIZED VIEW $m LOCATION '$loc/mv' AS $q")
+      // the delta's two sides now read at different widths, so the
+      // incremental fold throws inside its machinery
+      GraftSql.execute(spark, s"ALTER TABLE $n ADD COLUMNS (x BIGINT)")
+      GraftSql.execute(spark, s"UPDATE $n SET v = v + 1 WHERE id = 1")
+      val st = refresh(m)
+      assert(st.mode == "full" &&
+        st.fallback.exists(_.contains("NUM_COLUMNS_MISMATCH")), s"$st")
+      assert(TxnTable.read(spark, s"$loc/mv").collect().map(_.toSeq).toSet
+        == directSet(q), "the full fallback must still be exact")
+      // a requested FULL is no fallback
+      assert(refresh(m, full = true).fallback.isEmpty)
+    } finally {
+      GraftSql.execute(spark, s"DROP MATERIALIZED VIEW $m")
       GraftSql.unregister(n)
     }
   }
