@@ -80,9 +80,10 @@ object GraftEngine {
 
     /** The transactional surface (rounds 5–12): read a TxnTable
       * snapshot (latest, version time travel, or
-      * `TxnTable.readAsOfTimestamp` for wall-clock addressing; pruned
-      * variants `readPruned`/`readPrunedIn`/`readPrunedString`/
-      * `readPrunedBoxN` plan from stats-in-log). Writes go through
+      * `TxnTable.readAsOfTimestamp` for wall-clock addressing;
+      * `TxnTable.readPruned` takes any conjunction of typed bounds —
+      * long or string, range or IN — and picks its files on the
+      * driver from stats-in-log, with zero Spark jobs). Writes go through
       * `graft.core.TxnTable` directly: create/append/overwrite,
       * deleteWhere/updateWhere/merge/mergeInto (copy-on-write),
       * deleteWhereMor/updateWhereMor/mergeMor/applyChangesMor

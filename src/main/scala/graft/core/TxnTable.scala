@@ -7,8 +7,11 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType,
+  IntegerType, LongType, ShortType, StringType, StructField, StructType,
+  TimestampType}
+
+import graft.crawler.SkippingIndex.FileStats
 
 /** One data file added by a commit. `stats` is the file's write-time
   * column statistics as compact JSON
@@ -304,9 +307,6 @@ object TxnTable {
       else parseKeysOp(op.drop(fi + ":files:".length))
     }
 
-  /** (schema generations, latest recorded schema) of the log prefix ≤
-    * `upTo` — checkpoint-amortized: state is read from the nearest
-    * checkpoint and only the suffix is replayed. */
   /** Memo for [[schemaInfo]]: the log is IMMUTABLE per (path, version)
     * — a commit file is never rewritten once published — so the derived
     * (generations, schema) pair is a pure function of the key. Bounded:
@@ -317,6 +317,9 @@ object TxnTable {
   private val schemaInfoMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), (Long, Option[String])]()
 
+  /** (schema generations, latest recorded schema) of the log prefix ≤
+    * `upTo` — checkpoint-amortized: state is read from the nearest
+    * checkpoint and only the suffix is replayed. */
   private def schemaInfo(path: String, upTo: Long): (Long, Option[String]) = {
     val key = (path, upTo)
     val hit = schemaInfoMemo.get(key)
@@ -672,9 +675,6 @@ object TxnTable {
       partitions: Int): Seq[TxnAdd] =
     writeDataPrepared(spark, path, df.repartition(partitions))
 
-  /** Like writeData but trusts the frame's existing partitioning/sort —
-    * the seam clustered layouts (compactClustered) come through, where a
-    * blind repartition would destroy the ordering being written. */
   /** Physical data-write jobs (every staged tranche comes through
     * writeDataPrepared), so a caller can assert a REBASED rewrite
     * committed without re-running its rewrite job. */
@@ -686,6 +686,9 @@ object TxnTable {
     * footer fallback. Row counts are still footer-derived either way. */
   private[graft] var collectWriteStats = true
 
+  /** Like writeData but trusts the frame's existing partitioning/sort —
+    * the seam clustered layouts (compactClustered) come through, where a
+    * blind repartition would destroy the ordering being written. */
   private def writeDataPrepared(
       spark: SparkSession,
       path: String,
@@ -711,71 +714,79 @@ object TxnTable {
       val dst = dataDir(path).resolve(name)
       Files.move(src, dst)
       val statsJ =
-        if (collectWriteStats)
-          st.map { case (_, cols, ls, ss, ns) =>
-            statsJson(cols, ls, ss, ns) }
-        else None
-      TxnAdd(s"data/$name", st.map(_._1).getOrElse(0L),
+        if (collectWriteStats) st.map(statsJson) else None
+      TxnAdd(s"data/$name", st.map(_.rows).getOrElse(0L),
         Files.size(dst), statsJ)
     }
   }
 
-  private def statsJson(cols: Seq[String],
-      ls: Map[String, (Long, Long)],
-      ss: Map[String, (String, String)],
-      ns: Map[String, Long] = Map.empty): String = {
-    val c = cols.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
-    val l = ls.toSeq.sortBy(_._1).map { case (k, (mn, mx)) =>
+  /** Longest stored string bound for stats-in-log (UTF-8 bytes): a
+    * longer bound is DROPPED (column conservatively unprunable from
+    * the log for this file) rather than truncated — a truncated max
+    * smaller than a real value would wrongly skip the file. A limit of
+    * the log format only: footer stats keep their full bounds. */
+  val MaxLoggedStringBound = 96
+
+  /** The commit-log encoding of one file's footer stats. */
+  private def statsJson(st: FileStats): String = {
+    val c = st.cols.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
+    val l = st.longs.toSeq.sortBy(_._1).map { case (k, (mn, mx)) =>
       s""""${esc(k)}":[$mn,$mx]"""
     }.mkString("{", ",", "}")
-    val s = ss.toSeq.sortBy(_._1).map { case (k, (mn, mx)) =>
-      s""""${esc(k)}":["${esc(mn)}","${esc(mx)}"]"""
-    }.mkString("{", ",", "}")
+    def fits(b: String) =
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <=
+        MaxLoggedStringBound
+    val s = st.strings.toSeq.sortBy(_._1)
+      .filter { case (_, (mn, mx)) => fits(mn) && fits(mx) }
+      .map { case (k, (mn, mx)) =>
+        s""""${esc(k)}":["${esc(mn)}","${esc(mx)}"]"""
+      }.mkString("{", ",", "}")
     // "n": exact per-column null counts — present only when every row
     // group set them; upgrades bounds from pruning hints to an exact
     // metadata-only COUNT source (countRange)
-    val n = ns.toSeq.sortBy(_._1).map { case (k, v) =>
+    val n = st.nulls.toSeq.sortBy(_._1).map { case (k, v) =>
       s""""${esc(k)}":$v"""
     }.mkString("{", ",", "}")
     s"""{"cols":$c,"l":$l,"s":$s,"n":$n}"""
   }
 
-  private case class AddStats(cols: Set[String],
-      l: Map[String, (Long, Long)], s: Map[String, (String, String)],
-      n: Map[String, Long])
-
-  private def parseAddStats(json: String): Option[AddStats] =
-    try {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      implicit val fmts: Formats = DefaultFormats
-      val j = JsonMethods.parse(json)
-      val cols = (j \ "cols") match {
-        case JArray(arr) => arr.map(_.extract[String]).toSet
-        case _ => return None
-      }
-      val l = (j \ "l") match {
-        case JObject(fields) => fields.map { case (k, v) =>
-          val b = v.extract[Seq[Long]]; k -> (b(0), b(1))
-        }.toMap
-        case _ => Map.empty[String, (Long, Long)]
-      }
-      val s = (j \ "s") match {
-        case JObject(fields) => fields.map { case (k, v) =>
-          val b = v.extract[Seq[String]]; k -> (b(0), b(1))
-        }.toMap
-        case _ => Map.empty[String, (String, String)]
-      }
-      // absent in pre-round-13 logs → empty map (bounds still prune;
-      // only the metadata-only COUNT path needs null counts)
-      val n = (j \ "n") match {
-        case JObject(fields) => fields.map { case (k, v) =>
-          k -> v.extract[Long]
-        }.toMap
-        case _ => Map.empty[String, Long]
-      }
-      Some(AddStats(cols, l, s, n))
-    } catch { case NonFatal(_) => None } // malformed → footer fallback
+  /** An add's logged stats in the footer-stats shape (rows from the
+    * add); None when it carries none or they are malformed — the
+    * pruned read then falls back to the footer. */
+  private def parseAddStats(a: TxnAdd): Option[FileStats] =
+    a.stats.flatMap { json =>
+      try {
+        import org.json4s._
+        import org.json4s.jackson.JsonMethods
+        implicit val fmts: Formats = DefaultFormats
+        val j = JsonMethods.parse(json)
+        val cols = (j \ "cols") match {
+          case JArray(arr) => Some(arr.map(_.extract[String]))
+          case _ => None
+        }
+        val l = (j \ "l") match {
+          case JObject(fields) => fields.map { case (k, v) =>
+            val b = v.extract[Seq[Long]]; k -> (b(0), b(1))
+          }.toMap
+          case _ => Map.empty[String, (Long, Long)]
+        }
+        val s = (j \ "s") match {
+          case JObject(fields) => fields.map { case (k, v) =>
+            val b = v.extract[Seq[String]]; k -> (b(0), b(1))
+          }.toMap
+          case _ => Map.empty[String, (String, String)]
+        }
+        // absent in pre-round-13 logs → empty map (bounds still prune;
+        // only the metadata-only COUNT path needs null counts)
+        val n = (j \ "n") match {
+          case JObject(fields) => fields.map { case (k, v) =>
+            k -> v.extract[Long]
+          }.toMap
+          case _ => Map.empty[String, Long]
+        }
+        cols.map(FileStats(a.rows, _, l, s, n))
+      } catch { case NonFatal(_) => None } // malformed → footer fallback
+    }
 
   class SchemaMismatchException(msg: String) extends RuntimeException(msg)
 
@@ -886,8 +897,7 @@ object TxnTable {
         phys(org.apache.spark.sql.types.DataType.fromJson(js)
           .asInstanceOf[org.apache.spark.sql.types.StructType]))
     }
-    val logged = addsIndex(path, upTo).values
-      .flatMap(_.stats).flatMap(parseAddStats)
+    val logged = addsIndex(path, upTo).values.flatMap(parseAddStats)
       .flatMap(_.cols.map(_.toLowerCase))
     (recordedSchemaAt(path, upTo).toSeq.flatMap(phys) ++ hist ++ logged)
       .toSet
@@ -1301,8 +1311,8 @@ object TxnTable {
         if (st.isEmpty) throw new IllegalStateException(
           s"convertParquet: $f disappeared during the footer harvest — " +
             "the directory changed under the convert; re-run it")
-        (f, st.map(_._1).getOrElse(0L), Files.size(abs),
-          st.map { case (_, cols, ls, ss, ns) => statsJson(cols, ls, ss, ns) })
+        (f, st.map(_.rows).getOrElse(0L), Files.size(abs),
+          st.map(statsJson))
       }
       .collect() // O(files) add metadata — what the commit carries anyway
     val adds = harvested.toSeq.sortBy(_._1).map { case (f, rows, bytes, js) =>
@@ -1399,8 +1409,8 @@ object TxnTable {
         val st = graft.crawler.SkippingIndex.fileStats(conf, f)
         if (st.isEmpty) throw new IllegalStateException(
           s"copyInto: $f disappeared during the footer harvest")
-        (f, st.map(_._1).getOrElse(0L), Files.size(Paths.get(f)),
-          st.map { case (_, cols, ls, ss, ns) => statsJson(cols, ls, ss, ns) })
+        (f, st.map(_.rows).getOrElse(0L), Files.size(Paths.get(f)),
+          st.map(statsJson))
       }
       .collect()
     var adds = harvested.toSeq.sortBy(_._1).map { case (f, rows, bytes, js) =>
@@ -1692,8 +1702,8 @@ object TxnTable {
   /** [[create]] with a clustered physical layout: range-partition the
     * rows by `clusterBy` into `targetFiles` files, sorted within each —
     * so every file owns a compact key range and its parquet footer
-    * min/max on the leading cluster column feeds [[readPruned]] /
-    * [[readPrunedIn]] from version 0, without waiting for a
+    * min/max on the leading cluster column feeds [[readPruned]]'s
+    * range and IN bounds from version 0, without waiting for a
     * [[compactClustered]] pass. The same one range-shuffle any sorted
     * write costs. */
   def createClustered(spark: SparkSession, path: String, df: DataFrame,
@@ -1714,13 +1724,6 @@ object TxnTable {
     0L
   }
 
-  /** Append `df` as a new version; retries the version race, because an
-    * append conflicts with nothing logically. The schema is enforced
-    * against the table's recorded schema — a drifted writer fails loudly
-    * instead of corrupting reads — unless `evolveSchema` explicitly
-    * records the new shape (reads then mergeSchema across the log's
-    * schema generations).
-    */
   /** CAS append: commit `df` as `expectedBase + 1` or fail with
     * [[TxnConflictException]] (no retry — the caller's rows were
     * computed FROM the snapshot at `expectedBase`, so committing over
@@ -1768,18 +1771,11 @@ object TxnTable {
     if (top < 0) None else streamBatches(path, top).get(streamId)
   }
 
-  /** INSERT OVERWRITE: atomically replace the table's entire logical
-    * content with `df` — one commit removing every live file and adding
-    * the new clustered layout. History stays readable (old files are
-    * never deleted here); abort-on-conflict like [[compact]]. The
-    * compaction primitive for merge-on-read layouts (TxnIndex folds
-    * its tombstones through this).
-    */
   /** [[overwriteClustered]] without a clustering requirement — INSERT
     * OVERWRITE for small derived/bookkeeping tables (e.g. folding a
     * bloom-sidecar's accumulated rows to one). Same conflict contract:
-    * abort-on-conflict, staged files cleaned, history stays readable. */
-  /** `evolveSchema = true` (REPLACE TABLE): the overwrite may carry a
+    * abort-on-conflict, staged files cleaned, history stays readable.
+    * `evolveSchema = true` (REPLACE TABLE): the overwrite may carry a
     * DIFFERENT schema — recorded on the same commit, so the replace is
     * atomic (readers see old shape + old rows, or new shape + new
     * rows, never a mix); the evolution collision rules (physical-name
@@ -1797,6 +1793,13 @@ object TxnTable {
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
   }
 
+  /** INSERT OVERWRITE: atomically replace the table's entire logical
+    * content with `df` — one commit removing every live file and adding
+    * the new clustered layout. History stays readable (old files are
+    * never deleted here); abort-on-conflict like [[compact]]. The
+    * compaction primitive for merge-on-read layouts (TxnIndex folds
+    * its tombstones through this).
+    */
   def overwriteClustered(spark: SparkSession, path: String, df: DataFrame,
       clusterBy: Seq[Column], targetFiles: Int): Long = {
     val base = currentVersion(path)
@@ -1810,6 +1813,13 @@ object TxnTable {
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
   }
 
+  /** Append `df` as a new version; retries the version race, because an
+    * append conflicts with nothing logically. The schema is enforced
+    * against the table's recorded schema — a drifted writer fails loudly
+    * instead of corrupting reads — unless `evolveSchema` explicitly
+    * records the new shape (reads then mergeSchema across the log's
+    * schema generations).
+    */
   def append(spark: SparkSession, path: String, df: DataFrame,
       partitions: Int = 1, maxAttempts: Int = 20,
       evolveSchema: Boolean = false, op: String = "append"): Long = {
@@ -2665,6 +2675,12 @@ object TxnTable {
   def propertiesAt(path: String, asOf: Long): Map[String, String] =
     if (asOf < 0) properties(path) else propsInfo(path, asOf)
 
+  /** How many table scans a [[computeHistogram]] ran — the ANALYZE
+    * pass is batched (one quantile aggregate for ALL columns, one
+    * combined per-bin-ndv pass, one MCV pass for all string columns),
+    * so a 10-column ANALYZE costs 2 scans, not 20. */
+  val AnalyzeScans: OpMetrics.Key[Int] = OpMetrics.Key.latest("analyze_scans")
+
   /** `ANALYZE TABLE … COMPUTE HISTOGRAM`: per-column equi-HEIGHT
     * histograms — bin endpoints at i/bins approximate quantiles (one
     * aggregate pass), per-bin distinct counts (one grouped pass) —
@@ -2677,12 +2693,6 @@ object TxnTable {
     * an explicit user-invoked scan (exactly like ANALYZE), recorded
     * as-of the analyzed version; data committed later simply ages it,
     * correctness never depends on freshness. */
-  /** How many table scans a [[computeHistogram]] ran — the ANALYZE
-    * pass is batched (one quantile aggregate for ALL columns, one
-    * combined per-bin-ndv pass, one MCV pass for all string columns),
-    * so a 10-column ANALYZE costs 2 scans, not 20. */
-  val AnalyzeScans: OpMetrics.Key[Int] = OpMetrics.Key.latest("analyze_scans")
-
   def computeHistogram(spark: SparkSession, path: String,
       columns: Seq[String], bins: Int = 64): Long = {
     import org.apache.spark.sql.types.{NumericType, StringType}
@@ -3046,28 +3056,11 @@ object TxnTable {
       lo: Long, hi: Long,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
     val base = currentVersion(path)
-    // same loud type fence as countRange: bounds live in the physical
-    // int64 space — a string column would silently degrade the scope
-    // to the whole table (no long stats → conservatively kept)
     val (schema, _) = snapshotSchemaFenced(spark, path, base)
-    schema(column).dataType match {
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.DateType |
-           org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => ()
-      case dt => throw new IllegalArgumentException(
-        s"binPackWhere: $column has non-integral type $dt (bounds live " +
-          "in the physical int64 space)")
-    }
-    val files = snapshotFiles(path, base)
-    val idx = statsIndexFor(spark, path, base, Seq(column))
-    val keptAbs = graft.crawler.SkippingIndex
-      .selectFiles(idx, 0, lo, hi).toSet
-    val inRange = files.filter(f =>
-      keptAbs.contains(localRoot(path).resolve(f).toString))
-    binPackFiles(spark, path, base, inRange, targetBytes)
+    requireIntegral(schema, column, "binPackWhere")
+    binPackFiles(spark, path, base,
+      selectFiles(spark, path, base, Seq(Bound.LongRange(column, lo, hi))),
+      targetBytes)
   }
 
   /** The shared bin-pack tail: fold `scope`'s eligible files (small or
@@ -3091,14 +3084,44 @@ object TxnTable {
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
   }
 
-  /** Fold the current snapshot into `targetFiles` Z-ORDERED files on
-    * (a, b) — the OPTIMIZE-with-clustering role: each rewritten file
-    * owns a compact z-range, so its (a, b) parquet footer min/max
-    * become box-prunable (SkippingIndex or engine row-group pruning) —
-    * data skipping inside the ACID table. Logical content is unchanged
-    * and history stays readable; it is an ordinary compact commit.
-    * At scale the rewrite is the same range-partition + local-sort
-    * shuffle any global sort costs, amortized over every pruned read.
+  /** The physical layout for 1, 2 or 3 cluster columns — RANGE
+    * clustering (what [[createClustered]] lays out at birth), Morton2
+    * or Morton3 (21 bits/dim) z-order — as `(scan, files) => frame`,
+    * partitioned and sorted for writeDataPrepared. Fails before any
+    * work on any other column count. */
+  private def clusterLayout(cols: Seq[Column]): (DataFrame, Int) => DataFrame = {
+    require(cols.nonEmpty && cols.size <= 3,
+      s"1-3 cluster columns, got ${cols.size}")
+    cols match {
+      case Seq(a) =>
+        (scan, n) => scan.repartitionByRange(n, a).sortWithinPartitions(a)
+      case Seq(a, b) =>
+        (scan, n) => graft.operators.Layout.zorderPartitions(scan, a, b, n)
+      case Seq(a, b, c) =>
+        (scan, n) => graft.operators.Layout.zorderPartitions3(scan, a, b, c, n)
+    }
+  }
+
+  /** A cluster layout's default file count: 16 for 1–2 columns, 27
+    * for 3. */
+  def clusterWidth(nCols: Int): Int = if (nCols == 3) 27 else 16
+
+  /** [[compactClustered]] at the layout's default width
+    * ([[clusterWidth]]). */
+  def compactClustered(spark: SparkSession, path: String,
+      cols: Seq[Column]): Long =
+    compactClustered(spark, path, cols, clusterWidth(cols.size))
+
+  /** Fold the current snapshot into `targetFiles` files clustered on
+    * `cols` ([[clusterLayout]]: range for 1 column, z-order for 2 or
+    * 3) — the OPTIMIZE-with-clustering role: each rewritten file owns
+    * a compact range on every cluster column, so its parquet footer
+    * min/max become box-prunable ([[readPruned]] over several bounds
+    * multiplies their selectivities) — data skipping inside the ACID
+    * table. Logical content is unchanged and history stays readable;
+    * it is an ordinary compact commit. At scale the rewrite is the
+    * same range-partition + local-sort shuffle any global sort costs,
+    * amortized over every pruned read.
     *
     * Conflict contract — rebase-or-abort, like [[compact]] and
     * [[deleteWhere]]: losing the version race triggers the LOGICAL
@@ -3110,50 +3133,13 @@ object TxnTable {
     * [[TxnConflictException]] (blindly committing would undo that
     * writer's rows). An aborted run deletes its staged files.
     */
-  /** Single-column sibling of [[compactClustered]]: fold the snapshot
-    * into `targetFiles` RANGE-clustered files on `a` (what
-    * [[createClustered]] lays out at birth) — the re-cluster half of
-    * a 1-column `graft.clusterBy` layout's OPTIMIZE. Same commit and
-    * conflict contract as every compaction. */
-  def compactClusteredRange(spark: SparkSession, path: String,
-      a: Column, targetFiles: Int = 16): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
-    val clustered = scanFiles(spark, path, base, files, keepFname = false)
-      .repartitionByRange(targetFiles, a)
-      .sortWithinPartitions(a)
-    val adds = writeDataPrepared(spark, path, clustered)
-    try commitRewrite(path, base, "compact:cluster", adds, files,
-      CommuteNonOverlapping)
-    catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-  }
-
   def compactClustered(spark: SparkSession, path: String,
-      a: Column, b: Column, targetFiles: Int = 16): Long = {
+      cols: Seq[Column], targetFiles: Int): Long = {
+    val layout = clusterLayout(cols)
     val base = currentVersion(path)
     val files = snapshotFiles(path, base)
-    val clustered = graft.operators.Layout.zorderPartitions(
-      scanFiles(spark, path, base, files, keepFname = false), a, b,
-      targetFiles)
-    val adds = writeDataPrepared(spark, path, clustered)
-    try commitRewrite(path, base, "compact:cluster", adds, files,
-      CommuteNonOverlapping)
-    catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-  }
-
-  /** [[compactClustered]] on THREE dimensions (Morton3, 21 bits/dim) —
-    * each rewritten file owns a compact range on all three columns, so
-    * [[readPrunedBoxN]] multiplies three selectivities. Same contract
-    * otherwise: abort-on-conflict, history readable, staged files
-    * cleaned on abort. */
-  def compactClustered3(spark: SparkSession, path: String,
-      a: Column, b: Column, c: Column, targetFiles: Int = 27): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
-    val clustered = graft.operators.Layout.zorderPartitions3(
-      scanFiles(spark, path, base, files, keepFname = false), a, b, c,
-      targetFiles)
-    val adds = writeDataPrepared(spark, path, clustered)
+    val adds = writeDataPrepared(spark, path, layout(
+      scanFiles(spark, path, base, files, keepFname = false), targetFiles))
     try commitRewrite(path, base, "compact:cluster", adds, files,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3205,12 +3191,11 @@ object TxnTable {
     * tail folds do not fragment the layout. The commit op is
     * `compact:cluster`, so the NEXT tail starts after this commit.
     * 1, 2, or 3 cluster columns (range / Morton2 / Morton3 — the same
-    * layouts as the full [[compactClustered]] family). Unchanged head
+    * layouts as the full [[compactClustered]]). Unchanged head
     * when the tail is empty. */
   def compactClusteredTail(spark: SparkSession, path: String,
       cols: Seq[Column], targetFiles: Int = 16): Long = {
-    require(cols.nonEmpty && cols.size <= 3,
-      s"1-3 cluster columns, got ${cols.size}")
+    val layout = clusterLayout(cols)
     val base = currentVersion(path)
     val ct = clusterTailInfo(path).getOrElse(
       throw new IllegalArgumentException(
@@ -3219,16 +3204,8 @@ object TxnTable {
     if (ct.tailFiles.isEmpty) return base // already fully clustered
     val bins = math.max(1, math.round(targetFiles.toDouble *
       ct.tailBytes / math.max(1L, ct.totalBytes)).toInt)
-    val scan = scanFiles(spark, path, base, ct.tailFiles, keepFname = false)
-    val clustered = cols match {
-      case Seq(a) =>
-        scan.repartitionByRange(bins, a).sortWithinPartitions(a)
-      case Seq(a, b) =>
-        graft.operators.Layout.zorderPartitions(scan, a, b, bins)
-      case Seq(a, b, c) =>
-        graft.operators.Layout.zorderPartitions3(scan, a, b, c, bins)
-    }
-    val adds = writeDataPrepared(spark, path, clustered)
+    val adds = writeDataPrepared(spark, path, layout(
+      scanFiles(spark, path, base, ct.tailFiles, keepFname = false), bins))
     try commitRewrite(path, base, "compact:cluster", adds, ct.tailFiles,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3251,45 +3228,20 @@ object TxnTable {
   def compactClusteredWhere(spark: SparkSession, path: String,
       cols: Seq[Column], column: String, lo: Long, hi: Long,
       targetFiles: Int = 16): Long = {
-    require(cols.nonEmpty && cols.size <= 3,
-      s"1-3 cluster columns, got ${cols.size}")
+    val layout = clusterLayout(cols)
     val base = currentVersion(path)
-    // same loud type fence as binPackWhere: bounds live in the
-    // physical int64 space
     val (schema, _) = snapshotSchemaFenced(spark, path, base)
-    schema(column).dataType match {
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.DateType |
-           org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => ()
-      case dt => throw new IllegalArgumentException(
-        s"compactClusteredWhere: $column has non-integral type $dt " +
-          "(bounds live in the physical int64 space)")
-    }
-    val files = snapshotFiles(path, base)
-    val idx = statsIndexFor(spark, path, base, Seq(column))
-    val keptAbs = graft.crawler.SkippingIndex
-      .selectFiles(idx, 0, lo, hi).toSet
-    val inRange = files.filter(f =>
-      keptAbs.contains(localRoot(path).resolve(f).toString))
+    requireIntegral(schema, column, "compactClusteredWhere")
+    val inRange =
+      selectFiles(spark, path, base, Seq(Bound.LongRange(column, lo, hi)))
     if (inRange.isEmpty) return base // nothing intersects the box
     val ai = addsIndex(path, base)
     val selBytes = inRange.flatMap(ai.get).map(_.bytes).sum
-    val totBytes = files.flatMap(ai.get).map(_.bytes).sum
+    val totBytes = snapshotFiles(path, base).flatMap(ai.get).map(_.bytes).sum
     val bins = math.max(1, math.round(targetFiles.toDouble *
       selBytes / math.max(1L, totBytes)).toInt)
-    val scan = scanFiles(spark, path, base, inRange, keepFname = false)
-    val clustered = cols match {
-      case Seq(a) =>
-        scan.repartitionByRange(bins, a).sortWithinPartitions(a)
-      case Seq(a, b) =>
-        graft.operators.Layout.zorderPartitions(scan, a, b, bins)
-      case Seq(a, b, c) =>
-        graft.operators.Layout.zorderPartitions3(scan, a, b, c, bins)
-    }
-    val adds = writeDataPrepared(spark, path, clustered)
+    val adds = writeDataPrepared(spark, path, layout(
+      scanFiles(spark, path, base, inRange, keepFname = false), bins))
     try commitRewrite(path, base, "compact:zscope", adds, inRange,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3695,19 +3647,6 @@ object TxnTable {
     }.toDF("file", "rows_lost", "bytes_lost")
   }
 
-  /** Per-COLUMN statistics panel, computed ENTIRELY from the commit
-    * log (zero data or footer I/O — the column-level sibling of
-    * [[detail]]): for each logical column, the share of live adds
-    * carrying write-time stats for it, the GLOBAL min/max folded over
-    * the per-file bounds (reported only at FULL coverage — a single
-    * add without bounds could hide the true extreme, so partial
-    * coverage reports null rather than a lie), and the exact null
-    * count (only when every add logged one). Integer/date/timestamp
-    * bounds live in the physical int64 space (micros / epoch days —
-    * the same space every pruned read uses); string bounds are
-    * writer-truncated prefixes past `MaxLoggedStringBound`, accurate
-    * for short values. At 100 TB this answers "what's in this table"
-    * from O(files) commit metadata where ANALYZE would scan. */
   /** One column's log-folded statistics (see [[logTableStats]]):
     * bounds/nulls are present ONLY under full add-coverage — an
     * honest global claim, never a partial one. Long bounds live in
@@ -3731,7 +3670,7 @@ object TxnTable {
     val files = snapshotFiles(path, top)
     val ai = addsIndex(path, top)
     val adds = files.flatMap(ai.get)
-    val parsed = adds.map(a => (a.rows, a.stats.flatMap(parseAddStats)))
+    val parsed = adds.map(a => (a.rows, parseAddStats(a)))
     val nAdds = parsed.size
     val schema = read(spark, path, top).schema
     val cols = schema.fields.toSeq.map { f =>
@@ -3741,19 +3680,19 @@ object TxnTable {
         if (nAdds == 0) 1.0 else have.size.toDouble / nAdds
       val full = nAdds > 0 && have.size == nAdds
       val (lmin, lmax) = {
-        val mins = have.flatMap(_.l.get(phys).map(_._1))
-        val maxs = have.flatMap(_.l.get(phys).map(_._2))
+        val mins = have.flatMap(_.longs.get(phys).map(_._1))
+        val maxs = have.flatMap(_.longs.get(phys).map(_._2))
         if (!full || mins.size != nAdds) (None, None)
         else (Some(mins.min), Some(maxs.max))
       }
       val (smin, smax) = {
-        val mins = have.flatMap(_.s.get(phys).map(_._1))
-        val maxs = have.flatMap(_.s.get(phys).map(_._2))
+        val mins = have.flatMap(_.strings.get(phys).map(_._1))
+        val maxs = have.flatMap(_.strings.get(phys).map(_._2))
         if (!full || mins.size != nAdds) (None, None)
         else (Some(mins.min), Some(maxs.max))
       }
       val nulls = {
-        val ns = have.flatMap(_.n.get(phys))
+        val ns = have.flatMap(_.nulls.get(phys))
         if (!full || ns.size != nAdds) None else Some(ns.sum)
       }
       f.name -> LogColStat(f.dataType, coverage, lmin, lmax,
@@ -3762,6 +3701,19 @@ object TxnTable {
     (adds.map(_.bytes).sum, parsed.map(_._1).sum, cols)
   }
 
+  /** Per-COLUMN statistics panel, computed ENTIRELY from the commit
+    * log (zero data or footer I/O — the column-level sibling of
+    * [[detail]]): for each logical column, the share of live adds
+    * carrying write-time stats for it, the GLOBAL min/max folded over
+    * the per-file bounds (reported only at FULL coverage — a single
+    * add without bounds could hide the true extreme, so partial
+    * coverage reports null rather than a lie), and the exact null
+    * count (only when every add logged one). Integer/date/timestamp
+    * bounds live in the physical int64 space (micros / epoch days —
+    * the same space every pruned read uses); string bounds are
+    * writer-truncated prefixes past `MaxLoggedStringBound`, accurate
+    * for short values. At 100 TB this answers "what's in this table"
+    * from O(files) commit metadata where ANALYZE would scan. */
   def columnStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val (_, _, cols) = logTableStats(spark, path)
@@ -3814,42 +3766,6 @@ object TxnTable {
       tsMillis: Long): DataFrame =
     read(spark, path, versionAt(path, tsMillis))
 
-  /** Physical cleanup: delete data files referenced ONLY by snapshots
-    * older than the time-travel horizon (the last `retainVersions`
-    * versions stay fully readable). The horizon is recorded as a
-    * `vacuum:<horizon>` commit, so pre-horizon time travel fails with a
-    * clear error instead of missing files, and the vacuum itself is an
-    * ordinary serialized commit (no file can be both vacuumed and
-    * resurrected by a racing writer: the file set is resolved from the
-    * log prefix the commit wins against). Logical content is unchanged
-    * — the commit carries no adds/removes. Returns (new version,
-    * number of files deleted).
-    *
-    * Scale: resolves `retainVersions` snapshots and the extant-adds
-    * index — ALL checkpoint-amortized (O(interval) commit reads each,
-    * never an O(versions) log replay; the spec pins the read count on
-    * a 100+-commit table); deletion is O(dead files).
-    *
-    * **Clone pins**: every snapshot version a registered live shallow
-    * clone references ([[cloneShallow]]'s registry) is added to the
-    * keep-set REGARDLESS of the horizon — a source vacuum never reaps
-    * files a registered clone still reads, however aggressive the
-    * retention. [[releaseClone]] (or deleting the clone's pin file)
-    * lifts the protection. Pins guard physical files only; the
-    * time-travel horizon (and its fences) advance normally.
-    *
-    * **Orphan sweep** (opt-in via `orphanGraceMs >= 0`): also deletes
-    * files under the table's own `data/` that are referenced by NO
-    * commit — crashed-writer staging debris, which the known-dead set
-    * can never reach — but only when older than the grace window.
-    * Grace must exceed the longest write job's staging time: an
-    * in-flight writer stages its files moments before committing, and
-    * the window is what keeps the sweep from eating them (the same
-    * retention-vs-writer-duration contract as the reference lake
-    * formats' vacuum). The orphan set is re-resolved against the
-    * LATEST log state after the vacuum commit wins, so anything
-    * committed meanwhile is excluded.
-    */
   /** [[vacuum]] with TIME-based retention (the reference lake formats'
     * `RETAIN n HOURS` shape): every snapshot that was current at any
     * instant within the trailing `retainMs` window stays readable —
@@ -3920,6 +3836,42 @@ object TxnTable {
     vacuumDryRun(spark, path, retainVersionsForWindow(path, retainMs))
   }
 
+  /** Physical cleanup: delete data files referenced ONLY by snapshots
+    * older than the time-travel horizon (the last `retainVersions`
+    * versions stay fully readable). The horizon is recorded as a
+    * `vacuum:<horizon>` commit, so pre-horizon time travel fails with a
+    * clear error instead of missing files, and the vacuum itself is an
+    * ordinary serialized commit (no file can be both vacuumed and
+    * resurrected by a racing writer: the file set is resolved from the
+    * log prefix the commit wins against). Logical content is unchanged
+    * — the commit carries no adds/removes. Returns (new version,
+    * number of files deleted).
+    *
+    * Scale: resolves `retainVersions` snapshots and the extant-adds
+    * index — ALL checkpoint-amortized (O(interval) commit reads each,
+    * never an O(versions) log replay; the spec pins the read count on
+    * a 100+-commit table); deletion is O(dead files).
+    *
+    * **Clone pins**: every snapshot version a registered live shallow
+    * clone references ([[cloneShallow]]'s registry) is added to the
+    * keep-set REGARDLESS of the horizon — a source vacuum never reaps
+    * files a registered clone still reads, however aggressive the
+    * retention. [[releaseClone]] (or deleting the clone's pin file)
+    * lifts the protection. Pins guard physical files only; the
+    * time-travel horizon (and its fences) advance normally.
+    *
+    * **Orphan sweep** (opt-in via `orphanGraceMs >= 0`): also deletes
+    * files under the table's own `data/` that are referenced by NO
+    * commit — crashed-writer staging debris, which the known-dead set
+    * can never reach — but only when older than the grace window.
+    * Grace must exceed the longest write job's staging time: an
+    * in-flight writer stages its files moments before committing, and
+    * the window is what keeps the sweep from eating them (the same
+    * retention-vs-writer-duration contract as the reference lake
+    * formats' vacuum). The orphan set is re-resolved against the
+    * LATEST log state after the vacuum commit wins, so anything
+    * committed meanwhile is excluded.
+    */
   def vacuum(spark: SparkSession, path: String,
       retainVersions: Int = 2, orphanGraceMs: Long = -1L): (Long, Int) = {
     require(retainVersions >= 1, "must retain at least the current version")
@@ -4177,7 +4129,7 @@ object TxnTable {
     *    type; rewrites progressively materialize the widening.
     *  - STATS/PRUNING: logged long bounds are stored as Long for ALL
     *    integer widths (the footer harvest widens at write time), so
-    *    [[statsIndexFor]]/[[countRange]] read old adds' bounds
+    *    [[selectFiles]]/[[countRange]] read old adds' bounds
     *    unchanged in the widened space — pruning and metadata COUNTs
     *    stay zero-footer across generations.
     *
@@ -4397,111 +4349,174 @@ object TxnTable {
     -1L // unreachable
   }
 
+  // -- log-stats file selection --------------------------------------------
+  //
+  // Every pruned read, metadata-only aggregate and scoped compaction
+  // picks its files from ONE driver-side walk over the live files'
+  // write-time stats (stats-in-log, [[loggedStats]]): no footer open
+  // and no Spark job for a file that carries stats. At 100 TB that
+  // replaces millions of per-query object-store footer GETs with
+  // metadata the planner already holds.
+
+  /** A predicate a pruned read can skip files by ([[readPruned]]).
+    * Long bounds live in the column's PHYSICAL int64 space — the plain
+    * value for integral columns, epoch MICROS for timestamps, unix
+    * days for dates ([[physicalBetweenType]]); string bounds compare as
+    * unsigned UTF-8 bytes, the order parquet's stats and Spark's string
+    * comparison both use, so the file-level prune and the residual can
+    * never disagree. A file without bounds for the column is kept. */
+  sealed trait Bound {
+    def column: String
+    /** Whether a file with stats `st` (`c` = the column's physical
+      * name) may hold a matching row. */
+    private[core] def keeps(st: FileStats, c: String): Boolean
+    /** The row predicate over a frame of `schema`. */
+    private[core] def residual(schema: StructType): Column
+  }
+
+  object Bound {
+    /** `column` ∈ [lo, hi]. */
+    final case class LongRange(column: String, lo: Long, hi: Long)
+        extends Bound {
+      private[core] def keeps(st: FileStats, c: String): Boolean =
+        st.longs.get(c).forall { case (mn, mx) => mn <= hi && mx >= lo }
+      private[core] def residual(schema: StructType): Column =
+        physicalBetweenType(schema(column).dataType, column, lo, hi)
+    }
+
+    /** `column` ∈ `values` — the serving shape for bucket-hashed
+      * layouts, where a query's keys map to a scattered set of bucket
+      * ids rather than a contiguous range (TxnIndex). */
+    final case class LongIn(column: String, values: Seq[Long])
+        extends Bound {
+      private[core] def keeps(st: FileStats, c: String): Boolean =
+        st.longs.get(c) match {
+          case Some((mn, mx)) => values.exists(v => v >= mn && v <= mx)
+          case None => values.nonEmpty
+        }
+      private[core] def residual(schema: StructType): Column =
+        schema(column).dataType match {
+          case TimestampType =>
+            col(column).isin(values.map(v => timestamp_micros(lit(v))): _*)
+          case DateType => col(column).isin(values.map(v =>
+            date_from_unix_date(lit(Math.toIntExact(v)))): _*)
+          case _ => col(column).isInCollection(values.distinct)
+        }
+    }
+
+    /** `column` ∈ [lo, hi] under byte-lexicographic string order. */
+    final case class StringRange(column: String, lo: String, hi: String)
+        extends Bound {
+      private[core] def keeps(st: FileStats, c: String): Boolean =
+        st.strings.get(c).forall { case (mn, mx) =>
+          utf8Le(mn, hi) && utf8Le(lo, mx) }
+      private[core] def residual(schema: StructType): Column =
+        col(column).between(lit(lo), lit(hi))
+    }
+
+    /** `column` ∈ `values` — domain/source-keyed reads over a
+      * string-clustered layout. */
+    final case class StringIn(column: String, values: Seq[String])
+        extends Bound {
+      private[core] def keeps(st: FileStats, c: String): Boolean =
+        st.strings.get(c) match {
+          case Some((mn, mx)) =>
+            values.exists(v => utf8Le(mn, v) && utf8Le(v, mx))
+          case None => values.nonEmpty
+        }
+      private[core] def residual(schema: StructType): Column =
+        col(column).isInCollection(values.distinct)
+    }
+
+    private def utf8Le(a: String, b: String): Boolean =
+      org.apache.spark.unsafe.types.UTF8String.fromString(a).compareTo(
+        org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0
+  }
+
+  /** The live files at `upTo` (as the snapshot lists them) with their
+    * logged stats, or None for an add that carries none. */
+  private def loggedStats(path: String, upTo: Long)
+      : Seq[(String, Option[FileStats])] = {
+    val ai = addsIndex(path, upTo)
+    snapshotFiles(path, upTo).map(f => f -> ai.get(f).flatMap(parseAddStats))
+  }
+
+  /** The live files at `upTo` (snapshot order) that EVERY bound keeps.
+    * Stats come from the log; a file without them, or whose stats
+    * never attempted a bound's column (schema drift across
+    * generations), footer-reads in ONE batch, narrowed to the bounds'
+    * columns. A column a file's stats attempted but hold no bounds for
+    * keeps the file without a footer read — the footer would find
+    * nothing either. A file that vanished before its footer read is
+    * not part of any readable snapshot and is dropped. */
+  private def selectFiles(spark: SparkSession, path: String, upTo: Long,
+      bounds: Seq[Bound]): Seq[String] = {
+    // stats (log AND footers) are keyed by PHYSICAL names
+    val phys = bounds.map(b => physicalColName(path, upTo, b.column))
+    val cols = phys.distinct
+    val walk = loggedStats(path, upTo).map { case (f, st) =>
+      (f, localRoot(path).resolve(f).toString,
+        st.filter(s => cols.forall(s.cols.contains)))
+    }
+    val missing = walk.collect { case (_, abs, None) => abs }
+    val footer =
+      if (missing.isEmpty) Map.empty[String, FileStats]
+      else graft.crawler.SkippingIndex.footerStats(spark, missing, cols)
+    walk.collect {
+      case (f, abs, st) if st.orElse(footer.get(abs)).exists(s =>
+        bounds.zip(phys).forall { case (b, c) => b.keeps(s, c) }) => f
+    }
+  }
+
   /** Snapshot read with FILE-level stats pruning: rows of the snapshot
-    * whose `column` lies in [lo, hi], scanning ONLY live files whose
-    * parquet footer [min, max] intersects the range. Row-group pushdown
-    * inside kept files still applies afterwards — this prunes BEFORE
-    * the scan is planned, so skipped files are never opened (on an
-    * object store: never even GET) and task count is proportional to
-    * matching files. Pair with [[compactClustered]], which is what
-    * makes the per-file ranges tight. Files without long-typed stats
-    * for `column` are conservatively kept; an empty kept set returns an
-    * empty frame with the snapshot's schema.
-    */
-  /** The skipping index for `columns` over the snapshot's live files —
-    * resolved from the COMMIT LOG's write-time stats when the adds
-    * carry them (metadata-only: ZERO parquet footer opens), falling
-    * back to footer reads ONLY for files written before stats-in-log.
-    * Same output shape as [[graft.crawler.SkippingIndex.buildForFiles]]
-    * (`file, row_count, mins, maxs`), so [[readPruned]]'s selection is
-    * unchanged. A column a file's stats ATTEMPTED but has no bounds
-    * for (no usable footer stats) gets null bounds without a footer
-    * read — the footer would find nothing either; a column OUTSIDE the
-    * attempted set (schema drift across generations) footer-reads that
-    * file. At 100 TB the log path replaces millions of per-query
-    * object-store footer GETs with the metadata the planner already
-    * holds. */
-  private def statsIndexFor(spark: SparkSession, path: String,
-      asOf: Long, logicalColumns: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val top = currentVersion(path)
-    val upTo = if (asOf < 0) top else asOf
-    // stats (log AND footers) are keyed by PHYSICAL names
-    val columns = logicalColumns.map(physicalColName(path, upTo, _))
-    val ai = addsIndex(path, upTo)
-    val meta = Seq.newBuilder[(String, Long, Seq[Option[Long]], Seq[Option[Long]])]
-    val fallback = Seq.newBuilder[String]
-    snapshotFiles(path, upTo).foreach { f =>
-      val abs = localRoot(path).resolve(f).toString
-      ai.get(f).flatMap(_.stats).flatMap(parseAddStats) match {
-        case Some(st) if columns.forall(st.cols.contains) =>
-          meta += ((abs, ai(f).rows,
-            columns.map(c => st.l.get(c).map(_._1)),
-            columns.map(c => st.l.get(c).map(_._2))))
-        case _ => fallback += abs
-      }
-    }
-    val metaDf = meta.result().toDF("file", "row_count", "mins", "maxs")
-    val fb = fallback.result()
-    if (fb.isEmpty) metaDf
-    else metaDf.unionByName(
-      graft.crawler.SkippingIndex.buildForFiles(spark, fb, columns))
+    * matching EVERY bound, scanning ONLY live files whose stats can
+    * hold a match ([[selectFiles]]) — planned on the driver with zero
+    * Spark jobs and, for files carrying log stats, zero footer opens.
+    * Row-group pushdown inside kept files still applies afterwards;
+    * skipped files are never opened (on an object store: never even
+    * GET), and task count is proportional to matching files. Pair with
+    * [[createClustered]] / [[compactClustered]], which make per-file
+    * ranges tight: several bounds over a z-ordered layout multiply
+    * their selectivities. An empty kept set (or an empty IN list)
+    * returns a ZERO-file frame with the snapshot's schema. */
+  def readPruned(spark: SparkSession, path: String, bounds: Seq[Bound],
+      asOf: Long = -1L): DataFrame = {
+    require(bounds.nonEmpty, "readPruned: at least one bound")
+    val full = read(spark, path, asOf) // fence checks + logical schema
+    val pred = bounds.map(_.residual(full.schema)).reduce(_ && _)
+    val upTo = if (asOf < 0) currentVersion(path) else asOf
+    scanKept(spark, path, upTo, full,
+      selectFiles(spark, path, upTo, bounds), pred)
   }
 
-  /** [[statsIndexFor]]'s STRING sibling (`file, row_count, mn, mx` —
-    * the [[graft.crawler.SkippingIndex.buildStringIndex]] shape). A
-    * string bound the writer dropped (raw binary, or longer than
-    * `MaxLoggedStringBound`) reads as null bounds — the file is
-    * conservatively kept, never footer-read. */
-  private def stringStatsIndexFor(spark: SparkSession, path: String,
-      asOf: Long, logicalColumn: String): DataFrame = {
-    import spark.implicits._
-    val top = currentVersion(path)
-    val upTo = if (asOf < 0) top else asOf
-    // stats (log AND footers) are keyed by PHYSICAL names
-    val column = physicalColName(path, upTo, logicalColumn)
-    val ai = addsIndex(path, upTo)
-    val meta = Seq.newBuilder[(String, Long, Option[String], Option[String])]
-    val fallback = Seq.newBuilder[String]
-    snapshotFiles(path, upTo).foreach { f =>
-      val abs = localRoot(path).resolve(f).toString
-      ai.get(f).flatMap(_.stats).flatMap(parseAddStats) match {
-        case Some(st) if st.cols.contains(column) =>
-          meta += ((abs, ai(f).rows,
-            st.s.get(column).map(_._1), st.s.get(column).map(_._2)))
-        case _ => fallback += abs
-      }
-    }
-    val metaDf = meta.result().toDF("file", "row_count", "mn", "mx")
-    val fb = fallback.result()
-    if (fb.isEmpty) metaDf
-    else metaDf.unionByName(
-      graft.crawler.SkippingIndex.buildStringIndex(spark, fb, column))
-  }
-
-  def readPruned(spark: SparkSession, path: String, column: String,
-      lo: Long, hi: Long, asOf: Long = -1L): DataFrame = {
-    val full = read(spark, path, asOf) // fence checks + mergeSchema logic
-    val pred = physicalBetween(full, column, lo, hi)
-    // Index ONLY the resolved live snapshot files (dead/orphaned
-    // siblings under data/ never touched), from the commit log's
-    // write-time stats — footers opened only for pre-stats adds.
-    val idx = statsIndexFor(spark, path, asOf, Seq(column))
-    val kept = graft.crawler.SkippingIndex.selectFiles(idx, 0, lo, hi)
-    if (kept.isEmpty) full.filter(lit(false))
-    else applyDv(spark, path, asOf,
-      snapshotReader(spark, path, asOf).parquet(kept: _*),
+  /** Rows of the `kept` snapshot files at `upTo` (DVs applied) that
+    * satisfy `pred`. An empty kept set is a ZERO-file frame with
+    * `full`'s schema (not `full.filter(false)`), so `df.inputFiles`
+    * honestly reports what the read touches. */
+  private def scanKept(spark: SparkSession, path: String, upTo: Long,
+      full: DataFrame, kept: Seq[String], pred: Column): DataFrame =
+    if (kept.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        full.schema)
+    else applyDv(spark, path, upTo,
+      snapshotReader(spark, path, upTo).parquet(
+        kept.map(f => localRoot(path).resolve(f).toString): _*),
       keepFname = false).filter(pred)
-  }
 
-  /** [[readPruned]] for a SET of point values instead of one range:
-    * rows of the snapshot with `column` ∈ `values`, scanning only live
-    * files whose footer [min, max] contains at least one of the values.
-    * The footer index is built ONCE for all values (not once per value)
-    * — this is the serving-read shape for bucket-hashed layouts, where
-    * a query's keys map to a scattered set of bucket ids rather than a
-    * contiguous range (TxnIndex). Files without long-typed stats for
-    * `column` are conservatively kept. */
+  /** `column`'s data type, which must live in the physical int64 space
+    * (integral, date, timestamp) for `what`'s bounds — a string column
+    * would otherwise silently degrade a prune to the whole table (no
+    * long stats → conservatively kept). */
+  private def requireIntegral(schema: StructType, column: String,
+      what: String): DataType =
+    schema(column).dataType match {
+      case dt @ (TimestampType | DateType | ByteType | ShortType |
+          IntegerType | LongType) => dt
+      case dt => throw new IllegalArgumentException(
+        s"$what: $column has non-integral type $dt (bounds live in " +
+          "the physical int64 space)")
+    }
+
   /** COUNT(rows with `column` ∈ [lo, hi]) planned from the COMMIT LOG:
     * a file whose logged bounds lie fully inside the range contributes
     * (rows − nulls) with ZERO data I/O, a disjoint file contributes
@@ -4515,46 +4530,32 @@ object TxnTable {
     * difference between a metadata-only answer and a full-column scan
     * for the dashboard-style range counts every pipeline polls.
     * Bounds live in the column's physical int64 space (micros /
-    * unix-days — [[physicalBetween]]), like every pruned read. */
+    * unix-days — [[physicalBetweenType]]), like every pruned read. */
   def countRange(spark: SparkSession, path: String, column: String,
       lo: Long, hi: Long, asOf: Long = -1L): (Long, Int, Int) = {
     // metadata-only planning: fences + RECORDED schema, never a
     // DataFrame over the full file list (building one stats every
     // file — O(files) filesystem I/O the metadata path must not pay)
     val (schema, upTo) = snapshotSchemaFenced(spark, path, asOf)
-    schema(column).dataType match {
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.DateType |
-           org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => ()
-      case dt => throw new IllegalArgumentException(
-        s"countRange: $column has non-integral type $dt (bounds live in " +
-          "the physical int64 space)")
-    }
+    val dt = requireIntegral(schema, column, "countRange")
     midReadHook()
     val physCol = physicalColName(path, upTo, column)
-    val ai = addsIndex(path, upTo)
     val dvNames = snapshotDvs(path, upTo).keySet.map(_.split('/').last)
+    val walk = loggedStats(path, upTo)
     var metaCount = 0L
-    var total = 0
     val scan = Seq.newBuilder[String]
-    snapshotFiles(path, upTo).foreach { f =>
-      total += 1
+    walk.foreach { case (f, st) =>
       val abs = localRoot(path).resolve(f).toString
-      val st = ai.get(f).flatMap(_.stats).flatMap(parseAddStats)
-      val rows = ai.get(f).map(_.rows).getOrElse(0L)
       val hasDv = dvNames.contains(f.split('/').last)
-      val b = st.flatMap(_.l.get(physCol))
-      val nc = st.flatMap(_.n.get(physCol))
+      val b = st.flatMap(_.longs.get(physCol))
+      val nc = st.flatMap(_.nulls.get(physCol))
       if (b.exists { case (mn, mx) => mx < lo || mn > hi }) {
         // disjoint: 0 matches — a DV only removes rows, so it stays 0
       } else if (hasDv) scan += abs
-      else (b, nc) match {
-        case (Some((mn, mx)), Some(n)) if mn >= lo && mx <= hi =>
+      else (b, nc, st.map(_.rows)) match {
+        case (Some((mn, mx)), Some(n), Some(rows)) if mn >= lo && mx <= hi =>
           metaCount += rows - n // fully inside: every non-null row hits
-        case (None, Some(n)) if st.nonEmpty && n == rows =>
+        case (None, Some(n), Some(rows)) if n == rows =>
           () // all-null column: no row can match a range
         case _ => scan += abs // boundary / unknown nulls / voided bounds
       }
@@ -4571,9 +4572,9 @@ object TxnTable {
       else applyDv(spark, path, upTo,
         spark.read.schema(physicalSchema(schema)).parquet(scanFiles: _*),
         keepFname = false)
-        .filter(physicalBetweenType(schema(column).dataType, column, lo, hi))
+        .filter(physicalBetweenType(dt, column, lo, hi))
         .count()
-    (metaCount + scanned, scanFiles.size, total)
+    (metaCount + scanned, scanFiles.size, walk.size)
   }
 
   /** Recorded snapshot schema + resolved version, with [[read]]'s asOf
@@ -4605,35 +4606,27 @@ object TxnTable {
   def minMaxOf(spark: SparkSession, path: String, column: String,
       asOf: Long = -1L): (Option[Long], Option[Long], Int, Int) = {
     val (schema, upTo) = snapshotSchemaFenced(spark, path, asOf)
-    import org.apache.spark.sql.types._
-    val phys = schema(column).dataType match {
+    val phys = requireIntegral(schema, column, "minMaxOf") match {
       case TimestampType => unix_micros(col(column))
       case DateType => unix_date(col(column)).cast("long")
-      case ByteType | ShortType | IntegerType | LongType =>
-        col(column).cast("long")
-      case dt => throw new IllegalArgumentException(
-        s"minMaxOf: $column has non-integral type $dt")
+      case _ => col(column).cast("long")
     }
     midReadHook()
     val physCol = physicalColName(path, upTo, column)
-    val ai = addsIndex(path, upTo)
     val dvNames = snapshotDvs(path, upTo).keySet.map(_.split('/').last)
+    val walk = loggedStats(path, upTo)
     var mn = Option.empty[Long]
     var mx = Option.empty[Long]
-    var total = 0
     val scan = Seq.newBuilder[String]
-    snapshotFiles(path, upTo).foreach { f =>
-      total += 1
+    walk.foreach { case (f, st) =>
       val abs = localRoot(path).resolve(f).toString
-      val st = ai.get(f).flatMap(_.stats).flatMap(parseAddStats)
-      val rows = ai.get(f).map(_.rows).getOrElse(0L)
       val hasDv = dvNames.contains(f.split('/').last)
-      st.flatMap(_.l.get(physCol)) match {
+      st.flatMap(_.longs.get(physCol)) match {
         case Some((fMn, fMx)) if !hasDv =>
           mn = Some(mn.fold(fMn)(math.min(_, fMn)))
           mx = Some(mx.fold(fMx)(math.max(_, fMx)))
         case None if !hasDv &&
-            st.exists(_.n.get(physCol).contains(rows)) =>
+            st.exists(s => s.nulls.get(physCol).contains(s.rows)) =>
           () // all-null column in this file: contributes no extreme
         case _ => scan += abs
       }
@@ -4652,87 +4645,7 @@ object TxnTable {
         mx = Some(mx.fold(sMx)(math.max(_, sMx)))
       }
     }
-    (mn, mx, scanFiles.size, total)
-  }
-
-  def readPrunedIn(spark: SparkSession, path: String, column: String,
-      values: Seq[Long], asOf: Long = -1L): DataFrame = {
-    val full = read(spark, path, asOf)
-    val vs = values.distinct
-    if (vs.isEmpty) return full.filter(lit(false))
-    // The intersect stays a DATAFRAME filter — only the KEPT file
-    // names reach the driver (they become the scan's file set, the
-    // same driver state any scan holds); full per-file stats never
-    // funnel through one thread, and past SkippingIndex's threshold
-    // the footer reads themselves fan out as a job. Per file the
-    // values probe is a higher-order `exists` over the sorted literal
-    // array — distributed, and short-circuiting per Spark's exists
-    // semantics. Null bounds keep the file, never skip it.
-    val sortedVals = typedlit(vs.sorted)
-    val kept = statsIndexFor(spark, path, asOf, Seq(column))
-      .select(col("file"), col("mins").getItem(0).as("mn"),
-        col("maxs").getItem(0).as("mx"))
-      .filter(col("mn").isNull || col("mx").isNull ||
-        exists(sortedVals, v => v >= col("mn") && v <= col("mx")))
-      .select(col("file")).collect().map(_.getString(0)).toSeq
-    // empty kept set → a ZERO-file frame (not full.filter(false)), so
-    // df.inputFiles honestly reports what a caller's scan would touch
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    else applyDv(spark, path, asOf,
-      snapshotReader(spark, path, asOf).parquet(kept: _*),
-      keepFname = false).filter(col(column).isInCollection(vs))
-  }
-
-  /** [[readPruned]] for STRING columns: rows with `column` ∈ [lo, hi]
-    * under binary-lexicographic order — the SAME order parquet's UTF8
-    * footer stats and Spark's string comparison both use, so the
-    * file-level prune and the residual predicate can never disagree.
-    * Same contract as the long-typed reads: files without string stats
-    * are conservatively kept, the intersect is a DataFrame filter,
-    * only kept file NAMES are collected, and an empty kept set returns
-    * a zero-file frame. Pair with a `createClustered`/
-    * `compactClustered` layout leading on the string column. */
-  def readPrunedString(spark: SparkSession, path: String, column: String,
-      lo: String, hi: String, asOf: Long = -1L): DataFrame = {
-    val full = read(spark, path, asOf)
-    val kept = stringStatsIndexFor(spark, path, asOf, column)
-      .filter(col("mn").isNull || col("mx").isNull ||
-        (col("mn") <= hi && col("mx") >= lo))
-      .select(col("file")).collect().map(_.getString(0)).toSeq
-    val pred = col(column).between(lit(lo), lit(hi))
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    else applyDv(spark, path, asOf,
-      snapshotReader(spark, path, asOf).parquet(kept: _*),
-      keepFname = false).filter(pred)
-  }
-
-  /** [[readPrunedIn]] for STRING columns: rows with `column` ∈ `values`,
-    * scanning only live files whose string bounds contain at least one
-    * of the values — the serving shape for domain/source-keyed reads
-    * (`source IN (...)`) over a string-clustered layout. Log-stats-
-    * first like every pruned read; files without string bounds are
-    * conservatively kept. */
-  def readPrunedInString(spark: SparkSession, path: String,
-      column: String, values: Seq[String], asOf: Long = -1L): DataFrame = {
-    val full = read(spark, path, asOf)
-    val vs = values.distinct
-    if (vs.isEmpty) return full.filter(lit(false))
-    val sortedVals = typedlit(vs.sorted)
-    val kept = stringStatsIndexFor(spark, path, asOf, column)
-      .filter(col("mn").isNull || col("mx").isNull ||
-        exists(sortedVals, v => v >= col("mn") && v <= col("mx")))
-      .select(col("file")).collect().map(_.getString(0)).toSeq
-    val pred = col(column).isInCollection(vs)
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    else applyDv(spark, path, asOf,
-      snapshotReader(spark, path, asOf).parquet(kept: _*),
-      keepFname = false).filter(pred)
+    (mn, mx, scanFiles.size, walk.size)
   }
 
   // -- per-file BLOOM skipping ----------------------------------------------
@@ -4775,7 +4688,6 @@ object TxnTable {
     * probe side is width-independent. */
   def computeBloom(spark: SparkSession, path: String,
       columns: Seq[String], fpp: Double = 0.01): Long = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     import spark.implicits._
     require(columns.nonEmpty, "computeBloom: no columns given")
     require(fpp > 0 && fpp < 0.5, s"fpp must be in (0, 0.5), got $fpp")
@@ -4941,56 +4853,7 @@ object TxnTable {
         }.map(_._1)
       }.collect().toSet
     OpMetrics.record(BloomProbeCollected, excluded.size)
-    val kept = live.filterNot(excluded)
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    else applyDv(spark, path, asOf,
-      snapshotReader(spark, path, asOf).parquet(
-        kept.map(f => localRoot(path).resolve(f).toString): _*),
-      keepFname = false).filter(pred)
-  }
-
-  /** MIXED-TYPE box read: one STRING range dimension conjoined with
-    * any number of long/timestamp/date range dimensions — the box
-    * shape a (source, n_chars)-style layout serves. The kept set is
-    * the INTERSECTION of the per-type prunes (string bounds from the
-    * string index, physical-int64 bounds from the long index — both
-    * log-stats-first with per-file footer fallback), so the read is
-    * ≤ every single-dimension prune; ONE scan of the intersection
-    * with every residual predicate applied (and pushed into kept
-    * files' row groups). Files without stats on a dimension are
-    * conservatively kept for that dimension, like every pruned read. */
-  def readPrunedBoxMixed(spark: SparkSession, path: String,
-      strCol: String, strLo: String, strHi: String,
-      dims: Seq[(String, Long, Long)], asOf: Long = -1L): DataFrame = {
-    val full = read(spark, path, asOf)
-    val keptStr = stringStatsIndexFor(spark, path, asOf, strCol)
-      .filter(col("mn").isNull || col("mx").isNull ||
-        (col("mn") <= strHi && col("mx") >= strLo))
-      .select(col("file")).collect().map(_.getString(0)).toSet
-    val keptLong =
-      if (dims.isEmpty) keptStr
-      else {
-        val keepCond = dims.zipWithIndex.map { case ((_, lo, hi), i) =>
-          val mn = col("mins").getItem(i)
-          val mx = col("maxs").getItem(i)
-          mn.isNull || mx.isNull || (mn <= hi && mx >= lo)
-        }.reduce(_ && _)
-        statsIndexFor(spark, path, asOf, dims.map(_._1))
-          .filter(keepCond)
-          .select(col("file")).collect().map(_.getString(0)).toSet
-      }
-    val kept = (keptStr intersect keptLong).toSeq.sorted
-    val pred = dims.map { case (c, lo, hi) =>
-      physicalBetween(full, c, lo, hi)
-    }.foldLeft(col(strCol).between(lit(strLo), lit(strHi)))(_ && _)
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    else applyDv(spark, path, asOf,
-      snapshotReader(spark, path, asOf).parquet(kept: _*),
-      keepFname = false).filter(pred)
+    scanKept(spark, path, asOf, full, live.filterNot(excluded), pred)
   }
 
   /** The residual row predicate for a physical-int64 bound on `c`:
@@ -4999,10 +4862,6 @@ object TxnTable {
     * timestamps (parquet TIMESTAMP(MICROS) is INT64). The timestamp
     * literal form keeps the predicate foldable, so it still pushes
     * into the parquet scan for row-group skipping inside kept files. */
-  private def physicalBetween(df: DataFrame, c: String,
-      lo: Long, hi: Long): Column =
-    physicalBetweenType(df.schema(c).dataType, c, lo, hi)
-
   private def physicalBetweenType(
       dt: org.apache.spark.sql.types.DataType, c: String,
       lo: Long, hi: Long): Column =
@@ -5019,71 +4878,6 @@ object TxnTable {
       case _ => col(c).between(lo, hi)
     }
 
-  /** [[readPruned]] in TWO dimensions — the serving read for
-    * [[compactClustered]]'s z-ordered layout: rows with `colA` ∈
-    * [loA, hiA] AND `colB` ∈ [loB, hiB], scanning only live files whose
-    * footer boxes intersect the query box. A z-ordered file owns a
-    * compact range in BOTH columns, so box pruning multiplies the two
-    * dimensions' selectivities where single-column pruning gets only
-    * one — the point of paying the z-order shuffle. Files missing
-    * stats for either column are conservatively kept.
-    *
-    * Bounds are in each column's physical int64 space (micros for
-    * timestamp columns — see [[physicalBetween]]), so a time-range ×
-    * key box works the same as a key × key box. The box intersect is a
-    * DataFrame filter; only kept file NAMES are collected. */
-  def readPrunedBox(spark: SparkSession, path: String,
-      colA: String, loA: Long, hiA: Long,
-      colB: String, loB: Long, hiB: Long, asOf: Long = -1L): DataFrame =
-    readPrunedBoxN(spark, path,
-      Seq((colA, loA, hiA), (colB, loB, hiB)), asOf)
-
-  /** The N-dimensional box read: rows with EVERY `(column, lo, hi)`
-    * bound satisfied, scanning only live files whose footer ranges
-    * intersect all of them — the serving read for [[compactClustered]]
-    * (2-d) and [[compactClustered3]] (3-d) layouts, and for any
-    * conjunction of range predicates over a clustered table. Bounds
-    * live in each column's physical int64 space ([[physicalBetween]]);
-    * files missing stats on a dimension are conservatively kept for
-    * that dimension; the intersect is a DataFrame filter and only kept
-    * file NAMES are collected. */
-  def readPrunedBoxN(spark: SparkSession, path: String,
-      dims: Seq[(String, Long, Long)], asOf: Long = -1L): DataFrame = {
-    require(dims.nonEmpty, "at least one box dimension")
-    val full = read(spark, path, asOf)
-    val keepCond = dims.zipWithIndex.map { case ((_, lo, hi), i) =>
-      val mn = col("mins").getItem(i)
-      val mx = col("maxs").getItem(i)
-      mn.isNull || mx.isNull || (mn <= hi && mx >= lo)
-    }.reduce(_ && _)
-    val kept = statsIndexFor(spark, path, asOf, dims.map(_._1))
-      .filter(keepCond)
-      .select(col("file")).collect().map(_.getString(0)).toSeq
-    val pred = dims.map { case (c, lo, hi) =>
-      physicalBetween(full, c, lo, hi)
-    }.reduce(_ && _)
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    else applyDv(spark, path, asOf,
-      snapshotReader(spark, path, asOf).parquet(kept: _*),
-      keepFname = false).filter(pred)
-  }
-
-  /** CHANGE DATA FEED between two readable versions: the keyed
-    * row-level diff (insert/delete/update — [[graft.operators.
-    * SnapshotDiff]] semantics, unchanged keys absent) computed from
-    * ONLY the files that changed between the versions. An unchanged
-    * file contributes identical rows to both sides and therefore no
-    * diff row — so at 100 TB, where a day of commits touches ~1% of
-    * files, this reads that 1% instead of two full snapshots (rows
-    * carried through a rewrite appear on both sides and cancel as
-    * `unchanged`, exactly as in the full diff — equality with the
-    * full-snapshot diff is asserted in-run by the s17 gate). Requires
-    * the table to be keyed on `keyCols` (≤ 1 row per key), the same
-    * contract as SnapshotDiff itself. Schema-evolved tables diff under
-    * each version's recorded schema; the payload columns must match.
-    */
   /** [[diffVersions]] addressed by wall-clock instants ("what changed
     * between yesterday 09:00 and now") — both endpoints resolve
     * through [[versionAt]], same fences. */
@@ -5132,6 +4926,20 @@ object TxnTable {
       (removed ++ added).map(f => localRoot(path).resolve(f).toString))
   }
 
+  /** CHANGE DATA FEED between two readable versions: the keyed
+    * row-level diff (insert/delete/update — [[graft.operators.
+    * SnapshotDiff]] semantics, unchanged keys absent) computed from
+    * ONLY the files that changed between the versions. An unchanged
+    * file contributes identical rows to both sides and therefore no
+    * diff row — so at 100 TB, where a day of commits touches ~1% of
+    * files, this reads that 1% instead of two full snapshots (rows
+    * carried through a rewrite appear on both sides and cancel as
+    * `unchanged`, exactly as in the full diff — equality with the
+    * full-snapshot diff is asserted in-run by the s17 gate). Requires
+    * the table to be keyed on `keyCols` (≤ 1 row per key), the same
+    * contract as SnapshotDiff itself. Schema-evolved tables diff under
+    * each version's recorded schema; the payload columns must match.
+    */
   def diffVersions(spark: SparkSession, path: String, fromV: Long,
       toV: Long, keyCols: Seq[String]): DataFrame = {
     val (rm, ad, _) = changedRowSides(spark, path, fromV, toV)

@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
   * box predicate then selects the few files whose ranges intersect; the
   * scan reads only those.
   *
-  * Scale notes: footer reads are O(files) metadata operations — at a
-  * million files, parallelize the listing with a Spark job over path
-  * ranges (same shape as LakeCrawler.discover's note); the index itself
-  * is a tiny table persisted next to the catalog and consulted before
-  * `spark.read.parquet(selectedFiles: _*)`.
+  * One parser, [[fileStats]], reads every footer: the write path caches
+  * its result in the commit log (stats-in-log), TxnTable's pruned reads
+  * fall back to it for files written before that, and [[build]] /
+  * [[buildForFiles]] project it to the crawler's
+  * `(file, row_count, mins, maxs)` frame. Scale notes: footer reads are
+  * O(files) metadata operations — past [[DistributeThreshold]] files
+  * they run as a Spark job over the path list.
   */
 object SkippingIndex {
 
@@ -51,6 +53,32 @@ object SkippingIndex {
       in.defaultReadObject()
       value = new org.apache.hadoop.conf.Configuration(false)
       value.readFields(in)
+    }
+  }
+
+  /** One file's footer statistics: row count, the leaf columns whose
+    * stats were attempted, per-column long bounds (INT32/INT64, folded
+    * to the file), string bounds (BINARY/UTF8, folded as unsigned
+    * bytes), and null counts. A column appears in `nulls` only when
+    * EVERY row-bearing block sets num-nulls — which upgrades bounds
+    * from a pruning hint to an exact aggregate source (a file fully
+    * inside a range matches exactly rows − nulls rows; see
+    * TxnTable.countRange). The commit log stores the same shape
+    * (stats-in-log), so log stats and footer stats are interchangeable
+    * to a pruned read. */
+  final case class FileStats(rows: Long, cols: Seq[String],
+      longs: Map[String, (Long, Long)],
+      strings: Map[String, (String, String)],
+      nulls: Map[String, Long]) {
+
+    /** These stats narrowed to `columns` — what a pruned read needs,
+      * so wide or long-string stats of other columns never travel. */
+    def project(columns: Seq[String]): FileStats = {
+      val keep = columns.toSet
+      FileStats(rows, cols.filter(keep),
+        longs.filter(kv => keep(kv._1)),
+        strings.filter(kv => keep(kv._1)),
+        nulls.filter(kv => keep(kv._1)))
     }
   }
 
@@ -99,64 +127,35 @@ object SkippingIndex {
     else Some(perBlock.map(_.get))
   }
 
-  /** One file's (path, rowCount, mins, maxs) from its parquet footer;
-    * None if the file vanished (a concurrent vacuum reaping a dead
-    * sibling — it cannot be part of the caller's snapshot, so skipping
-    * preserves correctness). Serializable-closure-safe: takes the
-    * Configuration explicitly so the distributed path can construct
-    * one per partition. */
-  private def footerBounds(conf: org.apache.hadoop.conf.Configuration,
-      path: String, columns: Seq[String])
-      : Option[(String, Long, Seq[Option[Long]], Seq[Option[Long]])] = {
-    val p = new Path(path)
-    val footerOpt =
-      try Some(ParquetFileReader.readFooter(conf, p,
-        ParquetMetadataConverter.NO_FILTER))
-      catch { case _: java.io.FileNotFoundException => None }
-    footerOpt.map { footer =>
-      val blocks = footer.getBlocks.asScala
-      val rowCount = blocks.map(_.getRowCount).sum
-      val bounds = columns.map { c =>
-        // usableStats: a block with rows but no usable stats VOIDS the
-        // column (bounds from the other blocks would be too narrow and
-        // could wrongly skip the file). Non-int64/32 stats (or a
-        // re-typed column) likewise degrade to no-bounds — the file is
-        // conservatively kept, never wrongly skipped. INT32 and INT64
-        // both index (TxnIndex's bucket column is INT32; timestamps
-        // are physically INT64 micros).
-        val stats = usableStats(blocks, c).getOrElse(Nil)
-          .filter(_.hasNonNullValue)
-        val longs = stats.flatMap { s =>
-          (s.genericGetMin, s.genericGetMax) match {
-            case (mn: java.lang.Long, mx: java.lang.Long) =>
-              Some((mn.longValue, mx.longValue))
-            case (mn: java.lang.Integer, mx: java.lang.Integer) =>
-              Some((mn.longValue, mx.longValue))
-            case _ => None
-          }
-        }
-        if (longs.isEmpty || longs.size != stats.size)
-          (Option.empty[Long], Option.empty[Long])
-        else (Some(longs.map(_._1).min), Some(longs.map(_._2).max))
-      }
-      (p.toString, rowCount, bounds.map(_._1), bounds.map(_._2))
-    }
-  }
-
-  /** Index an EXPLICIT file list — the entry point for snapshot-scoped
-    * callers (TxnTable.readPruned indexes only the resolved live files,
-    * never dead/orphaned siblings in the same directory). Small lists
-    * index in a driver loop (no job overhead on serving paths); past
+  /** Index an EXPLICIT file list: `(file, row_count, mins, maxs)` with
+    * `columns`' long bounds (null where [[fileStats]] has none — the
+    * file is then conservatively kept). A file that vanished (a
+    * concurrent vacuum reaping a dead sibling) is absent. Small lists
+    * index in a driver loop (no job overhead); past
     * [[DistributeThreshold]] the footer reads fan out as a Spark job,
-    * so consumers can keep filtering the result AS A DATAFRAME and
-    * collect only the kept file names — full per-file stats never
-    * funnel through the driver for a huge table.
-    */
+    * and the frame stays lazy until [[selectFiles]] collects it once.
+    * TxnTable's pruned reads do not come through here: their stats
+    * already sit on the driver (the commit log), so they select files
+    * there and footer-read only pre-stats files via [[footerStats]]. */
   def buildForFiles(spark: SparkSession, paths: Seq[String],
       columns: Seq[String]): DataFrame = {
     import spark.implicits._
-    readFooters(spark, paths, footerBounds(_, _, columns))
+    readFooters(spark, paths, (conf, p) => fileStats(conf, p).map(s =>
+      (new Path(p).toString, s.rows,
+        columns.map(c => s.longs.get(c).map(_._1)),
+        columns.map(c => s.longs.get(c).map(_._2)))))
       .toDF("file", "row_count", "mins", "maxs")
+  }
+
+  /** [[fileStats]] of every path, narrowed to `columns` and collected
+    * to the driver, keyed by the path as given; a vanished file is
+    * absent. The footer fallback of TxnTable's log-stats selection. */
+  def footerStats(spark: SparkSession, paths: Seq[String],
+      columns: Seq[String]): Map[String, FileStats] = {
+    import spark.implicits._
+    readFooters(spark, paths, (conf, p) =>
+      fileStats(conf, p).map(s => (p, s.project(columns))))
+      .collect().toMap
   }
 
   /** `read` over every path: a driver loop up to [[DistributeThreshold]]
@@ -184,104 +183,19 @@ object SkippingIndex {
     }
   }
 
-  /** One file's (path, rowCount, min, max) STRING bounds for `column`
-    * from its parquet footer — the string sibling of [[footerBounds]]
-    * (separate shape: typed bounds can't share the long-array schema).
-    * Parquet UTF8 stats order is unsigned byte-lexicographic, which is
-    * exactly Spark's UTF8String column comparison — so a DataFrame
-    * filter over these bounds is consistent with how the stats were
-    * computed (and parquet's own truncation rules keep truncated
-    * bounds valid: min ≤ values ≤ max always). Non-binary stats →
-    * null bounds (file conservatively kept). */
-  private def footerStringBounds(
-      conf: org.apache.hadoop.conf.Configuration,
-      path: String, column: String)
-      : Option[(String, Long, Option[String], Option[String])] = {
-    val p = new Path(path)
-    val footerOpt =
-      try Some(ParquetFileReader.readFooter(conf, p,
-        ParquetMetadataConverter.NO_FILTER))
-      catch { case _: java.io.FileNotFoundException => None }
-    footerOpt.map { footer =>
-      val blocks = footer.getBlocks.asScala
-      val rowCount = blocks.map(_.getRowCount).sum
-      // usableStats: any row-bearing block without usable stats voids
-      // the bounds — see the long-typed sibling above
-      val stats = usableStats(blocks, column).getOrElse(Nil)
-        .filter(_.hasNonNullValue)
-      val bins = stats.flatMap { s =>
-        (s.genericGetMin, s.genericGetMax) match {
-          case (mn: org.apache.parquet.io.api.Binary,
-                mx: org.apache.parquet.io.api.Binary) =>
-            Some((mn.getBytes, mx.getBytes))
-          case _ => None
-        }
-      }
-      // Fold per-row-group bounds to file level as UNSIGNED UTF-8 BYTES —
-      // the order parquet's UTF8 stats and Spark's UTF8String comparison
-      // both use. Java String's .min/.max compare UTF-16 code units,
-      // which DISAGREES with byte order for supplementary-plane code
-      // points (e.g. U+10000 sorts below U+FFFF in UTF-16 but above in
-      // UTF-8), so a multi-row-group file could report a wrong file-level
-      // bound and be wrongly skipped.
-      val bounds =
-        if (bins.isEmpty || bins.size != stats.size)
-          (Option.empty[String], Option.empty[String])
-        else {
-          def lt(a: Array[Byte], b: Array[Byte]): Boolean = {
-            var i = 0
-            val n = math.min(a.length, b.length)
-            while (i < n) {
-              val d = (a(i) & 0xff) - (b(i) & 0xff)
-              if (d != 0) return d < 0
-              i += 1
-            }
-            a.length < b.length
-          }
-          val mn = bins.map(_._1).reduce((a, b) => if (lt(a, b)) a else b)
-          val mx = bins.map(_._2).reduce((a, b) => if (lt(a, b)) b else a)
-          (Some(new String(mn, java.nio.charset.StandardCharsets.UTF_8)),
-            Some(new String(mx, java.nio.charset.StandardCharsets.UTF_8)))
-        }
-      (p.toString, rowCount, bounds._1, bounds._2)
-    }
-  }
-
-  /** STRING min/max index over an explicit file list — same distribute-
-    * past-threshold and filter-as-a-DataFrame contract as
-    * [[buildForFiles]]. Columns: (file, row_count, mn, mx). */
-  def buildStringIndex(spark: SparkSession, paths: Seq[String],
-      column: String): DataFrame = {
-    import spark.implicits._
-    readFooters(spark, paths, footerStringBounds(_, _, column))
-      .toDF("file", "row_count", "mn", "mx")
-  }
-
-  /** Longest stored string bound for stats-in-log (UTF-8 bytes): a
-    * longer bound is DROPPED (column conservatively unprunable from
-    * the log for this file) rather than truncated — a truncated max
-    * smaller than a real value would wrongly skip the file. */
-  val MaxLoggedStringBound = 96
-
-  /** ALL-leaf-column file stats for the WRITE path (stats-in-log):
-    * (row count, leaf columns attempted, long bounds, string bounds,
-    * null counts). A column appears in the null-count map only when
-    * EVERY row-bearing block sets num-nulls — which upgrades bounds
-    * from a pruning hint to an EXACT aggregate source: a file fully
-    * inside a range matches exactly (rows − nulls) rows, so COUNT can
-    * be answered from the log with zero data I/O (TxnTable.countRange).
-    * A PURE CACHE of what [[buildForFiles]] / [[buildStringIndex]]
-    * would compute at read time — same per-block fold rules (INT32/
-    * INT64 → long bounds; BINARY/UTF8 folded as unsigned bytes; a
-    * block with unusable stats voids the column's bounds, the file is
-    * then conservatively kept), extracted ONCE when the file is
-    * written instead of on every pruned read. At 100 TB the
-    * difference is a metadata-only plan vs millions of object-store
-    * footer GETs per query. Runs on executors too, so callers count
-    * [[FooterReads]] on the driver where they dispatch the list. */
+  /** One file's [[FileStats]] over ALL leaf columns, from its parquet
+    * footer; None if the file vanished. Per-block fold rules: INT32/
+    * INT64 → long bounds; BINARY/UTF8 folded as unsigned bytes (the
+    * order parquet's UTF8 stats and Spark's UTF8String comparison both
+    * use — Java String order disagrees for supplementary-plane code
+    * points); a block with rows but unusable stats voids the column's
+    * bounds (the file is then conservatively kept). Parquet's own
+    * truncation rules keep truncated bounds valid: min ≤ values ≤ max.
+    * Runs on executors too (takes the Configuration explicitly), so
+    * callers count [[FooterReads]] on the driver where they dispatch
+    * the list. */
   def fileStats(conf: org.apache.hadoop.conf.Configuration, path: String)
-      : Option[(Long, Seq[String], Map[String, (Long, Long)],
-                Map[String, (String, String)], Map[String, Long])] = {
+      : Option[FileStats] = {
     val p = new Path(path)
     val footerOpt =
       try Some(ParquetFileReader.readFooter(conf, p,
@@ -297,9 +211,8 @@ object SkippingIndex {
       val nulls = Map.newBuilder[String, Long]
       leafCols.foreach { c =>
         // usableStats: a block with rows but dropped/disabled stats
-        // voids the column's logged bounds — freezing too-narrow
-        // bounds into the commit log would make every future pruned
-        // read of this file wrong, not just one query
+        // voids the column's bounds — bounds folded from the other
+        // blocks would be too narrow and could wrongly skip the file
         val allStats = usableStats(blocks, c).getOrElse(Nil)
         if (allStats.nonEmpty && allStats.forall(s =>
             s.isNumNullsSet && s.getNumNulls >= 0))
@@ -327,22 +240,20 @@ object SkippingIndex {
         else if (stats.nonEmpty && asBins.size == stats.size) {
           val mn = asBins.map(_._1).reduce((a, b) => if (ltBytes(a, b)) a else b)
           val mx = asBins.map(_._2).reduce((a, b) => if (ltBytes(a, b)) b else a)
-          if (mn.length <= MaxLoggedStringBound &&
-              mx.length <= MaxLoggedStringBound) {
-            val mnS = new String(mn, java.nio.charset.StandardCharsets.UTF_8)
-            val mxS = new String(mx, java.nio.charset.StandardCharsets.UTF_8)
-            // RAW-binary guard: a non-UTF8 bound decodes lossily
-            // (U+FFFD), and a shrunk re-encoded bound could wrongly
-            // skip a file — only bounds that round-trip are logged
-            if (java.util.Arrays.equals(
-                  mnS.getBytes(java.nio.charset.StandardCharsets.UTF_8), mn) &&
-                java.util.Arrays.equals(
-                  mxS.getBytes(java.nio.charset.StandardCharsets.UTF_8), mx))
-              strings += c -> ((mnS, mxS))
-          }
+          val mnS = new String(mn, java.nio.charset.StandardCharsets.UTF_8)
+          val mxS = new String(mx, java.nio.charset.StandardCharsets.UTF_8)
+          // RAW-binary guard: a non-UTF8 bound decodes lossily
+          // (U+FFFD), and a shrunk re-encoded bound could wrongly skip
+          // a file — only bounds that round-trip are kept
+          if (java.util.Arrays.equals(
+                mnS.getBytes(java.nio.charset.StandardCharsets.UTF_8), mn) &&
+              java.util.Arrays.equals(
+                mxS.getBytes(java.nio.charset.StandardCharsets.UTF_8), mx))
+            strings += c -> ((mnS, mxS))
         }
       }
-      (rowCount, leafCols, longs.result(), strings.result(), nulls.result())
+      FileStats(rowCount, leafCols, longs.result(), strings.result(),
+        nulls.result())
     }
   }
 
@@ -361,31 +272,26 @@ object SkippingIndex {
 
   /** Files whose [min, max] range on indexed column `i` intersects
     * [lo, hi] (files without stats are kept — skipping must never drop
-    * data).
+    * data). ONE collect of `(file, keep)`: kept and total are counted
+    * on the driver, so a lazy footer-reading index (past
+    * [[DistributeThreshold]]) is evaluated exactly once.
     *
     * The kept list is collected to the driver because it becomes the
     * read's file set — the same metadata-scale driver state Spark's own
     * InMemoryFileIndex holds for any scan. Bound: ~100 bytes/path means
-    * 10⁶ kept files ≈ 100 MB of driver heap; beyond that, partition- or
+    * 10⁶ files ≈ 100 MB of driver heap; beyond that, partition- or
     * manifest-level pruning must cut the list first (the kept/total log
     * line below is the signal to watch).
     */
   def selectFiles(index: DataFrame, i: Int, lo: Long, hi: Long): Seq[String] = {
-    // persist across the two actions below (count + collect): past the
-    // distribute threshold the index is a LAZY footer-reading job, and
-    // unpersisted it would open every footer TWICE (measured: 4000
-    // opens for a 2000-file table). The cached rows are tiny
-    // (file, row_count, bounds).
-    index.persist()
-    try {
-      val total = index.count()
-      val kept = index.filter(
-          col("mins").getItem(i).isNull ||
-          (col("mins").getItem(i) <= hi && col("maxs").getItem(i) >= lo))
-        .select(col("file")).collect().map(_.getString(0)).toSeq
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"skipping-index: kept ${kept.size}/$total files for col#$i in [$lo, $hi]")
-      kept
-    } finally { index.unpersist(); () }
+    val mn = col("mins").getItem(i)
+    val rows = index.select(col("file"),
+      mn.isNull || (mn <= hi && col("maxs").getItem(i) >= lo)).collect()
+    val kept = rows.collect {
+      case r if !r.isNullAt(1) && r.getBoolean(1) => r.getString(0)
+    }.toSeq
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"skipping-index: kept ${kept.size}/${rows.length} files for col#$i in [$lo, $hi]")
+    kept
   }
 }

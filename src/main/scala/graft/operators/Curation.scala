@@ -70,6 +70,12 @@ object Curation {
     df.withColumn(outCol, assigned)
   }
 
+  /** A [[tokenBudgetMix]] driver collect's row count — bounded by
+    * budgeted sources × 65536, never by the source column's
+    * cardinality. */
+  val MixMetadataRows: graft.core.OpMetrics.Key[Int] =
+    graft.core.OpMetrics.Key.latest("mix_metadata_rows")
+
   /** L47: TOKEN-BUDGETED corpus mixing — per source, keep the greedy
     * prefix of the deterministic (md5(id), id) order whose cumulative
     * token count stays within that source's budget: the "sample
@@ -87,12 +93,6 @@ object Curation {
     * boundary window fills the exact remainder; later buckets exceed
     * the budget by construction). Sources without a budget entry are
     * dropped — the budgets ARE the mixture. */
-  /** A [[tokenBudgetMix]] driver collect's row count — bounded by
-    * budgeted sources × 65536, never by the source column's
-    * cardinality. */
-  val MixMetadataRows: graft.core.OpMetrics.Key[Int] =
-    graft.core.OpMetrics.Key.latest("mix_metadata_rows")
-
   def tokenBudgetMix(df: DataFrame, idCol: Column, sourceCol: String,
       tokens: Column, budgets: Map[String, Long]): DataFrame = {
     require(budgets.nonEmpty, "at least one source budget")

@@ -111,13 +111,6 @@ object Dedup {
     array((0 until k).map(i =>
       array_min(transform(shingles, s => tokenHash60(concat(lit(s"$i:"), s))))): _*)
 
-  /** Own-implementation MinHash+LSH near-dup candidate pairs: signature →
-    * bands of r consecutive components → equi-join on (band, key) —
-    * linear candidate generation like the ml.MinHashLSH path, but with an
-    * md5-derived hash family every engine can recompute, which makes the
-    * gate DuckDB-oracle-exact (l2_minhash_pairs). Returns one row per
-    * banded candidate pair with the signature-overlap Jaccard estimate.
-    */
   /** (id, sig, band, key) rows of every document's LSH bands — the
     * shared candidate-generation front half of [[minHashBandedPairs]],
     * also usable as an INCREMENTAL signature store: committing these
@@ -147,6 +140,13 @@ object Dedup {
       .select(col("id"), col("sig"), col("bk.band"), col("bk.key"))
   }
 
+  /** Own-implementation MinHash+LSH near-dup candidate pairs: signature →
+    * bands of r consecutive components → equi-join on (band, key) —
+    * linear candidate generation like the ml.MinHashLSH path, but with an
+    * md5-derived hash family every engine can recompute, which makes the
+    * gate DuckDB-oracle-exact (l2_minhash_pairs). Returns one row per
+    * banded candidate pair with the signature-overlap Jaccard estimate.
+    */
   def minHashBandedPairs(
       docs: DataFrame,
       textCol: String,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TxnTable
+import graft.core.TxnTable.Bound
 
 /** Incremental maintenance of a grouped-aggregate materialized view
   * over a [[graft.core.TxnTable]], fed by the file-scoped change data
@@ -32,7 +33,7 @@ import graft.core.TxnTable
   *    BEFORE-image value sits at its group's current extreme
   *    (`v <= mn || v >= mx`) may have removed that extreme. ONLY those
   *    groups are re-aggregated, and only from the files whose footer
-  *    range contains their keys ([[TxnTable.readPrunedIn]]) — on a
+  *    range contains their keys ([[TxnTable.readPruned]]) — on a
   *    group-clustered table that is O(affected groups' files), never a
   *    table scan. Groups whose deletes land strictly inside the open
   *    interval (mn, mx) keep their extremes with zero files read.
@@ -118,7 +119,7 @@ object IncrementalView {
       // match null keys (an existing null-group state row would be
       // silently dropped by the inner merge), and a null leaking into
       // `affected` poisons !isInCollection (three-valued IN) and
-      // readPrunedIn — see [[nullGroupRow]]
+      // readPruned — see [[nullGroupRow]]
       val nullTouched =
         netAll.filter(col(groupCol).isNull).limit(1).count() > 0
       val net = netAll.filter(col(groupCol).isNotNull)
@@ -260,10 +261,12 @@ object IncrementalView {
         // `affected` is null-free by construction (the null group is
         // handled via nullRow), so isInCollection stays two-valued
         val pruned = affected.head match {
-          case _: String => TxnTable.readPrunedInString(spark, path,
-            groupCol, affected.map(_.asInstanceOf[String]), asOf = toV)
-          case _ => TxnTable.readPrunedIn(spark, path, groupCol,
-            affected.map(_.asInstanceOf[Long]), asOf = toV)
+          case _: String => TxnTable.readPruned(spark, path,
+            Seq(Bound.StringIn(groupCol,
+              affected.map(_.asInstanceOf[String]))), asOf = toV)
+          case _ => TxnTable.readPruned(spark, path,
+            Seq(Bound.LongIn(groupCol, affected.map(_.asInstanceOf[Long]))),
+            asOf = toV)
         }
         // pruned files can carry null-group rows alongside the
         // affected keys — drop them here or they'd duplicate nullRow

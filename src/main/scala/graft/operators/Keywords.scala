@@ -584,11 +584,6 @@ object Keywords {
     (folded, nb)
   }
 
-  /** Postings of exactly `terms` from a persisted index: the bucket
-    * filter prunes partitions at PLAN time (only the query terms'
-    * directories are listed/read), the term filter pushes into the
-    * parquet scan and skips row groups via the within-file term sort.
-    */
   /** The fixed on-disk postings schema (doc_id is canonicalized to
     * long at write time). Declared explicitly so reads never run
     * schema inference — and so an index whose corpus was EMPTY (no
@@ -598,6 +593,11 @@ object Keywords {
     "term STRING, doc_id BIGINT, dl INT, " +
       "positions ARRAY<INT>, tf DOUBLE, bucket INT")
 
+  /** Postings of exactly `terms` from a persisted index: the bucket
+    * filter prunes partitions at PLAN time (only the query terms'
+    * directories are listed/read), the term filter pushes into the
+    * parquet scan and skips row groups via the within-file term sort.
+    */
   def readPostings(spark: org.apache.spark.sql.SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
     val (_, nb) = indexStats(spark, path)

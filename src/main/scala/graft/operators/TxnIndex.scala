@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TxnTable
+import graft.core.TxnTable.Bound
 import graft.functions.TextFunctions
 
 /** The TRANSACTIONAL text index — [[Keywords.buildIndex]]'s layout
@@ -22,7 +23,7 @@ import graft.functions.TextFunctions
   *
   * One TxnTable holds four row kinds, discriminated by `kind` and
   * separated physically by sentinel `bucket` values so every serving
-  * read stays file-pruned ([[TxnTable.readPrunedIn]] on the footer
+  * read stays file-pruned ([[TxnTable.readPruned]] `LongIn` on the footer
   * min/max of `bucket`):
   *
   *  - `'p'` postings: (term, doc_id, dl, positions, tf),
@@ -290,7 +291,8 @@ object TxnIndex {
   def maybeCompact(spark: SparkSession, path: String,
       maxTranches: Int): Boolean = {
     val v = TxnTable.currentVersion(path)
-    val tranches = TxnTable.readPrunedIn(spark, path, "bucket", Seq(-1L), v)
+    val tranches = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("bucket", Seq(-1L))), v)
       .filter(col("kind") === "s").count()
     if (tranches < maxTranches) false
     else try { compact(spark, path); true }
@@ -332,7 +334,8 @@ object TxnIndex {
     * pass keeps per-query footer-index builds at two). */
   private def rawStats(spark: SparkSession, path: String,
       asOf: Long): IndexStats = {
-    val s = TxnTable.readPrunedIn(spark, path, "bucket", Seq(-1L), asOf)
+    val s = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("bucket", Seq(-1L))), asOf)
       .filter(col("kind") === "s")
       .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sdl"),
         max(col("n_buckets")).as("nb"), max(col("seq")).as("mseq"))
@@ -358,8 +361,8 @@ object TxnIndex {
   /** The registry rows alive at `asOf` (tombstones applied). */
   private def liveRegistry(spark: SparkSession, path: String,
       asOf: Long): DataFrame = {
-    val raw = TxnTable.readPrunedIn(spark, path, "bucket",
-      Seq(-2L, -3L), asOf)
+    val raw = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("bucket", Seq(-2L, -3L))), asOf)
     applyTombstones(raw.filter(col("kind") === "d"),
       raw.filter(col("kind") === "t"))
   }
@@ -377,8 +380,8 @@ object TxnIndex {
   private def readPostingsWithNb(spark: SparkSession, path: String,
       terms: Seq[String], asOf: Long, nb: Int): DataFrame = {
     val buckets = Keywords.termBuckets(spark, terms.distinct, nb)
-    val raw = TxnTable.readPrunedIn(spark, path, "bucket",
-      buckets.map(_.toLong) :+ -3L, asOf)
+    val raw = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("bucket", buckets.map(_.toLong) :+ -3L)), asOf)
     applyTombstones(
       raw.filter(col("kind") === "p")
         .filter(col("term").isInCollection(terms.distinct)),
@@ -416,8 +419,8 @@ object TxnIndex {
       .select(pmod(xxhash64(col("term")), lit(st.nBuckets)).cast("long")
         .as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val raw = TxnTable.readPrunedIn(spark, path, "bucket",
-      buckets :+ -3L, v)
+    val raw = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("bucket", buckets :+ -3L)), v)
     val tf = applyTombstones(
       raw.filter(col("kind") === "p")
         .join(queries.select(col("term")).distinct(), Seq("term"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TxnTable
+import graft.core.TxnTable.Bound
 
 /** The TRANSACTIONAL vector index — [[Similarity]]'s on-disk IVF layout
   * committed through [[TxnTable]], the same plain-layout→commit-log
@@ -21,7 +22,7 @@ import graft.core.TxnTable
   *
   * One TxnTable holds four row kinds, discriminated by `kind` and
   * physically separated by sentinel `list` values so every serving
-  * read is file-pruned ([[TxnTable.readPrunedIn]] on the footer
+  * read is file-pruned ([[TxnTable.readPruned]] `LongIn` on the footer
   * min/max of `list`):
   *
   *  - `'v'` vectors: (vec_id, embedding), list = nearest-centroid
@@ -135,7 +136,8 @@ object TxnVectorIndex {
     * order — ONE pruned read (list = −2). */
   def centroids(spark: SparkSession, path: String,
       asOf: Long = -1L): Array[Seq[Float]] = {
-    val rows = TxnTable.readPrunedIn(spark, path, "list", Seq(-2L), asOf)
+    val rows = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("list", Seq(-2L))), asOf)
       .filter(col("kind") === "c")
       .select(col("i"), col("embedding")).collect()
     require(rows.nonEmpty, s"not a TxnVectorIndex table (no centroids): $path")
@@ -144,7 +146,8 @@ object TxnVectorIndex {
 
   /** seq high-water mark + total adds — ONE pruned read (list = −1). */
   private def maxSeq(spark: SparkSession, path: String, asOf: Long): Int = {
-    val s = TxnTable.readPrunedIn(spark, path, "list", Seq(-1L), asOf)
+    val s = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("list", Seq(-1L))), asOf)
       .filter(col("kind") === "s")
       .agg(max(col("seq"))).head()
     require(!s.isNullAt(0),
@@ -237,7 +240,8 @@ object TxnVectorIndex {
   def maybeCompact(spark: SparkSession, path: String,
       maxTranches: Int): Boolean = {
     val v = TxnTable.currentVersion(path)
-    val tranches = TxnTable.readPrunedIn(spark, path, "list", Seq(-1L), v)
+    val tranches = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("list", Seq(-1L))), v)
       .filter(col("kind") === "s").count()
     if (tranches < maxTranches) false
     else try { compact(spark, path); true }
@@ -278,8 +282,8 @@ object TxnVectorIndex {
     val v = if (asOf >= 0) asOf else TxnTable.currentVersion(path)
     val cents = centroids(spark, path, v)
     val probe = Similarity.probeLists(cents, query, nprobe)
-    val raw = TxnTable.readPrunedIn(spark, path, "list",
-      probe.map(_.toLong) :+ -3L, v)
+    val raw = TxnTable.readPruned(spark, path,
+      Seq(Bound.LongIn("list", probe.map(_.toLong) :+ -3L)), v)
     val live = applyTombstones(
       raw.filter(col("kind") === "v")
         .filter(col("list").isInCollection(probe)),

@@ -601,11 +601,6 @@ object CorpusQueries {
         min(col("n_chars")).as("min_kept"))
       .orderBy(col("source"))
 
-  /** L2e: sub-document dedup — 10-token chunk windows deduped corpus-wide
-    * keep-first, docs reassembled from surviving chunks in order. The
-    * per-source distinct count of md5(reassembled text) pins content AND
-    * chunk order of every reconstructed doc, not just counts.
-    */
   /** Exact substring-span duplication SIGNAL (Lee et al. 2021 sliding-
     * window formulation): per source, how many 8-token span positions
     * repeat corpus-wide and how many docs carry at least one. */
@@ -637,6 +632,11 @@ object CorpusQueries {
       .orderBy(col("source"))
   }
 
+  /** L2e: sub-document dedup — 10-token chunk windows deduped corpus-wide
+    * keep-first, docs reassembled from surviving chunks in order. The
+    * per-source distinct count of md5(reassembled text) pins content AND
+    * chunk order of every reconstructed doc, not just counts.
+    */
   def l2eChunkDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Lake.table(spark, dir, "documents")
     graft.operators.Curation.chunkDedup(docs, "doc_id", "text", chunkTokens = 10)
@@ -863,16 +863,6 @@ object CorpusQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** L43: canonical-URL dedup — the same page arrives under dozens of
-    * spellings (case, www, default port, trailing slash, tracking
-    * params, param order, fragments); `canonicalizeUrl` collapses them
-    * to one dedup key, map-side, then one keyed groupBy yields the
-    * per-page group (count + keeper doc). The gate synthesizes four
-    * deterministic spelling variants per document and proves variants
-    * 0–2 of each source collapse to ONE canonical page while variant 3
-    * stays keyed by its real param; the oracle replays the full
-    * canonicalization algorithm step-for-step in DuckDB (split_part /
-    * list_sort / list_filter twins of the Spark expressions). */
   /** L44: deterministic train/val/test split — `Curation.assignSplit`
     * stamps each document's split as a pure md5 function of its id
     * (never migrates across runs or corpus growth; map-side, zero
@@ -1034,6 +1024,16 @@ object CorpusQueries {
       .orderBy(col("avg_nats").desc, col("doc_id")).limit(20)
   }
 
+  /** L43: canonical-URL dedup — the same page arrives under dozens of
+    * spellings (case, www, default port, trailing slash, tracking
+    * params, param order, fragments); `canonicalizeUrl` collapses them
+    * to one dedup key, map-side, then one keyed groupBy yields the
+    * per-page group (count + keeper doc). The gate synthesizes four
+    * deterministic spelling variants per document and proves variants
+    * 0–2 of each source collapse to ONE canonical page while variant 3
+    * stays keyed by its real param; the oracle replays the full
+    * canonicalization algorithm step-for-step in DuckDB (split_part /
+    * list_sort / list_filter twins of the Spark expressions). */
   def l43UrlCanonDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Lake.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"))
@@ -1395,8 +1395,6 @@ object CorpusQueries {
     "l12_quantize"        -> (l12Quantize _),
     "l13_packing"         -> (l13Packing _))
 
-  /** Shared by l32 (rescan) and l36 (persisted index): the two engine
-    * paths must agree with the SAME oracle bit-for-bit. */
   /** Batch BM25 oracle (3 queries × top-5), shared by l34 (rescan
     * batch path) and l37d (txn-index batch path) — same literal
     * arithmetic as l32; per-query rank via row_number mirrors the
@@ -1450,6 +1448,8 @@ object CorpusQueries {
       |  AS score
       |FROM c GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 25""".stripMargin
 
+  /** Shared by l32 (rescan) and l36 (persisted index): the two engine
+    * paths must agree with the SAME oracle bit-for-bit. */
   private[queries] val bm25TopkSql: String =
     "WITH " + bm25TopkCtes("documents")
 

@@ -785,10 +785,6 @@ object PipelineQueries {
        |GROUP BY pred_lang ORDER BY pred_lang""".stripMargin
   }
 
-  /** Whole-pipeline oracle: language scorer generated from the SAME
-    * stopword lists the engine uses, then quality filter, keep-first
-    * dedup, recursive-CTE near-dup components, per-source accounting.
-    */
   /** The langid + sigmoid-quality filter CTE chain (sc, filt) over raw
     * documents — the SQL replay of `TextFunctions.langId == "en" &&
     * qualityScore >= 0.6`, shared by the batch pipeline oracle (p1) and
@@ -812,6 +808,10 @@ object PipelineQueries {
        |    AND CASE $cases ELSE '${langs.min}' END = 'en')""".stripMargin
   }
 
+  /** Whole-pipeline oracle: language scorer generated from the SAME
+    * stopword lists the engine uses, then quality filter, keep-first
+    * dedup, recursive-CTE near-dup components, per-source accounting.
+    */
   private def curationOracleSql: String = {
     s"""WITH RECURSIVE ${qualityFiltCtes},
        |ded AS (SELECT f.* FROM filt f
@@ -835,10 +835,6 @@ object PipelineQueries {
        |FROM kept GROUP BY source ORDER BY source""".stripMargin
   }
 
-  /** The IVF-on-disk top-k oracle — shared by l3c (plain
-    * partitionBy layout) and l3d (the transactional index, whose
-    * build → same-value re-ingest → compact phases must all land on
-    * this same logical answer). */
   /** The md5-centroid sampling + left-fold squared-distance assignment
     * CTE chain (8 lists, dim 64) — the write-time half of the l3c IVF
     * replay, exposed for layouts that persist the assignment (c16's
@@ -865,6 +861,10 @@ object PipelineQueries {
         |      row_number() OVER (PARTITION BY vec_id ORDER BY d, i) AS rn
         |    FROM dist) WHERE rn = 1)""".stripMargin
 
+  /** The IVF-on-disk top-k oracle — shared by l3c (plain
+    * partitionBy layout) and l3d (the transactional index, whose
+    * build → same-value re-ingest → compact phases must all land on
+    * this same logical answer). */
   private[queries] val ivfDiskTopkSql: String =
     "WITH " + ivfAssignCtes + """,
         |qv AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,

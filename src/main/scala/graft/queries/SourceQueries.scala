@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Lake
+import graft.core.TxnTable.Bound
 import graft.crawler.LakeCrawler
 
 /** Gate entries proving the NON-parquet ingestion paths end-to-end
@@ -285,7 +286,7 @@ object SourceQueries {
   }
 
   /** S14: BOX-pruned reads on a z-ordered transactional table —
-    * `compactClustered` + `readPrunedBox` end-to-end: the lineitem
+    * `compactClustered` + a two-bound `readPruned` end-to-end: the lineitem
     * snapshot is z-ordered on (l_partkey, l_suppkey), then a
     * two-dimensional box query must (a) return exactly the predicate's
     * rows (oracle) and (b) read a strict subset of the snapshot's
@@ -301,14 +302,15 @@ object SourceQueries {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_quantity"))
     TxnTable.create(spark, t, li, partitions = 4)
-    TxnTable.compactClustered(spark, t, col("l_partkey"), col("l_suppkey"),
-      targetFiles = 16)
+    TxnTable.compactClustered(spark, t,
+      Seq(col("l_partkey"), col("l_suppkey")), targetFiles = 16)
     // scale-proportional box (half of each key range) so the gate's
     // in-run pruning asserts hold at every sf
     val mx = li.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
     val (hiA, hiB) = (mx.getLong(0) / 2, mx.getLong(1) / 2)
-    val boxed = TxnTable.readPrunedBox(spark, t,
-      "l_partkey", 1L, hiA, "l_suppkey", 1L, hiB)
+    val boxed = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("l_partkey", 1L, hiA),
+        Bound.LongRange("l_suppkey", 1L, hiB)))
     val rows = boxed
       .agg(count(lit(1)).as("c"),
         sum(round(col("l_quantity") * 100).cast("long")).as("qty_c"),
@@ -317,7 +319,8 @@ object SourceQueries {
       .collect()
     val read = boxed.inputFiles.length
     val live = TxnTable.snapshotFiles(t).size
-    val oneDim = TxnTable.readPruned(spark, t, "l_partkey", 1L, hiA)
+    val oneDim = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("l_partkey", 1L, hiA)))
       .inputFiles.length
     require(read > 0 && read < live && read <= oneDim,
       s"box prune: read $read of $live files (1-dim read $oneDim)")
@@ -344,14 +347,15 @@ object SourceQueries {
       .select(col("l_orderkey"), col("l_partkey"), col("l_shipdate"),
         col("l_quantity"))
     TxnTable.create(spark, t, li, partitions = 4)
-    TxnTable.compactClustered(spark, t, col("l_shipdate"), col("l_partkey"),
-      targetFiles = 16)
+    TxnTable.compactClustered(spark, t,
+      Seq(col("l_shipdate"), col("l_partkey")), targetFiles = 16)
     val b = li.agg(min(unix_micros(col("l_shipdate"))),
       max(unix_micros(col("l_shipdate"))), max(col("l_partkey"))).head()
     val (tmn, tmx, pmx) = (b.getLong(0), b.getLong(1), b.getLong(2))
     val (loT, hiT) = (tmn + (tmx - tmn) / 4, tmn + (tmx - tmn) / 2)
-    val boxed = TxnTable.readPrunedBox(spark, t,
-      "l_shipdate", loT, hiT, "l_partkey", 1L, pmx / 2)
+    val boxed = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("l_shipdate", loT, hiT),
+        Bound.LongRange("l_partkey", 1L, pmx / 2)))
     val rows = boxed
       .agg(count(lit(1)).as("c"),
         sum(round(col("l_quantity") * 100).cast("long")).as("qty_c"),
@@ -360,7 +364,8 @@ object SourceQueries {
       .collect()
     val read = boxed.inputFiles.length
     val live = TxnTable.snapshotFiles(t).size
-    val oneDim = TxnTable.readPruned(spark, t, "l_shipdate", loT, hiT)
+    val oneDim = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("l_shipdate", loT, hiT)))
       .inputFiles.length
     require(read > 0 && read < live && read <= oneDim,
       s"time box prune: read $read of $live files (1-dim read $oneDim)")
@@ -387,8 +392,8 @@ object SourceQueries {
       Seq(col("source"), col("doc_id")), targetFiles = 10)
     // 'src0'..'src12' spans 5 of the 20 sources in byte order
     // (src0, src1, src10, src11, src12) — scale-independent bounds
-    val pruned = TxnTable.readPrunedString(spark, t, "source",
-      "src0", "src12")
+    val pruned = TxnTable.readPruned(spark, t,
+      Seq(Bound.StringRange("source", "src0", "src12")))
     val rows = pruned
       .agg(count(lit(1)).as("c"), sum(col("doc_id")).as("id_sum"),
         sum(col("n_chars")).as("chars"))
@@ -632,15 +637,17 @@ object SourceQueries {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_quantity"))
     TxnTable.create(spark, t, li, partitions = 4)
-    TxnTable.compactClustered3(spark, t, col("l_partkey"),
-      col("l_suppkey"), col("l_orderkey"), targetFiles = 27)
+    TxnTable.compactClustered(spark, t,
+      Seq(col("l_partkey"), col("l_suppkey"), col("l_orderkey")),
+      targetFiles = 27)
     val mx = li.agg(max(col("l_partkey")), max(col("l_suppkey")),
       max(col("l_orderkey"))).head()
     val (pk, sk, ok) = (mx.getLong(0) / 2, mx.getLong(1) / 2,
       mx.getLong(2) / 2)
-    val dims = Seq(("l_partkey", 1L, pk), ("l_suppkey", 1L, sk),
-      ("l_orderkey", 1L, ok))
-    val boxed = TxnTable.readPrunedBoxN(spark, t, dims)
+    val dims = Seq(Bound.LongRange("l_partkey", 1L, pk),
+      Bound.LongRange("l_suppkey", 1L, sk),
+      Bound.LongRange("l_orderkey", 1L, ok))
+    val boxed = TxnTable.readPruned(spark, t, dims)
     val rows = boxed
       .agg(count(lit(1)).as("c"),
         sum(round(col("l_quantity") * 100).cast("long")).as("qty_c"),
@@ -649,9 +656,8 @@ object SourceQueries {
       .collect()
     val read = boxed.inputFiles.length
     val live = TxnTable.snapshotFiles(t).size
-    val oneDim = dims.map { case (c, lo, hi) =>
-      TxnTable.readPruned(spark, t, c, lo, hi).inputFiles.length
-    }.min
+    val oneDim =
+      dims.map(b => TxnTable.readPruned(spark, t, Seq(b)).inputFiles.length).min
     require(read > 0 && read < live && read <= oneDim,
       s"3-d box prune: read $read of $live files (best 1-dim $oneDim)")
     import spark.implicits._
@@ -757,8 +763,9 @@ object SourceQueries {
       Seq(col("source"), col("n_chars")), targetFiles = 16)
     val (boxed, rows) =
       SkippingIndex.footerFree("the mixed box must plan from the log alone") {
-        val boxed = TxnTable.readPrunedBoxMixed(spark, t,
-          "source", "src2", "src5", Seq(("n_chars", 100L, 320L)))
+        val boxed = TxnTable.readPruned(spark, t,
+          Seq(Bound.StringRange("source", "src2", "src5"),
+            Bound.LongRange("n_chars", 100L, 320L)))
         (boxed, boxed
           .agg(count(lit(1)).as("c"), sum(col("n_chars")).as("nc_sum"),
             sum(col("doc_id")).as("id_sum"))
@@ -766,9 +773,10 @@ object SourceQueries {
       }
     val live = TxnTable.snapshotFiles(t).size
     val read = boxed.inputFiles.length
-    val strOnly = TxnTable.readPrunedString(spark, t, "source",
-      "src2", "src5").inputFiles.length
-    val longOnly = TxnTable.readPruned(spark, t, "n_chars", 100L, 320L)
+    val strOnly = TxnTable.readPruned(spark, t,
+      Seq(Bound.StringRange("source", "src2", "src5"))).inputFiles.length
+    val longOnly = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("n_chars", 100L, 320L)))
       .inputFiles.length
     require(read > 0 && read < live && read <= strOnly &&
       read <= longOnly,
@@ -778,7 +786,7 @@ object SourceQueries {
       .toSeq.toDF("c", "nc_sum", "id_sum")
   }
 
-  /** S32: STRING point-set pruned read — `readPrunedInString` serves a
+  /** S32: STRING point-set pruned read — `readPruned` with a `StringIn` bound serves a
     * `source IN (...)` probe over a source-clustered documents
     * snapshot, reading a strict subset of files with zero footer opens
     * (log stats; asserted in-run). The serving shape for per-domain
@@ -794,8 +802,8 @@ object SourceQueries {
       targetFiles = 16)
     val (probed, rows) =
       SkippingIndex.footerFree("the IN-set prune must plan from the log alone") {
-        val probed = TxnTable.readPrunedInString(spark, t, "source",
-          Seq("src3", "src7", "src12"))
+        val probed = TxnTable.readPruned(spark, t,
+          Seq(Bound.StringIn("source", Seq("src3", "src7", "src12"))))
         (probed, probed
           .agg(count(lit(1)).as("c"), sum(col("n_chars")).as("nc_sum"),
             sum(col("doc_id")).as("id_sum"))
@@ -891,7 +899,8 @@ object SourceQueries {
     // a footer-pruned read subtracts the DV exactly like the full read
     val lo = ck / 2
     val hi = ck / 2 + ck / 16
-    val prunedC = TxnTable.readPruned(spark, t, "o_custkey", lo, hi).count()
+    val prunedC = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("o_custkey", lo, hi))).count()
     val fullC = TxnTable.read(spark, t)
       .filter(col("o_custkey").between(lo, hi)).count()
     require(prunedC == fullC,
@@ -941,13 +950,6 @@ object SourceQueries {
       .orderBy(col("st"))
   }
 
-  /** S24: STATS-IN-LOG pruned reads — every write records per-file
-    * column min/max in the commit's adds, so a pruned range read plans
-    * from the COMMIT LOG alone: ZERO parquet footer opens (counter-
-    * asserted in-run) while still reading a strict subset of the
-    * snapshot's files. At 100 TB this replaces millions of per-query
-    * object-store footer GETs with metadata the planner already holds.
-    * Oracle replays the range aggregate over raw orders. */
   /** Metadata-only aggregates from the commit log (round 13): a range
     * COUNT over a clustered table answers from logged (bounds, rows,
     * null counts) with only boundary files scanned and ZERO footer
@@ -987,6 +989,13 @@ object SourceQueries {
       .toDF("cnt_band", "mn", "mx", "cnt_after")
   }
 
+  /** S24: STATS-IN-LOG pruned reads — every write records per-file
+    * column min/max in the commit's adds, so a pruned range read plans
+    * from the COMMIT LOG alone: ZERO parquet footer opens (counter-
+    * asserted in-run) while still reading a strict subset of the
+    * snapshot's files. At 100 TB this replaces millions of per-query
+    * object-store footer GETs with metadata the planner already holds.
+    * Oracle replays the range aggregate over raw orders. */
   def s24LogStatsPrune(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.TxnTable
     import graft.crawler.SkippingIndex
@@ -1001,8 +1010,8 @@ object SourceQueries {
     require(TxnTable.commits(t).last.adds.forall(_.stats.isDefined),
       "every add must carry write-time stats")
     val ((pruned, rows), window) = graft.core.OpMetrics.scope {
-      val pruned = TxnTable.readPruned(spark, t, "o_custkey",
-        ck / 4, ck / 4 + ck / 8)
+      val pruned = TxnTable.readPruned(spark, t,
+        Seq(Bound.LongRange("o_custkey", ck / 4, ck / 4 + ck / 8)))
       val agg = pruned.groupBy(col("o_orderstatus").as("st"))
         .agg(count(lit(1)).as("cnt"), sum(col("price_c")).as("price_sum"),
           sum(col("o_custkey")).as("ck_sum"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Lake, OpMetrics, TxnTable}
+import graft.core.TxnTable.Bound
 import graft.crawler.SkippingIndex.{FooterReads, footerFree}
 import graft.sql.GraftSql
 
@@ -678,8 +679,8 @@ object SqlDmlQueries {
       // footers, strict file subset, across all three generations
       val prunedCnt = footerFree(
           "pruning must stay zero-footer across nested-ALTER generations") {
-        val pruned = TxnTable.readPruned(spark, t, "o_custkey",
-          1L, ck / 2)
+        val pruned = TxnTable.readPruned(spark, t,
+          Seq(Bound.LongRange("o_custkey", 1L, ck / 2)))
         val prunedCnt = pruned.count()
         require(pruned.inputFiles.length < TxnTable.snapshotFiles(t).size,
           "the low band must prune a strict file subset")
@@ -1002,8 +1003,9 @@ object SqlDmlQueries {
       def base(p: String) = p.split('/').last
       // the box-intersecting file set, from the LOG (the same stats
       // walk the operator uses — a pruned read's plan IS that set)
-      val expected = TxnTable.readPruned(spark, t, "o_custkey",
-        1L, ck / 8).inputFiles.map(base).toSet
+      val expected = TxnTable.readPruned(spark, t,
+        Seq(Bound.LongRange("o_custkey", 1L, ck / 8)))
+        .inputFiles.map(base).toSet
       val outsideTail = TxnTable.commits(t).last.adds.map(_.path).toSet
       val before = TxnTable.snapshotFiles(t).toSet
       val v = GraftSql.execute(spark,
@@ -1023,10 +1025,11 @@ object SqlDmlQueries {
       // bin of a freshly FULL-re-clustered twin at equal content
       TxnTable.cloneShallow(spark, t, d + "/twin")
       TxnTable.compactClustered(spark, d + "/twin",
-        col("o_custkey"), col("o_orderkey"), 8 + c.adds.size)
+        Seq(col("o_custkey"), col("o_orderkey")), 8 + c.adds.size)
       footerFree("box pruning must stay zero-footer") {
-        def band(path: String) = TxnTable.readPrunedBox(spark, path,
-          "o_custkey", 1L, ck / 8, "o_orderkey", 1L, 2 * kx)
+        def band(path: String) = TxnTable.readPruned(spark, path,
+          Seq(Bound.LongRange("o_custkey", 1L, ck / 8),
+            Bound.LongRange("o_orderkey", 1L, 2 * kx)))
         val pt = band(t)
         val pf = band(d + "/twin")
         val (ct2, cf) = (pt.count(), pf.count())
@@ -1116,10 +1119,11 @@ object SqlDmlQueries {
       // of a freshly FULL-re-clustered twin at the same content
       TxnTable.cloneShallow(spark, t, d + "/twin")
       TxnTable.compactClustered(spark, d + "/twin",
-        col("o_custkey"), col("o_orderkey"), 8 + c.adds.size)
+        Seq(col("o_custkey"), col("o_orderkey")), 8 + c.adds.size)
       val pt = footerFree("box pruning must stay zero-footer") {
-        def band(path: String) = TxnTable.readPrunedBox(spark, path,
-          "o_custkey", 1L, ck / 4, "o_orderkey", 1L, 4 * kx)
+        def band(path: String) = TxnTable.readPruned(spark, path,
+          Seq(Bound.LongRange("o_custkey", 1L, ck / 4),
+            Bound.LongRange("o_orderkey", 1L, 4 * kx)))
         val pt = band(t)
         val pf = band(d + "/twin")
         val (ct2, cf) = (pt.count(), pf.count())
@@ -1682,7 +1686,8 @@ object SqlDmlQueries {
       // LOG: old int32 bounds translate into the widened space with
       // zero footer reads
       footerFree("no footer may be opened: bounds come from the commit log") {
-        val pruned = TxnTable.readPruned(spark, t, "ck", 0L, ckMax / 2)
+        val pruned = TxnTable.readPruned(spark, t,
+          Seq(Bound.LongRange("ck", 0L, ckMax / 2)))
         val expectPruned = TxnTable.read(spark, t)
           .filter(col("ck").between(0L, ckMax / 2)).count()
         require(pruned.count() == expectPruned,
@@ -2095,8 +2100,8 @@ object SqlDmlQueries {
            |WHERE o_custkey <= ${ck / 2}""".stripMargin)
       // the clustered layout prunes from the log alone, first read
       val (strict, first) = OpMetrics.scope {
-        val pruned = TxnTable.readPruned(spark, d + "/t3", "o_custkey",
-          0L, ck / 8)
+        val pruned = TxnTable.readPruned(spark, d + "/t3",
+          Seq(Bound.LongRange("o_custkey", 0L, ck / 8)))
         val prunedFiles = pruned.inputFiles.length
         prunedFiles > 0 &&
           prunedFiles < TxnTable.snapshotFiles(d + "/t3").size
@@ -2166,7 +2171,8 @@ object SqlDmlQueries {
         "convert must reference every file with footer-harvested stats")
       // the harvested stats plan the FIRST pruned read zero-footer
       val (kept, first) = OpMetrics.scope(
-        TxnTable.readPruned(spark, d, "o_custkey", 0L, ck / 4)
+        TxnTable.readPruned(spark, d,
+          Seq(Bound.LongRange("o_custkey", 0L, ck / 4)))
           .inputFiles.length)
       require(kept > 0 && kept < beforeFiles.size &&
         first.count(FooterReads) == 0,
@@ -2284,7 +2290,7 @@ object SqlDmlQueries {
       val zS = GraftSql.execute(spark,
         s"OPTIMIZE $n ZORDER BY (o_custkey, o_orderkey)") // v3
       val zA = TxnTable.compactClustered(spark, api,
-        col("o_custkey"), col("o_orderkey"))
+        Seq(col("o_custkey"), col("o_orderkey")))
       require(zS == 3L && zA == 3L &&
         TxnTable.snapshotFiles(stmt).size ==
           TxnTable.snapshotFiles(api).size,
@@ -2622,7 +2628,8 @@ object SqlDmlQueries {
       val live0 = TxnTable.snapshotFiles(t).size
       require(live0 == 4, s"expected the 4-tranche layout, got $live0")
       // range stats CANNOT serve this shape: every file spans the keys
-      require(TxnTable.readPrunedIn(spark, t, "o_orderkey", probes)
+      require(TxnTable.readPruned(spark, t,
+        Seq(Bound.LongIn("o_orderkey", probes)))
         .inputFiles.length == live0,
         "min/max pruning must keep every file on this layout — " +
           "otherwise the gate tests nothing")

@@ -921,17 +921,6 @@ object StreamingQueries {
       .orderBy(col("op"))
   }
 
-  /** ST22: FOLLOW-SCHEMA change-feed generations — the CDC
-    * schema-evolution handshake: a mid-feed ALTER rolls the spool to
-    * `gen-<v>` stamped with the new schema; the old generation ends
-    * with one typed `end_of_generation` row whose to_version points
-    * at the next generation; the consumer drains gen-0, re-binds at
-    * the pointer, and the reassembled feed carries the update (old
-    * shape) plus the post-ALTER insert/delete images (new shape,
-    * discount present). In-run: generation list, terminal typing +
-    * pointer, and pump-checkpoint-loss idempotence (every marker
-    * no-ops, terminal included). Oracle replays the three change sets
-    * relationally. */
   /** ST24: follow-schema CDC REPLICATION — the replica survives
     * source ALTERs: `replicateFollow` segments the version range at
     * every schema commit, replays each segment's row images under
@@ -1073,6 +1062,17 @@ object StreamingQueries {
     } finally graft.sql.GraftSql.unregister(n)
   }
 
+  /** ST22: FOLLOW-SCHEMA change-feed generations — the CDC
+    * schema-evolution handshake: a mid-feed ALTER rolls the spool to
+    * `gen-<v>` stamped with the new schema; the old generation ends
+    * with one typed `end_of_generation` row whose to_version points
+    * at the next generation; the consumer drains gen-0, re-binds at
+    * the pointer, and the reassembled feed carries the update (old
+    * shape) plus the post-ALTER insert/delete images (new shape,
+    * discount present). In-run: generation list, terminal typing +
+    * pointer, and pump-checkpoint-loss idempotence (every marker
+    * no-ops, terminal included). Oracle replays the three change sets
+    * relationally. */
   def st22ChangesGenerations(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.TxnTable
     import graft.streaming.StreamChanges

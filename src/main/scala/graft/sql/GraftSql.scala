@@ -283,10 +283,6 @@ object GraftSql {
       out.toSeq
     }
 
-  /** Execute one DML/DDL/maintenance statement against its registered
-    * target; returns the committed version (or the unchanged head when
-    * nothing changed). SELECTs and DESCRIBE HISTORY belong to
-    * [[query]]. */
   /** Split a group body on semicolons OUTSIDE single-quoted literals
     * (doubled-quote escapes toggle twice — net correct). */
   private def splitStatements(body: String): Seq[String] = {
@@ -311,6 +307,10 @@ object GraftSql {
         "BEGIN GROUP needs AT '<dir>' for the intent marker, or a " +
           "warehouse root (GraftSql.setWarehouse)")))
 
+  /** Execute one DML/DDL/maintenance statement against its registered
+    * target; returns the committed version (or the unchanged head when
+    * nothing changed). SELECTs and DESCRIBE HISTORY belong to
+    * [[query]]. */
   def execute(spark: SparkSession, sqlText: String): Long = sqlText match {
     // ALL-OR-NOTHING multi-table statement group ([[TxnGroup]] as
     // statement text): every inner statement is a DML step on ONE
@@ -403,58 +403,27 @@ object GraftSql {
           TxnTable.compactClusteredWhere(spark, reg.path,
             cols.map(c => org.apache.spark.sql.functions.col(c)),
             wCol, wLo.toLong, wHi.toLong,
-            zTargetFiles(reg, if (cols.length == 3) 27 else 16))
-        // a single PROPERTY-declared cluster column re-clusters by
-        // RANGE (the layout createClustered laid out at birth); an
-        // explicit 1-column ZORDER BY stays rejected (z-ordering one
-        // dimension is just range clustering — the error teaches)
-        // the persisted width applies only on the PROPERTY-driven
-        // path: an explicit ZORDER BY stays exactly ≡ the API call
-        // with its own defaults (the adjudicated statement≡API twin)
-        // the PROPERTY-driven (bare ZORDER) path is INCREMENTAL:
-        // cluster only the un-clustered tail into the persisted
-        // layout, leaving the bulk untouched — at 100 TB that makes
+            zTargetFiles(reg, TxnTable.clusterWidth(cols.length)))
+        // the PROPERTY-driven (bare ZORDER) path re-clusters into the
+        // persisted layout — a single property-declared column by
+        // RANGE (what createClustered laid out at birth) — at the
+        // persisted width, and INCREMENTALLY: only the un-clustered
+        // tail, leaving the bulk untouched — at 100 TB that makes
         // weekly maintenance O(new data), not a full-table rewrite.
         // Past a half-table tail (or with no prior cluster commit) a
-        // full re-cluster is cheaper and resets the chain. An
-        // EXPLICIT ZORDER BY stays exactly ≡ the full API call (the
-        // adjudicated statement≡API twin).
-        case Some(Seq(a)) if zorder == null =>
-          reclusterMaybeTail(spark, reg,
-            Seq(org.apache.spark.sql.functions.col(a)),
-            zTargetFiles(reg, 16),
-            TxnTable.compactClusteredRange(spark, reg.path,
-              org.apache.spark.sql.functions.col(a),
-              zTargetFiles(reg, 16)))
-        case Some(Seq(a, b)) if zorder == null =>
-          reclusterMaybeTail(spark, reg,
-            Seq(org.apache.spark.sql.functions.col(a),
-              org.apache.spark.sql.functions.col(b)),
-            zTargetFiles(reg, 16),
-            TxnTable.compactClustered(spark, reg.path,
-              org.apache.spark.sql.functions.col(a),
-              org.apache.spark.sql.functions.col(b),
-              zTargetFiles(reg, 16)))
-        case Some(Seq(a, b)) =>
+        // full re-cluster is cheaper and resets the chain.
+        case Some(cols) if zorder == null && cols.length <= 3 =>
+          val cs = cols.map(c => org.apache.spark.sql.functions.col(c))
+          val width = zTargetFiles(reg, TxnTable.clusterWidth(cols.length))
+          reclusterMaybeTail(spark, reg, cs, width,
+            TxnTable.compactClustered(spark, reg.path, cs, width))
+        // an EXPLICIT ZORDER BY stays exactly ≡ the full API call with
+        // its own default width (the adjudicated statement≡API twin);
+        // an explicit 1-column ZORDER BY stays rejected (z-ordering
+        // one dimension is just range clustering — the error teaches)
+        case Some(cols) if cols.length == 2 || cols.length == 3 =>
           TxnTable.compactClustered(spark, reg.path,
-            org.apache.spark.sql.functions.col(a),
-            org.apache.spark.sql.functions.col(b), 16)
-        case Some(Seq(a, b, c)) if zorder == null =>
-          reclusterMaybeTail(spark, reg,
-            Seq(org.apache.spark.sql.functions.col(a),
-              org.apache.spark.sql.functions.col(b),
-              org.apache.spark.sql.functions.col(c)),
-            zTargetFiles(reg, 27),
-            TxnTable.compactClustered3(spark, reg.path,
-              org.apache.spark.sql.functions.col(a),
-              org.apache.spark.sql.functions.col(b),
-              org.apache.spark.sql.functions.col(c),
-              zTargetFiles(reg, 27)))
-        case Some(Seq(a, b, c)) =>
-          TxnTable.compactClustered3(spark, reg.path,
-            org.apache.spark.sql.functions.col(a),
-            org.apache.spark.sql.functions.col(b),
-            org.apache.spark.sql.functions.col(c), 27)
+            cols.map(c => org.apache.spark.sql.functions.col(c)))
         case Some(cols) => throw new IllegalArgumentException(
           s"OPTIMIZE ZORDER BY takes 2 or 3 columns, got ${cols.length} " +
             "— a 1-column layout is range clustering (CTAS CLUSTER BY)")
@@ -2455,12 +2424,13 @@ object GraftSql {
               touchedRows.forall(!_.isNullAt(0))) {
             val gName = leadAttr.get
             val pruned = gType(0) match {
-              case StringType => TxnTable.readPrunedInString(spark,
-                factPath, gName,
-                touchedRows.map(_.getString(0)).distinct.toSeq,
+              case StringType => TxnTable.readPruned(spark, factPath,
+                Seq(TxnTable.Bound.StringIn(gName,
+                  touchedRows.map(_.getString(0)).distinct.toSeq)),
                 asOf = toV)
-              case _ => TxnTable.readPrunedIn(spark, factPath, gName,
-                touchedRows.map(_.getLong(0)).distinct.toSeq,
+              case _ => TxnTable.readPruned(spark, factPath,
+                Seq(TxnTable.Bound.LongIn(gName,
+                  touchedRows.map(_.getLong(0)).distinct.toSeq)),
                 asOf = toV)
             }
             (pruned.queryExecution.logical, pruned.inputFiles.toSeq)
@@ -3472,12 +3442,6 @@ object GraftSql {
       s"unsupported DML target shape: ${other.nodeName}")
   }
 
-  /** Effective DML routing: the TABLE property `graft.mor` (a
-    * metadata commit, visible to every session) overrides the session
-    * registration's flag — flipping a grown table to merge-on-read is
-    * table state, not per-session opinion. */
-  /** ZORDER's layout width: the table's graft.targetFiles property
-    * when set, else that compaction arity's own default. */
   /** Bare-`OPTIMIZE t ZORDER` routing: tail-only when a cluster
     * commit exists and the tail is at most half the table's bytes;
     * an empty tail no-ops at the unchanged head. */
@@ -3491,10 +3455,16 @@ object GraftSql {
       case _ => full
     }
 
+  /** ZORDER's layout width: the table's graft.targetFiles property
+    * when set, else that compaction arity's own default. */
   private def zTargetFiles(reg: Reg, dflt: Int): Int =
     TxnTable.properties(reg.path).get("graft.targetFiles")
       .map(_.toInt).getOrElse(dflt)
 
+  /** Effective DML routing: the TABLE property `graft.mor` (a
+    * metadata commit, visible to every session) overrides the session
+    * registration's flag — flipping a grown table to merge-on-read is
+    * table state, not per-session opinion. */
   private def routeMor(reg: Reg): Boolean =
     TxnTable.properties(reg.path).get("graft.mor")
       .map(_.equalsIgnoreCase("true")).getOrElse(reg.mor)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TxnTable
+import graft.core.TxnTable.Bound
 import graft.operators.{Dedup, Similarity}
 import graft.plans.BloomMightContain
 
@@ -23,7 +24,7 @@ import graft.plans.BloomMightContain
   *     SIDECAR (one mergeable filter per bucket — see below): keys the
   *     bloom rejects CANNOT collide with any committed signature, so
   *     only bloom-positive candidates probe the store, and the store
-  *     read is [[TxnTable.readPrunedIn]]-pruned to the candidates'
+  *     read is [[TxnTable.readPruned]] (`LongIn`)-pruned to the candidates'
   *     buckets. A batch of all-new documents reads ZERO store files;
   *     a batch with duplicates reads O(candidate buckets), not
   *     O(store) — per-batch cost tracks the batch, not corpus
@@ -365,8 +366,8 @@ object StreamDedup {
       logScan(StoreScan(streamId, batchId, 0, live, 0))
       sigs.select(col("id")).limit(0)
     } else {
-      val pruned = TxnTable.readPrunedIn(spark, storePath, "bucket",
-        candBuckets)
+      val pruned = TxnTable.readPruned(spark, storePath,
+        Seq(Bound.LongIn("bucket", candBuckets)))
       val read = pruned.inputFiles.length
       // in-run pruning invariant, checked on EVERY batch of every run
       require(read <= live,

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftEngine
 import graft.core.{Lake, OpMetrics, TxnTable}
+import graft.core.TxnTable.Bound
 import graft.operators.{Dedup, IncrementalView}
 import graft.sql.GraftSql
 
@@ -266,7 +267,8 @@ object Probe {
       val (cnt, scanned, total) = m.time(s"count_range files=$files",
         reps = 3)(TxnTable.countRange(spark, t, "g", lo, hi))
       val scanCnt = m.time(s"scan_count files=$files", reps = 3)(
-        TxnTable.readPruned(spark, t, "g", lo, hi).count())
+        TxnTable.readPruned(spark, t, Seq(Bound.LongRange("g", lo, hi)))
+          .count())
       require(cnt == scanCnt, s"metadata_count: $cnt vs scan $scanCnt")
       m.fact(s"scanned files=$files", scanned)
       m.fact(s"total files=$files", total)

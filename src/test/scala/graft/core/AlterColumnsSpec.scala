@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 
 /** ALTER TABLE ADD/DROP COLUMNS as metadata-only commits: O(1) at any
   * table size, null-fill on old files, drop keeps the bytes (restore
@@ -171,7 +172,8 @@ class AlterColumnsSpec extends SparkSpecBase {
     val (_, window) = OpMetrics.scope {
       // pruned read on the RENAMED column: log-stats plan, zero footers,
       // strict subset, exact rows
-      val pruned = TxnTable.readPruned(spark, t, "grp", 2L, 3L)
+      val pruned = TxnTable.readPruned(spark, t,
+        Seq(Bound.LongRange("grp", 2L, 3L)))
       assert(pruned.count() == 100L)
       assert(pruned.columns.contains("grp"))
       val (cnt, scanned, total) = TxnTable.countRange(spark, t, "grp", 2L, 5L)
@@ -354,7 +356,8 @@ class AlterColumnsSpec extends SparkSpecBase {
     // pruned read: old adds' logged bounds translate unchanged into
     // the widened space — zero footer reads, strict file subset
     val (_, window) = OpMetrics.scope {
-      val pruned = TxnTable.readPruned(spark, t, "k", 100L, 299L)
+      val pruned = TxnTable.readPruned(spark, t,
+        Seq(Bound.LongRange("k", 100L, 299L)))
       assert(pruned.count() == 200L)
       assert(pruned.inputFiles.length < 9,
         "pruning must keep a strict subset across generations")

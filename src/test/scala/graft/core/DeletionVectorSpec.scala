@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 
 /** Merge-on-read deletes (deletion vectors): position-level delete
   * marks instead of file rewrites — the O(deleted rows) delete path.
@@ -61,7 +62,8 @@ class DeletionVectorSpec extends SparkSpecBase {
     mk(t)
     TxnTable.deleteWhereMor(spark, t, col("id") === 21L)
     // footer-pruned range read must not see the deleted row
-    val pruned = ids(TxnTable.readPruned(spark, t, "g", 2L, 2L))
+    val pruned = ids(TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("g", 2L, 2L))))
     assert(pruned == Set(22L, 23L, 24L, 25L, 26L, 27L, 28L))
     // a keyed merge rewriting the DV'd file keeps the row dead and
     // clears the mapping (copy-on-write materializes the DV)

@@ -180,6 +180,56 @@ class DmlJobsSpec extends SparkSpecBase {
     assertClean(t)
   }
 
+  // Planning and scoped-maintenance budgets on a log-stats table (every
+  // add carries stats). Measured on these exact calls before the single
+  // log-stats selector: the range read ran 4 jobs to choose its files
+  // (persist, count, collect and unpersist over stats already on the
+  // driver), the IN, string and mixed string x long reads 0;
+  // binPackWhere ran 6 jobs in all, compactClusteredWhere 9 and
+  // selectFiles over a local index 4 — 4 of each being that selection.
+  test("pruned reads plan with zero jobs for every bound shape") {
+    import TxnTable.Bound
+    val t = mk("graft_jobs_pruned")
+    val shapes = Seq(
+      "long range" -> Seq(Bound.LongRange("id", 10L, 19L)),
+      "long IN" -> Seq(Bound.LongIn("id", Seq(5L, 600L))),
+      "string range" -> Seq(Bound.StringRange("s", "r10", "r19")),
+      "string IN" -> Seq(Bound.StringIn("s", Seq("r5", "r600"))),
+      "string x long" -> Seq(Bound.StringRange("s", "r1", "r3"),
+        Bound.LongRange("id", 100L, 399L)))
+    shapes.foreach { case (kind, bounds) =>
+      val (df, plan) = measured(TxnTable.readPruned(spark, t, bounds))
+      report(s"readPruned planning ($kind)", plan)
+      assert(plan.jobs == 0, s"$kind planned with ${plan.jobs} jobs")
+      assert(df.inputFiles.length < Files4, s"$kind pruned no file")
+    }
+  }
+
+  test("scoped compactions and selectFiles stay within their job budgets") {
+    val t = mk("graft_jobs_bpw")
+    val (_, bpw) = measured(TxnTable.binPackWhere(spark, t, "id", 0L, 499L))
+    report("binPackWhere (2 of 4 files)", bpw)
+    assert(TxnTable.commits(t).last.removes.size == 2)
+    val z = mk("graft_jobs_zw")
+    val (_, zw) = measured(TxnTable.compactClusteredWhere(spark, z,
+      Seq(col("g"), col("id")), "id", 0L, 499L))
+    report("compactClusteredWhere (2 of 4 files)", zw)
+    assert(TxnTable.commits(z).last.removes.size == 2)
+    assert(count(t) == TableRows && count(z) == TableRows)
+    // a driver-loop index (≤ DistributeThreshold files) is a local
+    // frame: one collect of (file, keep), counted on the driver
+    val live = TxnTable.snapshotFiles(t).map(f => Paths.get(t, f).toString)
+    val idx = graft.crawler.SkippingIndex.buildForFiles(spark, live, Seq("id"))
+    val (kept, sel) = measured(
+      graft.crawler.SkippingIndex.selectFiles(idx, 0, 0L, 10L))
+    report("selectFiles over a local index", sel)
+    assert(kept.size == 1)
+    // measured 2, 5 and 0 (6, 9 and 4 before)
+    assert(bpw.jobs <= 2 && zw.jobs <= 5 && sel.jobs == 0,
+      s"jobs: binPackWhere ${bpw.jobs}, compactClusteredWhere ${zw.jobs}, " +
+        s"selectFiles ${sel.jobs}")
+  }
+
   test("a DELETE that empties its hit files commits no add and no orphan") {
     val t = mk("graft_jobs_del_all")
     val v = TxnTable.deleteWhere(spark, t, col("id") < RowsPerFile.toLong)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 import graft.crawler.SkippingIndex
 
 /** Stats-in-log: every write records per-file column min/max in the
@@ -34,7 +35,8 @@ class LogStatsSpec extends SparkSpecBase {
     assert(adds.nonEmpty && adds.forall(_.stats.isDefined),
       "every add must carry stats")
     assert(adds.head.stats.get.contains("\"l\""))
-    val (df, reads) = footers(TxnTable.readPruned(spark, t, "g", 2L, 3L))
+    val (df, reads) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("g", 2L, 3L))))
     assert(reads == 0, s"log-stats prune must open no footer, read $reads")
     assert(df.select("id").as[Long].collect().toSet ==
       (for (g <- 2L to 3L; i <- 1L to 50L) yield g * 1000 + i).toSet)
@@ -42,10 +44,10 @@ class LogStatsSpec extends SparkSpecBase {
       "the log stats must actually skip files")
     // the IN-set and N-dim box reads ride the same log index
     val (inDf, inReads) = footers(
-      TxnTable.readPrunedIn(spark, t, "g", Seq(1L, 6L)))
+      TxnTable.readPruned(spark, t, Seq(Bound.LongIn("g", Seq(1L, 6L)))))
     assert(inReads == 0 && inDf.count() == 100)
-    val (boxDf, boxReads) = footers(TxnTable.readPrunedBoxN(spark, t,
-      Seq(("g", 2L, 3L), ("id", 2000L, 2025L))))
+    val (boxDf, boxReads) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("g", 2L, 3L), Bound.LongRange("id", 2000L, 2025L))))
     assert(boxReads == 0 && boxDf.count() == 25)
   }
 
@@ -54,7 +56,8 @@ class LogStatsSpec extends SparkSpecBase {
     val t = Files.createTempDirectory("graft_ls2").toString + "/t"
     mk(t)
     val (df, reads) = footers(
-      TxnTable.readPrunedString(spark, t, "name", "k2000", "k2999"))
+      TxnTable.readPruned(spark, t,
+        Seq(Bound.StringRange("name", "k2000", "k2999"))))
     assert(reads == 0, s"string log prune must open no footer, got $reads")
     // string-lexicographic: g=2's k2001..k2050 (50) plus g=0's
     // k21..k29 (9 — "k21" > "k2000" byte-wise)
@@ -70,7 +73,7 @@ class LogStatsSpec extends SparkSpecBase {
     assert(st.contains("\"cols\":") && !st.contains(longPad.take(100)),
       "oversized string bounds must not be logged")
     val (df2, reads2) = footers(
-      TxnTable.readPrunedString(spark, t2, "s", "a", "az"))
+      TxnTable.readPruned(spark, t2, Seq(Bound.StringRange("s", "a", "az"))))
     assert(reads2 == 0)
     assert(df2.select("id").as[Long].collect().toSet == Set(1L),
       "conservative keep + residual predicate must stay exact")
@@ -91,14 +94,16 @@ class LogStatsSpec extends SparkSpecBase {
       Seq((900L, 9L), (901L, 9L)).toDF("id", "g"))                  // v1
     val statless =
       TxnTable.snapshotFiles(t).size - 1 // v1's single add has stats
-    val (df, reads) = footers(TxnTable.readPruned(spark, t, "g", 9L, 9L))
+    val (df, reads) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("g", 9L, 9L))))
     assert(reads == statless.toLong,
       s"exactly the pre-stats files footer-read: $reads vs $statless")
     assert(df.select("id").as[Long].collect().toSet == Set(900L, 901L))
     // compacting rewrites everything through the stats-writing path →
     // the whole table becomes log-prunable
     TxnTable.compact(spark, t, targetFiles = 2)
-    val (df2, reads2) = footers(TxnTable.readPruned(spark, t, "g", 9L, 9L))
+    val (df2, reads2) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("g", 9L, 9L))))
     assert(reads2 == 0, s"post-compact prune must be metadata-only")
     assert(df2.select("id").as[Long].collect().toSet == Set(900L, 901L))
   }
@@ -112,7 +117,8 @@ class LogStatsSpec extends SparkSpecBase {
     }
     assert(TxnTable.currentVersion(t) >= TxnTable.CheckpointInterval)
     val ((df, reads), window) =
-      OpMetrics.scope(footers(TxnTable.readPruned(spark, t, "g", 9L, 9L)))
+      OpMetrics.scope(footers(TxnTable.readPruned(spark, t,
+        Seq(Bound.LongRange("g", 9L, 9L)))))
     val vreads = window.count(TxnTable.VersionFileReads)
     assert(reads == 0,
       s"checkpointed adds must still carry stats, footer-read $reads")
@@ -126,8 +132,9 @@ class LogStatsSpec extends SparkSpecBase {
     val t = Files.createTempDirectory("graft_ls6").toString + "/t"
     mk(t)
     TxnTable.deleteWhereMor(spark, t, col("id") === 3005L)
-    val (df, reads) = footers(TxnTable.readPrunedBoxMixed(spark, t,
-      "name", "k3000", "k3999", Seq(("id", 3001L, 3010L))))
+    val (df, reads) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.StringRange("name", "k3000", "k3999"),
+        Bound.LongRange("id", 3001L, 3010L))))
     assert(reads == 0)
     assert(df.select("id").as[Long].collect().toSet ==
       ((3001L to 3010L).toSet - 3005L),
@@ -147,11 +154,13 @@ class LogStatsSpec extends SparkSpecBase {
     // anywhere (not in their stats' attempted set, not in their
     // footers) — they must be conservatively kept, never skipped, and
     // their rows surface with v = NULL (excluded by the residual)
-    val df = TxnTable.readPruned(spark, t, "v", 250L, 300L)
+    val df = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("v", 250L, 300L)))
     assert(df.select("id").as[Long].collect().toSet == (25L to 30L).toSet)
     // pruning on the ORIGINAL column stays zero-footer: every file's
     // stats attempted "id"
-    val (df2, reads) = footers(TxnTable.readPruned(spark, t, "id", 5L, 8L))
+    val (df2, reads) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("id", 5L, 8L))))
     assert(reads == 0, s"id-prune must stay metadata-only, read $reads")
     assert(df2.select("id").as[Long].collect().toSet == (5L to 8L).toSet)
   }
@@ -159,19 +168,21 @@ class LogStatsSpec extends SparkSpecBase {
   test("string IN-set prune: zero footers, strict subset, empty set") {
     val t = Files.createTempDirectory("graft_ls7").toString + "/t"
     mk(t)
-    val (df, reads) = footers(TxnTable.readPrunedInString(spark, t,
-      "name", Seq("k1001", "k5005", "k1001")))
+    val (df, reads) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.StringIn("name", Seq("k1001", "k5005", "k1001")))))
     assert(reads == 0)
     assert(df.select("id").as[Long].collect().toSet == Set(1001L, 5005L))
     assert(df.inputFiles.length < TxnTable.snapshotFiles(t).size)
-    assert(TxnTable.readPrunedInString(spark, t, "name", Nil).isEmpty)
+    assert(TxnTable.readPruned(spark, t, Seq(Bound.StringIn("name", Nil)))
+      .isEmpty)
   }
 
   test("DVs and log-stats pruning compose") {
     val t = Files.createTempDirectory("graft_ls5").toString + "/t"
     mk(t)
     TxnTable.deleteWhereMor(spark, t, col("id") === 2001L)
-    val (df, reads) = footers(TxnTable.readPruned(spark, t, "g", 2L, 2L))
+    val (df, reads) = footers(TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("g", 2L, 2L))))
     assert(reads == 0)
     assert(df.select("id").as[Long].collect().toSet ==
       (2L to 50L).map(2000L + _).toSet,

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 import graft.crawler.SkippingIndex
 import graft.crawler.SkippingIndex.FooterReads
 
@@ -27,7 +28,7 @@ class OpMetricsSpec extends SparkSpecBase {
   }
 
   private def prunedRead(t: String): Long =
-    TxnTable.readPruned(spark, t, "id", 1L, 10L).count()
+    TxnTable.readPruned(spark, t, Seq(Bound.LongRange("id", 1L, 10L))).count()
 
   test("concurrent scopes on two threads each see only their own reads") {
     val (a, b) = (statless(3), statless(5))

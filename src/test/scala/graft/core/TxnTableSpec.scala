@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 
 /** The ACID properties of TxnTable, pinned:
   *  - optimistic concurrency: exactly one writer wins a version
@@ -285,7 +286,8 @@ class TxnTableSpec extends SparkSpecBase {
       .toDF("id", "a", "b")
     create(spark, t, df, partitions = 4)
     val vBefore = currentVersion(t)
-    val v = compactClustered(spark, t, col("a"), col("b"), targetFiles = 16)
+    val v = compactClustered(spark, t, Seq(col("a"), col("b")),
+      targetFiles = 16)
     assert(v == vBefore + 1)
     assert(snapshotFiles(t).size == 16)
     // logical content unchanged; pre-compact snapshot stays readable
@@ -310,14 +312,14 @@ class TxnTableSpec extends SparkSpecBase {
     assert(boxRows == 4096L / 4, s"box scan saw $boxRows rows")
     // readPruned = the same result as the full read + filter, from a
     // strict subset of the files
-    val pruned = readPruned(spark, t, "a", 0L, 15L)
+    val pruned = readPruned(spark, t, Seq(Bound.LongRange("a", 0L, 15L)))
     assert(pruned.inputFiles.length <= 8,
       s"readPruned scanned ${pruned.inputFiles.length}/16 files")
     val full = read(spark, t).filter(col("a").between(0, 15))
     assert(pruned.orderBy(col("id")).collect().toSeq ===
       full.orderBy(col("id")).collect().toSeq)
     // out-of-range → empty frame, schema intact
-    val none = readPruned(spark, t, "a", 1000L, 2000L)
+    val none = readPruned(spark, t, Seq(Bound.LongRange("a", 1000L, 2000L)))
     assert(none.count() == 0 && none.columns.toSeq == Seq("id", "a", "b"))
   }
 
@@ -370,17 +372,19 @@ class TxnTableSpec extends SparkSpecBase {
       "300-file footer index must not be a driver-materialized relation")
     assert(idx.count() == 300)
     // all three pruned-read shapes stay correct AND strictly pruned
-    val pr = readPruned(spark, t, "id", 100L, 199L)
+    val pr = readPruned(spark, t, Seq(Bound.LongRange("id", 100L, 199L)))
     assert(pr.inputFiles.length < 30,
       s"range prune kept ${pr.inputFiles.length}/300 files")
     assert(pr.count() == 100)
     val vals = Seq(5L, 1500L, 2995L)
-    val pin = readPrunedIn(spark, t, "id", vals)
+    val pin = readPruned(spark, t, Seq(Bound.LongIn("id", vals)))
     assert(pin.inputFiles.length <= 3 * 2,
       s"point prune kept ${pin.inputFiles.length}/300 files")
     assert(pin.select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
       == vals.sorted)
-    val box = readPrunedBox(spark, t, "id", 0L, 99L, "grp", 0L, 9L)
+    val box = readPruned(spark, t,
+      Seq(Bound.LongRange("id", 0L, 99L),
+        Bound.LongRange("grp", 0L, 9L)))
     assert(box.inputFiles.length < 30 && box.count() == 100)
   }
 
@@ -442,7 +446,7 @@ class TxnTableSpec extends SparkSpecBase {
       java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(18000 + i / 2))))
       .toDF("id", "d")
     createClustered(spark, t, df, Seq(col("d")), targetFiles = 8)
-    val pr = readPruned(spark, t, "d", 18020L, 18039L)
+    val pr = readPruned(spark, t, Seq(Bound.LongRange("d", 18020L, 18039L)))
     assert(pr.count() == 40, "date-box must select exactly the day range")
     assert(pr.inputFiles.length < 8,
       s"date pruning kept ${pr.inputFiles.length}/8 files")
@@ -771,7 +775,7 @@ class TxnTableSpec extends SparkSpecBase {
     // compact's removes), so the compaction must land at the next
     // version WITHOUT re-running its rewrite job.
     val (v, writes) = try OpMetrics.scope(
-        compactClustered(spark, t, col("id"), col("a"), targetFiles = 8))
+        compactClustered(spark, t, Seq(col("id"), col("a")), targetFiles = 8))
       finally TxnTable.preCommitHook = () => ()
     assert(fired)
     assert(v == 2L && currentVersion(t) == 2L)
@@ -786,7 +790,8 @@ class TxnTableSpec extends SparkSpecBase {
     assert(read(spark, t).count() == 1034)
     assert(onDisk(t) == referenced(t))
     // and the clustered layout still serves pruned reads
-    assert(readPruned(spark, t, "id", 100L, 150L).count() == 51)
+    assert(readPruned(spark, t, Seq(Bound.LongRange("id", 100L, 150L)))
+      .count() == 51)
   }
 
   test("aborted append and duplicate stream batch clean their staging") {
@@ -847,7 +852,7 @@ class TxnTableSpec extends SparkSpecBase {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(t, "data", "part-orphan.parquet"),
       "not a parquet file".getBytes)
-    val pruned = readPruned(spark, t, "a", 1L, 2L)
+    val pruned = readPruned(spark, t, Seq(Bound.LongRange("a", 1L, 2L)))
     assert(pruned.count() == 128)
     assert(pruned.agg(min(col("id")), max(col("id"))).head() match {
       case r => r.getLong(0) == 64L && r.getLong(1) == 191L
@@ -979,7 +984,8 @@ class TxnTableSpec extends SparkSpecBase {
     val wide = (1000 until 1512).map(i => (i.toLong, s"r$i")).toDF("id", "s")
     appendCas(spark, t, wide, expectedBase = 1L,
       clusterBy = Seq(col("id")), partitions = 8)
-    val pruned = readPruned(spark, t, "id", 1100L, 1150L)
+    val pruned = readPruned(spark, t,
+      Seq(Bound.LongRange("id", 1100L, 1150L)))
     assert(pruned.count() == 51)
   }
 
@@ -998,7 +1004,8 @@ class TxnTableSpec extends SparkSpecBase {
     // the new layout is clustered: a narrow range prunes files
     val o = commits(t).find(_.op == "overwrite").get
     assert(o.removes.size >= 4 && o.adds.size == 4)
-    assert(readPruned(spark, t, "id", 0L, 90L).count() == 10)
+    assert(readPruned(spark, t, Seq(Bound.LongRange("id", 0L, 90L)))
+      .count() == 10)
   }
 
   test("merge on a schema-evolved table preserves evolved columns") {
@@ -1097,7 +1104,8 @@ class TxnTableSpec extends SparkSpecBase {
     val batch = (0 until 512).map(i => (i.toLong, s"r$i")).toDF("id", "s")
     appendStreamBatch(spark, t, batch, "cstream", 0L,
       partitions = 8, clusterBy = Seq(col("id")))
-    assert(readPruned(spark, t, "id", 100L, 120L).count() == 21)
+    assert(readPruned(spark, t, Seq(Bound.LongRange("id", 100L, 120L)))
+      .count() == 21)
     // redelivery of the clustered batch is still a no-op
     assert(appendStreamBatch(spark, t, batch, "cstream", 0L,
       partitions = 8, clusterBy = Seq(col("id"))).isEmpty)
@@ -1110,9 +1118,11 @@ class TxnTableSpec extends SparkSpecBase {
     val grid = (for (a <- 0 until 32; b <- 0 until 32)
       yield (a.toLong, b.toLong, a * 32L + b)).toDF("a", "b", "v")
     create(spark, t, grid, partitions = 4)
-    compactClustered(spark, t, col("a"), col("b"), targetFiles = 16)
+    compactClustered(spark, t, Seq(col("a"), col("b")), targetFiles = 16)
     val live = snapshotFiles(t).size
-    val boxed = readPrunedBox(spark, t, "a", 4L, 7L, "b", 20L, 23L)
+    val boxed = readPruned(spark, t,
+      Seq(Bound.LongRange("a", 4L, 7L),
+        Bound.LongRange("b", 20L, 23L)))
     assert(boxed.count() == 16)
     assert(boxed.agg(sum(col("v"))).head().getLong(0) ==
       (for (a <- 4 to 7; b <- 20 to 23) yield a * 32L + b).sum)
@@ -1120,10 +1130,13 @@ class TxnTableSpec extends SparkSpecBase {
     assert(read > 0 && read < live,
       s"box read must be a strict subset: $read of $live files")
     // and tighter than either single-dimension prune alone
-    val onlyA = readPruned(spark, t, "a", 4L, 7L).inputFiles.length
+    val onlyA =
+      readPruned(spark, t, Seq(Bound.LongRange("a", 4L, 7L))).inputFiles.length
     assert(read <= onlyA, s"box read $read beat by 1-dim read $onlyA")
     // empty box → zero files
-    assert(readPrunedBox(spark, t, "a", 500L, 600L, "b", 0L, 31L)
+    assert(readPruned(spark, t,
+      Seq(Bound.LongRange("a", 500L, 600L),
+        Bound.LongRange("b", 0L, 31L)))
       .inputFiles.isEmpty)
   }
 

@@ -109,24 +109,17 @@ class SkippingIndexSpec extends SparkSpecBase {
     val c = idx.find(_._1.endsWith("control.parquet")).get._2
     assert(c.getSeq[Any](2).head == 10L && c.getSeq[Any](3).head == 19L)
 
-    // string index: same contract
-    val sidx = SkippingIndex
-      .buildStringIndex(spark, Seq(mixed, control), "source").collect()
-      .map(r => r.getString(0) -> r).toMap
-    val sm = sidx.find(_._1.endsWith("mixed.parquet")).get._2
-    assert(sm.isNullAt(2) && sm.isNullAt(3))
-    val sc = sidx.find(_._1.endsWith("control.parquet")).get._2
-    assert(sc.getString(2) == "bbb" && sc.getString(3) == "ccc")
-
-    // stats-in-log write-time cache: the voided columns never reach the
-    // commit log (a frozen too-narrow bound would make every future
-    // pruned read of the file wrong, not just one query)
+    // the one footer parser, behind the index above, the stats-in-log
+    // write cache and the pruned reads' footer fallback: the voided
+    // columns carry no bounds (a frozen too-narrow bound in the commit
+    // log would make every future pruned read of the file wrong), and
+    // string bounds fold in unsigned byte order
     val fs = SkippingIndex.fileStats(conf, mixed).get
-    assert(fs._1 === 12L)
-    assert(!fs._3.contains("id") && !fs._4.contains("source"))
+    assert(fs.rows === 12L)
+    assert(!fs.longs.contains("id") && !fs.strings.contains("source"))
     val fsc = SkippingIndex.fileStats(conf, control).get
-    assert(fsc._3("id") === ((10L, 19L)))
-    assert(fsc._4("source") === (("bbb", "ccc")))
+    assert(fsc.longs("id") === ((10L, 19L)))
+    assert(fsc.strings("source") === (("bbb", "ccc")))
   }
 
   test("files without stats for the column are conservatively kept") {

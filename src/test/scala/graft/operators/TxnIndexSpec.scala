@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 import graft.core.TxnTable
 
 /** The transactional text index, pinned:
@@ -414,7 +415,8 @@ class TxnIndexSpec extends SparkSpecBase {
     val restored = TxnIndex.bm25TopK(spark, idx, q, 10).collect().toSeq
     assert(restored == preCompact,
       "restore across compaction must revive the exact served answers")
-    val statsTranches = TxnTable.readPrunedIn(spark, idx, "bucket", Seq(-1L))
+    val statsTranches = TxnTable.readPruned(spark, idx,
+      Seq(Bound.LongIn("bucket", Seq(-1L))))
       .filter(col("kind") === "s").count()
     assert(statsTranches == 3,
       s"expected the 3 pre-compact stats tranches back, got $statsTranches")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 import graft.core.TxnTable
 
 /** The transactional vector index, pinned:
@@ -219,7 +220,8 @@ class TxnVectorIndexSpec extends SparkSpecBase {
       "restore across compaction must revive the exact served answers")
     assert(TxnTable.read(spark, idx).filter(col("kind") === "t").count() > 0,
       "the tombstone rows must be revived (merge-on-read state)")
-    val tranches = TxnTable.readPrunedIn(spark, idx, "list", Seq(-1L))
+    val tranches = TxnTable.readPruned(spark, idx,
+      Seq(Bound.LongIn("list", Seq(-1L))))
       .filter(col("kind") === "s").count()
     assert(tranches == 3,
       s"expected the 3 pre-compact tranche rows back, got $tranches")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 import graft.plans.ZOrderInterleave
 
 class ZOrderSpec extends SparkSpecBase {
@@ -141,7 +142,8 @@ class ZOrderSpec extends SparkSpecBase {
     val outsideTail = TxnTable.commits(t).last.adds.map(_.path).toSet
     val n = (0L until 8000L).size + 100
     // scope to the low quarter: only intersecting files rewrite
-    val expected = TxnTable.readPruned(spark, t, "g", 0L, 1999L)
+    val expected = TxnTable.readPruned(spark, t,
+      Seq(Bound.LongRange("g", 0L, 1999L)))
       .inputFiles.map(_.split('/').last).toSet
     val v = TxnTable.compactClusteredWhere(spark, t,
       Seq(col("g"), col("v")), "g", 0L, 1999L, targetFiles = 8)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.core.TxnTable.Bound
 import graft.core.{OpMetrics, TxnTable}
 import graft.crawler.SkippingIndex.FooterReads
 
@@ -974,7 +975,8 @@ class GraftSqlSpec extends SparkSpecBase {
       // pruning works again over the re-clustered layout: strict
       // subset, zero footers, exact rows
       val (_, window) = OpMetrics.scope {
-        val pruned = TxnTable.readPruned(spark, d, "g", 2L, 3L)
+        val pruned = TxnTable.readPruned(spark, d,
+          Seq(Bound.LongRange("g", 2L, 3L)))
         assert(pruned.count() == 102L) // 100 base + the g=2 and g=3 tail rows
         assert(pruned.inputFiles.length < 8)
       }
