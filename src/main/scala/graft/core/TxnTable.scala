@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   IntegerType, LongType, ShortType, StringType, StructField, StructType,
   TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.crawler.SkippingIndex.FileStats
 
@@ -95,7 +97,7 @@ case class BySourceDelete(cond: Option[Column] = None) extends MergeBySource
   *  - **Time travel**: `read(spark, path, asOf = N)`.
   *  - **Delete/compact as rewrites**: `deleteWhere` rewrites only the
   *    files that contain matching rows (file-level pruning via one
-  *    `input_file_name()` pass); `compact` folds the current snapshot
+  *    file-tagged probe pass); `compact` folds the current snapshot
   *    into fewer files; both are ordinary commits.
   *
   * Scale notes: the log is metadata — O(1) JSON per commit. Every
@@ -903,56 +905,132 @@ object TxnTable {
       .toSet
   }
 
+  /** The name a parquet scan reports for snapshot file `f` (table-relative
+    * or absolute): the last segment of its URI, URL-encoded the way
+    * `_metadata.file_path` gives it (`part a+b.parquet` scans as
+    * `part%20a+b.parquet`). DV rows and the `__fname` column carry this
+    * form. */
+  private def scanName(path: String, f: String): String =
+    new org.apache.hadoop.fs.Path(localRoot(path).resolve(f).toString)
+      .toUri.getRawPath.split('/').last
+
+  /** Whether `scan` is a file scan exposing the `_metadata` column (the
+    * zero-file substitute of [[snapshotScan]] is not). */
+  private def hasFileMetadata(scan: DataFrame): Boolean =
+    scan.queryExecution.analyzed.metadataOutput.exists(_.name == "_metadata")
+
+  /** `scan` with each row's data-file scan name (`__fname`) and row
+    * position (`__pos`), both read from the file source's `_metadata`
+    * column. Both are deterministic (Spark's per-row file-name function
+    * is not, and Catalyst pushes no filter below it), so a filter above
+    * the tag still pushes into the parquet scan. A frame with no file
+    * metadata gets constant columns. */
+  private def withFilePos(scan: DataFrame): DataFrame =
+    if (hasFileMetadata(scan))
+      scan.select(col("*"),
+        substring_index(col("_metadata.file_path"), "/", -1).as("__fname"),
+        col("_metadata.row_index").as("__pos"))
+    else scan.select(col("*"), lit("").as("__fname"), lit(0L).as("__pos"))
+
+  /** True for a row of `file` (a path or a scan name) at position `pos`
+    * that no `deleted` set holds: a deterministic UDF over the per-file
+    * position sets, which ride the task closure — no join, no DV scan,
+    * no job. */
+  private def notDeleted(deleted: Map[String, Roaring64Bitmap])(
+      file: Column, pos: Column): Column = {
+    val isDeleted = udf((f: String, p: Long) =>
+      deleted.get(f.substring(f.lastIndexOf('/') + 1)).exists(_.contains(p)))
+    !isDeleted.withName("dv_deleted")(file, pos)
+  }
+
+  /** Raw scans bind PHYSICAL names; alias back to the snapshot's logical
+    * names — the column-mapping seam every read path flows through. */
+  private def logicalAt(path: String, asOf: Long, df: DataFrame): DataFrame =
+    recordedSchemaAt(path, asOf).map(toLogical(df, _)).getOrElse(df)
+
+  /** Live rows of a raw scan of snapshot `asOf`'s files, tagged by
+    * [[withFilePos]] (the bookkeeping columns pass through the logical
+    * renaming), minus the rows whose position is in their file's
+    * `deleted` set. */
+  private def liveTagged(path: String, asOf: Long, scan: DataFrame,
+      deleted: Map[String, Roaring64Bitmap]): DataFrame = {
+    val tagged = withFilePos(scan)
+    logicalAt(path, asOf,
+      if (deleted.isEmpty) tagged
+      else tagged.filter(notDeleted(deleted)(col("__fname"), col("__pos"))))
+  }
+
   /** Apply a snapshot's DELETION VECTORS to a raw parquet scan of (a
-    * subset of) its files: attach the scan-time file name and row
-    * position (`input_file_name()` / `_metadata.row_index` — both must
-    * be planted BEFORE any join buries the scan), then anti-join the
-    * (file, pos) pairs listed in the snapshot's DV files. A snapshot
-    * with no DVs returns the scan untouched — ZERO plan overhead on the
-    * common path. DV rows are cumulative per file (a newer DV is a
-    * superset of the one it replaced), so reading every mapped DV file
-    * and anti-joining the union is exact even when one DV file is
-    * current for file A but superseded for file B. The DV side is
-    * O(deleted rows) and Spark broadcast-joins it while small; compact
-    * materializes and clears DVs when they grow. `keepFname` returns
-    * the frame with `__fname` still attached for the rewrite paths. */
+    * subset of) its files. A snapshot with no DVs returns the scan
+    * untouched — ZERO plan overhead on the common path; otherwise the
+    * scan is filtered by [[notDeleted]] on its `_metadata`, so a filter
+    * above still pushes down. Each file's positions come from its own
+    * current DV file ([[deletedAt]]), loaded once per JVM on the
+    * driver. `keepFname` returns the frame with `__fname` attached
+    * ([[liveTagged]]) for the rewrite paths. */
   private def applyDv(spark: SparkSession, path: String, asOf: Long,
       scan: DataFrame, keepFname: Boolean): DataFrame = {
     val dvm = snapshotDvs(path, asOf)
-    def named = scan.withColumn("__fname",
-      element_at(split(input_file_name(), "/"), -1))
-    val dvApplied =
-      if (dvm.isEmpty) { if (keepFname) named else scan }
-      else {
-        val cols = scan.columns.toSeq
-        val dv = readDvs(spark, path, dvm.values)
-          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-        val withMeta = named.withColumn("__pos", col("_metadata.row_index"))
-        val out = withMeta.join(dv,
-          withMeta("__fname") === dv("__dv_file") &&
-            withMeta("__pos") === dv("__dv_pos"), "left_anti")
-          .drop("__pos")
-        if (keepFname) out else out.select(cols.map(col): _*)
-      }
-    // column mapping: raw scans bind PHYSICAL names; alias back to the
-    // snapshot's logical names here — the single seam every read path
-    // flows through (after the DV machinery, which only consumes
-    // __fname/_metadata and never a data column)
-    recordedSchemaAt(path, asOf).map(toLogical(dvApplied, _))
-      .getOrElse(dvApplied)
+    if (keepFname)
+      liveTagged(path, asOf, scan, deletedAt(spark, path, dvm)).drop("__pos")
+    else if (dvm.isEmpty || !hasFileMetadata(scan)) logicalAt(path, asOf, scan)
+    else logicalAt(path, asOf, scan.filter(notDeleted(deletedAt(spark, path,
+      dvm))(col("_metadata.file_path"), col("_metadata.row_index"))))
   }
 
-  /** The DV sidecar schema: one row per deleted (data file name, row
-    * position). Pinned at every DV read — an inferred read would run a
-    * Spark schema-inference job per scan. */
+  /** The DV sidecar schema: one row per deleted (data file scan name,
+    * row position). */
   private val DvSchema = StructType(Seq(
     StructField("file", StringType), StructField("pos", LongType)))
 
-  /** The rows of the given DV files (table-relative paths). */
-  private def readDvs(spark: SparkSession, path: String,
-      dvFiles: Iterable[String]): DataFrame =
-    spark.read.schema(DvSchema).parquet(dvFiles.toSeq.distinct
-      .map(f => localRoot(path).resolve(f).toString): _*)
+  /** Deleted positions per DV file, keyed by the DV file's absolute
+    * path: scan name → positions. DV files are immutable and UUID-named
+    * (the property [[schemaInfoMemo]] relies on for commit files), so an
+    * entry is a pure function of its key and each DV file is read at
+    * most once per JVM. Bounded: cleared wholesale past a size cap
+    * (correctness never depends on a hit). Entries are shared and never
+    * mutated. */
+  private val dvPositionsMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[String, Roaring64Bitmap]]()
+
+  /** The rows of one DV file, read on the driver with parquet-hadoop
+    * (no Spark job), memoized by [[dvPositionsMemo]]. */
+  private def dvPositions(conf: org.apache.hadoop.conf.Configuration,
+      abs: String): Map[String, Roaring64Bitmap] = {
+    val hit = dvPositionsMemo.get(abs)
+    if (hit != null) return hit
+    val acc = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
+    val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(),
+      new org.apache.hadoop.fs.Path(abs)).withConf(conf).build()
+    try {
+      var g = reader.read()
+      while (g != null) {
+        acc.getOrElseUpdate(g.getString("file", 0), new Roaring64Bitmap)
+          .addLong(g.getLong("pos", 0))
+        g = reader.read()
+      }
+    } finally reader.close()
+    acc.valuesIterator.foreach(_.runOptimize())
+    val m = acc.toMap
+    if (dvPositionsMemo.size() > 10000) dvPositionsMemo.clear()
+    dvPositionsMemo.put(abs, m)
+    m
+  }
+
+  /** Deleted positions of a snapshot's DV'd files (`dvm`, from
+    * [[snapshotDvs]]), by scan name. Each file takes the positions of
+    * its own current DV file only: DVs are cumulative per file, so that
+    * one set is exact. */
+  private def deletedAt(spark: SparkSession, path: String,
+      dvm: Map[String, String]): Map[String, Roaring64Bitmap] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dvm.flatMap { case (f, dv) =>
+      val n = scanName(path, f)
+      dvPositions(conf, localRoot(path).resolve(dv).toString).get(n)
+        .map(n -> _)
+    }
+  }
 
   /** Delete the staged-but-never-committed data files (and DV file) of
     * an aborted or empty write. writeData moves fresh files into data/
@@ -996,13 +1074,13 @@ object TxnTable {
     applyDv(spark, path, base, snapshotScan(spark, path, base,
       rels.map(f => localRoot(path).resolve(f).toString)), keepFname)
 
-  /** The snapshot files whose bare name is in `hitNames` (UUID file
+  /** The snapshot files whose scan name is in `hitNames` (UUID file
     * names are a complete key; the last-segment comparison works for
     * own-root relative paths AND a shallow clone's absolute source
     * references alike). */
-  private def hitFiles(files: Seq[String], hitNames: Set[String])
-      : Seq[String] =
-    files.filter(f => hitNames.contains(f.split('/').last))
+  private def hitFiles(path: String, files: Seq[String],
+      hitNames: Set[String]): Seq[String] =
+    files.filter(f => hitNames.contains(scanName(path, f)))
 
   /** How a rewrite commit may REBASE past commits that landed between
     * its snapshot read and its tryCommit (the Delta-style logical
@@ -1275,7 +1353,7 @@ object TxnTable {
       finally walk.close()
     require(files.nonEmpty, s"convertParquet: no parquet files under $path")
     // the DV machinery keys (file → positions) by BASENAME — the scan
-    // side can only recover input_file_name()'s last segment, and
+    // side reports only `_metadata.file_path`'s last segment, and
     // born-graft writers mint UUID names so leaves are unique by
     // construction. An adopted tree with duplicate leaves (e.g.
     // 2020/part-0.parquet + 2021/part-0.parquet) would attach one DV
@@ -1894,7 +1972,7 @@ object TxnTable {
     val hitNames = fileNames(scanFiles(spark, path, base, files,
       keepFname = true).filter(predicate).select(col("__fname")))
     if (hitNames.isEmpty) return base
-    val removes = hitFiles(files, hitNames)
+    val removes = hitFiles(path, files, hitNames)
     val survivors = scanFiles(spark, path, base, removes, keepFname = false)
       .filter(!coalesce(predicate, lit(false)))
     val adds = dropEmpty(path, writeData(spark, path, survivors, 1))
@@ -1910,8 +1988,9 @@ object TxnTable {
     * of the files they live in): deleting 0.1% of rows scattered
     * across a 100 TB table costs ~a few MB of positions where
     * [[deleteWhere]] (copy-on-write) would rewrite every touched
-    * file. Readers anti-join the DV at scan time ([[applyDv]] — zero
-    * overhead for DV-free snapshots); [[compact]] (or any rewrite
+    * file. Readers filter the DV's positions out at scan time
+    * ([[applyDv]]: a deterministic filter that keeps predicate pushdown,
+    * zero overhead for DV-free snapshots); [[compact]] (or any rewrite
     * touching the file) MATERIALIZES the DV and clears it, which is
     * the read-amplification escape valve. DVs are cumulative per
     * file: the new DV carries the union of old and new positions, so
@@ -1922,12 +2001,12 @@ object TxnTable {
   def deleteWhereMor(spark: SparkSession, path: String,
       predicate: Column): Long = {
     val base = currentVersion(path)
-    val (live, oldDv, files) = liveWithPos(spark, path, base)
+    val (live, deleted, files) = liveWithPos(spark, path, base)
     val hits = live.filter(predicate)
       .select(col("__fname").as("file"), col("__pos").as("pos"))
       .localCheckpoint()
     commitMorChanges(spark, path, base, "dvdelete", files,
-      fileNames(hits.select(col("file"))), hits, oldDv, Nil)
+      fileNames(hits.select(col("file"))), hits, deleted, Nil)
   }
 
   /** MERGE-ON-READ update: the [[updateWhere]] semantics at
@@ -1946,7 +2025,7 @@ object TxnTable {
       predicate: Column, set: Map[String, Column],
       partitions: Int = 1): Long = {
     val base = currentVersion(path)
-    val (live, oldDv, files) = liveWithPos(spark, path, base)
+    val (live, deleted, files) = liveWithPos(spark, path, base)
     val tableCols = live.columns.toSeq
       .filterNot(c => c == "__fname" || c == "__pos")
     val bad = set.keySet -- tableCols
@@ -1970,53 +2049,34 @@ object TxnTable {
     val adds = writeData(spark, path, withChecks(spark, path, updated),
       partitions)
     commitMorChanges(spark, path, base, "dvupdate", files, hitNames, hits,
-      oldDv, adds)
+      deleted, adds)
   }
 
   /** Live rows of the snapshot `base` (existing DVs applied — an
     * already-deleted row must not re-trigger a hit) with `__fname` /
-    * `__pos` scan metadata attached, plus the current DV rows and the
-    * snapshot file list, for the MOR write paths. */
+    * `__pos` scan metadata attached ([[liveTagged]]), plus the current
+    * deleted positions by scan name and the snapshot file list, for the
+    * MOR write paths. */
   private def liveWithPos(spark: SparkSession, path: String, base: Long)
-      : (DataFrame, DataFrame, Seq[String]) = {
+      : (DataFrame, Map[String, Roaring64Bitmap], Seq[String]) = {
     val files = snapshotFiles(path, base)
-    val abs = files.map(f => localRoot(path).resolve(f).toString)
-    val dvm = snapshotDvs(path, base)
-    // `_metadata.row_index` exists only on real file scans — the
-    // zero-file substitute (truncate / delete-all) fakes the two
-    // bookkeeping columns on the empty frame instead
-    val scan0 = snapshotScan(spark, path, base, abs)
-    val scan =
-      if (abs.isEmpty)
-        scan0.withColumn("__fname", lit(""))
-          .withColumn("__pos", lit(0L))
-      else scan0.withColumn("__fname",
-          element_at(split(input_file_name(), "/"), -1))
-        .withColumn("__pos", col("_metadata.row_index"))
-    val oldDv =
-      if (dvm.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), DvSchema)
-      else readDvs(spark, path, dvm.values)
-    val live =
-      if (dvm.isEmpty) scan
-      else scan.join(oldDv, scan("__fname") === oldDv("file") &&
-        scan("__pos") === oldDv("pos"), "left_anti")
-    // column mapping: physical scan → logical names (same seam as
-    // applyDv's tail; the __fname/__pos bookkeeping columns pass through)
-    val logical = recordedSchemaAt(path, base)
-      .map(toLogical(live, _)).getOrElse(live)
-    (logical, oldDv, files)
+    val deleted = deletedAt(spark, path, snapshotDvs(path, base))
+    val scan = snapshotScan(spark, path, base,
+      files.map(f => localRoot(path).resolve(f).toString))
+    (liveTagged(path, base, scan, deleted), deleted, files)
   }
 
   /** Write the replacement DV for `hits` (new positions ∪ the hit
     * files' previous positions — DVs are cumulative per file) and
     * return the per-file reassignments plus the DV file for cleanup.
-    * `hitNames` are the bare names in `hits`' file column, collected
-    * once by the caller's probe. */
+    * `hitNames` are the scan names in `hits`' file column, collected
+    * once by the caller's probe; the carried positions come from the
+    * driver-side `deleted` sets as a local frame. */
   private def buildDvs(spark: SparkSession, path: String,
       files: Seq[String], hitNames: Set[String], hits: DataFrame,
-      oldDv: DataFrame): (Seq[(String, String)], String) = {
-    val hitPaths = hitFiles(files, hitNames)
+      deleted: Map[String, Roaring64Bitmap])
+      : (Seq[(String, String)], String) = {
+    val hitPaths = hitFiles(path, files, hitNames)
     // basename→path must be injective among the hit files: a DV keyed
     // on a shared leaf would kill same-position rows in BOTH files.
     // Unreachable for born-graft tables (UUID leaves) and guarded at
@@ -2025,9 +2085,13 @@ object TxnTable {
     require(dupLeaf.isEmpty,
       s"deletion vector would be ambiguous: duplicate basenames among " +
         s"hit files ${dupLeaf.values.flatten.mkString(", ")}")
-    val carried = oldDv.filter(col("file")
-      .isInCollection(hitNames.toSeq))
-    val dvFile = writeDv(spark, path, hits.unionByName(carried))
+    val carried = new java.util.ArrayList[Row]()
+    hitNames.foreach(n => deleted.get(n).foreach { b =>
+      val it = b.getLongIterator
+      while (it.hasNext) carried.add(Row(n, it.next()))
+    })
+    val dvFile = writeDv(spark, path,
+      hits.unionByName(spark.createDataFrame(carried, DvSchema)))
     (hitPaths.map(f => f -> dvFile), dvFile)
   }
 
@@ -2122,7 +2186,7 @@ object TxnTable {
     // one probe pass → hit file names; the rewrite reads only those
     val hitNames = fileNames(withName.filter(predicate).select(col("__fname")))
     if (hitNames.isEmpty) return base
-    val removes = hitFiles(files, hitNames)
+    val removes = hitFiles(path, files, hitNames)
     val p = coalesce(predicate, lit(false))
     val inHit = scanFiles(spark, path, base, removes, keepFname = false)
     // IN/EXISTS subqueries are only legal in FILTERS (Spark's subquery
@@ -2173,7 +2237,7 @@ object TxnTable {
     * as the keyed replacement (TxnIndex uses this for its stats fold).
     *
     * Only files CONTAINING matched rows are rewritten (found by one
-    * input_file_name() pass + a broadcast-or-keyed semi-join on the
+    * file-tagged probe pass + a broadcast-or-keyed semi-join on the
     * keys — no driver-side key list, so the key set may be data-sized);
     * untouched files are carried by reference. Conflict contract:
     * rebase-or-abort like [[deleteWhere]] — the snapshot it read is
@@ -2258,7 +2322,7 @@ object TxnTable {
     val hitNames = fileNames(
       probe.filter(col("__fire")).select(col("__fname")))
     if (hitNames.isEmpty && notMatched.isEmpty) return base // nothing fired
-    val removes = hitFiles(files, hitNames)
+    val removes = hitFiles(path, files, hitNames)
     // rewrite ONLY hit files — delete claimed-deleted rows (matched AND
     // by-source), apply the winning update's SET per side, carry
     // everything else
@@ -2389,7 +2453,7 @@ object TxnTable {
       partitions: Int = 1,
       bySource: Seq[MergeBySource] = Nil): Long = {
     val base = currentVersion(path)
-    val (live, oldDv, files) = liveWithPos(spark, path, base)
+    val (live, deleted, files) = liveWithPos(spark, path, base)
     val tableCols = live.columns.toSeq
       .filterNot(c => c == "__fname" || c == "__pos")
     val schema = live.select(tableCols.map(col): _*).schema
@@ -2455,7 +2519,7 @@ object TxnTable {
     val adds = dropEmpty(path, writeData(spark, path,
       withChecks(spark, path, newRows), partitions))
     commitMorChanges(spark, path, base, "dvmerge", files, hitNames, hits,
-      oldDv, adds)
+      deleted, adds)
   }
 
   /** The tail every MERGE-ON-READ change shares: write the hit files'
@@ -2464,13 +2528,14 @@ object TxnTable {
     * files are cleaned on abort. */
   private def commitMorChanges(spark: SparkSession, path: String,
       base: Long, op: String, files: Seq[String], hitNames: Set[String],
-      hits: DataFrame, oldDv: DataFrame, adds: Seq[TxnAdd]): Long = {
+      hits: DataFrame, deleted: Map[String, Roaring64Bitmap],
+      adds: Seq[TxnAdd]): Long = {
     if (hitNames.isEmpty && adds.isEmpty) return base
     val (dvs, dvFile) =
       if (hitNames.isEmpty) (Nil, None)
       else
         try {
-          val (d, f) = buildDvs(spark, path, files, hitNames, hits, oldDv)
+          val (d, f) = buildDvs(spark, path, files, hitNames, hits, deleted)
           (d, Some(f))
         } catch { case e: Throwable => cleanupStaged(path, adds); throw e }
     try commitDvs(path, base, op, dvs, adds)
@@ -2516,7 +2581,7 @@ object TxnTable {
       upserts: DataFrame, keyCols: Seq[String], partitions: Int = 1,
       op: String = "dvmerge"): Long = {
     val base = currentVersion(path)
-    val (live, oldDv, files) = liveWithPos(spark, path, base)
+    val (live, deleted, files) = liveWithPos(spark, path, base)
     // semi-join: duplicate keys cannot multiply hits, no distinct needed
     val hits = live.join(keys.select(keyCols.map(col): _*), keyCols,
         "left_semi")
@@ -2528,8 +2593,8 @@ object TxnTable {
       .filterNot(c => c == "__fname" || c == "__pos")
     val adds = dropEmpty(path, writeData(spark, path, withChecks(spark, path,
       upserts.select(tableCols.map(col): _*)), partitions))
-    commitMorChanges(spark, path, base, op, files, hitNames, hits, oldDv,
-      adds)
+    commitMorChanges(spark, path, base, op, files, hitNames, hits,
+      deleted, adds)
   }
 
   /** [[merge]] (keyed upsert) at MERGE-ON-READ cost — replace every
@@ -2948,7 +3013,7 @@ object TxnTable {
     val tableCols = withName.columns.toSeq.filterNot(_ == "__fname")
     // One probe pass collects the hit files' names to the driver once —
     // metadata-scale, the commit's `removes`; the rewrite scans only them
-    val removes = hitFiles(files, fileNames(
+    val removes = hitFiles(path, files, fileNames(
       withName.join(matchable, keyCols, "left_semi").select(col("__fname"))))
     // USING joins hoist the key columns to the front — restore the
     // table's column order so rewritten files match the schema.
@@ -2972,14 +3037,14 @@ object TxnTable {
   /** AUTO-MAINTENANCE policy: compact when the snapshot's physical
     * shape has degraded past either threshold — too many files (write
     * amplification / footer overhead) or too large a MOR-DELETED row
-    * fraction (read amplification: every scan drags the DV anti-join
-    * until a rewrite materializes it). Returns the compaction's version
-    * when it ran, None when the table is healthy. Both signals are
-    * metadata-cheap: file count from the snapshot, live row counts from
-    * the adds, dead positions by counting the CURRENT (file → DV)
-    * pairs' rows in the tiny DV sidecars — exact even though a
-    * cumulative DV file can carry superseded positions for OTHER data
-    * files (those pairs are excluded by the mapping join). The policy
+    * fraction (read amplification: every scan reads and filters out the
+    * dead rows until a rewrite materializes them). Returns the
+    * compaction's version when it ran, None when the table is healthy.
+    * Both signals are metadata-cheap and cost no Spark job: file count
+    * from the snapshot, live row counts from the adds, dead positions
+    * by summing each live file's set from its CURRENT DV
+    * ([[deletedAt]], memoized) — exact even though a cumulative DV file
+    * can carry superseded positions for OTHER data files. The policy
     * is advisory and race-tolerant: the compact itself rebases/aborts
     * under the normal conflict rules. */
   def maybeCompact(spark: SparkSession, path: String,
@@ -2994,15 +3059,8 @@ object TxnTable {
       else {
         val ai = addsIndex(path, base)
         val totalRows = files.flatMap(ai.get).map(_.rows).sum
-        import spark.implicits._
-        val mapping = dvm.toSeq
-          .map { case (f, dv) => (f.split('/').last, dv.split('/').last) }
-          .toDF("file", "__dv")
-        val dvRows = readDvs(spark, path, dvm.values)
-          .withColumn("__dv",
-            element_at(split(input_file_name(), "/"), -1))
-          .join(mapping, Seq("file", "__dv"), "left_semi")
-        val dead = dvRows.count()
+        val dead = deletedAt(spark, path, dvm).values
+          .map(_.getLongCardinality).sum
         totalRows > 0 && dead.toDouble / totalRows > maxDeadFrac
       }
     if (degraded) Some(compact(spark, path, targetFiles)) else None
@@ -3685,11 +3743,14 @@ object TxnTable {
         if (!full || mins.size != nAdds) (None, None)
         else (Some(mins.min), Some(maxs.max))
       }
+      // string bounds fold in UTF-8 byte order, as they are logged and
+      // as Spark compares (String's own order is UTF-16 code units)
       val (smin, smax) = {
         val mins = have.flatMap(_.strings.get(phys).map(_._1))
         val maxs = have.flatMap(_.strings.get(phys).map(_._2))
         if (!full || mins.size != nAdds) (None, None)
-        else (Some(mins.min), Some(maxs.max))
+        else (Some(mins.minBy(UTF8String.fromString)),
+          Some(maxs.maxBy(UTF8String.fromString)))
       }
       val nulls = {
         val ns = have.flatMap(_.nulls.get(phys))
@@ -4429,8 +4490,7 @@ object TxnTable {
     }
 
     private def utf8Le(a: String, b: String): Boolean =
-      org.apache.spark.unsafe.types.UTF8String.fromString(a).compareTo(
-        org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) <= 0
   }
 
   /** The live files at `upTo` (as the snapshot lists them) with their

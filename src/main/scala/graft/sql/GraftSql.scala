@@ -2831,9 +2831,11 @@ object GraftSql {
       return df.queryExecution.logical
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     val plan = df.queryExecution.analyzed
-    // inject only onto an UNAMBIGUOUS single-scan plan: a DV'd
-    // snapshot's plan also scans the deletion-vector files, and
-    // table-level stats must not land on those relations
+    // inject only onto an UNAMBIGUOUS single-scan plan: table-level
+    // stats must land on the table's own relation. A DV'd snapshot is
+    // one scan too (its DVs are a filter on it, not a second scan), so
+    // it gets stats as well; its row count is an upper bound, like
+    // every logged row count under deletion vectors
     val scans = plan.collect { case lr: LogicalRelation => lr }
     if (scans.length != 1) return plan
     val v = if (asOf >= 0) asOf else TxnTable.currentVersion(path)

@@ -309,8 +309,9 @@ object Probe {
   /** Deletion vectors: a scattered delete and keyed MERGE (1/997 of the
     * ids, hitting nearly every file of a 200-file layout) under
     * copy-on-write against merge-on-read, the read overhead while the DV
-    * is live, and `compact` materializing it. CoW rewrites the touched
-    * files; MOR rewrites none. */
+    * is live — a full scan, a point key and a 1% range on `g` — and
+    * `compact` materializing it. CoW rewrites the touched files; MOR
+    * rewrites none. */
   private def dvGrowth(m: Measure, args: Seq[String]): Unit = {
     val spark = m.spark
     val li = lineitem(spark, args)
@@ -328,7 +329,19 @@ object Probe {
     val pred = col("id") % 997L === 0L
     m.fact("rows", li.count())
     m.fact("doomed", li.filter(pred).count())
+    // selective reads: a surviving key, and the lowest 1% of g's span
+    val span = li.agg(min(col("g")), max(col("g")),
+      min(when(!pred, col("id")))).head()
+    val (gLo, key) = (span.getLong(0), span.getLong(2))
+    val gHi = gLo + (span.getLong(1) - gLo) / 100
+    def point(t: String) = TxnTable.read(spark, t)
+      .filter(col("id") === key).agg(count(lit(1)), sum(col("price_c"))).head()
+    def range(t: String) = TxnTable.read(spark, t)
+      .filter(col("g").between(gLo, gHi))
+      .agg(count(lit(1)), sum(col("price_c"))).head()
     m.time("read_baseline", reps = 3)(total(mor))
+    m.time("point_baseline", reps = 3)(point(mor))
+    m.time("range_baseline", reps = 3)(range(mor))
     m.time("delete_cow")(TxnTable.deleteWhere(spark, cow, pred))
     m.time("delete_mor")(TxnTable.deleteWhereMor(spark, mor, pred))
     m.fact("delete_cow files_rewritten", rewritten(cow))
@@ -336,6 +349,10 @@ object Probe {
     val cowTotal = m.time("read_cow_consolidated", reps = 3)(total(cow))
     val morTotal = m.time("read_mor_dv", reps = 3)(total(mor))
     require(cowTotal == morTotal, s"dv_growth: $cowTotal vs $morTotal")
+    val morPoint = m.time("point_mor_dv", reps = 3)(point(mor))
+    val morRange = m.time("range_mor_dv", reps = 3)(range(mor))
+    require(morPoint == point(cow) && morRange == range(cow),
+      "dv_growth: selective reads disagree")
 
     val (cowM, morM) = (table("cow_m"), table("mor_m"))
     val batch = li.filter(pred).withColumn("price_c", col("price_c") * 2)

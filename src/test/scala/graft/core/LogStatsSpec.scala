@@ -177,6 +177,21 @@ class LogStatsSpec extends SparkSpecBase {
       .isEmpty)
   }
 
+  test("global string bounds fold in UTF-8 byte order, as Spark compares") {
+    val t = Files.createTempDirectory("graft_ls_utf8").toString + "/t"
+    // U+E000 sorts after U+1F600's high surrogate in UTF-16 code units,
+    // but before U+1F600 in UTF-8 bytes (EE 80 80 < F0 9F 98 80)
+    val (bmp, astral) = ("\uE000", "\uD83D\uDE00")
+    TxnTable.create(spark, t, Seq((1L, bmp)).toDF("id", "s"))
+    TxnTable.append(spark, t, Seq((2L, astral)).toDF("id", "s"))
+    val sparkMax = TxnTable.read(spark, t).agg(max("s")).as[String].head()
+    val sparkMin = TxnTable.read(spark, t).agg(min("s")).as[String].head()
+    assert(sparkMax == astral && sparkMin == bmp)
+    val row = TxnTable.columnStats(spark, t).filter(col("column") === "s")
+      .select("min_str", "max_str").as[(String, String)].head()
+    assert(row == (sparkMin, sparkMax), s"log bounds $row")
+  }
+
   test("DVs and log-stats pruning compose") {
     val t = Files.createTempDirectory("graft_ls5").toString + "/t"
     mk(t)
