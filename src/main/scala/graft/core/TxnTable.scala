@@ -100,15 +100,20 @@ case class BySourceDelete(cond: Option[Column] = None) extends MergeBySource
   *    file-tagged probe pass); `compact` folds the current snapshot
   *    into fewer files; both are ordinary commits.
   *
-  * Scale notes: the log is metadata — O(1) JSON per commit. Every
-  * `CheckpointInterval`-th commit also writes a checkpoint holding the
-  * RESOLVED live-file list at that version, so snapshot resolution
-  * replays at most `CheckpointInterval` commits past the nearest
-  * checkpoint — O(1) amortized reads per lookup instead of
-  * O(versions). Checkpoints are derived data: written best-effort by
-  * the commit winner, idempotent by content, and a missing one only
-  * costs a longer replay. Data-file work (rewrite, compaction) is
-  * Spark jobs over only the affected files.
+  * Scale notes: the log is metadata — O(1) JSON per commit. All state
+  * a version determines (live files, DVs, schema, constraints,
+  * properties, stream marks, ingested sources, add metadata, vacuum
+  * horizon) is one immutable [[Snapshot]], folded commit by commit.
+  * Every `CheckpointInterval`-th commit also writes that snapshot as a
+  * checkpoint, so resolving a version lists the log once and replays
+  * at most `CheckpointInterval` commits past the nearest checkpoint —
+  * or fewer past the per-table memo of the highest version resolved
+  * so far, so a read of an unchanged head reads no commit at all.
+  * Checkpoints are derived data: written best-effort by the commit
+  * winner, idempotent by content, and a missing, corrupt or
+  * old-format one only costs a replay from the next older one
+  * (counted in [[CheckpointFallbacks]]). Data-file work (rewrite,
+  * compaction) is Spark jobs over only the affected files.
   */
 object TxnTable {
 
@@ -211,17 +216,22 @@ object TxnTable {
   }
 
   /** Latest committed version, or -1 for a nonexistent/empty table. */
-  def currentVersion(path: String): Long = {
+  def currentVersion(path: String): Long = listLog(path)._1
+
+  /** ONE listing of the log: the head version (-1 for no table) and the
+    * checkpoint versions, newest first. */
+  private def listLog(path: String): (Long, Seq[Long]) = {
     val ld = logDir(path)
-    if (!Files.isDirectory(ld)) return -1L
+    if (!Files.isDirectory(ld)) return (-1L, Nil)
     val it = Files.list(ld)
-    try {
-      it.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(n => n.substring(1, n.length - 5).toLong)
-        .foldLeft(-1L)(math.max)
-    } finally it.close()
+    val names =
+      try it.iterator().asScala.map(_.getFileName.toString).toVector
+      finally it.close()
+    def versions(prefix: String): Seq[Long] = names.collect {
+      case n if n.startsWith(prefix) && n.endsWith(".json") =>
+        n.substring(prefix.length, n.length - 5).toLong
+    }
+    (versions("v").foldLeft(-1L)(math.max), versions("ckpt-v").sorted.reverse)
   }
 
   private implicit class JIter[T](it: java.util.Iterator[T]) {
@@ -250,44 +260,54 @@ object TxnTable {
   private def checkpointFile(path: String, v: Long): JPath =
     logDir(path).resolve(f"ckpt-v$v%010d.json")
 
-  /** Parsed checkpoint content. Besides the resolved live-file list and
-    * the vacuum horizon, a checkpoint carries every piece of log-derived
-    * state a hot-path reader needs, so NO read replays more than the
-    * commit suffix past the nearest checkpoint:
-    *  - `schemaGens`/`schema`: how many schema generations the prefix
-    *    recorded, and the latest one — `read`'s mergeSchema decision and
-    *    `currentSchema` (hence every append's validation) stop at the
-    *    checkpoint instead of walking to v0;
-    *  - `streams`: per-streamId highest applied batch id — the role of
-    *    Delta's `txn` action — so `appendStreamBatch`'s idempotence
-    *    check is O(suffix), not O(versions) per micro-batch;
-    *  - `allAdds`: add metadata of every EXTANT ever-referenced data
-    *    file in the prefix (pruned of files a vacuum already deleted —
-    *    once gone, nothing can reference them again) — what lets
-    *    `vacuum` build its dead-set and `restore` its re-add list
-    *    without replaying every commit JSON (an always-on streaming
-    *    sink accumulates ~one version per micro-batch, so O(versions)
-    *    maintenance would grow without bound).
-    * The Option fields are None for checkpoints written by older code;
-    * readers then fall back to a full replay (correct, just slower).
-    */
-  private case class Ckpt(
+  /** The resolved state of one table version: everything the log
+    * prefix ≤ `version` determines, built by one fold ([[step]], one
+    * commit at a time) and shared read-only by every caller.
+    *  - `files`: the live data files in log order (checkpoint order,
+    *    then suffix order); `live` is the same set, for membership.
+    *  - `dvs`: live data file → its current deletion-vector file.
+    *  - `schemaGens` / `schema`: how many schemas the prefix recorded,
+    *    and the latest one (JSON) — `read`'s mergeSchema decision and
+    *    every append's validation.
+    *  - `streams`: the highest applied batch id per stream id (the role
+    *    of Delta's `txn` action: [[appendStreamBatch]]'s idempotence).
+    *  - `constraints` (name → SQL) and `props` (key → value).
+    *  - `copySrcs`: the source files a materializing COPY INTO
+    *    ingested (its idempotence registry).
+    *  - `allAdds`: the first-seen add metadata of every data file the
+    *    prefix referenced — [[vacuum]]'s dead-set and [[restore]]'s
+    *    re-add list. A checkpoint writes it extant-pruned (a file a
+    *    vacuum deleted can never be referenced again), so its size
+    *    tracks live plus not-yet-vacuumed files, not table lifetime.
+    *  - `horizon`: the oldest version readable as of this one.
+    * A checkpoint is this value as JSON ([[renderCheckpoint]]). */
+  private[core] case class Snapshot(
       version: Long,
-      files: Seq[String],
-      horizon: Long,
-      schemaGens: Option[Long],
+      files: Vector[String],
+      live: Set[String],
+      dvs: Map[String, String],
+      schemaGens: Long,
       schema: Option[String],
-      streams: Option[Map[String, Long]],
-      allAdds: Option[Seq[TxnAdd]],
-      dvs: Option[Map[String, String]],
-      constraints: Option[Map[String, String]],
-      props: Option[Map[String, String]],
-      copySrcs: Option[Seq[String]])
+      streams: Map[String, Long],
+      constraints: Map[String, String],
+      props: Map[String, String],
+      copySrcs: Set[String],
+      allAdds: Map[String, TxnAdd],
+      horizon: Long) {
+    /** The latest recorded schema, parsed once per snapshot. */
+    lazy val recordedSchema: Option[StructType] =
+      schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
+
+  /** The state before version 0. */
+  private[core] val EmptySnapshot = Snapshot(-1L, Vector.empty, Set.empty,
+    Map.empty, 0L, None, Map.empty, Map.empty, Map.empty, Set.empty,
+    Map.empty, 0L)
 
   /** `stream:<id>:<batch>[:files:[...]]` op → (id, batch); None for
     * other ops. The optional `:files:` suffix (a JSON array of source
     * paths, written by the COPY INTO … FROM STREAM route) is trimmed
-    * before the batch-id parse — it feeds [[copySourcesInfo]], not the
+    * before the batch-id parse — it feeds the `copySrcs` registry, not the
     * per-stream high-water. */
   private def parseStreamOp(op: String): Option[(String, Long)] =
     if (!op.startsWith("stream:")) None
@@ -309,101 +329,106 @@ object TxnTable {
       else parseKeysOp(op.drop(fi + ":files:".length))
     }
 
-  /** Memo for [[schemaInfo]]: the log is IMMUTABLE per (path, version)
-    * — a commit file is never rewritten once published — so the derived
-    * (generations, schema) pair is a pure function of the key. Bounded:
-    * cleared wholesale past a size cap (correctness never depends on a
-    * hit). Keeps the column-mapping seam (applyDv resolves the schema
-    * on every read) from re-replaying the checkpoint suffix that the
-    * read itself just replayed. */
-  private val schemaInfoMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), (Long, Option[String])]()
-
-  /** (schema generations, latest recorded schema) of the log prefix ≤
-    * `upTo` — checkpoint-amortized: state is read from the nearest
-    * checkpoint and only the suffix is replayed. */
-  private def schemaInfo(path: String, upTo: Long): (Long, Option[String]) = {
-    val key = (path, upTo)
-    val hit = schemaInfoMemo.get(key)
-    if (hit != null) return hit
-    val (from, gens0, s0) = latestCheckpoint(path, upTo) match {
-      case Some(ck) if ck.schemaGens.isDefined =>
-        (ck.version + 1, ck.schemaGens.get, ck.schema)
-      case _ => (0L, 0L, None) // no/old-format checkpoint: full replay
-    }
-    var gens = gens0
-    var s = s0
-    (from to upTo).foreach { v =>
-      readCommit(path, v).schema.foreach { js => gens += 1; s = Some(js) }
-    }
-    if (schemaInfoMemo.size() > 100000) schemaInfoMemo.clear()
-    schemaInfoMemo.put(key, (gens, s))
-    (gens, s)
-  }
-
-  /** Add metadata per EXTANT ever-referenced data-file path of the
-    * prefix ≤ `upTo` — checkpoint-amortized like [[schemaInfo]]. The
-    * index underlying [[vacuum]]'s dead-set and [[restore]]'s re-add
-    * list: a path's (rows, bytes) are immutable once written, so
-    * first-seen metadata is authoritative even when a restore re-adds
-    * the path by reference in a later commit. Paths pruned at
-    * checkpoint time (physically deleted by a vacuum) stay pruned —
-    * a deleted file can never be referenced again (restore is fenced
-    * at the vacuum horizon). */
-  private def addsIndex(path: String, upTo: Long): Map[String, TxnAdd] = {
-    val (from, init) = latestCheckpoint(path, upTo) match {
-      case Some(ck) if ck.allAdds.isDefined =>
-        (ck.version + 1, ck.allAdds.get.map(a => a.path -> a).toMap)
-      case _ => (0L, Map.empty[String, TxnAdd])
-    }
-    var m = init
-    (from to upTo).foreach { v =>
-      readCommit(path, v).adds.foreach { a =>
-        if (!m.contains(a.path)) m = m.updated(a.path, a)
-      }
-    }
-    m
-  }
-
-  /** Highest applied batch id per streamId in the prefix ≤ `upTo` —
-    * checkpoint-amortized like `schemaInfo`. */
-  private def streamBatches(path: String, upTo: Long): Map[String, Long] = {
-    val (from, init) = latestCheckpoint(path, upTo) match {
-      case Some(ck) if ck.streams.isDefined => (ck.version + 1, ck.streams.get)
-      case _ => (0L, Map.empty[String, Long])
-    }
-    var m = init
-    (from to upTo).foreach { v =>
-      parseStreamOp(readCommit(path, v).op).foreach { case (id, b) =>
-        m = m.updated(id, math.max(b, m.getOrElse(id, Long.MinValue)))
-      }
-    }
-    m
-  }
-
-  /** Active CHECK constraints (name -> SQL expression) of the prefix
-    * <= `upTo` -- folded from `constraint:add:<name>:<sql>` /
-    * `constraint:drop:<name>` ops, checkpoint-amortized like
-    * [[schemaInfo]]. */
-  private def constraintsInfo(path: String, upTo: Long)
-      : Map[String, String] = {
-    val (from, init) = latestCheckpoint(path, upTo) match {
-      case Some(ck) if ck.constraints.isDefined =>
-        (ck.version + 1, ck.constraints.get)
-      case _ => (0L, Map.empty[String, String])
-    }
-    var m = init
-    (from to upTo).foreach { v =>
-      val op = readCommit(path, v).op
-      if (op.startsWith("constraint:add:")) {
-        val rest = op.stripPrefix("constraint:add:")
+  /** Apply one commit to the state before it: the ONE fold every
+    * snapshot comes from. Files: removes first, then adds not already
+    * live go to the end. DVs: a remove or re-add clears, the commit's
+    * assignments then win. Add metadata: first seen wins (a path's
+    * rows and bytes never change; a restore re-adds by reference). */
+  private def step(s: Snapshot, c: TxnCommit): Snapshot = {
+    val op = c.op
+    def payload(prefix: String): Option[String] =
+      if (op.startsWith(prefix)) Some(op.substring(prefix.length)) else None
+    val gone = c.removes.toSet
+    val live = s.live -- gone
+    val fresh = c.adds.map(_.path).distinct.filterNot(live)
+    val constraints = payload("constraint:add:") match {
+      case Some(rest) if rest.indexOf(':') > 0 =>
         val i = rest.indexOf(':')
-        if (i > 0) m = m.updated(rest.take(i), rest.drop(i + 1))
-      } else if (op.startsWith("constraint:drop:"))
-        m -= op.stripPrefix("constraint:drop:")
+        s.constraints.updated(rest.take(i), rest.drop(i + 1))
+      case _ => payload("constraint:drop:").fold(s.constraints)(s.constraints - _)
     }
-    m
+    val props = payload("tblprops:set:").orElse(payload("create:props:"))
+      .map(s.props ++ parsePropsOp(_))
+      .orElse(payload("tblprops:unset:").map(s.props -- parseKeysOp(_)))
+      .getOrElse(s.props)
+    val copySrcs = payload("copyinto:csv:").orElse(payload("copyinto:json:"))
+      .map(s.copySrcs ++ parseKeysOp(_))
+      .orElse(payload("copysrc:prune:").map(s.copySrcs -- parseKeysOp(_)))
+      .getOrElse(s.copySrcs ++ parseStreamFilesOp(op))
+    Snapshot(
+      version = c.version,
+      files = (if (gone.isEmpty) s.files else s.files.filterNot(gone)) ++ fresh,
+      live = live ++ fresh,
+      dvs = s.dvs -- c.removes -- c.adds.map(_.path) ++ c.dvs,
+      schemaGens = s.schemaGens + c.schema.size,
+      schema = c.schema.orElse(s.schema),
+      streams = parseStreamOp(op).fold(s.streams) { case (id, b) =>
+        s.streams.updated(id, math.max(b, s.streams.getOrElse(id, b)))
+      },
+      constraints = constraints,
+      props = props,
+      copySrcs = copySrcs,
+      allAdds = c.adds.foldLeft(s.allAdds)((m, a) =>
+        if (m.contains(a.path)) m else m.updated(a.path, a)),
+      horizon = payload("vacuum:").fold(s.horizon)(h =>
+        math.max(s.horizon, h.toLong)))
   }
+
+  /** `base` advanced one commit at a time to version `upTo`. */
+  private[core] def replay(base: Snapshot, path: String, upTo: Long): Snapshot =
+    ((base.version + 1) to upTo).foldLeft(base)((s, v) =>
+      step(s, readCommit(path, v)))
+
+  /** The highest snapshot resolved so far per table path. Commits are
+    * immutable and the log is append-only (vacuum deletes data files,
+    * never commits; a rollback is a new commit), so a memoized
+    * snapshot stays the true state of its version and any later
+    * version is reached by replaying only the commits past it. One
+    * entry per path keeps the memory at one snapshot per table;
+    * cleared wholesale past a size cap (correctness never depends on a
+    * hit). Time-travel reads below the head are not memoized. */
+  private val headMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
+
+  private def remember(path: String, snap: Snapshot): Unit = {
+    if (headMemo.size > 1024) headMemo.clear()
+    headMemo.merge(path, snap, (old, now) =>
+      if (old.version > now.version) old else now)
+  }
+
+  /** Resolve version `asOf` (the head when negative) of `path`; None
+    * when no table lives there and no version was asked for. ONE
+    * listing of the log gives the head and the checkpoint versions,
+    * and the version checks run on it before any commit is read. The
+    * replay starts from the nearest of: the memoized snapshot (if at
+    * or below the target), the newest readable checkpoint above it
+    * (a corrupt or old-format one is counted and the next older one
+    * tried), or the empty table. */
+  private def resolve(path: String, asOf: Long): Option[Snapshot] = {
+    val (top, ckpts) = listLog(path)
+    if (top < 0 && asOf < 0) return None
+    require(top >= 0, s"not a TxnTable: $path")
+    val v = if (asOf < 0) top else asOf
+    require(v <= top, s"version $v does not exist (latest $top)")
+    val memo = Option(headMemo.get(path)).filter(_.version <= v)
+    val from = memo.fold(-1L)(_.version)
+    val base = ckpts.iterator.filter(c => c <= v && c > from)
+      .map(readCheckpoint(path, _)).collectFirst { case Some(s) => s }
+      .orElse(memo).getOrElse(EmptySnapshot)
+    val snap = replay(base, path, v)
+    if (v == top) remember(path, snap)
+    Some(snap)
+  }
+
+  /** The snapshot at `asOf` (the head when negative). */
+  private[core] def snapshot(path: String, asOf: Long = -1L): Snapshot = {
+    val s = resolve(path, asOf)
+    require(s.isDefined, s"not a TxnTable: $path")
+    s.get
+  }
+
+  /** The head snapshot, or None when no table lives at `path`. */
+  private def head(path: String): Option[Snapshot] = resolve(path, -1L)
 
   /** Test seam: invoked between the version read and the tryCommit of
     * every retrying writer (append / restore / appendStreamBatch /
@@ -470,140 +495,95 @@ object TxnTable {
       throw new TxnConflictException(commit.version)
     // A version-0 commit is a table BIRTH: if a table previously lived
     // at this path in this JVM (deleted externally, then recreated),
-    // every memoized (path, version) schema belongs to the dead table —
-    // drop them, or reads of the new table would bind the stale schema.
-    if (commit.version == 0L)
-      schemaInfoMemo.keySet.removeIf(_._1 == path)
+    // the memoized snapshot belongs to the dead table — drop it, or
+    // reads of the new table would bind the stale state.
+    if (commit.version == 0L) headMemo.remove(path)
     // Checkpoint: only the winner of version V reaches here, so there
     // is exactly one writer; the content is deterministic from the log
-    // prefix, so a torn/failed write is safe (readers fall back to a
-    // longer replay). Never let checkpoint failure fail the commit.
+    // prefix, so a torn/failed write is safe (readers fall back to an
+    // older checkpoint). Never let checkpoint failure fail the commit.
     if (commit.version > 0 && commit.version % CheckpointInterval == 0) {
       try {
-        val files = snapshotFiles(path, commit.version)
-        // Derived-state fields are themselves amortized against the
-        // PREVIOUS checkpoint, so writing one costs O(interval) reads.
-        val (gens, schema) = schemaInfo(path, commit.version)
-        val streams = streamBatches(path, commit.version)
-        // Extant-pruned: entries whose data file a vacuum already
-        // deleted are dropped (they can never be restored or vacuumed
-        // again), so the field's size tracks live + not-yet-vacuumed
-        // files, not table lifetime. The existence probe is O(entries)
-        // metadata, paid only at checkpoint cadence.
-        val allAdds = addsIndex(path, commit.version).values.toSeq
-          .filter(a => Store.exists(localRoot(path).resolve(a.path)))
-          .sortBy(_.path)
-        val dvs = snapshotDvs(path, commit.version)
-        val cons = constraintsInfo(path, commit.version)
-        val prps = propsInfo(path, commit.version)
-        val json = s"""{"version":${commit.version},""" +
-          s""""horizon":${earliestVersion(path)},""" +
-          s""""schemaGens":$gens,""" +
-          schema.map(s => s""""schema":"${esc(s)}",""").getOrElse("") +
-          s""""constraints":""" +
-          cons.toSeq.sortBy(_._1)
-            .map { case (n, e) => s""""${esc(n)}":"${esc(e)}"""" }
-            .mkString("{", ",", "}") +
-          s""","props":""" +
-          prps.toSeq.sortBy(_._1)
-            .map { case (k, x) => s""""${esc(k)}":"${esc(x)}"""" }
-            .mkString("{", ",", "}") +
-          s""","copySrcs":""" +
-          copySourcesInfo(path, commit.version).toSeq.sorted
-            .map(s => s""""${esc(s)}"""").mkString("[", ",", "]") +
-          s""","dvs":""" +
-          dvs.toSeq.sortBy(_._1)
-            .map { case (f, dv) => s""""${esc(f)}":"${esc(dv)}"""" }
-            .mkString("{", ",", "}") +
-          s""","streams":""" +
-          streams.toSeq.sortBy(_._1)
-            .map { case (k, b) => s""""${esc(k)}":$b""" }
-            .mkString("{", ",", "}") +
-          s""","allAdds":""" +
-          allAdds.map(renderAdd).mkString("[", ",", "]") +
-          s""","files":""" +
-          files.map(f => s""""${esc(f)}"""").mkString("[", ",", "]") + "}"
+        val snap = snapshot(path, commit.version)
+        // Extant-pruned: adds whose data file a vacuum already deleted
+        // are dropped (they can never be restored or vacuumed again),
+        // so the field's size tracks live + not-yet-vacuumed files, not
+        // table lifetime. The existence probe is O(entries) metadata,
+        // paid only at checkpoint cadence.
+        val ck = snap.copy(allAdds = snap.allAdds.filter { case (f, _) =>
+          Store.exists(localRoot(path).resolve(f)) })
         // derived state: overwrite-OK atomic publish via the seam
         Store.putAtomic(checkpointFile(path, commit.version),
-          json.getBytes(StandardCharsets.UTF_8))
+          renderCheckpoint(ck).getBytes(StandardCharsets.UTF_8))
+        remember(path, ck)
       } catch { case NonFatal(_) => () }
     }
   }
 
-  /** Latest checkpoint at or below `v`, fully parsed. The derived-state
-    * fields (`schemaGens`/`schema`/`streams`) are None for checkpoints
-    * written by older code — consumers then fall back to a full replay. */
-  private def latestCheckpoint(path: String, v: Long): Option[Ckpt] = {
-    val ld = logDir(path)
-    if (!Files.isDirectory(ld)) return None
-    val it = Files.list(ld)
-    val best =
-      try it.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("ckpt-v") && n.endsWith(".json"))
-        .map(n => n.substring(6, n.length - 5).toLong)
-        .filter(_ <= v)
-        .foldLeft(-1L)(math.max)
-      finally it.close()
-    if (best < 0) return None
+  /** Corrupt or old-format checkpoints a resolution skipped: each one
+    * costs a replay from the next older checkpoint (or from v0)
+    * instead of failing the read, and is counted here so the cost
+    * never hides. */
+  val CheckpointFallbacks: OpMetrics.Key[Long] =
+    OpMetrics.Key.counter("checkpoint_fallbacks")
+
+  /** The checkpoint at version `v` as a [[Snapshot]], or None — counted
+    * in [[CheckpointFallbacks]] — when it does not parse or lacks any
+    * field (written by older code). jackson ignores trailing garbage
+    * after a parseable prefix, so a truncated checkpoint that still
+    * parses is caught by its missing fields, never read as empty. */
+  private[core] def readCheckpoint(path: String, v: Long): Option[Snapshot] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     implicit val fmts: Formats = DefaultFormats
-    try {
-      val j = JsonMethods.parse(new String(
-        Files.readAllBytes(checkpointFile(path, best)), StandardCharsets.UTF_8))
-      val files = (j \ "files") match {
-        case JArray(arr) => arr.map(_.extract[String])
-        // no files ARRAY at all (an empty snapshot is JArray(Nil)) →
-        // the checkpoint is corrupt, not "empty": jackson ignores
-        // trailing garbage after a parseable prefix, so a truncated/
-        // mangled checkpoint could otherwise half-parse into a Ckpt
-        // that silently resolves every snapshot to zero files
-        case _ => return None
-      }
-      val horizon = (j \ "horizon") match {
-        case JInt(h) => h.toLong
-        case _ => 0L // pre-horizon checkpoint format
-      }
-      val schemaGens = (j \ "schemaGens") match {
-        case JInt(g) => Some(g.toLong)
-        case _ => None
-      }
-      val schema = (j \ "schema") match {
-        case JString(s) => Some(s)
-        case _ => None
-      }
-      val streams = (j \ "streams") match {
-        case JObject(fields) =>
-          Some(fields.map { case (k, jv) => k -> jv.extract[Long] }.toMap)
-        case _ => None
-      }
-      val allAdds = (j \ "allAdds") match {
-        case JArray(arr) => Some(arr.map(parseAdd))
-        case _ => None
-      }
-      val dvs = (j \ "dvs") match {
-        case JObject(fields) =>
-          Some(fields.map { case (k, jv) => k -> jv.extract[String] }.toMap)
-        case _ => None
-      }
-      val cons = (j \ "constraints") match {
-        case JObject(fields) =>
-          Some(fields.map { case (k, jv) => k -> jv.extract[String] }.toMap)
-        case _ => None
-      }
-      val prps = (j \ "props") match {
-        case JObject(fields) =>
-          Some(fields.map { case (k, jv) => k -> jv.extract[String] }.toMap)
-        case _ => None
-      }
-      val csrc = (j \ "copySrcs") match {
-        case JArray(arr) => Some(arr.map(_.extract[String]))
-        case _ => None
-      }
-      Some(Ckpt(best, files, horizon, schemaGens, schema, streams, allAdds,
-        dvs, cons, prps, csrc))
-    } catch { case NonFatal(_) => None } // corrupt checkpoint → full replay
+    def strs(arr: List[JValue]) = arr.map(_.extract[String])
+    def strMap(fs: List[JField]) =
+      fs.map { case (k, x) => k -> x.extract[String] }.toMap
+    val ck =
+      try {
+        val j = JsonMethods.parse(new String(
+          Files.readAllBytes(checkpointFile(path, v)), StandardCharsets.UTF_8))
+        (j \ "files", j \ "horizon", j \ "schemaGens", j \ "streams",
+            j \ "allAdds", j \ "dvs", j \ "constraints", j \ "props",
+            j \ "copySrcs") match {
+          case (JArray(files), JInt(horizon), JInt(gens), JObject(streams),
+              JArray(adds), JObject(dvs), JObject(cons), JObject(props),
+              JArray(srcs)) =>
+            val fs = strs(files).toVector
+            Some(Snapshot(v, fs, fs.toSet, strMap(dvs), gens.toLong,
+              (j \ "schema") match { case JString(s) => Some(s); case _ => None },
+              streams.map { case (k, b) => k -> b.extract[Long] }.toMap,
+              strMap(cons), strMap(props), strs(srcs).toSet,
+              adds.map(parseAdd).map(a => a.path -> a).toMap, horizon.toLong))
+          case _ => None
+        }
+      } catch { case NonFatal(_) => None }
+    if (ck.isEmpty) OpMetrics.add(CheckpointFallbacks)
+    ck
+  }
+
+  /** A snapshot as checkpoint JSON: the fields [[readCheckpoint]]
+    * parses, in a fixed order, maps and lists sorted so the content is
+    * deterministic from the log prefix. */
+  private def renderCheckpoint(snap: Snapshot): String = {
+    def obj(m: Map[String, String]): String = m.toSeq.sortBy(_._1)
+      .map { case (k, x) => s""""${esc(k)}":"${esc(x)}"""" }
+      .mkString("{", ",", "}")
+    def arr(xs: Seq[String]): String =
+      xs.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
+    s"""{"version":${snap.version},"horizon":${snap.horizon},""" +
+      s""""schemaGens":${snap.schemaGens},""" +
+      snap.schema.map(js => s""""schema":"${esc(js)}",""").getOrElse("") +
+      s""""constraints":${obj(snap.constraints)},""" +
+      s""""props":${obj(snap.props)},""" +
+      s""""copySrcs":${arr(snap.copySrcs.toSeq.sorted)},""" +
+      s""""dvs":${obj(snap.dvs)},""" +
+      s""""streams":""" + snap.streams.toSeq.sortBy(_._1)
+        .map { case (k, b) => s""""${esc(k)}":$b""" }
+        .mkString("{", ",", "}") +
+      s""","allAdds":""" + snap.allAdds.values.toSeq.sortBy(_.path)
+        .map(renderAdd).mkString("[", ",", "]") +
+      s""","files":${arr(snap.files)}}"""
   }
 
   /** One commit by version — O(1), for callers walking the log
@@ -621,50 +601,17 @@ object TxnTable {
     (0L to upTo).map(readCommit(path, _))
   }
 
-  /** Resolve the data-file list of a snapshot: nearest checkpoint ≤
-    * target, then replay only the commit suffix (≤ CheckpointInterval
-    * commits amortized).
-    */
-  def snapshotFiles(path: String, asOf: Long = -1L): Seq[String] = {
-    val top = currentVersion(path)
-    require(top >= 0, s"not a TxnTable: $path")
-    val upTo = if (asOf < 0) top else asOf
-    require(upTo <= top, s"version $upTo does not exist (latest $top)")
-    val (from, initial) = latestCheckpoint(path, upTo)
-      .map(ck => (ck.version, ck.files)).getOrElse((-1L, Seq.empty[String]))
-    val live = scala.collection.mutable.LinkedHashSet(initial: _*)
-    ((from + 1) to upTo).foreach { v =>
-      val c = readCommit(path, v)
-      c.removes.foreach(live -= _)
-      c.adds.foreach(a => live += a.path)
-    }
-    live.toSeq
-  }
+  /** The live data files of a snapshot, in log order. */
+  def snapshotFiles(path: String, asOf: Long = -1L): Seq[String] =
+    snapshot(path, asOf).files
 
-  /** Resolve the DELETION-VECTOR map of a snapshot: live data file →
-    * its current DV file (absent = no deleted positions). Folds like
-    * [[snapshotFiles]] (checkpoint-amortized): a remove or re-add
-    * clears a file's DV, a commit's `dvs` entries (re)assign; within
-    * one commit the dvs assignments win, so [[restore]] can re-add a
-    * file and restore its DV in the same commit. */
-  def snapshotDvs(path: String, asOf: Long = -1L): Map[String, String] = {
-    val top = currentVersion(path)
-    require(top >= 0, s"not a TxnTable: $path")
-    val upTo = if (asOf < 0) top else asOf
-    require(upTo <= top, s"version $upTo does not exist (latest $top)")
-    val (from, init) = latestCheckpoint(path, upTo) match {
-      case Some(ck) if ck.dvs.isDefined => (ck.version, ck.dvs.get)
-      case _ => (-1L, Map.empty[String, String]) // old checkpoint: replay
-    }
-    var m = init
-    ((from + 1) to upTo).foreach { v =>
-      val c = readCommit(path, v)
-      c.removes.foreach(m -= _)
-      c.adds.foreach(a => m -= a.path)
-      c.dvs.foreach { case (f, dv) => m += (f -> dv) }
-    }
-    m
-  }
+  /** The DELETION-VECTOR map of a snapshot: live data file → its
+    * current DV file (absent = no deleted positions). A remove or
+    * re-add clears a file's DV and a commit's `dvs` entries (re)assign;
+    * within one commit the assignments win, so [[restore]] can re-add
+    * a file and restore its DV in the same commit. */
+  def snapshotDvs(path: String, asOf: Long = -1L): Map[String, String] =
+    snapshot(path, asOf).dvs
 
   /** Write df's rows as fresh immutable part files; returns their adds.
     * Rows per file are counted from the parquet footers the write
@@ -699,7 +646,7 @@ object TxnTable {
     val staging = Files.createTempDirectory("graft_txn_stage").toString
     // column mapping: files always store PHYSICAL names — the single
     // write-side seam (no-op on unrenamed tables / first writes)
-    val physical = recordedSchemaAt(path, -1L)
+    val physical = currentSchema(path)
       .map(toPhysical(df, _)).getOrElse(df)
     physical.write.mode("overwrite").parquet(staging)
     Files.createDirectories(dataDir(path))
@@ -801,9 +748,9 @@ object TxnTable {
     * created before schemas were recorded (none in practice: create
     * always records one) fall back to plain inference.
     */
-  private def snapshotReader(spark: SparkSession, path: String,
-      upTo: Long): org.apache.spark.sql.DataFrameReader =
-    recordedSchemaAt(path, upTo) match {
+  private def snapshotReader(spark: SparkSession,
+      snap: Snapshot): org.apache.spark.sql.DataFrameReader =
+    snap.recordedSchema match {
       // bind by PHYSICAL names — files always store physical; a renamed
       // logical name would silently read all-NULL
       case Some(s) => spark.read.schema(physicalSchema(s))
@@ -842,9 +789,8 @@ object TxnTable {
         physicalFieldName(f), f.dataType, f.nullable)))
 
   /** Logical column name → the physical name stats/files use. */
-  private def physicalColName(path: String, upTo: Long,
-      logical: String): String =
-    recordedSchemaAt(path, upTo)
+  private def physicalColName(snap: Snapshot, logical: String): String =
+    snap.recordedSchema
       .flatMap(_.fields.find(_.name.equalsIgnoreCase(logical)))
       .map(physicalFieldName).getOrElse(logical)
 
@@ -873,15 +819,6 @@ object TxnTable {
       s.fields.filter(_.metadata.contains(PhysicalKey))
         .map(f => f.name.toLowerCase -> physicalFieldName(f)).toMap)
 
-  private def recordedSchemaAt(path: String, v: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val upTo = if (v < 0) currentVersion(path) else v
-    if (upTo < 0) None
-    else schemaInfo(path, upTo)._2.map(js =>
-      org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
-
   /** Every PHYSICAL column name (lowercased) that may exist in the
     * table's data files: the current schema's physical names, the
     * physical names of every schema recorded in the readable log
@@ -891,18 +828,17 @@ object TxnTable {
     * replays). Used by [[checkSchema]]'s evolution path to refuse a
     * new logical name that would re-bind old bytes — O(versions)
     * driver metadata on the rare evolve path only. */
-  private def physicalNamesInUse(path: String, upTo: Long): Set[String] = {
+  private def physicalNamesInUse(path: String, snap: Snapshot): Set[String] = {
     def phys(s: org.apache.spark.sql.types.StructType): Seq[String] =
       s.fields.toSeq.map(f => physicalFieldName(f).toLowerCase)
-    val hist = (earliestVersion(path) to upTo).flatMap { v =>
+    val hist = (snap.horizon to snap.version).flatMap { v =>
       readCommit(path, v).schema.toSeq.flatMap(js =>
         phys(org.apache.spark.sql.types.DataType.fromJson(js)
           .asInstanceOf[org.apache.spark.sql.types.StructType]))
     }
-    val logged = addsIndex(path, upTo).values.flatMap(parseAddStats)
+    val logged = snap.allAdds.values.flatMap(parseAddStats)
       .flatMap(_.cols.map(_.toLowerCase))
-    (recordedSchemaAt(path, upTo).toSeq.flatMap(phys) ++ hist ++ logged)
-      .toSet
+    (snap.recordedSchema.toSeq.flatMap(phys) ++ hist ++ logged).toSet
   }
 
   /** The name a parquet scan reports for snapshot file `f` (table-relative
@@ -945,17 +881,17 @@ object TxnTable {
 
   /** Raw scans bind PHYSICAL names; alias back to the snapshot's logical
     * names — the column-mapping seam every read path flows through. */
-  private def logicalAt(path: String, asOf: Long, df: DataFrame): DataFrame =
-    recordedSchemaAt(path, asOf).map(toLogical(df, _)).getOrElse(df)
+  private def logicalAt(snap: Snapshot, df: DataFrame): DataFrame =
+    snap.recordedSchema.map(toLogical(df, _)).getOrElse(df)
 
   /** Live rows of a raw scan of snapshot `asOf`'s files, tagged by
     * [[withFilePos]] (the bookkeeping columns pass through the logical
     * renaming), minus the rows whose position is in their file's
     * `deleted` set. */
-  private def liveTagged(path: String, asOf: Long, scan: DataFrame,
+  private def liveTagged(snap: Snapshot, scan: DataFrame,
       deleted: Map[String, Roaring64Bitmap]): DataFrame = {
     val tagged = withFilePos(scan)
-    logicalAt(path, asOf,
+    logicalAt(snap,
       if (deleted.isEmpty) tagged
       else tagged.filter(notDeleted(deleted)(col("__fname"), col("__pos"))))
   }
@@ -968,13 +904,13 @@ object TxnTable {
     * current DV file ([[deletedAt]]), loaded once per JVM on the
     * driver. `keepFname` returns the frame with `__fname` attached
     * ([[liveTagged]]) for the rewrite paths. */
-  private def applyDv(spark: SparkSession, path: String, asOf: Long,
+  private def applyDv(spark: SparkSession, path: String, snap: Snapshot,
       scan: DataFrame, keepFname: Boolean): DataFrame = {
-    val dvm = snapshotDvs(path, asOf)
+    val dvm = snap.dvs
     if (keepFname)
-      liveTagged(path, asOf, scan, deletedAt(spark, path, dvm)).drop("__pos")
-    else if (dvm.isEmpty || !hasFileMetadata(scan)) logicalAt(path, asOf, scan)
-    else logicalAt(path, asOf, scan.filter(notDeleted(deletedAt(spark, path,
+      liveTagged(snap, scan, deletedAt(spark, path, dvm)).drop("__pos")
+    else if (dvm.isEmpty || !hasFileMetadata(scan)) logicalAt(snap, scan)
+    else logicalAt(snap, scan.filter(notDeleted(deletedAt(spark, path,
       dvm))(col("_metadata.file_path"), col("_metadata.row_index"))))
   }
 
@@ -985,7 +921,7 @@ object TxnTable {
 
   /** Deleted positions per DV file, keyed by the DV file's absolute
     * path: scan name → positions. DV files are immutable and UUID-named
-    * (the property [[schemaInfoMemo]] relies on for commit files), so an
+    * (the property [[headMemo]] relies on for commit files), so an
     * entry is a pure function of its key and each DV file is read at
     * most once per JVM. Bounded: cleared wholesale past a size cap
     * (correctness never depends on a hit). Entries are shared and never
@@ -1066,12 +1002,12 @@ object TxnTable {
       .collect().toSet
 
   /** Live rows (logical names, DVs applied) of `rels`, table-relative
-    * files of the snapshot `base`: all of them for a DML probe, or the
+    * files of `snap`: all of them for a DML probe, or the
     * subset a rewrite reads (a statement's hit files, a compaction's
     * candidates). */
-  private def scanFiles(spark: SparkSession, path: String, base: Long,
+  private def scanFiles(spark: SparkSession, path: String, snap: Snapshot,
       rels: Seq[String], keepFname: Boolean): DataFrame =
-    applyDv(spark, path, base, snapshotScan(spark, path, base,
+    applyDv(spark, path, snap, snapshotScan(spark, path, snap,
       rels.map(f => localRoot(path).resolve(f).toString)), keepFname)
 
   /** The snapshot files whose scan name is in `hitNames` (UUID file
@@ -1191,19 +1127,10 @@ object TxnTable {
   }
 
   /** The table schema as of the latest commit that recorded one
-    * (create + explicit evolutions) — checkpoint-amortized via
-    * [[schemaInfo]]: the nearest checkpoint carries the latest recorded
-    * schema, so the cost is O(CheckpointInterval) reads, not O(versions).
-    */
+    * (create + explicit evolutions): the head snapshot's. */
   def currentSchema(path: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val top = currentVersion(path)
-    if (top < 0) return None
-    schemaInfo(path, top)._2.map { json =>
-      org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    head(path).flatMap(_.recordedSchema)
 
   /** Validate an incoming write's schema; returns the schema to record
     * in the commit (on create/evolution, or when a nullability-LOOSER
@@ -1281,7 +1208,7 @@ object TxnTable {
           val fresh = df.schema.fieldNames
             .filterNot(n => existing(n.toLowerCase))
           if (fresh.nonEmpty) {
-            val inUse = physicalNamesInUse(path, currentVersion(path))
+            val inUse = physicalNamesInUse(path, snapshot(path))
             val clash = fresh.filter(n => inUse(n.toLowerCase))
             require(clash.isEmpty,
               s"schema evolution: ${clash.mkString(", ")} collides with " +
@@ -1422,9 +1349,9 @@ object TxnTable {
     * or the unchanged head when nothing was new. */
   def copyInto(spark: SparkSession, path: String, srcDir: String,
       pattern: Option[String] = None): Long = {
-    val top = currentVersion(path)
-    require(top >= 0,
-      s"copyInto: $path is not a TxnTable — CREATE it first")
+    val snap = head(path).getOrElse(throw new IllegalArgumentException(
+      s"copyInto: $path is not a TxnTable — CREATE it first"))
+    val top = snap.version
     val src = localRoot(srcDir)
     require(Files.isDirectory(src), s"copyInto: no directory $srcDir")
     def visible(rel: JPath): Boolean =
@@ -1444,21 +1371,19 @@ object TxnTable {
       finally walk.close()
     require(listed.nonEmpty, s"copyInto: no parquet files under $srcDir" +
       pattern.map(g => s" matching PATTERN '$g'").getOrElse(""))
-    def freshAt(v: Long): Seq[String] = {
-      val already = addsIndex(path, v).keySet
-      listed.filterNot(already.contains)
-    }
-    var fresh = freshAt(top)
+    def freshAt(s: Snapshot): Seq[String] =
+      listed.filterNot(s.allAdds.contains)
+    var fresh = freshAt(snap)
     if (fresh.isEmpty) return top
     // column-mapped tables cannot bind source-named files
-    recordedSchemaAt(path, top).foreach(s => s.fields.foreach(f =>
+    snap.recordedSchema.foreach(s => s.fields.foreach(f =>
       require(physicalFieldName(f) == f.name,
         s"copyInto: $path maps logical column ${f.name} to physical " +
           s"${physicalFieldName(f)} — adopted files cannot be bound " +
           "through a column mapping; INSERT INTO … SELECT instead")))
     // DV ambiguity guard, same rule as convertParquet: basenames must
     // be unique among fresh files AND against the live snapshot
-    val liveLeaves = snapshotFiles(path, top).map(_.split('/').last).toSet
+    val liveLeaves = snap.files.map(_.split('/').last).toSet
     val clash = fresh.groupBy(_.split('/').last)
       .filter { case (leaf, fs) => fs.size > 1 || liveLeaves(leaf) }
     require(clash.isEmpty,
@@ -1507,9 +1432,9 @@ object TxnTable {
           if (attempt > 20) throw e
           // a racing COPY INTO may have loaded some of our files:
           // drop them and retry with the remainder (or no-op)
-          val rebasedTop = currentVersion(path)
-          fresh = freshAt(rebasedTop)
-          if (fresh.isEmpty) return currentVersion(path)
+          val rebased = snapshot(path)
+          fresh = freshAt(rebased)
+          if (fresh.isEmpty) return rebased.version
           val keep = fresh.toSet
           adds = adds.filter(a => keep(a.path))
           // re-run the DV ambiguity guard against the REBASED snapshot:
@@ -1520,8 +1445,7 @@ object TxnTable {
           // the dup-leaf require. Refusing here keeps the invariant
           // "live basenames are unique" a commit-time guarantee, not a
           // snapshot-at-entry hope.
-          val liveNow = snapshotFiles(path, rebasedTop)
-            .map(_.split('/').last).toSet
+          val liveNow = rebased.files.map(_.split('/').last).toSet
           val clashNow = fresh.map(_.split('/').last).filter(liveNow)
           require(clashNow.isEmpty,
             s"copyInto: file basename collision introduced by a " +
@@ -1548,33 +1472,6 @@ object TxnTable {
         rel => m.matches(rel)
     }
 
-  /** Source files already materialized by a formatted COPY INTO
-    * (csv/json), replayed from `copyinto:<fmt>:<json-array>` commit
-    * ops — the idempotence registry for sources whose BYTES were
-    * rewritten into table parquet (path identity can't live in the
-    * adds index there, unlike the parquet adopt-by-reference route).
-    * Checkpoint-amortized like constraints/props. */
-  private def copySourcesInfo(path: String, upTo: Long): Set[String] = {
-    val (from, init) = latestCheckpoint(path, upTo) match {
-      case Some(ck) if ck.copySrcs.isDefined =>
-        (ck.version + 1, ck.copySrcs.get.toSet)
-      case _ => (0L, Set.empty[String])
-    }
-    var s = init
-    (from to upTo).foreach { v =>
-      val op = readCommit(path, v).op
-      if (op.startsWith("copyinto:csv:"))
-        s = s ++ parseKeysOp(op.stripPrefix("copyinto:csv:"))
-      else if (op.startsWith("copyinto:json:"))
-        s = s ++ parseKeysOp(op.stripPrefix("copyinto:json:"))
-      else if (op.startsWith("stream:"))
-        s = s ++ parseStreamFilesOp(op)
-      else if (op.startsWith("copysrc:prune:"))
-        s = s -- parseKeysOp(op.stripPrefix("copysrc:prune:"))
-    }
-    s
-  }
-
   /** Bound the ingested-file registry: DROP entries under `srcDir`
     * whose source files no longer exist on disk (they were vacuumed
     * from the landing directory) via one `copysrc:prune:` metadata
@@ -1588,11 +1485,12 @@ object TxnTable {
     * unchanged head when nothing is prunable. */
   def pruneCopySources(spark: SparkSession, path: String,
       srcDir: String): Long = {
-    val top = currentVersion(path)
-    require(top >= 0, s"pruneCopySources: not a TxnTable: $path")
+    val snap = head(path).getOrElse(throw new IllegalArgumentException(
+      s"pruneCopySources: not a TxnTable: $path"))
+    val top = snap.version
     val prefix = java.nio.file.Paths.get(srcDir)
       .toAbsolutePath.normalize().toString + "/"
-    val gone = copySourcesInfo(path, top).toSeq.sorted.filter(p =>
+    val gone = snap.copySrcs.toSeq.sorted.filter(p =>
       p.startsWith(prefix) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
     if (gone.isEmpty) return top
@@ -1613,10 +1511,8 @@ object TxnTable {
     * landed SINCE the loss (bundled by the restarted stream into
     * already-seen batch ids) still load. Checkpoint-amortized via the
     * same `copySrcs` checkpoint field as the batch routes. */
-  def streamSourcesIngested(path: String): Set[String] = {
-    val top = currentVersion(path)
-    if (top < 0) Set.empty else copySourcesInfo(path, top)
-  }
+  def streamSourcesIngested(path: String): Set[String] =
+    head(path).fold(Set.empty[String])(_.copySrcs)
 
   /** [[copyInto]] for NON-parquet landings — `COPY INTO t FROM '<dir>'
     * FORMAT AS CSV|JSON`: fresh source files MATERIALIZE through the
@@ -1640,9 +1536,9 @@ object TxnTable {
     require(fmt == "csv" || fmt == "json",
       s"copyIntoFormat: unsupported format $format (CSV or JSON; " +
         "parquet adopts by reference via copyInto)")
-    val top = currentVersion(path)
-    require(top >= 0,
-      s"copyInto: $path is not a TxnTable — CREATE it first")
+    val snap = head(path).getOrElse(throw new IllegalArgumentException(
+      s"copyInto: $path is not a TxnTable — CREATE it first"))
+    val top = snap.version
     val src = localRoot(srcDir)
     require(Files.isDirectory(src), s"copyInto: no directory $srcDir")
     def visible(rel: JPath): Boolean =
@@ -1663,9 +1559,9 @@ object TxnTable {
       finally walk.close()
     require(listed.nonEmpty, s"copyInto: no $fmt files under $srcDir" +
       pattern.map(g => s" matching PATTERN '$g'").getOrElse(""))
-    def freshAt(v: Long): Seq[String] =
-      listed.filterNot(copySourcesInfo(path, v).contains)
-    val fresh = freshAt(top)
+    def freshAt(s: Snapshot): Seq[String] =
+      listed.filterNot(s.copySrcs.contains)
+    val fresh = freshAt(snap)
     if (fresh.isEmpty) return top
     // parse the fresh files: CSV reads untyped (header row names the
     // columns) and coerces below; JSON carries its own scalar types
@@ -1703,7 +1599,7 @@ object TxnTable {
       .mkString(s"copyinto:$fmt:[", ",", "]")
     // standard write path: constraints ride the job; bins sized by the
     // source byte count against the table's bin-pack target
-    val schemaAtStage = recordedSchemaAt(path, top).map(_.json)
+    val schemaAtStage = snap.schema
     var csStage =
       try constraints(path)
       catch { case _: IllegalArgumentException => Map.empty[String, String] }
@@ -1730,7 +1626,8 @@ object TxnTable {
             // let the caller re-run (which will list only what is
             // still fresh). A race that loaded NONE of ours commutes
             // like any append and re-commits at the new head.
-            if (freshAt(currentVersion(path)).toSet != fresh.toSet)
+            val now = snapshot(path)
+            if (freshAt(now).toSet != fresh.toSet)
               throw new IllegalStateException(
                 "copyInto: a concurrent COPY INTO loaded part of this " +
                   "batch — re-run to load the remainder")
@@ -1738,9 +1635,7 @@ object TxnTable {
             // were coerced to the OLD shape — blindly re-committing
             // would land wrong-schema data (the same fence append's
             // retry applies via checkSchema)
-            val schemaNow =
-              recordedSchemaAt(path, currentVersion(path)).map(_.json)
-            if (schemaNow != schemaAtStage)
+            if (now.schema != schemaAtStage)
               throw new IllegalStateException(
                 "copyInto: the table schema changed concurrently — the " +
                   "staged batch was coerced to the old shape; re-run " +
@@ -1772,10 +1667,8 @@ object TxnTable {
     * rather than append, e.g. a maintained view recording the source
     * version it reflects). Checkpoint-amortized. None if the table or
     * marker doesn't exist. */
-  def streamHighWater(path: String, streamId: String): Option[Long] = {
-    val top = currentVersion(path)
-    if (top < 0) None else streamBatches(path, top).get(streamId)
-  }
+  def streamHighWater(path: String, streamId: String): Option[Long] =
+    head(path).flatMap(_.streams.get(streamId))
 
   /** [[create]] with a clustered physical layout: range-partition the
     * rows by `clusterBy` into `targetFiles` files, sorted within each —
@@ -1790,7 +1683,7 @@ object TxnTable {
       .sortWithinPartitions(clusterBy: _*)
     val adds = writeDataPrepared(spark, path, prepared)
     // the LAYOUT SPEC rides the create commit as seeded table
-    // properties (`create:props:` folds into propsInfo like a SET),
+    // properties (`create:props:` folds into `props` like a SET),
     // so DESCRIBE DETAIL can tell an operator what the table is
     // clustered on and how wide — with no extra commit shifting
     // version numbers
@@ -1844,10 +1737,8 @@ object TxnTable {
     * [[appendCas]] with a stream op label) can skip redelivered
     * batches the same way [[appendStreamBatch]] does. Checkpoint-
     * amortized like every other log-derived hot path. */
-  def lastAppliedBatch(path: String, streamId: String): Option[Long] = {
-    val top = currentVersion(path)
-    if (top < 0) None else streamBatches(path, top).get(streamId)
-  }
+  def lastAppliedBatch(path: String, streamId: String): Option[Long] =
+    streamHighWater(path, streamId)
 
   /** [[overwriteClustered]] without a clustering requirement — INSERT
     * OVERWRITE for small derived/bookkeeping tables (e.g. folding a
@@ -1861,8 +1752,9 @@ object TxnTable {
   def overwrite(spark: SparkSession, path: String, df: DataFrame,
       partitions: Int = 1, op: String = "overwrite",
       evolveSchema: Boolean = false): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
     val newSchema = checkSchema(path, df, evolveSchema)
     val adds = writeData(spark, path, withChecks(spark, path, df),
       partitions)
@@ -1880,8 +1772,9 @@ object TxnTable {
     */
   def overwriteClustered(spark: SparkSession, path: String, df: DataFrame,
       clusterBy: Seq[Column], targetFiles: Int): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
     checkSchema(path, df, evolveSchema = false)
     val adds = writeDataPrepared(spark, path,
       withChecks(spark, path, df)
@@ -1944,14 +1837,14 @@ object TxnTable {
     * compaction on an emptied table then no-op through their own
     * nothing-matched paths instead of crashing on a pathless read. */
   private def snapshotScan(spark: SparkSession, path: String,
-      base: Long, abs: Seq[String]): DataFrame =
+      snap: Snapshot, abs: Seq[String]): DataFrame =
     if (abs.nonEmpty)
-      snapshotReader(spark, path, base).parquet(abs: _*)
+      snapshotReader(spark, snap).parquet(abs: _*)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      physicalSchema(recordedSchemaAt(path, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"empty snapshot of $path at $base with no recorded schema"))))
+      physicalSchema(snap.recordedSchema.getOrElse(
+        throw new IllegalArgumentException(s"empty snapshot of $path at " +
+          s"${snap.version} with no recorded schema"))))
 
   /** Delete matching rows by rewriting ONLY the files that contain them;
     * untouched files are carried by reference. One probe pass over the
@@ -1967,13 +1860,14 @@ object TxnTable {
     * the delete (no lost updates) — see [[commitRewrite]].
     */
   def deleteWhere(spark: SparkSession, path: String, predicate: Column): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
-    val hitNames = fileNames(scanFiles(spark, path, base, files,
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
+    val hitNames = fileNames(scanFiles(spark, path, snap, files,
       keepFname = true).filter(predicate).select(col("__fname")))
     if (hitNames.isEmpty) return base
     val removes = hitFiles(path, files, hitNames)
-    val survivors = scanFiles(spark, path, base, removes, keepFname = false)
+    val survivors = scanFiles(spark, path, snap, removes, keepFname = false)
       .filter(!coalesce(predicate, lit(false)))
     val adds = dropEmpty(path, writeData(spark, path, survivors, 1))
     try commitRewrite(path, base, "delete", adds, removes,
@@ -2000,8 +1894,9 @@ object TxnTable {
     * Returns the base version unchanged if nothing matched. */
   def deleteWhereMor(spark: SparkSession, path: String,
       predicate: Column): Long = {
-    val base = currentVersion(path)
-    val (live, deleted, files) = liveWithPos(spark, path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val (live, deleted, files) = liveWithPos(spark, path, snap)
     val hits = live.filter(predicate)
       .select(col("__fname").as("file"), col("__pos").as("pos"))
       .localCheckpoint()
@@ -2024,8 +1919,9 @@ object TxnTable {
   def updateWhereMor(spark: SparkSession, path: String,
       predicate: Column, set: Map[String, Column],
       partitions: Int = 1): Long = {
-    val base = currentVersion(path)
-    val (live, deleted, files) = liveWithPos(spark, path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val (live, deleted, files) = liveWithPos(spark, path, snap)
     val tableCols = live.columns.toSeq
       .filterNot(c => c == "__fname" || c == "__pos")
     val bad = set.keySet -- tableCols
@@ -2052,18 +1948,17 @@ object TxnTable {
       deleted, adds)
   }
 
-  /** Live rows of the snapshot `base` (existing DVs applied — an
+  /** Live rows of `snap` (existing DVs applied — an
     * already-deleted row must not re-trigger a hit) with `__fname` /
     * `__pos` scan metadata attached ([[liveTagged]]), plus the current
     * deleted positions by scan name and the snapshot file list, for the
     * MOR write paths. */
-  private def liveWithPos(spark: SparkSession, path: String, base: Long)
+  private def liveWithPos(spark: SparkSession, path: String, snap: Snapshot)
       : (DataFrame, Map[String, Roaring64Bitmap], Seq[String]) = {
-    val files = snapshotFiles(path, base)
-    val deleted = deletedAt(spark, path, snapshotDvs(path, base))
-    val scan = snapshotScan(spark, path, base,
-      files.map(f => localRoot(path).resolve(f).toString))
-    (liveTagged(path, base, scan, deleted), deleted, files)
+    val deleted = deletedAt(spark, path, snap.dvs)
+    val scan = snapshotScan(spark, path, snap,
+      snap.files.map(f => localRoot(path).resolve(f).toString))
+    (liveTagged(snap, scan, deleted), deleted, snap.files)
   }
 
   /** Write the replacement DV for `hits` (new positions ∪ the hit
@@ -2167,12 +2062,13 @@ object TxnTable {
     * the touched files' before/after images. */
   def updateWhere(spark: SparkSession, path: String, predicate: Column,
       set: Map[String, Column]): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
     // LOGICAL column surface: applyDv aliases the physical scan back to
     // the snapshot's logical names (column mapping) — user SET keys and
     // predicates speak logical
-    val withName = scanFiles(spark, path, base, files, keepFname = true)
+    val withName = scanFiles(spark, path, snap, files, keepFname = true)
     val tableCols = withName.columns.toSeq.filterNot(_ == "__fname")
     val colType = withName.schema.fields.map(f => f.name -> f.dataType).toMap
     val bad = set.keySet -- tableCols
@@ -2188,7 +2084,7 @@ object TxnTable {
     if (hitNames.isEmpty) return base
     val removes = hitFiles(path, files, hitNames)
     val p = coalesce(predicate, lit(false))
-    val inHit = scanFiles(spark, path, base, removes, keepFname = false)
+    val inHit = scanFiles(spark, path, snap, removes, keepFname = false)
     // IN/EXISTS subqueries are only legal in FILTERS (Spark's subquery
     // placement rule), never inside the per-column when(p, …)
     // projection — a subquery predicate takes the two-filter shape
@@ -2283,11 +2179,12 @@ object TxnTable {
       notMatched: Seq[NotMatchedInsert] = Nil,
       clusterBy: Seq[Column] = Nil,
       bySource: Seq[MergeBySource] = Nil): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
     // LOGICAL surface: applyDv aliases the physical scan to logical
     // names (column mapping); clause SETs and inserts speak logical
-    val withName = scanFiles(spark, path, base, files, keepFname = true)
+    val withName = scanFiles(spark, path, snap, files, keepFname = true)
     val tableCols = withName.columns.toSeq.filterNot(_ == "__fname")
     val colType = withName.schema.fields.map(f => f.name -> f.dataType).toMap
     val srcS = source.select(
@@ -2329,7 +2226,7 @@ object TxnTable {
     val survivors =
       if (removes.isEmpty) None
       else {
-        val joined = scanFiles(spark, path, base, removes, keepFname = false)
+        val joined = scanFiles(spark, path, snap, removes, keepFname = false)
           .join(srcS, keyCols, "left")
         Some(joined.filter(!when(m, delP).otherwise(bsDelP))
           .select(tableCols.map { c =>
@@ -2452,8 +2349,9 @@ object TxnTable {
       notMatched: Seq[NotMatchedInsert] = Nil,
       partitions: Int = 1,
       bySource: Seq[MergeBySource] = Nil): Long = {
-    val base = currentVersion(path)
-    val (live, deleted, files) = liveWithPos(spark, path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val (live, deleted, files) = liveWithPos(spark, path, snap)
     val tableCols = live.columns.toSeq
       .filterNot(c => c == "__fname" || c == "__pos")
     val schema = live.select(tableCols.map(col): _*).schema
@@ -2580,8 +2478,9 @@ object TxnTable {
   def applyChangesMor(spark: SparkSession, path: String, keys: DataFrame,
       upserts: DataFrame, keyCols: Seq[String], partitions: Int = 1,
       op: String = "dvmerge"): Long = {
-    val base = currentVersion(path)
-    val (live, deleted, files) = liveWithPos(spark, path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val (live, deleted, files) = liveWithPos(spark, path, snap)
     // semi-join: duplicate keys cannot multiply hits, no distinct needed
     val hits = live.join(keys.select(keyCols.map(col): _*), keyCols,
         "left_semi")
@@ -2627,10 +2526,8 @@ object TxnTable {
   }
 
   /** Active CHECK constraints of the table head (name → SQL). */
-  def constraints(path: String): Map[String, String] = {
-    val top = currentVersion(path)
-    if (top < 0) Map.empty else constraintsInfo(path, top)
-  }
+  def constraints(path: String): Map[String, String] =
+    head(path).fold(Map.empty[String, String])(_.constraints)
 
   class ConstraintViolationException(msg: String)
     extends RuntimeException(msg)
@@ -2689,25 +2586,6 @@ object TxnTable {
   // time (a typo like `graft.morr` silently ignored forever is worse
   // than an error); everything else is free-form user metadata.
 
-  private def propsInfo(path: String, upTo: Long): Map[String, String] = {
-    val (from, init) = latestCheckpoint(path, upTo) match {
-      case Some(ck) if ck.props.isDefined => (ck.version + 1, ck.props.get)
-      case _ => (0L, Map.empty[String, String])
-    }
-    var m = init
-    (from to upTo).foreach { v =>
-      val op = readCommit(path, v).op
-      if (op.startsWith("tblprops:set:"))
-        m = m ++ parsePropsOp(op.stripPrefix("tblprops:set:"))
-      else if (op.startsWith("tblprops:unset:"))
-        m = m -- parseKeysOp(op.stripPrefix("tblprops:unset:"))
-      else if (op.startsWith("create:props:"))
-        // a clustered create seeds its layout spec as properties
-        m = m ++ parsePropsOp(op.stripPrefix("create:props:"))
-    }
-    m
-  }
-
   private def parsePropsOp(json: String): Map[String, String] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
@@ -2730,15 +2608,13 @@ object TxnTable {
   }
 
   /** The table head's properties (key → value). */
-  def properties(path: String): Map[String, String] = {
-    val top = currentVersion(path)
-    if (top < 0) Map.empty else propsInfo(path, top)
-  }
+  def properties(path: String): Map[String, String] =
+    head(path).fold(Map.empty[String, String])(_.props)
 
   /** [[properties]] at a pinned version — the CBO injection reads
     * histograms at the plan's snapshot, never the racing head. */
   def propertiesAt(path: String, asOf: Long): Map[String, String] =
-    if (asOf < 0) properties(path) else propsInfo(path, asOf)
+    if (asOf < 0) properties(path) else snapshot(path, asOf).props
 
   /** How many table scans a [[computeHistogram]] ran — the ANALYZE
     * pass is batched (one quantile aggregate for ALL columns, one
@@ -2763,9 +2639,9 @@ object TxnTable {
     import org.apache.spark.sql.types.{NumericType, StringType}
     require(bins >= 2 && bins <= 254, s"bins must be in [2,254], got $bins")
     require(columns.nonEmpty, "computeHistogram: no columns given")
-    val top = currentVersion(path)
-    require(top >= 0, s"computeHistogram: not a TxnTable: $path")
-    val df = read(spark, path, top)
+    val snap = head(path).getOrElse(throw new IllegalArgumentException(
+      s"computeHistogram: not a TxnTable: $path"))
+    val df = scanOf(spark, path, snap)
     val fields = columns.map { c =>
       df.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -2973,7 +2849,7 @@ object TxnTable {
       // SQL speaks logical — alias before validating
       val raw = spark.read.parquet(
         adds.map(a => localRoot(path).resolve(a.path).toString): _*)
-      val staged = recordedSchemaAt(path, -1L)
+      val staged = currentSchema(path)
         .map(toLogical(raw, _)).getOrElse(raw)
       fresh.toSeq.sortBy(_._1).foreach { case (n, sql) =>
         val viol = staged.filter(!coalesce(expr(sql), lit(true)))
@@ -2990,14 +2866,15 @@ object TxnTable {
       keys: DataFrame, keyCols: Seq[String], insert: Option[DataFrame],
       partitions: Int, clusterBy: Seq[Column], expectedBase: Long,
       op: String = "merge"): Long = {
-    val base = currentVersion(path)
+    val snap = snapshot(path)
+    val base = snap.version
     // CAS guard: a caller that computed its input FROM a snapshot (e.g.
     // TxnIndex.upsert's replaced-doc stats) passes that snapshot's
     // version; a commit that landed in between makes those inputs stale,
     // so fail the merge up front instead of committing a wrong fold.
     if (expectedBase >= 0 && base != expectedBase)
       throw new TxnConflictException(base)
-    val files = snapshotFiles(path, base)
+    val files = snap.files
     // Null-keyed rows match nothing under SQL equality; drop them from
     // the match set so an all-null bookkeeping row doesn't plan a join
     // that can never hit. Semi/anti joins ignore duplicate keys, so the
@@ -3009,7 +2886,7 @@ object TxnTable {
     // from an old-generation footer would silently drop evolved columns
     // from the rewritten files (permanent data loss in the new commit).
     // LOGICAL surface (column mapping): tableCols from the aliased frame
-    val withName = scanFiles(spark, path, base, files, keepFname = true)
+    val withName = scanFiles(spark, path, snap, files, keepFname = true)
     val tableCols = withName.columns.toSeq.filterNot(_ == "__fname")
     // One probe pass collects the hit files' names to the driver once —
     // metadata-scale, the commit's `removes`; the rewrite scans only them
@@ -3019,7 +2896,7 @@ object TxnTable {
     // table's column order so rewritten files match the schema.
     val survivors =
       if (removes.isEmpty) None
-      else Some(scanFiles(spark, path, base, removes, keepFname = false)
+      else Some(scanFiles(spark, path, snap, removes, keepFname = false)
         .join(matchable, keyCols, "left_anti")
         .select(tableCols.map(col): _*))
     val inserts = insert.map(withChecks(spark, path, _))
@@ -3050,15 +2927,15 @@ object TxnTable {
   def maybeCompact(spark: SparkSession, path: String,
       maxFiles: Int = 64, maxDeadFrac: Double = 0.2,
       targetFiles: Int = 1): Option[Long] = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
-    val dvm = snapshotDvs(path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
+    val dvm = snap.dvs
     val degraded =
       if (files.size > maxFiles) true
       else if (dvm.isEmpty) false
       else {
-        val ai = addsIndex(path, base)
-        val totalRows = files.flatMap(ai.get).map(_.rows).sum
+        val totalRows = files.flatMap(snap.allAdds.get).map(_.rows).sum
         val dead = deletedAt(spark, path, dvm).values
           .map(_.getLongCardinality).sum
         totalRows > 0 && dead.toDouble / totalRows > maxDeadFrac
@@ -3071,12 +2948,13 @@ object TxnTable {
     * files are never deleted).
     */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 1): Long = {
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
     // schema-pinned like every rewrite: compacting a schema-evolved
     // table must not lose evolved columns to single-footer inference
     val adds = writeData(spark, path,
-      scanFiles(spark, path, base, files, keepFname = false), targetFiles)
+      scanFiles(spark, path, snap, files, keepFname = false), targetFiles)
     try commitRewrite(path, base, "compact", adds, files,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3097,8 +2975,8 @@ object TxnTable {
     * no-op signal. */
   def binPack(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val base = currentVersion(path)
-    binPackFiles(spark, path, base, snapshotFiles(path, base), targetBytes)
+    val snap = snapshot(path)
+    binPackFiles(spark, path, snap, snap.files, targetBytes)
   }
 
   /** [[binPack]] SCOPED by a range predicate on `column` (physical
@@ -3113,21 +2991,21 @@ object TxnTable {
   def binPackWhere(spark: SparkSession, path: String, column: String,
       lo: Long, hi: Long,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val base = currentVersion(path)
-    val (schema, _) = snapshotSchemaFenced(spark, path, base)
+    val (schema, snap) = snapshotSchemaFenced(spark, path, -1L)
     requireIntegral(schema, column, "binPackWhere")
-    binPackFiles(spark, path, base,
-      selectFiles(spark, path, base, Seq(Bound.LongRange(column, lo, hi))),
+    binPackFiles(spark, path, snap,
+      selectFiles(spark, path, snap, Seq(Bound.LongRange(column, lo, hi))),
       targetBytes)
   }
 
   /** The shared bin-pack tail: fold `scope`'s eligible files (small or
     * DV-carrying) into ~targetBytes bins; unchanged head when nothing
     * is eligible. */
-  private def binPackFiles(spark: SparkSession, path: String, base: Long,
-      scope: Seq[String], targetBytes: Long): Long = {
-    val ai = addsIndex(path, base)
-    val dvm = snapshotDvs(path, base)
+  private def binPackFiles(spark: SparkSession, path: String,
+      snap: Snapshot, scope: Seq[String], targetBytes: Long): Long = {
+    val base = snap.version
+    val ai = snap.allAdds
+    val dvm = snap.dvs
     val candidates = scope.filter(f =>
       dvm.contains(f) || ai.get(f).exists(_.bytes < targetBytes))
     if (candidates.size < 2 && !candidates.exists(dvm.contains))
@@ -3136,7 +3014,7 @@ object TxnTable {
     val bins = math.max(1,
       math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val adds = writeData(spark, path,
-      scanFiles(spark, path, base, candidates, keepFname = false), bins)
+      scanFiles(spark, path, snap, candidates, keepFname = false), bins)
     try commitRewrite(path, base, "compact", adds, candidates,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3194,10 +3072,11 @@ object TxnTable {
   def compactClustered(spark: SparkSession, path: String,
       cols: Seq[Column], targetFiles: Int): Long = {
     val layout = clusterLayout(cols)
-    val base = currentVersion(path)
-    val files = snapshotFiles(path, base)
+    val snap = snapshot(path)
+    val base = snap.version
+    val files = snap.files
     val adds = writeDataPrepared(spark, path, layout(
-      scanFiles(spark, path, base, files, keepFname = false), targetFiles))
+      scanFiles(spark, path, snap, files, keepFname = false), targetFiles))
     try commitRewrite(path, base, "compact:cluster", adds, files,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3212,15 +3091,15 @@ object TxnTable {
       tailBytes: Long, totalBytes: Long)
 
   def clusterTailInfo(path: String): Option[ClusterTail] = {
-    val base = currentVersion(path)
-    if (base < 0) return None
+    val snap = head(path).getOrElse(return None)
+    val base = snap.version
     val clusterV = commits(path, base).reverse.collectFirst {
       case c if c.op.startsWith("compact:cluster") => c.version
       case c if c.op.startsWith("create:props:") &&
         c.op.contains("\"graft.clusterBy\"") => c.version
     }.getOrElse(return None)
-    val live = snapshotFiles(path, base)
-    val bulk = snapshotFiles(path, clusterV).toSet
+    val live = snap.files
+    val bulk = snapshot(path, clusterV).live
     // files a SCOPED re-cluster (compact:zscope) wrote since the last
     // full/tail cluster commit are clustered too — they own compact
     // ranges — so they leave the tail WITHOUT resetting the chain
@@ -3230,7 +3109,7 @@ object TxnTable {
       c.version > clusterV && c.op == "compact:zscope")
       .flatMap(_.adds.map(_.path)).toSet
     val tail = live.filterNot(f => bulk(f) || scoped(f))
-    val ai = addsIndex(path, base)
+    val ai = snap.allAdds
     Some(ClusterTail(clusterV, tail,
       tail.flatMap(ai.get).map(_.bytes).sum,
       live.flatMap(ai.get).map(_.bytes).sum))
@@ -3254,7 +3133,8 @@ object TxnTable {
   def compactClusteredTail(spark: SparkSession, path: String,
       cols: Seq[Column], targetFiles: Int = 16): Long = {
     val layout = clusterLayout(cols)
-    val base = currentVersion(path)
+    val snap = snapshot(path)
+    val base = snap.version
     val ct = clusterTailInfo(path).getOrElse(
       throw new IllegalArgumentException(
         s"$path has no cluster commit — run a full re-cluster " +
@@ -3263,7 +3143,7 @@ object TxnTable {
     val bins = math.max(1, math.round(targetFiles.toDouble *
       ct.tailBytes / math.max(1L, ct.totalBytes)).toInt)
     val adds = writeDataPrepared(spark, path, layout(
-      scanFiles(spark, path, base, ct.tailFiles, keepFname = false), bins))
+      scanFiles(spark, path, snap, ct.tailFiles, keepFname = false), bins))
     try commitRewrite(path, base, "compact:cluster", adds, ct.tailFiles,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3287,19 +3167,19 @@ object TxnTable {
       cols: Seq[Column], column: String, lo: Long, hi: Long,
       targetFiles: Int = 16): Long = {
     val layout = clusterLayout(cols)
-    val base = currentVersion(path)
-    val (schema, _) = snapshotSchemaFenced(spark, path, base)
+    val (schema, snap) = snapshotSchemaFenced(spark, path, -1L)
+    val base = snap.version
     requireIntegral(schema, column, "compactClusteredWhere")
     val inRange =
-      selectFiles(spark, path, base, Seq(Bound.LongRange(column, lo, hi)))
+      selectFiles(spark, path, snap, Seq(Bound.LongRange(column, lo, hi)))
     if (inRange.isEmpty) return base // nothing intersects the box
-    val ai = addsIndex(path, base)
+    val ai = snap.allAdds
     val selBytes = inRange.flatMap(ai.get).map(_.bytes).sum
-    val totBytes = snapshotFiles(path, base).flatMap(ai.get).map(_.bytes).sum
+    val totBytes = snap.files.flatMap(ai.get).map(_.bytes).sum
     val bins = math.max(1, math.round(targetFiles.toDouble *
       selBytes / math.max(1L, totBytes)).toInt)
     val adds = writeDataPrepared(spark, path, layout(
-      scanFiles(spark, path, base, inRange, keepFname = false), bins))
+      scanFiles(spark, path, snap, inRange, keepFname = false), bins))
     try commitRewrite(path, base, "compact:zscope", adds, inRange,
       CommuteNonOverlapping)
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
@@ -3355,10 +3235,9 @@ object TxnTable {
     // restarts batch ids at 0 and would bundle files landed since the
     // loss into already-seen ids, silently skipping them forever.
     def alreadyApplied(): Boolean = {
-      val top = currentVersion(path)
-      if (top < 0) return false
+      val snap = head(path).getOrElse(return false)
       if (srcFiles.nonEmpty) {
-        val seen = copySourcesInfo(path, top)
+        val seen = snap.copySrcs
         val hits = srcFiles.count(seen.contains)
         // partial overlap is unreachable under the single-writer-per-
         // streamId contract (the caller filters to fresh files first);
@@ -3369,7 +3248,7 @@ object TxnTable {
             s"($hits of ${srcFiles.size} already loaded) — a concurrent " +
             "writer violated single-writer-per-streamId")
         hits == srcFiles.size
-      } else streamBatches(path, top).get(streamId).exists(_ >= batchId)
+      } else snap.streams.get(streamId).exists(_ >= batchId)
     }
     if (alreadyApplied()) return None
     checkSchema(path, df, evolveSchema = false)
@@ -3439,18 +3318,19 @@ object TxnTable {
       require(asOf <= srcTop,
         s"cannot clone at $asOf: version does not exist (latest $srcTop)")
     }
-    val byPath = addsIndex(src, srcTop)
-    val adds = snapshotFiles(src, upTo).map { f =>
+    val snap = snapshot(src, upTo)
+    val byPath = snap.allAdds
+    val adds = snap.files.map { f =>
       val a = byPath.getOrElse(f,
         sys.error(s"clone: add metadata missing for $f (corrupt log?)"))
       a.copy(path = localRoot(src).resolve(f).toString)
     }
-    val schema = schemaInfo(src, upTo)._2
+    val schema = snap.schema
     // carry the source snapshot's deletion vectors, absolutized like
     // the data references (keys must match the adds' paths; the DV
     // files live under the SOURCE's dv/ and are never reaped by the
     // clone's own vacuum, same as data)
-    val dvs = snapshotDvs(src, upTo).toSeq.sortBy(_._1).map {
+    val dvs = snap.dvs.toSeq.sortBy(_._1).map {
       case (f, dv) => (localRoot(src).resolve(f).toString,
         localRoot(src).resolve(dv).toString)
     }
@@ -3540,25 +3420,24 @@ object TxnTable {
         s"cannot restore to $toVersion: vacuumed (earliest readable $earliest)")
     }
     requireReadable()
-    val target = snapshotFiles(path, toVersion)
-    // Checkpoint-amortized re-add metadata: the target's files are all
-    // extant (the version is readable, so no vacuum deleted them),
-    // hence every one is in the addsIndex — no O(versions) log replay.
-    val byPath = addsIndex(path, currentVersion(path))
+    val targetSnap = snapshot(path, toVersion)
+    val target = targetSnap.files
+    // Re-add metadata: the target's files are all extant (the version
+    // is readable, so no vacuum deleted them), hence every one is in
+    // its allAdds — no O(versions) log replay.
+    val byPath = targetSnap.allAdds
     val targetAdds = target.flatMap(byPath.get)
     require(targetAdds.size == target.size,
       s"restore: add metadata missing for ${target.size - targetAdds.size} " +
         s"of ${target.size} target files (corrupt log?)")
     var attempt = 0
     while (true) {
-      val cur = currentVersion(path)
-      val live = snapshotFiles(path, cur)
+      val now = snapshot(path)
+      val cur = now.version
+      val live = now.files
       // roll the recorded schema back too, if evolution happened since
-      // (schemaInfo = checkpoint-amortized "schema as of version v")
-      val schemaRollback = {
-        val at = schemaInfo(path, toVersion)._2
-        if (at != schemaInfo(path, cur)._2) at else None
-      }
+      val schemaRollback =
+        if (targetSnap.schema != now.schema) targetSnap.schema else None
       preCommitHook()
       // Re-check INSIDE the race window: a vacuum may have raised the
       // horizon (and physically deleted the target's files) since the
@@ -3572,7 +3451,7 @@ object TxnTable {
         // a dvdelete rolls the deletion vectors back too
         tryCommit(path, TxnCommit(cur + 1, s"restore:$toVersion",
           targetAdds, live.filterNot(target.contains), schemaRollback,
-          snapshotDvs(path, toVersion).toSeq.sortBy(_._1)))
+          targetSnap.dvs.toSeq.sortBy(_._1)))
         return cur + 1
       } catch {
         case _: TxnConflictException if attempt < maxAttempts => attempt += 1
@@ -3582,21 +3461,8 @@ object TxnTable {
   }
 
   /** Oldest version still readable: 0, or the horizon of the most
-    * aggressive vacuum so far. Checkpoint-amortized like
-    * `snapshotFiles`: the checkpoint carries the horizon at its
-    * version, so only the commit suffix is scanned.
-    */
-  def earliestVersion(path: String): Long = {
-    val top = currentVersion(path)
-    if (top < 0) return 0L
-    val (from, ckHorizon) = latestCheckpoint(path, top)
-      .map(ck => (ck.version, ck.horizon)).getOrElse((-1L, 0L))
-    ((from + 1) to top).map { v =>
-      val c = readCommit(path, v)
-      if (c.op.startsWith("vacuum:")) c.op.stripPrefix("vacuum:").toLong
-      else 0L
-    }.foldLeft(ckHorizon)(math.max)
-  }
+    * aggressive vacuum so far (the head snapshot's). */
+  def earliestVersion(path: String): Long = head(path).fold(0L)(_.horizon)
 
   /** DESCRIBE HISTORY: one row per commit of the readable log —
     * (version, op, tsMillis from the commit file's mtime, files/rows/
@@ -3629,13 +3495,9 @@ object TxnTable {
     * active constraint count. */
   def detail(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val top = currentVersion(path)
-    require(top >= 0, s"not a TxnTable: $path")
-    val files = snapshotFiles(path, top)
-    val ai = addsIndex(path, top)
-    val dvm = snapshotDvs(path, top)
-    val adds = files.flatMap(ai.get)
-    val props = propsInfo(path, top)
+    val snap = snapshot(path)
+    val adds = snap.files.flatMap(snap.allAdds.get)
+    val props = snap.props
     // stats coverage: the share of live adds carrying write-time
     // min/max stats — the operator's "would OPTIMIZE make pruning
     // zero-footer?" signal (adds without stats scan conservatively in
@@ -3643,9 +3505,9 @@ object TxnTable {
     val statsCov =
       if (adds.isEmpty) 1.0
       else adds.count(_.stats.exists(_.nonEmpty)).toDouble / adds.size
-    Seq((path, top, earliestVersion(path), files.size.toLong,
-      adds.map(_.rows).sum, adds.map(_.bytes).sum, dvm.size.toLong,
-      constraints(path).size.toLong,
+    Seq((path, snap.version, snap.horizon, snap.files.size.toLong,
+      adds.map(_.rows).sum, adds.map(_.bytes).sum, snap.dvs.size.toLong,
+      snap.constraints.size.toLong,
       props.get("graft.clusterBy"),
       props.get("graft.targetFiles").map(_.toLong),
       statsCov))
@@ -3664,11 +3526,10 @@ object TxnTable {
     * silently swallowed a racing append would lose its rows); pure
     * metadata commits (properties) commute, like overwrite's. */
   def truncate(path: String): Long = {
-    val top = currentVersion(path)
-    require(top >= 0, s"not a TxnTable: $path")
-    val files = snapshotFiles(path, top)
-    if (files.isEmpty) return top // already empty: the no-op signal
-    commitRewrite(path, top, "truncate", Nil, files, CommuteMetadataOnly)
+    val snap = snapshot(path)
+    if (snap.files.isEmpty) return snap.version // already empty: no-op
+    commitRewrite(path, snap.version, "truncate", Nil, snap.files,
+      CommuteMetadataOnly)
   }
 
   /** FSCK — reconcile the log with storage after OUT-OF-BAND file
@@ -3688,16 +3549,15 @@ object TxnTable {
   def repair(spark: SparkSession, path: String,
       dryRun: Boolean = true): DataFrame = {
     import spark.implicits._
-    val top = currentVersion(path)
-    require(top >= 0, s"not a TxnTable: $path")
-    val ai = addsIndex(path, top)
+    val snap = snapshot(path)
+    val ai = snap.allAdds
     // per-file probe through the Store seam: O(live files) metadata
     // locally; an object-store port batches per-prefix LISTs instead
     // of per-file HEADs (see Store.exists)
-    val missing = snapshotFiles(path, top)
+    val missing = snap.files
       .filterNot(f => Store.exists(localRoot(path).resolve(f)))
     if (!dryRun && missing.nonEmpty)
-      commitRewrite(path, top, "repair", Nil, missing,
+      commitRewrite(path, snap.version, "repair", Nil, missing,
         CommuteNonOverlapping)
     missing.map { f =>
       val a = ai.get(f)
@@ -3723,16 +3583,13 @@ object TxnTable {
     */
   def logTableStats(spark: SparkSession, path: String,
       asOf: Long = -1L): (Long, Long, Seq[(String, LogColStat)]) = {
-    val top = if (asOf >= 0) asOf else currentVersion(path)
-    require(top >= 0, s"not a TxnTable: $path")
-    val files = snapshotFiles(path, top)
-    val ai = addsIndex(path, top)
-    val adds = files.flatMap(ai.get)
+    val snap = readable(path, asOf)
+    val adds = snap.files.flatMap(snap.allAdds.get)
     val parsed = adds.map(a => (a.rows, parseAddStats(a)))
     val nAdds = parsed.size
-    val schema = read(spark, path, top).schema
+    val schema = scanOf(spark, path, snap).schema
     val cols = schema.fields.toSeq.map { f =>
-      val phys = physicalColName(path, top, f.name)
+      val phys = physicalColName(snap, f.name)
       val have = parsed.flatMap(_._2).filter(_.cols.contains(phys))
       val coverage =
         if (nAdds == 0) 1.0 else have.size.toDouble / nAdds
@@ -3869,15 +3726,15 @@ object TxnTable {
       retainVersions: Int = 2): DataFrame = {
     import spark.implicits._
     require(retainVersions >= 1, "must retain at least the current version")
-    val cur = currentVersion(path)
-    require(cur >= 0, s"not a TxnTable: $path")
-    val horizon = math.max(earliestVersion(path),
+    val snap = snapshot(path)
+    val cur = snap.version
+    val horizon = math.max(snap.horizon,
       math.max(0L, cur - retainVersions + 1))
     val pinned = registeredClonePins(path)
       .filter(v => v >= 0 && v <= cur).distinct
     val keep = ((horizon to cur) ++ pinned)
       .flatMap(v => snapshotFiles(path, v)).toSet
-    val ai = addsIndex(path, cur)
+    val ai = snap.allAdds
     (ai.keySet -- keep).toSeq.sorted
       .filter { f =>
         val p = localRoot(path).resolve(f)
@@ -3938,8 +3795,9 @@ object TxnTable {
     require(retainVersions >= 1, "must retain at least the current version")
     var attempt = 0
     while (true) {
-      val cur = currentVersion(path)
-      val horizon = math.max(earliestVersion(path),
+      val snap = snapshot(path)
+      val cur = snap.version
+      val horizon = math.max(snap.horizon,
         math.max(0L, cur - retainVersions + 1))
       val pinned = registeredClonePins(path)
         .filter(v => v >= 0 && v <= cur).distinct
@@ -3948,13 +3806,11 @@ object TxnTable {
       // Known-dead only: files REFERENCED by some commit and absent
       // from every retained snapshot. Never "everything not in keep" —
       // a concurrent appender stages its data files BEFORE its commit,
-      // and an unreferenced file may be exactly that; addsIndex only
-      // ever holds committed references. Checkpoint-amortized: the
-      // index replays the suffix past the nearest checkpoint, not the
-      // whole log. (Equal to the "pre-horizon commits only" dead-set:
+      // and an unreferenced file may be exactly that; allAdds only
+      // ever holds committed references. (Equal to the "pre-horizon commits only" dead-set:
       // any file added by a commit ≥ horizon is live at that commit's
       // own version, which is a retained snapshot — so it is in keep.)
-      val dead = addsIndex(path, cur).keySet -- keep
+      val dead = snap.allAdds.keySet -- keep
       preCommitHook()
       try {
         tryCommit(path, TxnCommit(cur + 1, s"vacuum:$horizon", Nil, Nil))
@@ -3974,7 +3830,7 @@ object TxnTable {
           // version (not `cur`): a writer that committed between our
           // vacuum commit and this scan is already in the index, so
           // only true debris older than the grace window is swept
-          val referenced = addsIndex(path, currentVersion(path)).keySet
+          val referenced = snapshot(path).allAdds.keySet
             .map(f => localRoot(path).resolve(f).normalize)
           val cutoff = System.currentTimeMillis() - orphanGraceMs
           val it = Files.walk(dataDir(path))
@@ -3994,7 +3850,7 @@ object TxnTable {
           // concurrent dvdelete's staged-but-not-yet-committed file.
           val keepDv = (((horizon to cur) ++ pinned)
             .flatMap(v => snapshotDvs(path, v).values) ++
-            snapshotDvs(path, currentVersion(path)).values).toSet
+            snapshotDvs(path).values).toSet
             .map((f: String) => localRoot(path).resolve(f).normalize)
           val cutoff = System.currentTimeMillis() - orphanGraceMs
           val it = Files.walk(dvDir(path))
@@ -4018,24 +3874,31 @@ object TxnTable {
     * schema generation — homogeneous tables keep the cheap single-footer
     * path.
     */
-  def read(spark: SparkSession, path: String, asOf: Long = -1L): DataFrame = {
+  def read(spark: SparkSession, path: String, asOf: Long = -1L): DataFrame =
+    scanOf(spark, path, readable(path, asOf))
+
+  /** The snapshot a read at `asOf` (the head when negative) sees; a
+    * version below the vacuum horizon is refused before it is
+    * resolved. */
+  private def readable(path: String, asOf: Long): Snapshot = {
     if (asOf >= 0) {
       val earliest = earliestVersion(path)
       require(asOf >= earliest,
         s"version $asOf was vacuumed away (earliest readable: $earliest)")
     }
-    val upTo = if (asOf < 0) currentVersion(path) else asOf
-    // checkpoint-amortized: schema + generation count come from the
-    // nearest checkpoint plus the commit suffix, not a walk to v0
-    val (generations, recorded) = schemaInfo(path, upTo)
-    val files = snapshotFiles(path, asOf)
+    snapshot(path, asOf)
+  }
+
+  /** The live rows of `snap` under its logical schema. */
+  private def scanOf(spark: SparkSession, path: String,
+      snap: Snapshot): DataFrame = {
+    val files = snap.files
     if (files.isEmpty) {
       // a TRUNCATE (or delete-all) leaves a ZERO-FILE snapshot: with a
       // recorded schema that is a well-defined empty frame, not an
       // error — appends start clean, aggregates answer zero
-      require(recorded.isDefined,
-        s"empty snapshot of $path at $asOf with no recorded schema")
-      val st = recordedSchemaAt(path, upTo).get
+      val st = snap.recordedSchema.getOrElse(throw new IllegalArgumentException(
+        s"empty snapshot of $path at ${snap.version} with no recorded schema"))
       // all-nullable, like every real file scan (Spark's file sources
       // force asNullable on user schemas) — a zero-file snapshot must
       // be schema-IDENTICAL to its file-backed siblings, or consumers
@@ -4054,14 +3917,13 @@ object TxnTable {
     // it). Binding is by PHYSICAL names (column mapping: files always
     // store the stable physical name; applyDv aliases back to logical).
     // Pre-schema-era logs (none in practice) keep the old readers.
-    val reader = recorded match {
-      case Some(js) => spark.read.schema(physicalSchema(
-        org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]))
-      case None if generations > 1 => spark.read.option("mergeSchema", "true")
+    val reader = snap.recordedSchema match {
+      case Some(st) => spark.read.schema(physicalSchema(st))
+      case None if snap.schemaGens > 1 =>
+        spark.read.option("mergeSchema", "true")
       case None => spark.read
     }
-    applyDv(spark, path, upTo,
+    applyDv(spark, path, snap,
       reader.parquet(files.map(f => localRoot(path).resolve(f).toString): _*),
       keepFname = false)
   }
@@ -4493,15 +4355,12 @@ object TxnTable {
       UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) <= 0
   }
 
-  /** The live files at `upTo` (as the snapshot lists them) with their
-    * logged stats, or None for an add that carries none. */
-  private def loggedStats(path: String, upTo: Long)
-      : Seq[(String, Option[FileStats])] = {
-    val ai = addsIndex(path, upTo)
-    snapshotFiles(path, upTo).map(f => f -> ai.get(f).flatMap(parseAddStats))
-  }
+  /** The live files of `snap` (in its order) with their logged stats,
+    * or None for an add that carries none. */
+  private def loggedStats(snap: Snapshot): Seq[(String, Option[FileStats])] =
+    snap.files.map(f => f -> snap.allAdds.get(f).flatMap(parseAddStats))
 
-  /** The live files at `upTo` (snapshot order) that EVERY bound keeps.
+  /** The live files of `snap` (in its order) that EVERY bound keeps.
     * Stats come from the log; a file without them, or whose stats
     * never attempted a bound's column (schema drift across
     * generations), footer-reads in ONE batch, narrowed to the bounds'
@@ -4509,12 +4368,12 @@ object TxnTable {
     * keeps the file without a footer read — the footer would find
     * nothing either. A file that vanished before its footer read is
     * not part of any readable snapshot and is dropped. */
-  private def selectFiles(spark: SparkSession, path: String, upTo: Long,
+  private def selectFiles(spark: SparkSession, path: String, snap: Snapshot,
       bounds: Seq[Bound]): Seq[String] = {
     // stats (log AND footers) are keyed by PHYSICAL names
-    val phys = bounds.map(b => physicalColName(path, upTo, b.column))
+    val phys = bounds.map(b => physicalColName(snap, b.column))
     val cols = phys.distinct
-    val walk = loggedStats(path, upTo).map { case (f, st) =>
+    val walk = loggedStats(snap).map { case (f, st) =>
       (f, localRoot(path).resolve(f).toString,
         st.filter(s => cols.forall(s.cols.contains)))
     }
@@ -4542,24 +4401,24 @@ object TxnTable {
   def readPruned(spark: SparkSession, path: String, bounds: Seq[Bound],
       asOf: Long = -1L): DataFrame = {
     require(bounds.nonEmpty, "readPruned: at least one bound")
-    val full = read(spark, path, asOf) // fence checks + logical schema
+    val snap = readable(path, asOf)
+    val full = scanOf(spark, path, snap) // logical schema
     val pred = bounds.map(_.residual(full.schema)).reduce(_ && _)
-    val upTo = if (asOf < 0) currentVersion(path) else asOf
-    scanKept(spark, path, upTo, full,
-      selectFiles(spark, path, upTo, bounds), pred)
+    scanKept(spark, path, snap, full,
+      selectFiles(spark, path, snap, bounds), pred)
   }
 
-  /** Rows of the `kept` snapshot files at `upTo` (DVs applied) that
+  /** Rows of `snap`'s `kept` files (DVs applied) that
     * satisfy `pred`. An empty kept set is a ZERO-file frame with
     * `full`'s schema (not `full.filter(false)`), so `df.inputFiles`
     * honestly reports what the read touches. */
-  private def scanKept(spark: SparkSession, path: String, upTo: Long,
+  private def scanKept(spark: SparkSession, path: String, snap: Snapshot,
       full: DataFrame, kept: Seq[String], pred: Column): DataFrame =
     if (kept.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](),
         full.schema)
-    else applyDv(spark, path, upTo,
-      snapshotReader(spark, path, upTo).parquet(
+    else applyDv(spark, path, snap,
+      snapshotReader(spark, snap).parquet(
         kept.map(f => localRoot(path).resolve(f).toString): _*),
       keepFname = false).filter(pred)
 
@@ -4596,12 +4455,12 @@ object TxnTable {
     // metadata-only planning: fences + RECORDED schema, never a
     // DataFrame over the full file list (building one stats every
     // file — O(files) filesystem I/O the metadata path must not pay)
-    val (schema, upTo) = snapshotSchemaFenced(spark, path, asOf)
+    val (schema, snap) = snapshotSchemaFenced(spark, path, asOf)
     val dt = requireIntegral(schema, column, "countRange")
     midReadHook()
-    val physCol = physicalColName(path, upTo, column)
-    val dvNames = snapshotDvs(path, upTo).keySet.map(_.split('/').last)
-    val walk = loggedStats(path, upTo)
+    val physCol = physicalColName(snap, column)
+    val dvNames = snap.dvs.keySet.map(_.split('/').last)
+    val walk = loggedStats(snap)
     var metaCount = 0L
     val scan = Seq.newBuilder[String]
     walk.foreach { case (f, st) =>
@@ -4622,14 +4481,13 @@ object TxnTable {
     }
     val scanFiles = scan.result()
     // scan half pinned to the SAME resolved snapshot as the metadata
-    // half (upTo, not the raw asOf): a commit landing between the two
-    // resolutions (e.g. a MOR delete adding a DV) must not mix
-    // snapshots — metadata counted at upTo, boundary files
-    // DV-subtracted at a newer head — or the documented-exact count
-    // is wrong under concurrency.
+    // half: a commit landing in between (e.g. a MOR delete adding a
+    // DV) must not mix snapshots — metadata counted at `snap`,
+    // boundary files DV-subtracted at a newer head — or the
+    // documented-exact count is wrong under concurrency.
     val scanned =
       if (scanFiles.isEmpty) 0L
-      else applyDv(spark, path, upTo,
+      else applyDv(spark, path, snap,
         spark.read.schema(physicalSchema(schema)).parquet(scanFiles: _*),
         keepFname = false)
         .filter(physicalBetweenType(dt, column, lo, hi))
@@ -4637,24 +4495,14 @@ object TxnTable {
     (metaCount + scanned, scanFiles.size, walk.size)
   }
 
-  /** Recorded snapshot schema + resolved version, with [[read]]'s asOf
-    * fences — schema resolution from the LOG (checkpoint-amortized),
-    * zero file listings; pre-schema-era tables (none in practice) fall
-    * back to one reader-based resolution. */
+  /** Recorded snapshot schema + resolved snapshot, with [[read]]'s
+    * asOf fences — schema resolution from the LOG, zero file listings;
+    * pre-schema-era tables (none in practice) fall back to one
+    * reader-based resolution. */
   private def snapshotSchemaFenced(spark: SparkSession, path: String,
-      asOf: Long): (org.apache.spark.sql.types.StructType, Long) = {
-    if (asOf >= 0) {
-      val earliest = earliestVersion(path)
-      require(asOf >= earliest,
-        s"version $asOf was vacuumed away (earliest readable: $earliest)")
-    }
-    val upTo = if (asOf < 0) currentVersion(path) else asOf
-    val schema = schemaInfo(path, upTo)._2 match {
-      case Some(js) => org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      case None => read(spark, path, asOf).schema
-    }
-    (schema, upTo)
+      asOf: Long): (StructType, Snapshot) = {
+    val snap = readable(path, asOf)
+    (snap.recordedSchema.getOrElse(scanOf(spark, path, snap).schema), snap)
   }
 
   /** Global (min, max) of `column` in the physical int64 space, planned
@@ -4665,16 +4513,16 @@ object TxnTable {
     * all-null column. Integral, date, and timestamp columns only. */
   def minMaxOf(spark: SparkSession, path: String, column: String,
       asOf: Long = -1L): (Option[Long], Option[Long], Int, Int) = {
-    val (schema, upTo) = snapshotSchemaFenced(spark, path, asOf)
+    val (schema, snap) = snapshotSchemaFenced(spark, path, asOf)
     val phys = requireIntegral(schema, column, "minMaxOf") match {
       case TimestampType => unix_micros(col(column))
       case DateType => unix_date(col(column)).cast("long")
       case _ => col(column).cast("long")
     }
     midReadHook()
-    val physCol = physicalColName(path, upTo, column)
-    val dvNames = snapshotDvs(path, upTo).keySet.map(_.split('/').last)
-    val walk = loggedStats(path, upTo)
+    val physCol = physicalColName(snap, column)
+    val dvNames = snap.dvs.keySet.map(_.split('/').last)
+    val walk = loggedStats(snap)
     var mn = Option.empty[Long]
     var mx = Option.empty[Long]
     val scan = Seq.newBuilder[String]
@@ -4692,10 +4540,10 @@ object TxnTable {
       }
     }
     val scanFiles = scan.result()
-    // same-snapshot pin as countRange: DV subtraction at upTo, never
+    // same-snapshot pin as countRange: DV subtraction at `snap`, never
     // at a head that advanced after the metadata half resolved
     if (scanFiles.nonEmpty) {
-      val r = applyDv(spark, path, upTo,
+      val r = applyDv(spark, path, snap,
         spark.read.schema(physicalSchema(schema)).parquet(scanFiles: _*),
         keepFname = false)
         .agg(min(phys), max(phys)).head()
@@ -4751,9 +4599,9 @@ object TxnTable {
     import spark.implicits._
     require(columns.nonEmpty, "computeBloom: no columns given")
     require(fpp > 0 && fpp < 0.5, s"fpp must be in (0, 0.5), got $fpp")
-    val top = currentVersion(path)
-    require(top >= 0, s"computeBloom: not a TxnTable: $path")
-    val schema = read(spark, path, top).schema
+    val snap = head(path).getOrElse(throw new IllegalArgumentException(
+      s"computeBloom: not a TxnTable: $path"))
+    val schema = scanOf(spark, path, snap).schema
     val cols = columns.map(_.trim).filter(_.nonEmpty)
     val fields = cols.map(c => schema.fields
       .find(_.name.equalsIgnoreCase(c)).getOrElse(
@@ -4769,14 +4617,14 @@ object TxnTable {
       if (currentVersion(bp) < 0) Set.empty
       else read(spark, bp).select(col("file"), col("col")).collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
-    val live = snapshotFiles(path, top)
+    val live = snap.files
     val work: Set[(String, String)] = (for {
       f <- live; c <- names if !have((f, c)) } yield (f, c)).toSet
     val files = work.map(_._1).toSeq.sorted
     OpMetrics.record(BloomBuiltFiles, files)
     if (files.isEmpty)
       return math.max(-1L, currentVersion(bp))
-    val ai = addsIndex(path, top)
+    val ai = snap.allAdds
     // basename → (add name, expected items): part files carry UUIDs,
     // so basenames are unique within a table (the DV machinery's
     // standing assumption)
@@ -4784,11 +4632,11 @@ object TxnTable {
       f.split('/').last -> (f, math.max(1L, ai(f).rows))).toMap
     val isStr: IndexedSeq[Boolean] =
       fields.map(_.dataType == StringType).toIndexedSeq
-    val phys = names.map(physicalColName(path, top, _))
+    val phys = names.map(physicalColName(snap, _))
     val selects = col("_metadata.file_path").as("__fp") +:
       phys.zipWithIndex.map { case (p, i) =>
         if (isStr(i)) col(p) else col(p).cast("long") }
-    val scan = snapshotReader(spark, path, top)
+    val scan = snapshotReader(spark, snap)
       .parquet(files.map(f => localRoot(path).resolve(f).toString): _*)
       .select(selects: _*)
     val n = names.length
@@ -4887,11 +4735,12 @@ object TxnTable {
       probe: (org.apache.spark.util.sketch.BloomFilter, Seq[Any]) => Boolean)
       : DataFrame = {
     import spark.implicits._
-    val full = read(spark, path, asOf)
+    val snap = readable(path, asOf)
+    val full = scanOf(spark, path, snap)
     if (vs.isEmpty) return full.filter(lit(false))
     val bp = bloomPath(path)
     if (currentVersion(bp) < 0) return full.filter(pred)
-    val live = snapshotFiles(path, asOf)
+    val live = snap.files
     val colLc = column.toLowerCase
     // The probe runs inside tasks; only names of live files whose
     // bloom PROVES absence reach the driver (a file with no bloom row
@@ -4913,7 +4762,7 @@ object TxnTable {
         }.map(_._1)
       }.collect().toSet
     OpMetrics.record(BloomProbeCollected, excluded.size)
-    scanKept(spark, path, asOf, full, live.filterNot(excluded), pred)
+    scanKept(spark, path, snap, full, live.filterNot(excluded), pred)
   }
 
   /** The residual row predicate for a physical-int64 bound on `c`:
@@ -4957,32 +4806,32 @@ object TxnTable {
     */
   def changedRowSides(spark: SparkSession, path: String, fromV: Long,
       toV: Long): (DataFrame, DataFrame, Set[String]) = {
-    val top = currentVersion(path)
-    val earliest = earliestVersion(path)
-    require(fromV <= toV && toV <= top && fromV >= earliest,
-      s"diffVersions: need $earliest <= fromV <= toV <= $top, " +
-        s"got [$fromV, $toV]")
-    val before = snapshotFiles(path, fromV)
-    val after = snapshotFiles(path, toV)
+    val now = snapshot(path)
+    require(fromV <= toV && toV <= now.version && fromV >= now.horizon,
+      s"diffVersions: need ${now.horizon} <= fromV <= toV <= " +
+        s"${now.version}, got [$fromV, $toV]")
+    val (from, to) = (snapshot(path, fromV), snapshot(path, toV))
+    val before = from.files
+    val after = to.files
     // a file carried by BOTH versions whose deletion-vector assignment
     // moved still changed logically (a dvdelete touched it): diff it on
     // both sides — each side's applyDv subtracts that version's DV, so
     // MOR-deleted rows surface as `delete` diff rows exactly like a
     // copy-on-write rewrite's
-    val (dvB, dvA) = (snapshotDvs(path, fromV), snapshotDvs(path, toV))
+    val (dvB, dvA) = (from.dvs, to.dvs)
     val dvChanged = before.toSet.intersect(after.toSet)
       .filter(f => dvB.get(f) != dvA.get(f))
     val removed = (before.toSet -- after.toSet) ++ dvChanged
     val added = (after.toSet -- before.toSet) ++ dvChanged
-    def side(files: Set[String], v: Long): DataFrame =
+    def side(files: Set[String], v: Snapshot): DataFrame =
       if (files.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          read(spark, path, v).schema)
-      else applyDv(spark, path, v, snapshotReader(spark, path, v).parquet(
+          scanOf(spark, path, v).schema)
+      else applyDv(spark, path, v, snapshotReader(spark, v).parquet(
         files.toSeq.map(f => localRoot(path).resolve(f).toString): _*),
         keepFname = false)
-    (side(removed, fromV), side(added, toV),
+    (side(removed, from), side(added, to),
       (removed ++ added).map(f => localRoot(path).resolve(f).toString))
   }
 

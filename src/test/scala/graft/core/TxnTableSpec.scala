@@ -69,6 +69,21 @@ class TxnTableSpec extends SparkSpecBase {
     assert(read(spark, t).count() == 25)
   }
 
+  test("time travel past the head fails with the version check, not a " +
+    "missing commit file") {
+    val t = freshTable()
+    create(spark, t, rangeDf(0, 10))
+    (1 to 3).foreach(k => append(spark, t, rangeDf(k * 10, k * 10 + 10)))
+    for (k <- Seq(1L, 96L)) {
+      val e = intercept[IllegalArgumentException] {
+        read(spark, t, asOf = 3 + k)
+      }
+      assert(e.getMessage.contains(s"version ${3 + k} does not exist " +
+        "(latest 3)"), e.getMessage)
+    }
+    assert(read(spark, t, asOf = 3).count() == 40)
+  }
+
   test("snapshot isolation: old versions survive delete + compaction") {
     val t = freshTable()
     create(spark, t, rangeDf(0, 30))
@@ -120,6 +135,12 @@ class TxnTableSpec extends SparkSpecBase {
       .resolve(f"ckpt-v${10}%010d.json")
     java.nio.file.Files.write(ck, "{not json".getBytes)
     assert(read(spark, t, asOf = 12).count() == 130)
+    // v11 sits below the memoized head, so it resolves through the
+    // checkpoint: the corrupt one is skipped, counted, and the replay
+    // starts from v0 with the same answer
+    val (n11, window) = OpMetrics.scope(read(spark, t, asOf = 11).count())
+    assert(n11 == 120)
+    assert(window.count(CheckpointFallbacks) == 1)
     assert(read(spark, t, asOf = 10).count() == 110)
     // the sneakier corruption: a VALID json object missing the files
     // array, with trailing garbage jackson would silently ignore — it
@@ -351,6 +372,41 @@ class TxnTableSpec extends SparkSpecBase {
     // a genuinely new batch still lands
     assert(appendStreamBatch(spark, t, rangeDf(300, 305), "s1", 99L).nonEmpty)
     assert(read(spark, t).count() == 255)
+
+    // One snapshot per version: v0..v19, a checkpoint at v10 and a
+    // 9-commit suffix. A copy of the table directory is a path no
+    // memo has seen, so its first head read is the cold cost.
+    val src = freshTable()
+    create(spark, src, rangeDf(0, 10))
+    (1 to 19).foreach(k => append(spark, src, rangeDf(k * 10, k * 10 + 10)))
+    val u = freshTable()
+    copyTree(java.nio.file.Paths.get(src), java.nio.file.Paths.get(u))
+    // One replay per field (before the snapshot fold) read 27, 18, 45,
+    // 54 and 108 commit files for these five calls: three suffix
+    // replays for the first read, a schema memo saving one on the
+    // second.
+    val first = logReads(assert(read(spark, u).count() == 200))
+    assert(first <= CheckpointInterval, s"first head read: $first reads")
+    val second = logReads(assert(read(spark, u).count() == 200))
+    assert(second == 0, s"second head read: $second reads")
+    val pruned = logReads(assert(readPruned(spark, u,
+      Seq(Bound.LongRange("id", 5L, 15L))).count() == 11))
+    assert(pruned == 0, s"readPruned after a head read: $pruned reads")
+    val det = logReads(assert(detail(spark, u).head().getLong(1) == 19L))
+    assert(det == 0, s"detail after a head read: $det reads")
+    val ck = logReads(append(spark, u, rangeDf(200, 210)))
+    assert(ck <= CheckpointInterval, s"checkpoint-writing append: $ck reads")
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(u, "_graft_log", "ckpt-v0000000020.json")))
+  }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    val s = Files.walk(from)
+    try s.iterator().forEachRemaining { p =>
+      val d = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(d)
+      else Files.copy(p, d)
+    } finally s.close()
   }
 
   test("footer pruning on a multi-hundred-file table: distributed index, " +

@@ -177,6 +177,17 @@ class GraftSqlSpec extends SparkSpecBase {
       s"SELECT $n.id FROM $n WHERE $n.id = 1").count() == 1L)
   }
 
+  test("VERSION AS OF past the head fails with the version check") {
+    val (_, n) = mk() // v0
+    GraftSql.execute(spark, s"DELETE FROM $n WHERE id >= 3") // v1
+    val e = intercept[IllegalArgumentException] {
+      GraftSql.query(spark, s"SELECT count(*) AS c FROM $n VERSION AS OF 4")
+        .head()
+    }
+    assert(e.getMessage.contains("version 4 does not exist (latest 1)"),
+      e.getMessage)
+  }
+
   test("TIMESTAMP AS OF resolves by wall clock; txn tables feed INSERT " +
     "and MERGE sources directly") {
     val (t, n) = mk() // v0
