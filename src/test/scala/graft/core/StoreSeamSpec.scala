@@ -85,7 +85,7 @@ class StoreSeamSpec extends AnyFunSuite {
     val exempt = Map(
       // staged parquet → fresh UUID data-file name; the commit-log
       // putIfAbsent decides visibility (copy+delete is fine on a port)
-      "core/TxnTable.scala" -> 2,
+      "core/TxnDml.scala" -> 2,
       // legacy pre-pointer index heal (sole-copy restore) only
       "operators/Keywords.scala" -> 1,
       // gate fixtures staging landing files with pinned mtimes
