@@ -300,10 +300,8 @@ private[core] trait TxnDml extends TxnReads {
       cleanupStaged(path, adds)
       throw new TxnConflictException(base)
     }
-    preCommitHook()
-    try tryCommit(path, TxnCommit(base + 1, op, adds, Nil, newSchema))
+    try publish(path)(TxnCommit(base + 1, op, adds, Nil, newSchema))
     catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-    base + 1
   }
 
   /** The highest `stream:<streamId>:<batchId>` batch id committed to
@@ -378,32 +376,23 @@ private[core] trait TxnDml extends TxnReads {
       catch { case _: IllegalArgumentException => Map.empty[String, String] }
     val adds = writeData(spark, path, withChecks(spark, path, df),
       partitions)
-    var attempt = 0
     // Any abort past this point (schema mismatch discovered on retry,
     // retry budget exhausted) must delete the staged files it can no
     // longer commit — see cleanupStaged.
-    try {
-      while (true) {
-        val v = currentVersion(path) + 1
-        preCommitHook()
-        try {
-          tryCommit(path, TxnCommit(v, op, adds, Nil, newSchema))
-          return v
-        } catch {
-          case _: TxnConflictException if attempt < maxAttempts =>
-            attempt += 1
-            // The lost race may have been a concurrent evolveSchema:
-            // re-validate against the FRESH snapshot so a drifted append
-            // fails loudly instead of committing stale-schema data.
-            newSchema = checkSchema(path, df, evolveSchema)
-            // ... or a concurrent addConstraint: the staged rows were
-            // checked against the OLD constraint set — re-validate them
-            // (the outer catch cleans the staged files on violation)
-            csStage = revalidateStaged(spark, path, adds, csStage)
-        }
+    try retryRaces(maxAttempts) { lost =>
+      if (lost.nonEmpty) {
+        // The lost race may have been a concurrent evolveSchema:
+        // re-validate against the FRESH snapshot so a drifted append
+        // fails loudly instead of committing stale-schema data.
+        newSchema = checkSchema(path, df, evolveSchema)
+        // ... or a concurrent addConstraint: the staged rows were
+        // checked against the OLD constraint set — re-validate them
+        // (the outer catch cleans the staged files on violation)
+        csStage = revalidateStaged(spark, path, adds, csStage)
       }
+      val v = currentVersion(path) + 1
+      publish(path)(TxnCommit(v, op, adds, Nil, newSchema))
     } catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-    -1L // unreachable
   }
 
   /** Delete matching rows by rewriting ONLY the files that contain them;
@@ -949,7 +938,8 @@ private[core] trait TxnDml extends TxnReads {
           val (d, f) = buildDvs(spark, path, files, hitNames, hits, deleted)
           (d, Some(f))
         } catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-    try commitDvs(path, base, op, dvs, adds)
+    try commitRewrite(path, base, op, adds, Nil, CommuteNonOverlapping,
+      dvs = dvs)
     catch { case e: Throwable => cleanupStaged(path, adds, dvFile); throw e }
   }
 
@@ -1204,31 +1194,27 @@ private[core] trait TxnDml extends TxnReads {
           checked.repartitionByRange(partitions, clusterBy: _*)
             .sortWithinPartitions(clusterBy: _*))
       else writeData(spark, path, checked, partitions)
-    var attempt = 0
-    while (attempt <= maxAttempts) {
+    try retryRaces(maxAttempts) { lost =>
+      // the lost race may have been a concurrent addConstraint —
+      // re-validate the staged rows against the fresh set (the catch
+      // below cleans the staged tranche if they violate it)
+      if (lost.nonEmpty)
+        csStage = revalidateStaged(spark, path, adds, csStage)
       if (alreadyApplied()) {
         // duplicate detected only AFTER staging (the redelivered batch
         // lost a race to its own first delivery): the staged files will
         // never be committed — drop them, don't orphan them
         cleanupStaged(path, adds)
-        return None
+        None
+      } else {
+        val v = currentVersion(path) + 1
+        Some(publish(path)(TxnCommit(v, op, adds, Nil)))
       }
-      val v = currentVersion(path) + 1
-      preCommitHook()
-      try {
-        tryCommit(path, TxnCommit(v, op, adds, Nil))
-        return Some(v)
-      } catch {
-        case _: TxnConflictException =>
-          attempt += 1
-          // the lost race may have been a concurrent addConstraint —
-          // re-validate the staged rows against the fresh set (cleaning
-          // the staged tranche if they violate it; see revalidateStaged)
-          try csStage = revalidateStaged(spark, path, adds, csStage)
-          catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-      }
+    } catch {
+      case _: TxnConflictException =>
+        cleanupStaged(path, adds)
+        sys.error(s"appendStreamBatch: lost $maxAttempts version races for $op")
+      case e: Throwable => cleanupStaged(path, adds); throw e
     }
-    cleanupStaged(path, adds)
-    sys.error(s"appendStreamBatch: lost $maxAttempts version races for $op")
   }
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path => JPath, Paths, FileAlreadyExistsException}
+import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -19,8 +20,13 @@ import graft.crawler.SkippingIndex.FileStats
 /** The commit log of a [[TxnTable]]: the commit and checkpoint JSON,
   * the log listing, the [[Snapshot]] fold and its head memo, the
   * add-stats encoding, and committing. The log's file names, JSON and
-  * memo are private to this trait. Serializable so that a Spark
-  * closure calling a table member ships the object as a module proxy. */
+  * memo are private to this trait; no other source names them.
+  * {{{
+  *   table/_graft_log/v0000000042.json        one commit per version
+  *   table/_graft_log/ckpt-v0000000040.json   a snapshot every 10th
+  * }}}
+  * Serializable so that a Spark closure calling a table member ships
+  * the object as a module proxy. */
 private[core] trait TxnLog extends Serializable {
 
   class TxnConflictException(version: Long)
@@ -196,6 +202,16 @@ private[core] trait TxnLog extends Serializable {
     /** The latest recorded schema, parsed once per snapshot. */
     lazy val recordedSchema: Option[StructType] =
       schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+    /** The live files (in order) with their logged stats, None for an
+      * add that carries none: each add's stats parsed once per
+      * snapshot. */
+    lazy val stats: Vector[(String, Option[FileStats])] =
+      files.map(f => f -> allAdds.get(f).flatMap(parseAddStats))
+    /** [[logTableStats]] of this version under its recorded schema,
+      * folded once and carried by the head memo; None for a snapshot
+      * that recorded no schema. */
+    lazy val logStats: Option[(Long, Long, Seq[(String, LogColStat)])] =
+      recordedSchema.map(foldLogStats(this, _))
   }
 
   /** The state before version 0. */
@@ -285,22 +301,45 @@ private[core] trait TxnLog extends Serializable {
     * version is reached by replaying only the commits past it. One
     * entry per path keeps the memory at one snapshot per table;
     * cleared wholesale past a size cap (correctness never depends on a
-    * hit). Time-travel reads below the head are not memoized. */
+    * hit). Time-travel reads below the head are not memoized. Each
+    * entry carries its commit file's mtime, the table-identity witness
+    * [[memoized]] checks. */
   private val headMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
+    new java.util.concurrent.ConcurrentHashMap[String, Memo]()
+
+  private final case class Memo(snap: Snapshot, stamp: FileTime)
+
+  /** The modification time of version `v`'s commit file, or None when
+    * it is gone. */
+  private def commitStamp(path: String, v: Long): Option[FileTime] =
+    try Some(Files.getLastModifiedTime(versionFile(path, v)))
+    catch { case _: java.io.IOException => None }
 
   private def remember(path: String, snap: Snapshot): Unit = {
     if (headMemo.size > 1024) headMemo.clear()
-    headMemo.merge(path, snap, (old, now) =>
-      if (old.version > now.version) old else now)
+    commitStamp(path, snap.version).foreach(stamp =>
+      headMemo.merge(path, Memo(snap, stamp), (old, now) =>
+        if (old.snap.version > now.snap.version) old else now))
   }
+
+  /** The memoized snapshot of `path` if it is at or below version `v`
+    * and still this table's: its commit file must carry the mtime seen
+    * when it was memoized. A table deleted and recreated at the same
+    * path restarts its version numbers, and replaying the new log onto
+    * the dead table's snapshot would serve neither table; such an entry
+    * is dropped. */
+  private def memoized(path: String, v: Long): Option[Snapshot] =
+    Option(headMemo.get(path)).filter(_.snap.version <= v).flatMap { m =>
+      if (commitStamp(path, m.snap.version).contains(m.stamp)) Some(m.snap)
+      else { headMemo.remove(path, m); None }
+    }
 
   /** Resolve version `asOf` (the head when negative) of `path`; None
     * when no table lives there and no version was asked for. ONE
     * listing of the log gives the head and the checkpoint versions,
     * and the version checks run on it before any commit is read. The
     * replay starts from the nearest of: the memoized snapshot (if at
-    * or below the target), the newest readable checkpoint above it
+    * or below the target, and of this table), the newest readable checkpoint above it
     * (a corrupt or old-format one is counted and the next older one
     * tried), or the empty table. */
   private def resolve(path: String, asOf: Long): Option[Snapshot] = {
@@ -309,7 +348,7 @@ private[core] trait TxnLog extends Serializable {
     require(top >= 0, s"not a TxnTable: $path")
     val v = if (asOf < 0) top else asOf
     require(v <= top, s"version $v does not exist (latest $top)")
-    val memo = Option(headMemo.get(path)).filter(_.version <= v)
+    val memo = memoized(path, v)
     val from = memo.fold(-1L)(_.version)
     val base = ckpts.iterator.filter(c => c <= v && c > from)
       .map(readCheckpoint(path, _)).collectFirst { case Some(s) => s }
@@ -329,14 +368,12 @@ private[core] trait TxnLog extends Serializable {
   /** The head snapshot, or None when no table lives at `path`. */
   private[core] def head(path: String): Option[Snapshot] = resolve(path, -1L)
 
-  /** Test seam: invoked between the version read and the tryCommit of
-    * every retrying writer (append / restore / appendStreamBatch /
-    * vacuum) and before every commit attempt of the rewrite writers
-    * (deleteWhere / merge / compact / compactClustered / overwrite,
-    * which rebase past commutable interleaved commits and abort to the
-    * caller on a true logical conflict — see [[commitRewrite]]),
-    * letting specs deterministically interleave a concurrent commit
-    * into the race window. No-op in production. */
+  /** Test seam: invoked by [[publish]] between a writer's version read
+    * and its tryCommit — every attempt of every retrying writer
+    * ([[retryRaces]]), of the rewrite writers that rebase past
+    * commutable interleaved commits ([[commitRewrite]]) and of
+    * [[appendCas]] — letting specs deterministically interleave a
+    * concurrent commit into the race window. No-op in production. */
   private[graft] var preCommitHook: () => Unit = () => ()
 
   /** Test seam: invoked by the metadata-only aggregates (countRange /
@@ -580,6 +617,54 @@ private[core] trait TxnLog extends Serializable {
       } catch { case NonFatal(_) => None } // malformed → footer fallback
     }
 
+  /** One column's log-folded statistics (see [[logTableStats]]):
+    * bounds/nulls are present ONLY under full add-coverage — an
+    * honest global claim, never a partial one. Long bounds live in
+    * the PHYSICAL int64 space (days for dates, micros for
+    * timestamps). */
+  case class LogColStat(dataType: org.apache.spark.sql.types.DataType,
+      coverage: Double, lmin: Option[Long], lmax: Option[Long],
+      smin: Option[String], smax: Option[String], nulls: Option[Long])
+
+  /** Table statistics of `snap` folded from its live adds' logged
+    * stats for the logical columns of `schema` ([[logTableStats]]). */
+  private[core] def foldLogStats(snap: Snapshot, schema: StructType)
+      : (Long, Long, Seq[(String, LogColStat)]) = {
+    val live = snap.stats.filter { case (f, _) => snap.allAdds.contains(f) }
+    val adds = live.map { case (f, _) => snap.allAdds(f) }
+    val parsed = live.flatMap(_._2)
+    val nAdds = adds.size
+    val cols = schema.fields.toSeq.map { f =>
+      val phys = physicalColName(snap, f.name)
+      val have = parsed.filter(_.cols.contains(phys))
+      val coverage =
+        if (nAdds == 0) 1.0 else have.size.toDouble / nAdds
+      val full = nAdds > 0 && have.size == nAdds
+      val (lmin, lmax) = {
+        val mins = have.flatMap(_.longs.get(phys).map(_._1))
+        val maxs = have.flatMap(_.longs.get(phys).map(_._2))
+        if (!full || mins.size != nAdds) (None, None)
+        else (Some(mins.min), Some(maxs.max))
+      }
+      // string bounds fold in UTF-8 byte order, as they are logged and
+      // as Spark compares (String's own order is UTF-16 code units)
+      val (smin, smax) = {
+        val mins = have.flatMap(_.strings.get(phys).map(_._1))
+        val maxs = have.flatMap(_.strings.get(phys).map(_._2))
+        if (!full || mins.size != nAdds) (None, None)
+        else (Some(mins.minBy(UTF8String.fromString)),
+          Some(maxs.maxBy(UTF8String.fromString)))
+      }
+      val nulls = {
+        val ns = have.flatMap(_.nulls.get(phys))
+        if (!full || ns.size != nAdds) None else Some(ns.sum)
+      }
+      f.name -> LogColStat(f.dataType, coverage, lmin, lmax,
+        smin, smax, nulls)
+    }
+    (adds.map(_.bytes).sum, adds.map(_.rows).sum, cols)
+  }
+
   private[core] val PhysicalKey = "graft.physical"
 
   private[core] def physicalFieldName(
@@ -658,79 +743,57 @@ private[core] trait TxnLog extends Serializable {
     * too, which its recorded removes (resolved at base) do not cover. */
   private[core] case object CommuteMetadataOnly extends RebasePolicy
 
+  /** Whether interleaved commit `c` commutes with a commit that
+    * touches `files` (its removes, or the files it reassigns DVs on):
+    * the ONE rebase test of rewrite and DV commits.
+    *  - A schema-recording commit (evolution) never commutes: our adds
+    *    were written under the PRE-evolution shape (the reference lake
+    *    formats' ConcurrentMetadataChange rule).
+    *  - A constraint:add/:drop is a metadata change like it when ours
+    *    carries `checked` content: our adds were validated (withChecks)
+    *    against the constraint set at OUR base. A pure DV delete removes
+    *    rows and can never violate a fresh CHECK.
+    *  - Removing, re-DV'ing or RE-ADDING (restore) one of our files
+    *    conflicts: our adds or our cumulative DV were computed from that
+    *    file's state at our base, and rebasing would undo the change. */
+  private def commutesPast(c: TxnCommit, files: Set[String],
+      checked: Boolean): Boolean =
+    c.schema.isEmpty && !(checked && c.op.startsWith("constraint:")) &&
+      !c.removes.exists(files) && !c.dvs.exists(d => files(d._1)) &&
+      !c.adds.exists(a => files(a.path))
+
   /** Publish a rewrite commit at `base + 1`, rebasing past commutable
     * interleaved commits per `policy` — the SAME adds/removes re-commit
     * at the new head WITHOUT re-running the rewrite job (the whole
-    * point: the loser's work is metadata-rebased, not redone). Returns
-    * the committed version; throws [[TxnConflictException]] on a true
-    * logical conflict (callers clean their staged adds). */
+    * point: the loser's work is metadata-rebased, not redone). `dvs`
+    * makes it a DV commit (optionally carrying fresh adds — the
+    * MOR-update shape), which rebases past commits touching none of the
+    * DV'd files. Returns the committed version; throws
+    * [[TxnConflictException]] on a true logical conflict (callers clean
+    * their staged adds). */
   private[core] def commitRewrite(path: String, base: Long, op: String,
       adds: Seq[TxnAdd], removes: Seq[String], policy: RebasePolicy,
-      schema: Option[String] = None, maxRebases: Int = 20): Long = {
-    val myRemoves = removes.toSet
-    var v = base + 1
-    var attempt = 0
-    while (true) {
-      preCommitHook()
-      try {
-        tryCommit(path, TxnCommit(v, op, adds, removes, schema))
-        return v
-      } catch {
-        case e: TxnConflictException =>
-          if (attempt >= maxRebases) throw e
-          val cur = currentVersion(path)
-          val commutes = policy match {
-            case NoRebase => false
-            case CommuteNonOverlapping =>
-              (v to cur).forall { iv =>
-                val c = readCommit(path, iv)
-                // a schema-recording commit (evolution) never commutes:
-                // our adds were written under the PRE-evolution shape,
-                // and rebasing them past it would commit old-shape
-                // files as if they post-dated the new schema — mirror
-                // the reference lake formats' ConcurrentMetadataChange
-                // rule and abort regardless of file overlap
-                // a DV assignment on one of OUR removes also conflicts:
-                // our adds were computed from the pre-DV rows, so
-                // rebasing past it would resurrect the DV-deleted rows
-                // a constraint:add/:drop is a metadata change like a
-                // schema evolution: our adds were validated (withChecks)
-                // against the constraint set at OUR base, so rebasing
-                // past a fresh CHECK could commit rows it never saw —
-                // abort and let the caller re-run under the new rules
-                // an interleaved commit that RE-ADDS one of our removes
-                // (restore) also conflicts: the re-add resets that
-                // file's DV/content state, so our adds — computed from
-                // the pre-restore snapshot — would silently undo it
-                c.schema.isEmpty &&
-                  !c.op.startsWith("constraint:") &&
-                  !c.removes.exists(myRemoves.contains) &&
-                  !c.dvs.exists(d => myRemoves.contains(d._1)) &&
-                  !c.adds.exists(a => myRemoves.contains(a.path))
-              }
-            case CommuteMetadataOnly =>
-              (v to cur).forall { iv =>
-                val c = readCommit(path, iv)
-                // a DV delete changes logical content like an append —
-                // an overwrite must not silently swallow it. A
-                // schema-recording commit (ALTER/evolution) or a
-                // constraint:add/:drop is a metadata change the staged
-                // overwrite never saw: its files carry the pre-ALTER
-                // shape and were validated against the pre-change
-                // constraint set — abort, mirroring
-                // CommuteNonOverlapping's ConcurrentMetadataChange rule
-                // (rebasing past a fresh CHECK would commit rows it
-                // never validated).
-                c.adds.isEmpty && c.removes.isEmpty && c.dvs.isEmpty &&
-                  c.schema.isEmpty && !c.op.startsWith("constraint:")
-              }
-          }
-          if (!commutes) throw e
-          attempt += 1
-          v = cur + 1
-      }
+      schema: Option[String] = None, dvs: Seq[(String, String)] = Nil,
+      maxRebases: Int = 20): Long = {
+    val touched = removes.toSet ++ dvs.map(_._1)
+    val checked = dvs.isEmpty || adds.nonEmpty
+    def commutes(c: TxnCommit): Boolean = policy match {
+      case NoRebase => false
+      case CommuteNonOverlapping => commutesPast(c, touched, checked)
+      // a DV delete changes logical content like an append — an
+      // overwrite must not silently swallow it
+      case CommuteMetadataOnly => c.adds.isEmpty && c.removes.isEmpty &&
+        c.dvs.isEmpty && commutesPast(c, Set.empty, checked = true)
     }
-    -1L // unreachable
+    var v = base + 1
+    retryRaces(maxRebases) { lost =>
+      lost.foreach { e =>
+        val cur = currentVersion(path)
+        if (!(v to cur).forall(iv => commutes(readCommit(path, iv)))) throw e
+        v = cur + 1
+      }
+      publish(path)(TxnCommit(v, op, adds, removes, schema, dvs))
+    }
   }
 
   /** The table schema as of the latest commit that recorded one
@@ -739,51 +802,39 @@ private[core] trait TxnLog extends Serializable {
       : Option[org.apache.spark.sql.types.StructType] =
     head(path).flatMap(_.recordedSchema)
 
-  /** Publish a DV commit (optionally carrying fresh adds — the
-    * MOR-update shape) at `base + 1`, rebasing past interleaved
-    * commits that touched NONE of the DV'd files (an append, a rewrite
-    * of other files, a marker all commute — the DV'd files' rows still
-    * stand at the new head); abort when one removed, rewrote, or
-    * re-DV'd them (our union-with-old-positions DV was computed from a
-    * stale DV state). */
-  private[core] def commitDvs(path: String, base: Long, op: String,
-      dvs: Seq[(String, String)], adds: Seq[TxnAdd] = Nil,
-      maxRebases: Int = 20): Long = {
-    val myFiles = dvs.map(_._1).toSet
-    var v = base + 1
-    var attempt = 0
+  /** The one retry loop of every retrying writer. `attempt(lost)` runs
+    * one attempt: it reads the state it commits against, then publishes
+    * ([[publish]], or a single-shot CAS writer such as [[appendCas]]);
+    * `lost` is the conflict the previous attempt lost, None on the
+    * first. A [[TxnConflictException]] it throws is a lost race and
+    * runs the next attempt, up to `maxRetries` retries; then that
+    * conflict surfaces. Rethrowing the `lost` it was handed ends the
+    * loop at once: a rebase that found a true conflict. */
+  private[graft] def retryRaces[T](maxRetries: Int)(
+      attempt: Option[TxnConflictException] => T): T = {
+    var lost = Option.empty[TxnConflictException]
+    var retries = 0
     while (true) {
-      preCommitHook()
-      try {
-        tryCommit(path, TxnCommit(v, op, adds, Nil, None, dvs))
-        return v
-      } catch {
-        case e: TxnConflictException =>
-          if (attempt >= maxRebases) throw e
-          val cur = currentVersion(path)
-          val commutes = (v to cur).forall { iv =>
-            val c = readCommit(path, iv)
-            // an interleaved commit that RE-ADDS one of our DV'd files
-            // (restore) resets that file's DV state: our DV was built
-            // as (old cumulative positions ∪ new hits) against the
-            // PRE-restore map, so rebasing past the re-add would
-            // silently re-delete the rows the restore just resurrected
-            // a constraint change conflicts only when this commit also
-            // APPENDS row images (MOR update): those were validated
-            // against the constraint set at our base; a pure DV delete
-            // removes rows and can never violate a fresh CHECK
-            c.schema.isEmpty &&
-              (adds.isEmpty || !c.op.startsWith("constraint:")) &&
-              !c.removes.exists(myFiles.contains) &&
-              !c.dvs.exists(d => myFiles.contains(d._1)) &&
-              !c.adds.exists(a => myFiles.contains(a.path))
-          }
-          if (!commutes) throw e
-          attempt += 1
-          v = cur + 1
+      try return attempt(lost)
+      catch {
+        case e: TxnConflictException
+            if retries < maxRetries && !lost.contains(e) =>
+          retries += 1
+          lost = Some(e)
       }
     }
-    -1L // unreachable
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Publish `commit` as its version after [[preCommitHook]]: the one
+    * window where a spec interleaves a concurrent commit. `commit` is
+    * built AFTER the hook, from state its caller read before it, so a
+    * fence it checks sees what the hook committed ([[restore]]). */
+  private[core] def publish(path: String)(commit: => TxnCommit): Long = {
+    preCommitHook()
+    val c = commit
+    tryCommit(path, c)
+    c.version
   }
 
   /** Commit a METADATA-ONLY marker (no adds, no removes — logical
@@ -791,21 +842,12 @@ private[core] trait TxnLog extends Serializable {
     * batch changes no data (e.g. a replicated version range that was
     * all vacuum/compaction), Delta's bare `txn` action. Retries version
     * races — a marker conflicts with nothing logically. */
-  def commitMarker(path: String, op: String, maxAttempts: Int = 20): Long = {
-    var attempt = 0
-    while (true) {
+  def commitMarker(path: String, op: String, maxAttempts: Int = 20): Long =
+    retryRaces(maxAttempts) { _ =>
       val v = currentVersion(path) + 1
       require(v > 0, s"commitMarker: not a table: $path")
-      preCommitHook()
-      try { tryCommit(path, TxnCommit(v, op, Nil, Nil)); return v }
-      catch {
-        case e: TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      publish(path)(TxnCommit(v, op, Nil, Nil))
     }
-    -1L // unreachable
-  }
 
   /** Active CHECK constraints of the table head (name → SQL). */
   def constraints(path: String): Map[String, String] =

@@ -432,34 +432,28 @@ private[core] trait TxnMaintenance extends TxnDml {
     require(targetAdds.size == target.size,
       s"restore: add metadata missing for ${target.size - targetAdds.size} " +
         s"of ${target.size} target files (corrupt log?)")
-    var attempt = 0
-    while (true) {
+    retryRaces(maxAttempts) { _ =>
       val now = snapshot(path)
       val cur = now.version
       val live = now.files
       // roll the recorded schema back too, if evolution happened since
       val schemaRollback =
         if (targetSnap.schema != now.schema) targetSnap.schema else None
-      preCommitHook()
-      // Re-check INSIDE the race window: a vacuum may have raised the
-      // horizon (and physically deleted the target's files) since the
-      // entry check — committing would resurrect dangling paths. A
-      // vacuum that lands after this check instead wins the version
-      // race below, and the retry re-enters through this check.
-      requireReadable()
-      try {
+      publish(path) {
+        // Re-check INSIDE the race window: a vacuum may have raised the
+        // horizon (and physically deleted the target's files) since the
+        // entry check — committing would resurrect dangling paths. A
+        // vacuum that lands after this check instead wins the version
+        // race, and the retry re-enters through this check.
+        requireReadable()
         // dvs: the re-add clears each file's DV, the same commit's dvs
         // then restore the TARGET version's map — so a restore across
         // a dvdelete rolls the deletion vectors back too
-        tryCommit(path, TxnCommit(cur + 1, s"restore:$toVersion",
-          targetAdds, live.filterNot(target.contains), schemaRollback,
-          targetSnap.dvs.toSeq.sortBy(_._1)))
-        return cur + 1
-      } catch {
-        case _: TxnConflictException if attempt < maxAttempts => attempt += 1
+        TxnCommit(cur + 1, s"restore:$toVersion", targetAdds,
+          live.filterNot(target.contains), schemaRollback,
+          targetSnap.dvs.toSeq.sortBy(_._1))
       }
     }
-    -1L // unreachable
   }
 
   /** The operational one-row summary behind `DESCRIBE DETAIL`,
@@ -584,15 +578,9 @@ private[core] trait TxnMaintenance extends TxnDml {
     import spark.implicits._
     require(retainVersions >= 1, "must retain at least the current version")
     val snap = snapshot(path)
-    val cur = snap.version
-    val horizon = math.max(snap.horizon,
-      math.max(0L, cur - retainVersions + 1))
-    val pinned = registeredClonePins(path)
-      .filter(v => v >= 0 && v <= cur).distinct
-    val keep = ((horizon to cur) ++ pinned)
-      .flatMap(v => snapshotFiles(path, v)).toSet
     val ai = snap.allAdds
-    (ai.keySet -- keep).toSeq.sorted
+    val (_, dead, _) = vacuumable(path, snap, retainVersions)
+    dead.toSeq.sorted
       .filter { f =>
         val p = localRoot(path).resolve(f)
         // the log keeps referencing files an earlier vacuum already
@@ -622,10 +610,11 @@ private[core] trait TxnMaintenance extends TxnDml {
     * — the commit carries no adds/removes. Returns (new version,
     * number of files deleted).
     *
-    * Scale: resolves `retainVersions` snapshots and the extant-adds
-    * index — ALL checkpoint-amortized (O(interval) commit reads each,
-    * never an O(versions) log replay; the spec pins the read count on
-    * a 100+-commit table); deletion is O(dead files).
+    * Scale: resolves the retained window from ONE replay
+    * ([[vacuumable]]: the horizon's snapshot, checkpoint-amortized, then
+    * each retained commit once — never an O(versions) log replay; the
+    * spec pins the read count on a 100+-commit table); deletion is
+    * O(dead files).
     *
     * **Clone pins**: every snapshot version a registered live shallow
     * clone references ([[cloneShallow]]'s registry) is added to the
@@ -650,79 +639,82 @@ private[core] trait TxnMaintenance extends TxnDml {
   def vacuum(spark: SparkSession, path: String,
       retainVersions: Int = 2, orphanGraceMs: Long = -1L): (Long, Int) = {
     require(retainVersions >= 1, "must retain at least the current version")
-    var attempt = 0
-    while (true) {
+    retryRaces(20) { _ =>
       val snap = snapshot(path)
-      val cur = snap.version
-      val horizon = math.max(snap.horizon,
-        math.max(0L, cur - retainVersions + 1))
-      val pinned = registeredClonePins(path)
-        .filter(v => v >= 0 && v <= cur).distinct
-      val keep = ((horizon to cur) ++ pinned)
-        .flatMap(v => snapshotFiles(path, v)).toSet
-      // Known-dead only: files REFERENCED by some commit and absent
-      // from every retained snapshot. Never "everything not in keep" —
-      // a concurrent appender stages its data files BEFORE its commit,
-      // and an unreferenced file may be exactly that; allAdds only
-      // ever holds committed references. (Equal to the "pre-horizon commits only" dead-set:
-      // any file added by a commit ≥ horizon is live at that commit's
-      // own version, which is a retained snapshot — so it is in keep.)
-      val dead = snap.allAdds.keySet -- keep
-      preCommitHook()
-      try {
-        tryCommit(path, TxnCommit(cur + 1, s"vacuum:$horizon", Nil, Nil))
-        // the commit won: the dead-set is authoritative (later writers
-        // build on a log that already contains this vacuum). Only
-        // files under the table's OWN data dir are deletable — a
-        // shallow clone references foreign absolute paths, and its
-        // vacuum must never reap the source's data.
-        var deleted = 0
-        dead.foreach { f =>
-          val p = localRoot(path).resolve(f)
-          if (p.startsWith(dataDir(path)) && Files.deleteIfExists(p))
-            deleted += 1
-        }
-        if (orphanGraceMs >= 0 && Files.isDirectory(dataDir(path))) {
-          // referenced-by-NO-commit files, re-resolved at the LATEST
-          // version (not `cur`): a writer that committed between our
-          // vacuum commit and this scan is already in the index, so
-          // only true debris older than the grace window is swept
-          val referenced = snapshot(path).allAdds.keySet
-            .map(f => localRoot(path).resolve(f).normalize)
-          val cutoff = System.currentTimeMillis() - orphanGraceMs
-          val it = Files.walk(dataDir(path))
-          try it.iterator().asScala.foreach { p =>
-            if (Files.isRegularFile(p) &&
-              !referenced.contains(p.normalize) &&
-              Files.getLastModifiedTime(p).toMillis < cutoff &&
-              Files.deleteIfExists(p)) deleted += 1
-          } finally it.close()
-        }
-        if (orphanGraceMs >= 0 && Files.isDirectory(dvDir(path))) {
-          // deletion-vector sweep, same age-graced contract: a DV file
-          // is kept while ANY retained/pinned snapshot (or the latest
-          // log state, covering commits that raced this vacuum) maps a
-          // data file to it; superseded/orphaned DVs older than the
-          // grace window are reaped. Grace is what protects a
-          // concurrent dvdelete's staged-but-not-yet-committed file.
-          val keepDv = (((horizon to cur) ++ pinned)
-            .flatMap(v => snapshotDvs(path, v).values) ++
-            snapshotDvs(path).values).toSet
-            .map((f: String) => localRoot(path).resolve(f).normalize)
-          val cutoff = System.currentTimeMillis() - orphanGraceMs
-          val it = Files.walk(dvDir(path))
-          try it.iterator().asScala.foreach { p =>
-            if (Files.isRegularFile(p) &&
-              !keepDv.contains(p.normalize) &&
-              Files.getLastModifiedTime(p).toMillis < cutoff &&
-              Files.deleteIfExists(p)) deleted += 1
-          } finally it.close()
-        }
-        return (cur + 1, deleted)
-      } catch {
-        case _: TxnConflictException if attempt < 20 => attempt += 1
+      val (horizon, dead, keptDvs) = vacuumable(path, snap, retainVersions)
+      val v = publish(path)(
+        TxnCommit(snap.version + 1, s"vacuum:$horizon", Nil, Nil))
+      // the commit won: the dead-set is authoritative (later writers
+      // build on a log that already contains this vacuum). Only
+      // files under the table's OWN data dir are deletable — a
+      // shallow clone references foreign absolute paths, and its
+      // vacuum must never reap the source's data.
+      var deleted = 0
+      dead.foreach { f =>
+        val p = localRoot(path).resolve(f)
+        if (p.startsWith(dataDir(path)) && Files.deleteIfExists(p))
+          deleted += 1
       }
+      if (orphanGraceMs >= 0 && Files.isDirectory(dataDir(path))) {
+        // referenced-by-NO-commit files, re-resolved at the LATEST
+        // version (not `cur`): a writer that committed between our
+        // vacuum commit and this scan is already in the index, so
+        // only true debris older than the grace window is swept
+        val referenced = snapshot(path).allAdds.keySet
+          .map(f => localRoot(path).resolve(f).normalize)
+        val cutoff = System.currentTimeMillis() - orphanGraceMs
+        val it = Files.walk(dataDir(path))
+        try it.iterator().asScala.foreach { p =>
+          if (Files.isRegularFile(p) &&
+            !referenced.contains(p.normalize) &&
+            Files.getLastModifiedTime(p).toMillis < cutoff &&
+            Files.deleteIfExists(p)) deleted += 1
+        } finally it.close()
+      }
+      if (orphanGraceMs >= 0 && Files.isDirectory(dvDir(path))) {
+        // deletion-vector sweep, same age-graced contract: a DV file
+        // is kept while ANY retained/pinned snapshot (or the latest
+        // log state, covering commits that raced this vacuum) maps a
+        // data file to it; superseded/orphaned DVs older than the
+        // grace window are reaped. Grace is what protects a
+        // concurrent dvdelete's staged-but-not-yet-committed file.
+        val keepDv = (keptDvs ++ snapshotDvs(path).values)
+          .map(f => localRoot(path).resolve(f).normalize)
+        val cutoff = System.currentTimeMillis() - orphanGraceMs
+        val it = Files.walk(dvDir(path))
+        try it.iterator().asScala.foreach { p =>
+          if (Files.isRegularFile(p) &&
+            !keepDv.contains(p.normalize) &&
+            Files.getLastModifiedTime(p).toMillis < cutoff &&
+            Files.deleteIfExists(p)) deleted += 1
+        } finally it.close()
+      }
+      (v, deleted)
     }
-    sys.error("unreachable")
+  }
+
+  /** What a vacuum of `snap` keeping its last `retainVersions`
+    * versions may reap: (horizon, dead data files, DV files the
+    * retained window maps). Known-dead only: files REFERENCED by some
+    * commit and live in no retained snapshot and no registered clone
+    * pin. Never "everything not kept" — a concurrent appender stages
+    * its data files BEFORE its commit, and an unreferenced file may be
+    * exactly that; allAdds only ever holds committed references. The
+    * window resolves from ONE replay: a file (or DV file) live at a
+    * retained version is live at the horizon or added (assigned) by a
+    * retained commit, so the horizon's snapshot plus each later commit,
+    * read once, is the keep set. */
+  private def vacuumable(path: String, snap: Snapshot, retainVersions: Int)
+      : (Long, Set[String], Set[String]) = {
+    val cur = snap.version
+    val horizon = math.max(snap.horizon,
+      math.max(0L, cur - retainVersions + 1))
+    val kept = snapshot(path, horizon) +: registeredClonePins(path)
+      .filter(v => v >= 0 && v <= cur).distinct.map(snapshot(path, _))
+    val window = ((horizon + 1) to cur).map(commitInfo(path, _))
+    val keep = kept.flatMap(_.live) ++ window.flatMap(_.adds.map(_.path))
+    val keptDvs = kept.flatMap(_.dvs.values) ++
+      window.flatMap(_.dvs.map(_._2))
+    (horizon, snap.allAdds.keySet -- keep, keptDvs.toSet)
   }
 }

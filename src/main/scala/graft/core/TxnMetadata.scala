@@ -203,41 +203,35 @@ private[core] trait TxnMetadata extends TxnDml {
     var adds = harvested.toSeq.sortBy(_._1).map { case (f, rows, bytes, js) =>
       TxnAdd(f, rows, bytes, js)
     }
-    var attempt = 0
-    while (true) {
-      val cur = currentVersion(path)
-      preCommitHook()
-      try {
-        tryCommit(path, TxnCommit(cur + 1, "copyinto", adds, Nil, None))
-        return cur + 1
-      } catch {
-        case e: TxnConflictException =>
-          attempt += 1
-          if (attempt > 20) throw e
-          // a racing COPY INTO may have loaded some of our files:
-          // drop them and retry with the remainder (or no-op)
-          val rebased = snapshot(path)
-          fresh = freshAt(rebased)
-          if (fresh.isEmpty) return rebased.version
-          val keep = fresh.toSet
-          adds = adds.filter(a => keep(a.path))
-          // re-run the DV ambiguity guard against the REBASED snapshot:
-          // the entry check ran at `top`, but a concurrent commit may
-          // have added a file sharing one of our basenames since — a
-          // blind re-commit would land two live files with one leaf
-          // name and every later MOR DML on the table would fail on
-          // the dup-leaf require. Refusing here keeps the invariant
-          // "live basenames are unique" a commit-time guarantee, not a
-          // snapshot-at-entry hope.
-          val liveNow = rebased.files.map(_.split('/').last).toSet
-          val clashNow = fresh.map(_.split('/').last).filter(liveNow)
-          require(clashNow.isEmpty,
-            s"copyInto: file basename collision introduced by a " +
-              s"concurrent commit (deletion vectors key on the " +
-              s"basename): ${clashNow.take(6).mkString(", ")}")
+    retryRaces(20) { lost =>
+      val rebased = lost.map(_ => snapshot(path))
+      rebased.foreach { now =>
+        // a racing COPY INTO may have loaded some of our files:
+        // drop them and retry with the remainder (or no-op)
+        fresh = freshAt(now)
+        val keep = fresh.toSet
+        adds = adds.filter(a => keep(a.path))
+        // re-run the DV ambiguity guard against the REBASED snapshot:
+        // the entry check ran at `top`, but a concurrent commit may
+        // have added a file sharing one of our basenames since — a
+        // blind re-commit would land two live files with one leaf
+        // name and every later MOR DML on the table would fail on
+        // the dup-leaf require. Refusing here keeps the invariant
+        // "live basenames are unique" a commit-time guarantee, not a
+        // snapshot-at-entry hope.
+        val liveNow = now.files.map(_.split('/').last).toSet
+        val clashNow = fresh.map(_.split('/').last).filter(liveNow)
+        require(clashNow.isEmpty,
+          s"copyInto: file basename collision introduced by a " +
+            s"concurrent commit (deletion vectors key on the " +
+            s"basename): ${clashNow.take(6).mkString(", ")}")
+      }
+      if (fresh.isEmpty) rebased.fold(top)(_.version)
+      else {
+        val cur = currentVersion(path)
+        publish(path)(TxnCommit(cur + 1, "copyinto", adds, Nil, None))
       }
     }
-    -1L // unreachable
   }
 
   /** COPY INTO's `PATTERN = '<glob>'` as a predicate over the path
@@ -392,46 +386,36 @@ private[core] trait TxnMetadata extends TxnDml {
       math.ceil(srcBytes.toDouble / (128L * 1024 * 1024)).toInt)
     val adds = writeData(spark, path, withChecks(spark, path, coerced),
       bins)
-    var attempt = 0
-    try {
-      while (true) {
-        val cur = currentVersion(path)
-        preCommitHook()
-        try {
-          tryCommit(path, TxnCommit(cur + 1, opJson, adds, Nil, None))
-          return cur + 1
-        } catch {
-          case e: TxnConflictException =>
-            attempt += 1
-            if (attempt > 20) throw e
-            // a racing formatted COPY INTO may have loaded one of our
-            // files: the staged batch mixes every file's rows, so a
-            // partial drop is impossible — abort the whole batch and
-            // let the caller re-run (which will list only what is
-            // still fresh). A race that loaded NONE of ours commutes
-            // like any append and re-commits at the new head.
-            val now = snapshot(path)
-            if (freshAt(now).toSet != fresh.toSet)
-              throw new IllegalStateException(
-                "copyInto: a concurrent COPY INTO loaded part of this " +
-                  "batch — re-run to load the remainder")
-            // the lost race may have been an ALTER: the staged files
-            // were coerced to the OLD shape — blindly re-committing
-            // would land wrong-schema data (the same fence append's
-            // retry applies via checkSchema)
-            if (now.schema != schemaAtStage)
-              throw new IllegalStateException(
-                "copyInto: the table schema changed concurrently — the " +
-                  "staged batch was coerced to the old shape; re-run " +
-                  "the load against the new schema")
-            // …or a concurrent addConstraint: the staged rows were
-            // checked against the OLD constraint set — re-validate
-            // (the outer catch cleans the staged files on violation)
-            csStage = revalidateStaged(spark, path, adds, csStage)
-        }
+    try retryRaces(20) { lost =>
+      if (lost.nonEmpty) {
+        // a racing formatted COPY INTO may have loaded one of our
+        // files: the staged batch mixes every file's rows, so a
+        // partial drop is impossible — abort the whole batch and
+        // let the caller re-run (which will list only what is
+        // still fresh). A race that loaded NONE of ours commutes
+        // like any append and re-commits at the new head.
+        val now = snapshot(path)
+        if (freshAt(now).toSet != fresh.toSet)
+          throw new IllegalStateException(
+            "copyInto: a concurrent COPY INTO loaded part of this " +
+              "batch — re-run to load the remainder")
+        // the lost race may have been an ALTER: the staged files
+        // were coerced to the OLD shape — blindly re-committing
+        // would land wrong-schema data (the same fence append's
+        // retry applies via checkSchema)
+        if (now.schema != schemaAtStage)
+          throw new IllegalStateException(
+            "copyInto: the table schema changed concurrently — the " +
+              "staged batch was coerced to the old shape; re-run " +
+              "the load against the new schema")
+        // …or a concurrent addConstraint: the staged rows were
+        // checked against the OLD constraint set — re-validate
+        // (the catch below cleans the staged files on violation)
+        csStage = revalidateStaged(spark, path, adds, csStage)
       }
+      val cur = currentVersion(path)
+      publish(path)(TxnCommit(cur + 1, opJson, adds, Nil, None))
     } catch { case e: Throwable => cleanupStaged(path, adds); throw e }
-    -1L // unreachable
   }
 
   /** ADD CONSTRAINT <name> CHECK (<exprSql>): validates that EVERY
@@ -449,8 +433,8 @@ private[core] trait TxnMetadata extends TxnDml {
       s"constraint name must be alphanumeric/_/-: $name")
     require(!constraints(path).contains(name),
       s"constraint $name already exists")
-    var attempt = 0
-    while (true) {
+    // each attempt re-validates the fresh snapshot
+    retryRaces(maxAttempts) { _ =>
       val base = currentVersion(path)
       val violating = read(spark, path)
         .filter(!coalesce(expr(exprSql), lit(true)))
@@ -458,18 +442,9 @@ private[core] trait TxnMetadata extends TxnDml {
         throw new ConstraintViolationException(
           s"cannot add CHECK constraint $name ($exprSql): " +
             s"existing rows violate it, e.g. ${violating.head()}")
-      preCommitHook()
-      try {
-        tryCommit(path, TxnCommit(base + 1,
-          s"constraint:add:$name:$exprSql", Nil, Nil))
-        return base + 1
-      } catch {
-        case e: TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1 // loop re-validates the fresh snapshot
-      }
+      publish(path)(TxnCommit(base + 1,
+        s"constraint:add:$name:$exprSql", Nil, Nil))
     }
-    -1L // unreachable
   }
 
   /** DROP CONSTRAINT: a metadata commit; false if it did not exist. */
@@ -976,24 +951,13 @@ private[core] trait TxnMetadata extends TxnDml {
     * re-validate against it ([[checkSchema]] on the fresh head). */
   private def commitSchemaChange(path: String, op: String,
       build: () => org.apache.spark.sql.types.StructType,
-      maxAttempts: Int = 20): Long = {
-    var attempt = 0
-    while (true) {
+      maxAttempts: Int = 20): Long =
+    retryRaces(maxAttempts) { _ =>
       val v = currentVersion(path) + 1
       require(v > 0, s"commitSchemaChange: not a table: $path")
       val schema = build()
-      preCommitHook()
-      try {
-        tryCommit(path, TxnCommit(v, op, Nil, Nil, Some(schema.json)))
-        return v
-      } catch {
-        case e: TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      publish(path)(TxnCommit(v, op, Nil, Nil, Some(schema.json)))
     }
-    -1L // unreachable
-  }
 
   // -- per-file BLOOM skipping ----------------------------------------------
   //

@@ -228,15 +228,6 @@ private[core] trait TxnReads extends TxnLog {
         throw new IllegalArgumentException(s"empty snapshot of $path at " +
           s"${snap.version} with no recorded schema"))))
 
-  /** One column's log-folded statistics (see [[logTableStats]]):
-    * bounds/nulls are present ONLY under full add-coverage — an
-    * honest global claim, never a partial one. Long bounds live in
-    * the PHYSICAL int64 space (days for dates, micros for
-    * timestamps). */
-  case class LogColStat(dataType: org.apache.spark.sql.types.DataType,
-      coverage: Double, lmin: Option[Long], lmax: Option[Long],
-      smin: Option[String], smax: Option[String], nulls: Option[Long])
-
   /** Table statistics folded from the COMMIT LOG alone — zero file
     * reads: total live bytes, live row count (add rows; rows hidden
     * by deletion vectors still count — an upper bound, which is what
@@ -247,39 +238,8 @@ private[core] trait TxnReads extends TxnLog {
   def logTableStats(spark: SparkSession, path: String,
       asOf: Long = -1L): (Long, Long, Seq[(String, LogColStat)]) = {
     val snap = readable(path, asOf)
-    val adds = snap.files.flatMap(snap.allAdds.get)
-    val parsed = adds.map(a => (a.rows, parseAddStats(a)))
-    val nAdds = parsed.size
-    val schema = scanOf(spark, path, snap).schema
-    val cols = schema.fields.toSeq.map { f =>
-      val phys = physicalColName(snap, f.name)
-      val have = parsed.flatMap(_._2).filter(_.cols.contains(phys))
-      val coverage =
-        if (nAdds == 0) 1.0 else have.size.toDouble / nAdds
-      val full = nAdds > 0 && have.size == nAdds
-      val (lmin, lmax) = {
-        val mins = have.flatMap(_.longs.get(phys).map(_._1))
-        val maxs = have.flatMap(_.longs.get(phys).map(_._2))
-        if (!full || mins.size != nAdds) (None, None)
-        else (Some(mins.min), Some(maxs.max))
-      }
-      // string bounds fold in UTF-8 byte order, as they are logged and
-      // as Spark compares (String's own order is UTF-16 code units)
-      val (smin, smax) = {
-        val mins = have.flatMap(_.strings.get(phys).map(_._1))
-        val maxs = have.flatMap(_.strings.get(phys).map(_._2))
-        if (!full || mins.size != nAdds) (None, None)
-        else (Some(mins.minBy(UTF8String.fromString)),
-          Some(maxs.maxBy(UTF8String.fromString)))
-      }
-      val nulls = {
-        val ns = have.flatMap(_.nulls.get(phys))
-        if (!full || ns.size != nAdds) None else Some(ns.sum)
-      }
-      f.name -> LogColStat(f.dataType, coverage, lmin, lmax,
-        smin, smax, nulls)
-    }
-    (adds.map(_.bytes).sum, parsed.map(_._1).sum, cols)
+    snap.logStats.getOrElse(
+      foldLogStats(snap, scanOf(spark, path, snap).schema))
   }
 
   /** Per-COLUMN statistics panel, computed ENTIRELY from the commit
@@ -373,7 +333,7 @@ private[core] trait TxnReads extends TxnLog {
   //
   // Every pruned read, metadata-only aggregate and scoped compaction
   // picks its files from ONE driver-side walk over the live files'
-  // write-time stats (stats-in-log, [[loggedStats]]): no footer open
+  // write-time stats (stats-in-log, `Snapshot.stats`): no footer open
   // and no Spark job for a file that carries stats. At 100 TB that
   // replaces millions of per-query object-store footer GETs with
   // metadata the planner already holds.
@@ -452,11 +412,6 @@ private[core] trait TxnReads extends TxnLog {
       UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) <= 0
   }
 
-  /** The live files of `snap` (in its order) with their logged stats,
-    * or None for an add that carries none. */
-  private def loggedStats(snap: Snapshot): Seq[(String, Option[FileStats])] =
-    snap.files.map(f => f -> snap.allAdds.get(f).flatMap(parseAddStats))
-
   /** The live files of `snap` (in its order) that EVERY bound keeps.
     * Stats come from the log; a file without them, or whose stats
     * never attempted a bound's column (schema drift across
@@ -470,7 +425,7 @@ private[core] trait TxnReads extends TxnLog {
     // stats (log AND footers) are keyed by PHYSICAL names
     val phys = bounds.map(b => physicalColName(snap, b.column))
     val cols = phys.distinct
-    val walk = loggedStats(snap).map { case (f, st) =>
+    val walk = snap.stats.map { case (f, st) =>
       (f, localRoot(path).resolve(f).toString,
         st.filter(s => cols.forall(s.cols.contains)))
     }
@@ -557,7 +512,7 @@ private[core] trait TxnReads extends TxnLog {
     midReadHook()
     val physCol = physicalColName(snap, column)
     val dvNames = snap.dvs.keySet.map(_.split('/').last)
-    val walk = loggedStats(snap)
+    val walk = snap.stats
     var metaCount = 0L
     val scan = Seq.newBuilder[String]
     walk.foreach { case (f, st) =>
@@ -619,7 +574,7 @@ private[core] trait TxnReads extends TxnLog {
     midReadHook()
     val physCol = physicalColName(snap, column)
     val dvNames = snap.dvs.keySet.map(_.split('/').last)
-    val walk = loggedStats(snap)
+    val walk = snap.stats
     var mn = Option.empty[Long]
     var mx = Option.empty[Long]
     val scan = Seq.newBuilder[String]

@@ -76,11 +76,9 @@ case class BySourceDelete(cond: Option[Column] = None) extends MergeBySource
   * lake lacks (SURVEY.md residual gap; Compactor's swap and SnapshotDiff
   * were the seeds).
   *
-  * Layout:
-  * {{{
-  *   table/data/part-<uuid>.parquet      immutable data files
-  *   table/_graft_log/v0000000042.json   one commit per version
-  * }}}
+  * Layout: immutable data files under `table/data/`, and one commit
+  * per version in the commit log, whose file names and format only
+  * [[TxnLog]] knows.
   *
   * Properties, each pinned by TxnTableSpec or the s13 gate:
   *  - **Atomic commit / optimistic concurrency**: a commit is staged to

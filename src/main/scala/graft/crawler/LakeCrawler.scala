@@ -151,11 +151,12 @@ object LakeCrawler {
       if (n.contains('.')) n.substring(0, n.lastIndexOf('.')) else n
 
     filesystem.listStatus(new Path(root)).filter(visible).toSeq.flatMap { st =>
+      lazy val txnHead = graft.core.TxnTable.currentVersion(st.getPath.toString)
       if (st.isFile) {
         val fmt = detectFormat(spark, st.getPath)
         Some(DatasetInfo(stripExt(st.getPath.getName), st.getPath.toString,
           fmt, 1, st.getLen, st.getModificationTime))
-      } else if (filesystem.exists(new Path(st.getPath, "_graft_log"))) {
+      } else if (txnHead >= 0) {
         // Transactional table: the dataset is the LOGICAL snapshot, not
         // the directory listing — a raw file walk would double-count
         // dead (compacted/deleted-from) files and could read a
@@ -164,29 +165,23 @@ object LakeCrawler {
         // file, so an incremental re-crawl sees change exactly when a
         // commit lands and never drifts on physical-only noise.
         val t = st.getPath.toString
-        val v = graft.core.TxnTable.currentVersion(t)
-        if (v < 0) None
-        else {
-          // Checkpoint-amortized sizing: resolve the LIVE file list
-          // (O(CheckpointInterval) log reads) and stat those files —
-          // never a full log replay, so crawl cost is independent of
-          // how many commits the table has accumulated. Live files
-          // can't race away (vacuum deletes only dead ones); a miss is
-          // tolerated as 0 rather than failing the crawl.
-          val live = graft.core.TxnTable.snapshotFiles(t)
-          // deletion-vector sidecars are part of the snapshot's
-          // physical footprint too (merge-on-read deletes)
-          val dvFiles = graft.core.TxnTable.snapshotDvs(t)
-            .values.toSeq.distinct
-          val bytes = (live ++ dvFiles).map { f =>
-            try filesystem.getFileStatus(new Path(st.getPath, f)).getLen
-            catch { case _: java.io.FileNotFoundException => 0L }
-          }.sum
-          val logFiles = filesystem.listStatus(new Path(st.getPath, "_graft_log"))
-          Some(DatasetInfo(st.getPath.getName, t, "graft-txn",
-            live.size, bytes,
-            logFiles.map(_.getModificationTime).max))
-        }
+        // Checkpoint-amortized sizing: resolve the LIVE file list
+        // (O(CheckpointInterval) log reads) and stat those files —
+        // never a full log replay, so crawl cost is independent of
+        // how many commits the table has accumulated. Live files
+        // can't race away (vacuum deletes only dead ones); a miss is
+        // tolerated as 0 rather than failing the crawl.
+        val live = graft.core.TxnTable.snapshotFiles(t, txnHead)
+        // deletion-vector sidecars are part of the snapshot's
+        // physical footprint too (merge-on-read deletes)
+        val dvFiles = graft.core.TxnTable.snapshotDvs(t, txnHead)
+          .values.toSeq.distinct
+        val bytes = (live ++ dvFiles).map { f =>
+          try filesystem.getFileStatus(new Path(st.getPath, f)).getLen
+          catch { case _: java.io.FileNotFoundException => 0L }
+        }.sum
+        Some(DatasetInfo(st.getPath.getName, t, "graft-txn",
+          live.size, bytes, graft.core.TxnTable.commitMtime(t, txnHead)))
       } else if (isTextIndex(spark, filesystem, st.getPath)) {
         // C15: one LOGICAL dataset — sized from the layout's LIVE data
         // dirs (a compacted index serves dot-prefixed generation dirs

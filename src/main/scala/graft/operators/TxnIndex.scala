@@ -160,8 +160,7 @@ object TxnIndex {
   def upsert(docs: DataFrame, idCol: String, textCol: String,
       path: String, maxAttempts: Int = 10): Long = {
     val spark = docs.sparkSession
-    var attempt = 0
-    while (true) {
+    TxnTable.retryRaces(maxAttempts) { _ =>
       val base = TxnTable.currentVersion(path)
       val st = rawStats(spark, path, base)
       val incoming = docs.select(col(idCol).cast("long").as("doc_id")).distinct()
@@ -171,17 +170,10 @@ object TxnIndex {
         .head()
       val rows = trancheRows(docs, idCol, textCol, st.nBuckets,
         Some((replaced.getLong(0), replaced.getLong(1))), st.maxSeq + 1)
-      try {
-        return TxnTable.merge(spark, path, rows, Seq("doc_id"),
-          partitions = math.max(1, st.nBuckets / 8), clusterBy = clusterKeys,
-          expectedBase = base)
-      } catch {
-        case e: TxnTable.TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      TxnTable.merge(spark, path, rows, Seq("doc_id"),
+        partitions = math.max(1, st.nBuckets / 8), clusterBy = clusterKeys,
+        expectedBase = base)
     }
-    -1L // unreachable
   }
 
   /** Upsert a tranche (MERGE-ON-READ): ONE append-only CAS commit —
@@ -197,8 +189,7 @@ object TxnIndex {
   def upsertLazy(docs: DataFrame, idCol: String, textCol: String,
       path: String, maxAttempts: Int = 10): Long = {
     val spark = docs.sparkSession
-    var attempt = 0
-    while (true) {
+    TxnTable.retryRaces(maxAttempts) { _ =>
       val base = TxnTable.currentVersion(path)
       val st = rawStats(spark, path, base)
       val seq = st.maxSeq + 1
@@ -211,17 +202,10 @@ object TxnIndex {
       val rows = trancheRows(docs, idCol, textCol, st.nBuckets,
           Some((replaced.getLong(0), replaced.getLong(1))), seq)
         .unionAll(tombstoneRows(replacedReg.select(col("doc_id")), seq))
-      try {
-        return TxnTable.appendCas(spark, path, rows, expectedBase = base,
-          clusterBy = clusterKeys,
-          partitions = math.max(1, st.nBuckets / 8))
-      } catch {
-        case e: TxnTable.TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      TxnTable.appendCas(spark, path, rows, expectedBase = base,
+        clusterBy = clusterKeys,
+        partitions = math.max(1, st.nBuckets / 8))
     }
-    -1L // unreachable
   }
 
   /** [[upsertLazy]] as an EXACTLY-ONCE streaming sink tranche — the
@@ -251,35 +235,29 @@ object TxnIndex {
     val spark = docs.sparkSession
     def alreadyApplied(): Boolean =
       TxnTable.lastAppliedBatch(path, streamId).exists(_ >= batchId)
-    var attempt = 0
-    while (true) {
-      if (alreadyApplied()) return None
-      val base = TxnTable.currentVersion(path)
-      val st = rawStats(spark, path, base)
-      val seq = st.maxSeq + 1
-      val incoming = docs.select(col(idCol).cast("long").as("doc_id")).distinct()
-      val replacedReg = liveRegistry(spark, path, base)
-        .join(incoming, Seq("doc_id"), "left_semi")
-      val replaced = replacedReg
-        .agg(count(lit(1)).as("c"), coalesce(sum(col("dl")), lit(0L)).as("s"))
-        .head()
-      val rows = trancheRows(docs, idCol, textCol, st.nBuckets,
-          Some((replaced.getLong(0), replaced.getLong(1))), seq)
-        .unionAll(tombstoneRows(replacedReg.select(col("doc_id")), seq))
-      try {
+    TxnTable.retryRaces(maxAttempts) { _ =>
+      if (alreadyApplied()) None
+      else {
+        val base = TxnTable.currentVersion(path)
+        val st = rawStats(spark, path, base)
+        val seq = st.maxSeq + 1
+        val incoming = docs.select(col(idCol).cast("long").as("doc_id")).distinct()
+        val replacedReg = liveRegistry(spark, path, base)
+          .join(incoming, Seq("doc_id"), "left_semi")
+        val replaced = replacedReg
+          .agg(count(lit(1)).as("c"), coalesce(sum(col("dl")), lit(0L)).as("s"))
+          .head()
+        val rows = trancheRows(docs, idCol, textCol, st.nBuckets,
+            Some((replaced.getLong(0), replaced.getLong(1))), seq)
+          .unionAll(tombstoneRows(replacedReg.select(col("doc_id")), seq))
         val v = TxnTable.appendCas(spark, path, rows,
           expectedBase = base, clusterBy = clusterKeys,
           partitions = math.max(1, st.nBuckets / 8),
           op = s"stream:$streamId:$batchId")
         if (compactEvery > 0) maybeCompact(spark, path, compactEvery)
-        return Some(v)
-      } catch {
-        case e: TxnTable.TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
+        Some(v)
       }
     }
-    None // unreachable
   }
 
   /** The tranche-count-triggered compaction policy: compact iff the

@@ -166,8 +166,7 @@ object TxnVectorIndex {
   def upsertLazy(vectors: DataFrame, idCol: String, vecCol: String,
       path: String, maxAttempts: Int = 10): Long = {
     val spark = vectors.sparkSession
-    var attempt = 0
-    while (true) {
+    TxnTable.retryRaces(maxAttempts) { _ =>
       val base = TxnTable.currentVersion(path)
       val seq = maxSeq(spark, path, base) + 1
       val cents = centroids(spark, path, base)
@@ -177,17 +176,10 @@ object TxnVectorIndex {
       val rows = vRows(assigned, seq)
         .unionAll(tombstoneRows(data.select(col("vec_id")).distinct(), seq))
         .unionAll(trancheRow(spark, data.count(), seq))
-      try {
-        return TxnTable.appendCas(spark, path, rows, expectedBase = base,
-          clusterBy = clusterKeys,
-          partitions = math.max(1, cents.length / 4))
-      } catch {
-        case e: TxnTable.TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      TxnTable.appendCas(spark, path, rows, expectedBase = base,
+        clusterBy = clusterKeys,
+        partitions = math.max(1, cents.length / 4))
     }
-    -1L // unreachable
   }
 
   /** [[upsertLazy]] as an EXACTLY-ONCE streaming sink tranche — the
@@ -206,32 +198,26 @@ object TxnVectorIndex {
     val spark = vectors.sparkSession
     def alreadyApplied(): Boolean =
       TxnTable.lastAppliedBatch(path, streamId).exists(_ >= batchId)
-    var attempt = 0
-    while (true) {
-      if (alreadyApplied()) return None
-      val base = TxnTable.currentVersion(path)
-      val seq = maxSeq(spark, path, base) + 1
-      val cents = centroids(spark, path, base)
-      val data = vectors.select(col(idCol).cast("long").as("vec_id"),
-        col(vecCol).as("embedding"))
-      val assigned = Similarity.withIvfList(data, cents, "embedding", "list")
-      val rows = vRows(assigned, seq)
-        .unionAll(tombstoneRows(data.select(col("vec_id")).distinct(), seq))
-        .unionAll(trancheRow(spark, data.count(), seq))
-      try {
+    TxnTable.retryRaces(maxAttempts) { _ =>
+      if (alreadyApplied()) None
+      else {
+        val base = TxnTable.currentVersion(path)
+        val seq = maxSeq(spark, path, base) + 1
+        val cents = centroids(spark, path, base)
+        val data = vectors.select(col(idCol).cast("long").as("vec_id"),
+          col(vecCol).as("embedding"))
+        val assigned = Similarity.withIvfList(data, cents, "embedding", "list")
+        val rows = vRows(assigned, seq)
+          .unionAll(tombstoneRows(data.select(col("vec_id")).distinct(), seq))
+          .unionAll(trancheRow(spark, data.count(), seq))
         val v = TxnTable.appendCas(spark, path, rows, expectedBase = base,
           clusterBy = clusterKeys,
           partitions = math.max(1, cents.length / 4),
           op = s"stream:$streamId:$batchId")
         if (compactEvery > 0) maybeCompact(spark, path, compactEvery)
-        return Some(v)
-      } catch {
-        case e: TxnTable.TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
+        Some(v)
       }
     }
-    None // unreachable
   }
 
   /** Compact iff the accumulated tranche rows reached `maxTranches` —
@@ -252,23 +238,15 @@ object TxnVectorIndex {
     * rewritten); [[compact]] reclaims the space physically. */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String = "vec_id", maxAttempts: Int = 10): Long = {
-    var attempt = 0
-    while (true) {
+    TxnTable.retryRaces(maxAttempts) { _ =>
       val base = TxnTable.currentVersion(path)
       val seq = maxSeq(spark, path, base) + 1
       val rows = tombstoneRows(
           ids.select(col(idCol).cast("long").as("vec_id")).distinct(), seq)
         .unionAll(trancheRow(spark, 0L, seq))
-      try {
-        return TxnTable.appendCas(spark, path, rows, expectedBase = base,
-          clusterBy = clusterKeys, partitions = 1)
-      } catch {
-        case e: TxnTable.TxnConflictException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      TxnTable.appendCas(spark, path, rows, expectedBase = base,
+        clusterBy = clusterKeys, partitions = 1)
     }
-    -1L // unreachable
   }
 
   /** ANN top-k served from the committed index at `asOf` (default:

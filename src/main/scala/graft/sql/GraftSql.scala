@@ -2806,20 +2806,12 @@ object GraftSql {
   // scanned the table — a filtered dim⋈fact plans broadcast by
   // statistics where the raw size-only estimate would sort-merge
   // (the c13 flip, with the log instead of a crawl). Disable with
-  // `spark.graft.cbo.logStats=false`. Stats memoize per (path,
-  // version); a new commit is a new version, so staleness is
-  // impossible by construction.
-
-  // keyed on (path, version, commit mtime): the mtime witnesses table
-  // IDENTITY — a table deleted and recreated at the same path restarts
-  // version numbers, and without it the cache could serve the dead
-  // table's statistics at a colliding (path, version)
-  // value = (catalog stats, the snapshot's graft.mcv.* properties —
-  // carried onto the injected CatalogTable so the per-statement MCV
-  // selectivity refinement reads version-consistent frequencies)
-  private val logStatsCache = new ConcurrentHashMap[(String, Long, Long),
-    Option[(org.apache.spark.sql.catalyst.catalog.CatalogStatistics,
-      Map[String, String])]]()
+  // `spark.graft.cbo.logStats=false`. The log fold is a lazy member
+  // of the resolved snapshot, which the head memo carries, so a new
+  // commit is a new snapshot and staleness is impossible by
+  // construction. The snapshot's graft.mcv.* properties ride onto the
+  // injected CatalogTable so the per-statement MCV selectivity
+  // refinement reads version-consistent frequencies.
 
   private def injectLogStats(spark: SparkSession, path: String,
       asOf: Long, name: String, df: DataFrame): LogicalPlan = {
@@ -2839,11 +2831,9 @@ object GraftSql {
     val scans = plan.collect { case lr: LogicalRelation => lr }
     if (scans.length != 1) return plan
     val v = if (asOf >= 0) asOf else TxnTable.currentVersion(path)
-    val stamp =
-      try TxnTable.commitMtime(path, v) catch { case _: Exception => -1L }
-    val stats = logStatsCache.computeIfAbsent((path, v, stamp), _ =>
+    val stats =
       try Some(buildCatalogStats(spark, path, v))
-      catch { case _: Exception => None })
+      catch { case _: Exception => None }
     stats match {
       case Some((st, mcvProps)) =>
         val ct = org.apache.spark.sql.catalyst.catalog.CatalogTable(

@@ -415,48 +415,44 @@ object StreamDedup {
       defaultBytes: Int): Option[Seq[(Int, Array[Byte])]] = {
     import spark.implicits._
     val bloomPath = bloomPathOf(storePath)
-    var attempt = 0
-    while (attempt < 8) {
+    try TxnTable.retryRaces(7) { _ =>
       val v = TxnTable.currentVersion(bloomPath)
-      if (v < 0) return None
       val cached = bloomCache.get(bloomPath)
-      if (cached != null && cached._1 == v) return Some(cached._2)
-      if (bloomCache.size > 64) bloomCache.clear() // bound, not LRU
-      val rows = TxnTable.read(spark, bloomPath).collect()
-        .map(r => (r.getInt(0), r.getAs[Array[Byte]](1))).toSeq
-      try {
-        val f = orFold(rows)
-        bloomCache.put(bloomPath, (v, f))
-        return Some(f)
-      } catch {
-        case _: IllegalArgumentException =>
-          // mixed sizing → rebuild from the full store at the largest
-          // size present and overwrite the sidecar in place
-          val target = math.max(defaultBytes,
-            rows.iterator.map(_._2.length).maxOption.getOrElse(defaultBytes))
-          val rebuilt = storeBloomRows(spark, storePath, target)
-            .collect().map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
-            .toSeq
-          try {
-            // cache (and RETURN) only a fold whose version this repair
-            // owns: on a lost overwrite race both the cached and the
-            // in-flight fold would miss the winner's keys — the false
-            // negative this module promises is impossible — so the
-            // loser loops back and re-reads the sidecar at the
-            // winner's version instead of using its stale rebuild
-            val ver = TxnTable.overwrite(spark, bloomPath,
-              rebuilt.toDF("bucket", "bloom"))
-            val f = orFold(rebuilt) // rebuilt rows uniform by construction
-            bloomCache.put(bloomPath, (ver, f))
-            return Some(f)
-          } catch {
-            case _: TxnTable.TxnConflictException => attempt += 1
+      if (v < 0) None
+      else if (cached != null && cached._1 == v) Some(cached._2)
+      else {
+        if (bloomCache.size > 64) bloomCache.clear() // bound, not LRU
+        val rows = TxnTable.read(spark, bloomPath).collect()
+          .map(r => (r.getInt(0), r.getAs[Array[Byte]](1))).toSeq
+        val (ver, f) =
+          try (v, orFold(rows))
+          catch {
+            case _: IllegalArgumentException =>
+              // mixed sizing → rebuild from the full store at the largest
+              // size present and overwrite the sidecar in place
+              val target = math.max(defaultBytes, rows.iterator
+                .map(_._2.length).maxOption.getOrElse(defaultBytes))
+              val rebuilt = storeBloomRows(spark, storePath, target)
+                .collect().map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
+                .toSeq
+              // cache (and RETURN) only a fold whose version this repair
+              // owns: on a lost overwrite race both the cached and the
+              // in-flight fold would miss the winner's keys — the false
+              // negative this module promises is impossible — so the
+              // loser's next attempt re-reads the sidecar at the
+              // winner's version instead of using its stale rebuild
+              (TxnTable.overwrite(spark, bloomPath,
+                rebuilt.toDF("bucket", "bloom")),
+                orFold(rebuilt)) // rebuilt rows uniform by construction
           }
+        bloomCache.put(bloomPath, (ver, f))
+        Some(f)
       }
+    } catch {
+      // pathological contention: give up on the gate this batch — None
+      // means the caller probes the store UNgated (correct, just slower)
+      case _: TxnTable.TxnConflictException => None
     }
-    // pathological contention: give up on the gate this batch — None
-    // means the caller probes the store UNgated (correct, just slower)
-    None
   }
 
   private def orFold(rows: Seq[(Int, Array[Byte])]): Seq[(Int, Array[Byte])] =

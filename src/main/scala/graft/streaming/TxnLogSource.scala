@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -128,6 +126,8 @@ private[streaming] class TxnLogMicroBatchStream(path: String,
 }
 
 private[streaming] object TxnLogReaderFactory extends PartitionReaderFactory {
+  import graft.core.TxnTable
+
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[TxnLogPartition]
@@ -137,28 +137,14 @@ private[streaming] object TxnLogReaderFactory extends PartitionReaderFactory {
       override def next(): Boolean = {
         if (v >= p.toIncl) return false
         v += 1
-        row = new GenericInternalRow(
-          Array[Any](v, UTF8String.fromString(readOp(p.path, v))))
+        // the reader runs without a SparkSession; the log is a tiny
+        // JSON per version on the shared table filesystem
+        row = new GenericInternalRow(Array[Any](v,
+          UTF8String.fromString(TxnTable.commitInfo(p.path, v).op)))
         true
       }
       override def get(): InternalRow = row
       override def close(): Unit = ()
     }
-  }
-
-  /** The commit's `op` field, read straight off the log file (the
-    * reader runs without a SparkSession; the log is a tiny JSON per
-    * version on the shared table filesystem). */
-  private def readOp(path: String, v: Long): String = {
-    val root =
-      if (path.startsWith("file:"))
-        Paths.get(java.net.URI.create(path).getPath)
-      else Paths.get(path)
-    val f = root.resolve("_graft_log").resolve(f"v$v%010d.json")
-    val json = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val fmts: Formats = DefaultFormats
-    (JsonMethods.parse(json) \ "op").extract[String]
   }
 }

@@ -409,6 +409,38 @@ class TxnTableSpec extends SparkSpecBase {
     } finally s.close()
   }
 
+  private def deleteTree(root: java.nio.file.Path): Unit = {
+    val s = Files.walk(root)
+    val all = Seq.newBuilder[java.nio.file.Path]
+    try s.iterator().forEachRemaining(p => all += p) finally s.close()
+    all.result().reverse.foreach(p => Files.delete(p))
+  }
+
+  test("the snapshot memo serves no table that was deleted and recreated " +
+      "at the same path") {
+    import spark.implicits._
+    val t = freshTable()
+    create(spark, t, rangeDf(0, 10))
+    append(spark, t, rangeDf(10, 20))
+    append(spark, t, rangeDf(20, 30)) // head 2, memoized by the read
+    assert(read(spark, t).count() == 30)
+    // another table, another schema, more versions than the memoized head
+    val other = freshTable()
+    create(spark, other, Seq((1L, 1.5, "a")).toDF("k", "x", "tag"))
+    (2 to 4).foreach(i => append(spark, other,
+      Seq((i.toLong, i * 1.5, "b")).toDF("k", "x", "tag"))) // head 3
+    // another process deletes the table and recreates it: plain file
+    // copies of the other table's log and data
+    deleteTree(java.nio.file.Paths.get(t))
+    Seq("_graft_log", "data").foreach(d => copyTree(
+      java.nio.file.Paths.get(other, d), java.nio.file.Paths.get(t, d)))
+    val back = read(spark, t)
+    assert(back.schema.fieldNames.toSeq == Seq("k", "x", "tag"))
+    assert(back.as[(Long, Double, String)].collect().toSet ==
+      read(spark, other).as[(Long, Double, String)].collect().toSet)
+    assert(snapshotFiles(t) == snapshotFiles(other))
+  }
+
   test("footer pruning on a multi-hundred-file table: distributed index, " +
       "names-only collect") {
     import spark.implicits._
@@ -659,8 +691,17 @@ class TxnTableSpec extends SparkSpecBase {
     // last reference — they become genuinely dead
     compact(spark, t) // v106
     append(spark, t, rangeDf(2000, 2010)) // v107
+    // a 30-version window resolves its retained files from ONE replay
+    // (the horizon snapshot, then each retained commit once); resolving
+    // every retained version from its own checkpoint read PARENT_READS
+    val wide = logReads {
+      val (v, deleted) = vacuum(spark, t, retainVersions = 30) // horizon 78
+      assert(v == 108L && deleted == 0, "every file is live at v105")
+    }
+    assert(wide <= 30L + CheckpointInterval,
+      s"a 30-version vacuum window read $wide version files")
     val vReads = logReads {
-      val (_, deleted) = vacuum(spark, t, retainVersions = 2) // horizon 106
+      val (_, deleted) = vacuum(spark, t, retainVersions = 2) // horizon 107
       assert(deleted >= 100, s"vacuum reaped only $deleted dead files")
     }
     assert(vReads <= budget,

@@ -2870,4 +2870,44 @@ class GraftSqlSpec extends SparkSpecBase {
       GraftSql.unregister(n)
     }
   }
+
+  test("log-stats CBO injection reads the recreated table, not the " +
+      "memoized dead one at the same path") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      val s = Files.walk(from)
+      try s.iterator().forEachRemaining { p =>
+        val d = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(d)
+        else Files.copy(p, d)
+      } finally s.close()
+    }
+    def injectedRows(n: String): Option[BigInt] =
+      GraftSql.query(spark, s"SELECT * FROM $n").queryExecution.analyzed
+        .collectFirst { case lr: LogicalRelation => lr.catalogTable }
+        .flatten.flatMap(_.stats).flatMap(_.rowCount)
+    val (t, n) = mk() // 4 rows at v0
+    try {
+      TxnTable.append(spark, t, Seq((5L, 50L, "e")).toDF("id", "v", "s"))
+      TxnTable.append(spark, t, Seq((6L, 60L, "f")).toDF("id", "v", "s"))
+      assert(injectedRows(n).contains(BigInt(6)))
+      // the same path, deleted and recreated by plain file copies of a
+      // table with more versions and fewer rows
+      val other = Files.createTempDirectory("graft_sql").toString + "/t"
+      TxnTable.create(spark, other, Seq((7L, 70L, "g")).toDF("id", "v", "s"))
+      (1 to 3).foreach(i => TxnTable.append(spark, other,
+        Seq((7L + i, 70L, "h")).toDF("id", "v", "s"))) // head 3, 4 rows
+      TxnTable.deleteWhere(spark, other, col("id") === 7L) // head 4, 3 rows
+      val root = java.nio.file.Paths.get(t)
+      val all = Seq.newBuilder[java.nio.file.Path]
+      val w = Files.walk(root)
+      try w.iterator().forEachRemaining(p => all += p) finally w.close()
+      all.result().reverse.foreach(p => Files.delete(p))
+      Seq("_graft_log", "data").foreach(d => copyTree(
+        java.nio.file.Paths.get(other, d), root.resolve(d)))
+      assert(injectedRows(n).contains(BigInt(3)))
+      assert(GraftSql.query(spark, s"SELECT id FROM $n").as[Long]
+        .collect().toSet == Set(8L, 9L, 10L))
+    } finally GraftSql.unregister(n)
+  }
 }
