@@ -327,11 +327,14 @@ private[core] trait TxnLog extends Serializable {
     * when it was memoized. A table deleted and recreated at the same
     * path restarts its version numbers, and replaying the new log onto
     * the dead table's snapshot would serve neither table; such an entry
-    * is dropped. */
+    * is dropped whatever version was asked for, or a recreated table
+    * younger than the entry could never be memoized. */
   private def memoized(path: String, v: Long): Option[Snapshot] =
-    Option(headMemo.get(path)).filter(_.snap.version <= v).flatMap { m =>
-      if (commitStamp(path, m.snap.version).contains(m.stamp)) Some(m.snap)
-      else { headMemo.remove(path, m); None }
+    Option(headMemo.get(path)).flatMap { m =>
+      if (!commitStamp(path, m.snap.version).contains(m.stamp)) {
+        headMemo.remove(path, m)
+        None
+      } else Some(m.snap).filter(_.version <= v)
     }
 
   /** Resolve version `asOf` (the head when negative) of `path`; None
@@ -339,9 +342,9 @@ private[core] trait TxnLog extends Serializable {
     * listing of the log gives the head and the checkpoint versions,
     * and the version checks run on it before any commit is read. The
     * replay starts from the nearest of: the memoized snapshot (if at
-    * or below the target, and of this table), the newest readable checkpoint above it
-    * (a corrupt or old-format one is counted and the next older one
-    * tried), or the empty table. */
+    * or below the target, and of this table), the newest readable
+    * checkpoint above it (a corrupt or old-format one is counted and
+    * the next older one tried), or the empty table. */
   private def resolve(path: String, asOf: Long): Option[Snapshot] = {
     val (top, ckpts) = listLog(path)
     if (top < 0 && asOf < 0) return None

@@ -439,6 +439,17 @@ class TxnTableSpec extends SparkSpecBase {
     assert(back.as[(Long, Double, String)].collect().toSet ==
       read(spark, other).as[(Long, Double, String)].collect().toSet)
     assert(snapshotFiles(t) == snapshotFiles(other))
+    // recreated once more, younger than the memoized head 3: the dead
+    // entry is dropped, so the new head is memoized in its place
+    val young = freshTable()
+    create(spark, young, Seq((9L, 9.5, "c")).toDF("k", "x", "tag"))
+    deleteTree(java.nio.file.Paths.get(t))
+    Seq("_graft_log", "data").foreach(d => copyTree(
+      java.nio.file.Paths.get(young, d), java.nio.file.Paths.get(t, d)))
+    assert(read(spark, t).as[(Long, Double, String)].collect().toSeq ==
+      Seq((9L, 9.5, "c")))
+    val again = logReads(snapshotFiles(t))
+    assert(again == 0, s"the recreated head was not memoized: $again reads")
   }
 
   test("footer pruning on a multi-hundred-file table: distributed index, " +
@@ -693,7 +704,7 @@ class TxnTableSpec extends SparkSpecBase {
     append(spark, t, rangeDf(2000, 2010)) // v107
     // a 30-version window resolves its retained files from ONE replay
     // (the horizon snapshot, then each retained commit once); resolving
-    // every retained version from its own checkpoint read PARENT_READS
+    // every retained version from its own checkpoint read 129
     val wide = logReads {
       val (v, deleted) = vacuum(spark, t, retainVersions = 30) // horizon 78
       assert(v == 108L && deleted == 0, "every file is live at v105")
