@@ -126,8 +126,8 @@ private[core] trait TxnDml extends TxnReads {
     * asymmetric direction: stricter writers record nothing) or None
     * (unchanged). Validate-only callers that discard the result accept
     * the loosening without recording it; that is sound here because
-    * every file-backed read forces asNullable (Spark file sources do,
-    * and the zero-file path does explicitly) — recording where the
+    * every read forces asNullable (every scan is an all-nullable file
+    * scan, zero-file ones included) — recording where the
     * caller commits a schema just keeps the metadata honest.
     * @throws SchemaMismatchException on drift without evolveSchema. */
   private def checkSchema(path: String, df: DataFrame,
@@ -505,9 +505,8 @@ private[core] trait TxnDml extends TxnReads {
   private def liveWithPos(spark: SparkSession, path: String, snap: Snapshot)
       : (DataFrame, Map[String, Roaring64Bitmap], Seq[String]) = {
     val deleted = deletedAt(spark, path, snap.dvs)
-    val scan = snapshotScan(spark, path, snap,
-      snap.files.map(f => localRoot(path).resolve(f).toString))
-    (liveTagged(snap, scan, deleted), deleted, snap.files)
+    (liveTagged(snap, scan(spark, path, snap, snap.files), deleted), deleted,
+      snap.files)
   }
 
   /** Write the replacement DV for `hits` (new positions ∪ the hit
@@ -1084,7 +1083,7 @@ private[core] trait TxnDml extends TxnReads {
     // key set needs no distinct.
     val matchable = keys.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
     insert.foreach(d => checkSchema(path, d, evolveSchema = false))
-    // Schema-pinned read (snapshotReader): on a schema-evolved table the
+    // Schema-pinned read (scan): on a schema-evolved table the
     // survivor rewrite must see the evolved shape — parquet inference
     // from an old-generation footer would silently drop evolved columns
     // from the rewritten files (permanent data loss in the new commit).

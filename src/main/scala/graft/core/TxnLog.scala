@@ -172,8 +172,8 @@ private[core] trait TxnLog extends Serializable {
     *    then suffix order); `live` is the same set, for membership.
     *  - `dvs`: live data file → its current deletion-vector file.
     *  - `schemaGens` / `schema`: how many schemas the prefix recorded,
-    *    and the latest one (JSON) — `read`'s mergeSchema decision and
-    *    every append's validation.
+    *    and the latest one (JSON) — the schema every scan binds and
+    *    every append validates against.
     *  - `streams`: the highest applied batch id per stream id (the role
     *    of Delta's `txn` action: [[appendStreamBatch]]'s idempotence).
     *  - `constraints` (name → SQL) and `props` (key → value).

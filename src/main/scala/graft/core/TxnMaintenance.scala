@@ -101,7 +101,7 @@ private[core] trait TxnMaintenance extends TxnDml {
   def binPackWhere(spark: SparkSession, path: String, column: String,
       lo: Long, hi: Long,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val (schema, snap) = snapshotSchemaFenced(spark, path, -1L)
+    val (schema, snap) = snapshotSchemaFenced(path, -1L)
     requireIntegral(schema, column, "binPackWhere")
     binPackFiles(spark, path, snap,
       selectFiles(spark, path, snap, Seq(Bound.LongRange(column, lo, hi))),
@@ -277,7 +277,7 @@ private[core] trait TxnMaintenance extends TxnDml {
       cols: Seq[Column], column: String, lo: Long, hi: Long,
       targetFiles: Int = 16): Long = {
     val layout = clusterLayout(cols)
-    val (schema, snap) = snapshotSchemaFenced(spark, path, -1L)
+    val (schema, snap) = snapshotSchemaFenced(path, -1L)
     val base = snap.version
     requireIntegral(schema, column, "compactClusteredWhere")
     val inRange =

@@ -477,7 +477,7 @@ private[core] trait TxnMetadata extends TxnDml {
     require(columns.nonEmpty, "computeHistogram: no columns given")
     val snap = head(path).getOrElse(throw new IllegalArgumentException(
       s"computeHistogram: not a TxnTable: $path"))
-    val df = scanOf(spark, path, snap)
+    val df = scanFiles(spark, path, snap, snap.files)
     val fields = columns.map { c =>
       df.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -1002,7 +1002,7 @@ private[core] trait TxnMetadata extends TxnDml {
     require(fpp > 0 && fpp < 0.5, s"fpp must be in (0, 0.5), got $fpp")
     val snap = head(path).getOrElse(throw new IllegalArgumentException(
       s"computeBloom: not a TxnTable: $path"))
-    val schema = scanOf(spark, path, snap).schema
+    val schema = schemaOf(path, snap)
     val cols = columns.map(_.trim).filter(_.nonEmpty)
     val fields = cols.map(c => schema.fields
       .find(_.name.equalsIgnoreCase(c)).getOrElse(
@@ -1037,9 +1037,7 @@ private[core] trait TxnMetadata extends TxnDml {
     val selects = col("_metadata.file_path").as("__fp") +:
       phys.zipWithIndex.map { case (p, i) =>
         if (isStr(i)) col(p) else col(p).cast("long") }
-    val scan = snapshotReader(spark, snap)
-      .parquet(files.map(f => localRoot(path).resolve(f).toString): _*)
-      .select(selects: _*)
+    val raw = scan(spark, path, snap, files).select(selects: _*)
     val n = names.length
     val fppB = fpp
     // partial blooms per (file, column) inside each task, merged per
@@ -1053,7 +1051,7 @@ private[core] trait TxnMetadata extends TxnDml {
     // partial into ONE accumulator per key — streaming merge in
     // O(filter) memory instead of materializing every task's partial
     // for a file at once.
-    val merged = scan.mapPartitions { it =>
+    val merged = raw.mapPartitions { it =>
       val local = scala.collection.mutable.Map[(String, Int),
         org.apache.spark.util.sketch.BloomFilter]()
       it.foreach { row =>

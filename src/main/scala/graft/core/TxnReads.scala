@@ -1,12 +1,15 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path => JPath, Paths, FileAlreadyExistsException}
-
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   IntegerType, LongType, ShortType, StringType, StructField, StructType,
   TimestampType}
@@ -20,22 +23,73 @@ import graft.crawler.SkippingIndex.FileStats
   * selection, bloom probes and version diffs. */
 private[core] trait TxnReads extends TxnLog {
 
-  /** Reader for the RAW snapshot-file reads the rewrite paths do
-    * (deleteWhere / merge / compact): pinned to the latest RECORDED
-    * schema, so a rewrite of a schema-evolved table reads old-generation
-    * files with the evolved shape (missing columns null-filled) instead
-    * of whatever single footer parquet inference happens to pick —
-    * survivor rows can never silently lose evolved columns. Tables
-    * created before schemas were recorded (none in practice: create
-    * always records one) fall back to plain inference.
-    */
-  private[core] def snapshotReader(spark: SparkSession,
-      snap: Snapshot): org.apache.spark.sql.DataFrameReader =
-    snap.recordedSchema match {
-      // bind by PHYSICAL names — files always store physical; a renamed
-      // logical name would silently read all-NULL
-      case Some(s) => spark.read.schema(physicalSchema(s))
-      case None => spark.read
+  /** The ONE way a snapshot's data files become a Spark scan: a raw
+    * parquet scan of `files` (table-relative or absolute files of
+    * `snap`, any subset, none included) over a [[TxnFileIndex]], so
+    * Spark lists and stats nothing the log already names. The scan
+    * binds the RECORDED schema by PHYSICAL names (files always store
+    * physical; a renamed logical name would read all-NULL), all-nullable
+    * as Spark reads any user schema: evolved-in columns null-fill on
+    * old-generation files, a dropped column stays dropped, and a
+    * zero-file scan has the same schema and `_metadata` column as a
+    * file-backed one. Every version-0 writer records a schema, so a
+    * snapshot without one is refused. */
+  private[core] def scan(spark: SparkSession, path: String, snap: Snapshot,
+      files: Seq[String]): DataFrame = {
+    val schema = Bridge.asNullable(physicalSchema(schemaOf(path, snap)))
+    val root = localRoot(path)
+    val fs = new HPath(root.toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val statuses = files.map(f => new FileStatus(snap.allAdds(f).bytes,
+      false, 0, 0, 0, fs.makeQualified(new HPath(root.resolve(f).toString))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new TxnFileIndex(path, snap, files, statuses), new StructType(),
+      schema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The Spark file index of a [[scan]]: exactly `statuses`, the
+    * qualified `files` of `snap` sized by their logged `bytes`, in one
+    * partition-less directory; nothing to refresh. Equal on (table,
+    * version, files), as Spark's own index compares on its paths, so
+    * two scans of the same files are one relation to the cache
+    * manager and exchange reuse. */
+  private[core] final class TxnFileIndex(val table: String,
+      val snap: Snapshot, val files: Seq[String], statuses: Seq[FileStatus])
+      extends FileIndex {
+    def rootPaths: Seq[HPath] = statuses.map(_.getPath)
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
+    def inputFiles: Array[String] =
+      statuses.map(_.getPath.toUri.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = statuses.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+    override def equals(o: Any): Boolean = o match {
+      case i: TxnFileIndex => i.table == table &&
+        i.snap.version == snap.version && i.files == files
+      case _ => false
+    }
+    override def hashCode: Int = (table, snap.version, files).##
+  }
+
+  /** `snap`'s recorded schema; a snapshot without one is refused. */
+  private[core] def schemaOf(path: String, snap: Snapshot): StructType =
+    snap.recordedSchema.getOrElse(throw noSchema(path, snap))
+
+  private def noSchema(path: String, snap: Snapshot): Exception =
+    new IllegalStateException(
+      s"$path at version ${snap.version} has no recorded schema")
+
+  /** The log stats and properties of the snapshot a [[scan]] relation
+    * reads — what a SQL read's statistics come from, with no second
+    * resolution of its version; None for any other relation. */
+  private[graft] def scannedSnapshotStats(relation: BaseRelation)
+      : Option[((Long, Long, Seq[(String, LogColStat)]), Map[String, String])] =
+    relation match {
+      case HadoopFsRelation(ix: TxnFileIndex, _, _, _, _, _) =>
+        ix.snap.logStats.map(_ -> ix.snap.props)
+      case _ => None
     }
 
   // -- column mapping (ALTER TABLE RENAME COLUMN) --------------------------
@@ -86,23 +140,15 @@ private[core] trait TxnReads extends TxnLog {
     new org.apache.hadoop.fs.Path(localRoot(path).resolve(f).toString)
       .toUri.getRawPath.split('/').last
 
-  /** Whether `scan` is a file scan exposing the `_metadata` column (the
-    * zero-file substitute of [[snapshotScan]] is not). */
-  private def hasFileMetadata(scan: DataFrame): Boolean =
-    scan.queryExecution.analyzed.metadataOutput.exists(_.name == "_metadata")
-
   /** `scan` with each row's data-file scan name (`__fname`) and row
     * position (`__pos`), both read from the file source's `_metadata`
     * column. Both are deterministic (Spark's per-row file-name function
     * is not, and Catalyst pushes no filter below it), so a filter above
-    * the tag still pushes into the parquet scan. A frame with no file
-    * metadata gets constant columns. */
+    * the tag still pushes into the parquet scan. */
   private def withFilePos(scan: DataFrame): DataFrame =
-    if (hasFileMetadata(scan))
-      scan.select(col("*"),
-        substring_index(col("_metadata.file_path"), "/", -1).as("__fname"),
-        col("_metadata.row_index").as("__pos"))
-    else scan.select(col("*"), lit("").as("__fname"), lit(0L).as("__pos"))
+    scan.select(col("*"),
+      substring_index(col("_metadata.file_path"), "/", -1).as("__fname"),
+      col("_metadata.row_index").as("__pos"))
 
   /** True for a row of `file` (a path or a scan name) at position `pos`
     * that no `deleted` set holds: a deterministic UDF over the per-file
@@ -132,7 +178,7 @@ private[core] trait TxnReads extends TxnLog {
       else tagged.filter(notDeleted(deleted)(col("__fname"), col("__pos"))))
   }
 
-  /** Apply a snapshot's DELETION VECTORS to a raw parquet scan of (a
+  /** Apply a snapshot's DELETION VECTORS to a raw [[scan]] of (a
     * subset of) its files. A snapshot with no DVs returns the scan
     * untouched — ZERO plan overhead on the common path; otherwise the
     * scan is filtered by [[notDeleted]] on its `_metadata`, so a filter
@@ -145,7 +191,7 @@ private[core] trait TxnReads extends TxnLog {
     val dvm = snap.dvs
     if (keepFname)
       liveTagged(snap, scan, deletedAt(spark, path, dvm)).drop("__pos")
-    else if (dvm.isEmpty || !hasFileMetadata(scan)) logicalAt(snap, scan)
+    else if (dvm.isEmpty) logicalAt(snap, scan)
     else logicalAt(snap, scan.filter(notDeleted(deletedAt(spark, path,
       dvm))(col("_metadata.file_path"), col("_metadata.row_index"))))
   }
@@ -204,29 +250,13 @@ private[core] trait TxnReads extends TxnLog {
     }
   }
 
-  /** Live rows (logical names, DVs applied) of `rels`, table-relative
-    * files of `snap`: all of them for a DML probe, or the
-    * subset a rewrite reads (a statement's hit files, a compaction's
-    * candidates). */
+  /** Live rows (logical names, DVs applied) of `rels`, files of `snap`:
+    * all of them for a read or a DML probe, or the subset a pruned
+    * read, diff or rewrite reads (kept files, changed files, a
+    * statement's hit files, a compaction's candidates). */
   private[core] def scanFiles(spark: SparkSession, path: String, snap: Snapshot,
-      rels: Seq[String], keepFname: Boolean): DataFrame =
-    applyDv(spark, path, snap, snapshotScan(spark, path, snap,
-      rels.map(f => localRoot(path).resolve(f).toString)), keepFname)
-
-  /** The snapshot's PHYSICAL-name scan, safe on ZERO-FILE snapshots
-    * (truncate / delete-all): an empty frame with the recorded
-    * physical schema substitutes for the parquet read — DML and
-    * compaction on an emptied table then no-op through their own
-    * nothing-matched paths instead of crashing on a pathless read. */
-  private[core] def snapshotScan(spark: SparkSession, path: String,
-      snap: Snapshot, abs: Seq[String]): DataFrame =
-    if (abs.nonEmpty)
-      snapshotReader(spark, snap).parquet(abs: _*)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      physicalSchema(snap.recordedSchema.getOrElse(
-        throw new IllegalArgumentException(s"empty snapshot of $path at " +
-          s"${snap.version} with no recorded schema"))))
+      rels: Seq[String], keepFname: Boolean = false): DataFrame =
+    applyDv(spark, path, snap, scan(spark, path, snap, rels), keepFname)
 
   /** Table statistics folded from the COMMIT LOG alone — zero file
     * reads: total live bytes, live row count (add rows; rows hidden
@@ -238,8 +268,7 @@ private[core] trait TxnReads extends TxnLog {
   def logTableStats(spark: SparkSession, path: String,
       asOf: Long = -1L): (Long, Long, Seq[(String, LogColStat)]) = {
     val snap = readable(path, asOf)
-    snap.logStats.getOrElse(
-      foldLogStats(snap, scanOf(spark, path, snap).schema))
+    snap.logStats.getOrElse(throw noSchema(path, snap))
   }
 
   /** Per-COLUMN statistics panel, computed ENTIRELY from the commit
@@ -270,13 +299,14 @@ private[core] trait TxnReads extends TxnLog {
       tsMillis: Long): DataFrame =
     read(spark, path, versionAt(path, tsMillis))
 
-  /** Read a snapshot (latest, or time-travel to `asOf`). mergeSchema is
-    * enabled only when the log prefix actually recorded more than one
-    * schema generation — homogeneous tables keep the cheap single-footer
-    * path.
-    */
-  def read(spark: SparkSession, path: String, asOf: Long = -1L): DataFrame =
-    scanOf(spark, path, readable(path, asOf))
+  /** Read a snapshot (latest, or time-travel to `asOf`) under its
+    * recorded schema. A TRUNCATE (or delete-all) leaves a ZERO-FILE
+    * snapshot, which reads as an empty frame of the same schema:
+    * appends start clean, aggregates answer zero. */
+  def read(spark: SparkSession, path: String, asOf: Long = -1L): DataFrame = {
+    val snap = readable(path, asOf)
+    scanFiles(spark, path, snap, snap.files)
+  }
 
   /** The snapshot a read at `asOf` (the head when negative) sees; a
     * version below the vacuum horizon is refused before it is
@@ -288,45 +318,6 @@ private[core] trait TxnReads extends TxnLog {
         s"version $asOf was vacuumed away (earliest readable: $earliest)")
     }
     snapshot(path, asOf)
-  }
-
-  /** The live rows of `snap` under its logical schema. */
-  private[core] def scanOf(spark: SparkSession, path: String,
-      snap: Snapshot): DataFrame = {
-    val files = snap.files
-    if (files.isEmpty) {
-      // a TRUNCATE (or delete-all) leaves a ZERO-FILE snapshot: with a
-      // recorded schema that is a well-defined empty frame, not an
-      // error — appends start clean, aggregates answer zero
-      val st = snap.recordedSchema.getOrElse(throw new IllegalArgumentException(
-        s"empty snapshot of $path at ${snap.version} with no recorded schema"))
-      // all-nullable, like every real file scan (Spark's file sources
-      // force asNullable on user schemas) — a zero-file snapshot must
-      // be schema-IDENTICAL to its file-backed siblings, or consumers
-      // comparing schema JSON (the change feed's pin) see a phantom
-      // schema change at the truncate
-      val nullable = org.apache.spark.sql.types.StructType(
-        physicalSchema(st).fields.map(_.copy(nullable = true)))
-      return toLogical(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        nullable), st)
-    }
-    // Pin the RECORDED snapshot schema: evolved-in columns null-fill on
-    // old-generation files exactly like mergeSchema did, and a DROPPED
-    // column stays dropped even though old files still carry its bytes
-    // (the metadata-only ALTER contract — mergeSchema would resurrect
-    // it). Binding is by PHYSICAL names (column mapping: files always
-    // store the stable physical name; applyDv aliases back to logical).
-    // Pre-schema-era logs (none in practice) keep the old readers.
-    val reader = snap.recordedSchema match {
-      case Some(st) => spark.read.schema(physicalSchema(st))
-      case None if snap.schemaGens > 1 =>
-        spark.read.option("mergeSchema", "true")
-      case None => spark.read
-    }
-    applyDv(spark, path, snap,
-      reader.parquet(files.map(f => localRoot(path).resolve(f).toString): _*),
-      keepFname = false)
   }
 
   // -- log-stats file selection --------------------------------------------
@@ -449,30 +440,16 @@ private[core] trait TxnReads extends TxnLog {
     * [[createClustered]] / [[compactClustered]], which make per-file
     * ranges tight: several bounds over a z-ordered layout multiply
     * their selectivities. An empty kept set (or an empty IN list)
-    * returns a ZERO-file frame with the snapshot's schema. */
+    * returns a ZERO-file frame with the snapshot's schema, so
+    * `df.inputFiles` reports exactly what the read touches. */
   def readPruned(spark: SparkSession, path: String, bounds: Seq[Bound],
       asOf: Long = -1L): DataFrame = {
     require(bounds.nonEmpty, "readPruned: at least one bound")
     val snap = readable(path, asOf)
-    val full = scanOf(spark, path, snap) // logical schema
-    val pred = bounds.map(_.residual(full.schema)).reduce(_ && _)
-    scanKept(spark, path, snap, full,
-      selectFiles(spark, path, snap, bounds), pred)
+    val kept = scanFiles(spark, path, snap,
+      selectFiles(spark, path, snap, bounds))
+    kept.filter(bounds.map(_.residual(kept.schema)).reduce(_ && _))
   }
-
-  /** Rows of `snap`'s `kept` files (DVs applied) that
-    * satisfy `pred`. An empty kept set is a ZERO-file frame with
-    * `full`'s schema (not `full.filter(false)`), so `df.inputFiles`
-    * honestly reports what the read touches. */
-  private def scanKept(spark: SparkSession, path: String, snap: Snapshot,
-      full: DataFrame, kept: Seq[String], pred: Column): DataFrame =
-    if (kept.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        full.schema)
-    else applyDv(spark, path, snap,
-      snapshotReader(spark, snap).parquet(
-        kept.map(f => localRoot(path).resolve(f).toString): _*),
-      keepFname = false).filter(pred)
 
   /** `column`'s data type, which must live in the physical int64 space
     * (integral, date, timestamp) for `what`'s bounds — a string column
@@ -504,57 +481,51 @@ private[core] trait TxnReads extends TxnLog {
     * unix-days — [[physicalBetweenType]]), like every pruned read. */
   def countRange(spark: SparkSession, path: String, column: String,
       lo: Long, hi: Long, asOf: Long = -1L): (Long, Int, Int) = {
-    // metadata-only planning: fences + RECORDED schema, never a
-    // DataFrame over the full file list (building one stats every
-    // file — O(files) filesystem I/O the metadata path must not pay)
-    val (schema, snap) = snapshotSchemaFenced(spark, path, asOf)
+    // metadata-only planning: fences + RECORDED schema, then a scan of
+    // the boundary files only
+    val (schema, snap) = snapshotSchemaFenced(path, asOf)
     val dt = requireIntegral(schema, column, "countRange")
     midReadHook()
     val physCol = physicalColName(snap, column)
     val dvNames = snap.dvs.keySet.map(_.split('/').last)
     val walk = snap.stats
     var metaCount = 0L
-    val scan = Seq.newBuilder[String]
+    val toScan = Seq.newBuilder[String]
     walk.foreach { case (f, st) =>
-      val abs = localRoot(path).resolve(f).toString
       val hasDv = dvNames.contains(f.split('/').last)
       val b = st.flatMap(_.longs.get(physCol))
       val nc = st.flatMap(_.nulls.get(physCol))
       if (b.exists { case (mn, mx) => mx < lo || mn > hi }) {
         // disjoint: 0 matches — a DV only removes rows, so it stays 0
-      } else if (hasDv) scan += abs
+      } else if (hasDv) toScan += f
       else (b, nc, st.map(_.rows)) match {
         case (Some((mn, mx)), Some(n), Some(rows)) if mn >= lo && mx <= hi =>
           metaCount += rows - n // fully inside: every non-null row hits
         case (None, Some(n), Some(rows)) if n == rows =>
           () // all-null column: no row can match a range
-        case _ => scan += abs // boundary / unknown nulls / voided bounds
+        case _ => toScan += f // boundary / unknown nulls / voided bounds
       }
     }
-    val scanFiles = scan.result()
+    val scanned = toScan.result()
     // scan half pinned to the SAME resolved snapshot as the metadata
     // half: a commit landing in between (e.g. a MOR delete adding a
     // DV) must not mix snapshots — metadata counted at `snap`,
     // boundary files DV-subtracted at a newer head — or the
     // documented-exact count is wrong under concurrency.
-    val scanned =
-      if (scanFiles.isEmpty) 0L
-      else applyDv(spark, path, snap,
-        spark.read.schema(physicalSchema(schema)).parquet(scanFiles: _*),
-        keepFname = false)
+    val hits =
+      if (scanned.isEmpty) 0L
+      else scanFiles(spark, path, snap, scanned)
         .filter(physicalBetweenType(dt, column, lo, hi))
         .count()
-    (metaCount + scanned, scanFiles.size, walk.size)
+    (metaCount + hits, scanned.size, walk.size)
   }
 
   /** Recorded snapshot schema + resolved snapshot, with [[read]]'s
-    * asOf fences — schema resolution from the LOG, zero file listings;
-    * pre-schema-era tables (none in practice) fall back to one
-    * reader-based resolution. */
-  private[core] def snapshotSchemaFenced(spark: SparkSession, path: String,
+    * asOf fences — schema resolution from the LOG, zero file listings. */
+  private[core] def snapshotSchemaFenced(path: String,
       asOf: Long): (StructType, Snapshot) = {
     val snap = readable(path, asOf)
-    (snap.recordedSchema.getOrElse(scanOf(spark, path, snap).schema), snap)
+    (schemaOf(path, snap), snap)
   }
 
   /** Global (min, max) of `column` in the physical int64 space, planned
@@ -565,7 +536,7 @@ private[core] trait TxnReads extends TxnLog {
     * all-null column. Integral, date, and timestamp columns only. */
   def minMaxOf(spark: SparkSession, path: String, column: String,
       asOf: Long = -1L): (Option[Long], Option[Long], Int, Int) = {
-    val (schema, snap) = snapshotSchemaFenced(spark, path, asOf)
+    val (schema, snap) = snapshotSchemaFenced(path, asOf)
     val phys = requireIntegral(schema, column, "minMaxOf") match {
       case TimestampType => unix_micros(col(column))
       case DateType => unix_date(col(column)).cast("long")
@@ -577,9 +548,8 @@ private[core] trait TxnReads extends TxnLog {
     val walk = snap.stats
     var mn = Option.empty[Long]
     var mx = Option.empty[Long]
-    val scan = Seq.newBuilder[String]
+    val toScan = Seq.newBuilder[String]
     walk.foreach { case (f, st) =>
-      val abs = localRoot(path).resolve(f).toString
       val hasDv = dvNames.contains(f.split('/').last)
       st.flatMap(_.longs.get(physCol)) match {
         case Some((fMn, fMx)) if !hasDv =>
@@ -588,16 +558,14 @@ private[core] trait TxnReads extends TxnLog {
         case None if !hasDv &&
             st.exists(s => s.nulls.get(physCol).contains(s.rows)) =>
           () // all-null column in this file: contributes no extreme
-        case _ => scan += abs
+        case _ => toScan += f
       }
     }
-    val scanFiles = scan.result()
+    val scanned = toScan.result()
     // same-snapshot pin as countRange: DV subtraction at `snap`, never
     // at a head that advanced after the metadata half resolved
-    if (scanFiles.nonEmpty) {
-      val r = applyDv(spark, path, snap,
-        spark.read.schema(physicalSchema(schema)).parquet(scanFiles: _*),
-        keepFname = false)
+    if (scanned.nonEmpty) {
+      val r = scanFiles(spark, path, snap, scanned)
         .agg(min(phys), max(phys)).head()
       if (!r.isNullAt(0)) {
         val (sMn, sMx) = (r.getLong(0), r.getLong(1))
@@ -605,7 +573,7 @@ private[core] trait TxnReads extends TxnLog {
         mx = Some(mx.fold(sMx)(math.max(_, sMx)))
       }
     }
-    (mn, mx, scanFiles.size, walk.size)
+    (mn, mx, scanned.size, walk.size)
   }
 
   private[graft] def bloomPath(path: String): String = path + "__bloom"
@@ -617,7 +585,7 @@ private[core] trait TxnReads extends TxnLog {
     * costs one extra file scan, never a wrong row: the exact predicate
     * always re-applies). DV-aware, zero footer reads, and the probe
     * itself runs inside tasks — only kept file names reach the
-    * driver. */
+    * driver. An empty `values` list scans no file. */
   def readPrunedBloom(spark: SparkSession, path: String,
       column: String, values: Seq[Long], asOf: Long = -1L): DataFrame =
     readPrunedBloomImpl(spark, path, column, asOf,
@@ -648,12 +616,8 @@ private[core] trait TxnReads extends TxnLog {
       : DataFrame = {
     import spark.implicits._
     val snap = readable(path, asOf)
-    val full = scanOf(spark, path, snap)
-    if (vs.isEmpty) return full.filter(lit(false))
-    val bp = bloomPath(path)
-    if (currentVersion(bp) < 0) return full.filter(pred)
     val live = snap.files
-    val colLc = column.toLowerCase
+    val bp = bloomPath(path)
     // The probe runs inside tasks; only names of live files whose
     // bloom PROVES absence reach the driver (a file with no bloom row
     // — new since the last build, or a dead file's leftover row — is
@@ -661,20 +625,28 @@ private[core] trait TxnReads extends TxnLog {
     // kept = live \ excluded reproduces the verdict-map semantics
     // exactly: getOrElse(f, true) kept unindexed files, and an indexed
     // file was dropped iff its probe said definitely-absent.
-    val liveSet = live.toSet
-    val excluded: Set[String] = read(spark, bp)
-      .filter(lower(col("col")) === colLc)
-      .select(col("file"), col("bloom"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.filter { case (f, bytes) =>
-          liveSet.contains(f) && !probe(
-            org.apache.spark.util.sketch.BloomFilter
-              .readFrom(new java.io.ByteArrayInputStream(bytes)), vs)
-        }.map(_._1)
-      }.collect().toSet
-    OpMetrics.record(BloomProbeCollected, excluded.size)
-    scanKept(spark, path, snap, full, live.filterNot(excluded), pred)
+    def excluded: Set[String] = {
+      val liveSet = live.toSet
+      val colLc = column.toLowerCase
+      val out = read(spark, bp)
+        .filter(lower(col("col")) === colLc)
+        .select(col("file"), col("bloom"))
+        .as[(String, Array[Byte])]
+        .mapPartitions { it =>
+          it.filter { case (f, bytes) =>
+            liveSet.contains(f) && !probe(
+              org.apache.spark.util.sketch.BloomFilter
+                .readFrom(new java.io.ByteArrayInputStream(bytes)), vs)
+          }.map(_._1)
+        }.collect().toSet
+      OpMetrics.record(BloomProbeCollected, out.size)
+      out
+    }
+    val kept =
+      if (vs.isEmpty) Nil
+      else if (currentVersion(bp) < 0) live
+      else live.filterNot(excluded)
+    scanFiles(spark, path, snap, kept).filter(pred)
   }
 
   /** The residual row predicate for a physical-int64 bound on `c`:
@@ -736,13 +708,7 @@ private[core] trait TxnReads extends TxnLog {
     val removed = (before.toSet -- after.toSet) ++ dvChanged
     val added = (after.toSet -- before.toSet) ++ dvChanged
     def side(files: Set[String], v: Snapshot): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          scanOf(spark, path, v).schema)
-      else applyDv(spark, path, v, snapshotReader(spark, v).parquet(
-        files.toSeq.map(f => localRoot(path).resolve(f).toString): _*),
-        keepFname = false)
+      scanFiles(spark, path, v, files.toSeq)
     (side(removed, from), side(added, to),
       (removed ++ added).map(f => localRoot(path).resolve(f).toString))
   }

@@ -2813,8 +2813,8 @@ object GraftSql {
   // injected CatalogTable so the per-statement MCV selectivity
   // refinement reads version-consistent frequencies.
 
-  private def injectLogStats(spark: SparkSession, path: String,
-      asOf: Long, name: String, df: DataFrame): LogicalPlan = {
+  private def injectLogStats(spark: SparkSession, name: String,
+      df: DataFrame): LogicalPlan = {
     // the reader's pre-analysis plan is a lazy UnresolvedDataSource;
     // the scan relation only exists in the ANALYZED plan — so the
     // injection path resolves eagerly, and the default path keeps the
@@ -2827,13 +2827,15 @@ object GraftSql {
     // stats must land on the table's own relation. A DV'd snapshot is
     // one scan too (its DVs are a filter on it, not a second scan), so
     // it gets stats as well; its row count is an upper bound, like
-    // every logged row count under deletion vectors
+    // every logged row count under deletion vectors. The stats are the
+    // scanned snapshot's own: the version resolves once per read
     val scans = plan.collect { case lr: LogicalRelation => lr }
     if (scans.length != 1) return plan
-    val v = if (asOf >= 0) asOf else TxnTable.currentVersion(path)
-    val stats =
-      try Some(buildCatalogStats(spark, path, v))
-      catch { case _: Exception => None }
+    val stats = TxnTable.scannedSnapshotStats(scans.head.relation)
+      .flatMap { case (logStats, props) =>
+        try Some(buildCatalogStats(logStats, props))
+        catch { case _: Exception => None }
+      }
     stats match {
       case Some((st, mcvProps)) =>
         val ct = org.apache.spark.sql.catalyst.catalog.CatalogTable(
@@ -2854,17 +2856,18 @@ object GraftSql {
     }
   }
 
-  private def buildCatalogStats(spark: SparkSession, path: String, v: Long)
+  private def buildCatalogStats(
+      logStats: (Long, Long, Seq[(String, TxnTable.LogColStat)]),
+      snapshotProps: Map[String, String])
       : (org.apache.spark.sql.catalyst.catalog.CatalogStatistics,
          Map[String, String]) = {
     import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
     import org.apache.spark.sql.types._
-    val (bytes, rows, cols) = TxnTable.logTableStats(spark, path, v)
+    val (bytes, rows, cols) = logStats
     // ANALYZE-built equi-height histograms and string MCV stats ride
     // the log as properties (graft.{hist,mcv}.<col>, pinned at the
     // plan's version) — parsed defensively: malformed JSON just means
     // no histogram / no MCV
-    val snapshotProps = TxnTable.propertiesAt(path, v)
     val hists = snapshotProps.flatMap {
       case (k, j) if k.startsWith("graft.hist.") =>
         parseHistogram(j).map(k.stripPrefix("graft.hist.") -> _)
@@ -3078,7 +3081,7 @@ object GraftSql {
       val full = r.multipartIdentifier.mkString(".").toLowerCase
       val short = r.multipartIdentifier.last.toLowerCase
       Option(tables.get(full)).orElse(Option(tables.get(short))).map { reg =>
-        SubqueryAlias(short, injectLogStats(spark, reg.path, asOf, short,
+        SubqueryAlias(short, injectLogStats(spark, short,
           TxnTable.read(spark, reg.path, asOf)))
       }
     }

@@ -32,6 +32,12 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `s` with every field, array element and map value nullable: the
+    * schema Spark's file sources read under a user schema
+    * (`private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** Wait until Spark's listener bus has delivered every posted event,
     * so a listener's totals are complete when read (`private[spark]`). */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =

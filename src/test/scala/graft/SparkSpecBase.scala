@@ -15,7 +15,7 @@ trait SparkSpecBase extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    SparkSpecBase.installStreamDrain(s)
+    SparkSpecBase.installStreamDrain()
     s
   }
 }
@@ -32,15 +32,19 @@ object SparkSpecBase {
     * work to the already-terminated executor pool. This hook runs at
     * Hadoop shutdown priority 100, i.e. BEFORE Spark's context-stop
     * hook (priority 40), and stops every still-active streaming query
-    * while the scheduler is alive. */
-  private[graft] def installStreamDrain(s: SparkSession): Unit =
+    * of the active and default sessions that exist when it runs, while
+    * the scheduler is alive: a suite that stopped the first session
+    * and built another is covered too. */
+  private[graft] def installStreamDrain(): Unit =
     if (drainInstalled.compareAndSet(false, true)) {
       org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
         new Runnable {
           def run(): Unit =
-            try s.streams.active.foreach(q =>
-              try q.stop() catch { case _: Throwable => () })
-            catch { case _: Throwable => () }
+            (SparkSession.getActiveSession.toSeq ++
+              SparkSession.getDefaultSession).distinct.foreach(s =>
+              try s.streams.active.foreach(q =>
+                try q.stop() catch { case _: Throwable => () })
+              catch { case _: Throwable => () })
         }, 100)
     }
 }

@@ -246,6 +246,24 @@ class DmlJobsSpec extends SparkSpecBase {
         s"selectFiles ${sel.jobs}")
   }
 
+  test("a read of more than 32 files runs only its count's jobs") {
+    val t = Files.createTempDirectory("graft_jobs_listing").toString + "/t"
+    TxnTable.create(spark, t, spark.range(0, 4000).toDF("id"), partitions = 40)
+    assert(TxnTable.snapshotFiles(t).size == 40)
+    val built = TxnTable.read(spark, t)
+    val (_, bare) = measured(built.count())
+    val (n, read) = measured(TxnTable.read(spark, t).count())
+    report("count of a read built before the window (40 files)", bare)
+    report("read, then count (40 files)", read)
+    assert(n == 4000L)
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // paths, a scan over Spark's own file index listed the files the
+    // log names in one more job: measured 3 against 2 before the
+    // log-backed index, 2 and 2 with it
+    assert(read.jobs == bare.jobs,
+      s"read + count ran ${read.jobs} jobs, the count alone ${bare.jobs}")
+  }
+
   test("the maybeCompact decision on a DV'd table runs no job") {
     val t = mk("graft_jobs_maybe")
     TxnTable.deleteWhereMor(spark, t, col("id") < 30L)

@@ -1677,15 +1677,35 @@ class TxnTableSpec extends SparkSpecBase {
     "(truncate / delete-all), and a MERGE can repopulate it") {
     import spark.implicits._
     val t = freshTable()
-    create(spark, t, Seq((1L, 10L), (2L, 20L)).toDF("id", "v")) // v0
+    // both columns non-nullable in the recorded schema
+    create(spark, t,
+      spark.range(1, 3).select(col("id"), (col("id") * 10).as("v"))) // v0
+    assert(currentSchema(t).get.forall(!_.nullable))
+    val fileSchema = read(spark, t).schema // a scan backed by files
+    assert(fileSchema.forall(_.nullable))
     truncate(t) // v1: zero files
     assert(read(spark, t).count() == 0)
     val v1 = currentVersion(t)
+    // every zero-file scan has the file-backed scan's schema
+    val outOfRange = Seq(Bound.LongRange("id", 100L, 200L))
+    val noProbe = readPrunedBloom(spark, t, "id", Nil, asOf = 0L)
+    assert(noProbe.inputFiles.isEmpty)
+    val (removed, added, _) = changedRowSides(spark, t, 0L, v1)
+    Seq("read" -> read(spark, t),
+      "readPruned" -> readPruned(spark, t, outOfRange),
+      "readPruned at v0" -> readPruned(spark, t, outOfRange, asOf = 0L),
+      "readPrunedBloom" -> noProbe,
+      "diff removed side" -> removed,
+      "diff added side" -> added).foreach { case (what, df) =>
+      assert(df.schema == fileSchema, s"$what: ${df.schema} vs $fileSchema")
+    }
     // WHERE-DML matches nothing → unchanged head, no crash
     assert(deleteWhere(spark, t, col("id") === 1L) == v1)
     assert(updateWhere(spark, t, col("id") === 1L,
       Map("v" -> lit(0L))) == v1)
     assert(deleteWhereMor(spark, t, col("id") === 1L) == v1)
+    assert(updateWhereMor(spark, t, col("id") === 1L,
+      Map("v" -> lit(0L))) == v1)
     // CDF across the truncate: every row a delete image
     val d = diffVersions(spark, t, 0L, v1, Seq("id")).collect()
     assert(d.length == 2 && d.forall(_.getAs[String]("op") == "delete"))

@@ -2871,6 +2871,32 @@ class GraftSqlSpec extends SparkSpecBase {
     }
   }
 
+  test("a time-travel SELECT with log-stats injection replays its " +
+      "version once") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val (t, n) = mk() // 4 rows at v0
+    try {
+      (1 to 13).foreach(i => TxnTable.append(spark, t,
+        Seq((10L + i, 1L, "x")).toDF("id", "v", "s"))) // checkpoint at v10
+      assert(TxnTable.read(spark, t).count() == 17L) // memoizes the head
+      GraftSql.execute(spark, "SET MATVIEW REWRITE OFF")
+      val (df, window) = try OpMetrics.scope(GraftSql.query(spark,
+        s"SELECT * FROM $n VERSION AS OF 12"))
+        finally GraftSql.execute(spark, "SET MATVIEW REWRITE ON")
+      // injection ran: the relation carries the log's row count at v12
+      val injected = df.queryExecution.analyzed
+        .collectFirst { case lr: LogicalRelation => lr.catalogTable }
+        .flatten.flatMap(_.stats).flatMap(_.rowCount)
+      assert(injected.contains(BigInt(16)), injected)
+      // one replay of v11 and v12 from the v10 checkpoint. Measured 6
+      // when the injection resolved v12 twice more (its stats, then its
+      // properties), three replays in all
+      assert(window.count(TxnTable.VersionFileReads) == 2L,
+        window.count(TxnTable.VersionFileReads))
+      assert(df.count() == 16L)
+    } finally GraftSql.unregister(n)
+  }
+
   test("log-stats CBO injection reads the recreated table, not the " +
       "memoized dead one at the same path") {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
